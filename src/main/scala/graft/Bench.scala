@@ -97,33 +97,43 @@ object Bench {
     }
     // Steady-state: `runs` timed passes per query, per-query MIN reported
     // (the noise-floor estimator for a drift-dominated box); fixed name
-    // order keeps runs comparable across rounds.
+    // order keeps runs comparable across rounds. A query that throws in
+    // any timed run is FAILED: its time-to-failure is not a time, so it
+    // stays out of `queries`, `runs` and the total, and the run exits 1.
     val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
       val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
       val frames = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.DataFrame]
+      var failed = false
       val times = (1 to runs).map { _ =>
         val t0 = System.nanoTime()
         try {
           val df = fn(spark, sfDir)
           frames += df
           force(df)
-        } catch { case _: Throwable => }
+        } catch { case e: Throwable =>
+          failed = true
+          System.err.println(s"bench: query $name failed: $e")
+        }
         (System.nanoTime() - t0) / 1e9
       }
       releaseQueryState(frames.toSeq, pinnedBefore)
-      (name, times.min, times)
+      (name, !failed, times)
     }
-    val qs = results.map { case (k, v, _) => s"\"" + k + "\":" + v }
+    val ok = results.filter(_._2)
+    val qs = ok.map { case (k, _, ts) => s"\"" + k + "\":" + ts.min }
       .mkString("{", ",", "}")
-    val raw = results.map { case (k, _, ts) =>
+    val raw = ok.map { case (k, _, ts) =>
       s"\"" + k + "\":" + ts.mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val status = results.map { case (k, passed, _) =>
+      s"\"" + k + "\":\"" + (if (passed) "ok" else "failed") + "\""
     }.mkString("{", ",", "}")
     val excluded = SparkEntry.negativeControls
       .filter(n => !picked.contains(n) && SparkEntry.queries.contains(n))
       .toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val total = results.map(_._2).sum
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"protocol":"min-of-$runs","runs":$raw,"negative_controls_excluded":$excluded,"sf":"$sfDir"}"""
+    val total = ok.map(_._3.min).sum
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"status":$status,"protocol":"min-of-$runs","runs":$raw,"negative_controls_excluded":$excluded,"sf":"$sfDir"}"""
     println(line)
     // Stdout alone is lossy — the round-13 driver captured only a
     // truncated tail, leaving BENCH_r13.json with `parsed: null`. Persist
@@ -133,5 +143,10 @@ object Bench {
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable => System.err.println(s"bench-out write failed: $e") }
     spark.stop()
+    val nFailed = results.size - ok.size
+    if (nFailed > 0) {
+      System.err.println(s"bench: $nFailed of ${results.size} queries failed")
+      sys.exit(1)
+    }
   }
 }

@@ -1,7 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
+  ShortType, StringType, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Document-level deduplication operators for training-data pipelines, each
   * in its distributed-safe shape. All are generic over (id column, text
@@ -15,6 +18,8 @@ import org.apache.spark.sql.functions._
   * `jaccardPairs` is the deliberate exception, for bounded candidate sets
   * that earlier stages produced. */
 object TextDedup {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Cross-engine 32-bit hash: md5 hex prefix as integer — the only hash
     * Spark and DuckDB compute identically, which keeps every operator here
@@ -69,7 +74,11 @@ object TextDedup {
     * materialised once (building the pairs frame therefore runs one eager
     * job). `checkpointDir` picks the policy ([[graft.runtime.Checkpoints]]):
     * executor-local by default; pass a reliable directory on a real
-    * cluster so downstream queries survive executor loss. */
+    * cluster so downstream queries survive executor loss.
+    *
+    * Requires unique ids: pairs are deduplicated by the first-matching-band
+    * witness filter, not a `distinct`, so two docs sharing an id yield
+    * repeated pair rows. */
   def lshCandidatePairs(docs: DataFrame, idCol: String, textCol: String,
                         numHashes: Int = 6, shingle: Int = 3,
                         bandSize: Int = 2, numBands: Int = 2,
@@ -191,7 +200,7 @@ object TextDedup {
     while (w < maxW && targetBucketSize < ((n + (1L << w) - 1) >> w)) w += 1
     val density = (n + (1L << w) - 1) >> w
     if (density > targetBucketSize)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      log.warn(
         s"simhashWidthFor: $n docs at the ${bands * w}-bit signature " +
         s"ceiling (w=$w, $bands bands) leaves expected band-bucket " +
         s"population $density > target $targetBucketSize — accepting " +
@@ -242,7 +251,10 @@ object TextDedup {
     * re-run its lineage — for [[simhashPairs]] that lineage is the corpus
     * word explode + per-doc aggregation, the most expensive phase).
     *
-    * Output: (`idCol`_a, `idCol`_b, hamming), idA < idB, distinct. */
+    * Output: (`idCol`_a, `idCol`_b, hamming), idA < idB, one row per pair
+    * — provided `idCol` is unique: the first-matching-band witness filter
+    * stands in for a `distinct`, so repeated ids yield repeated pair
+    * rows. */
   def bandedHammingPairs(sig: DataFrame, idCol: String, sigColName: String,
                          bits: Int, bands: Int = 4, maxHamming: Int = 3,
                          checkpointDir: Option[String] = None): DataFrame = {
@@ -466,7 +478,6 @@ object TextDedup {
                           dropKnownIds: Boolean = true): DataFrame = {
     import graft.runtime.Checkpoints
     val spark = newDocs.sparkSession
-    val log = org.slf4j.LoggerFactory.getLogger(getClass)
     // an absent OR empty index is a first build — there is no stamp row
     // to honor and nothing to merge into
     val stamped = current.filter { idx =>
@@ -527,20 +538,171 @@ object TextDedup {
     }
   }
 
+  /** Edge-row bound of [[connectedComponents]]' driver finish. */
+  val DriverCcMaxEdges: Long = 1000L * 1000
+
   /** Connected components over a candidate-pair edge list — turns near-dup
     * PAIRS into CLUSTERS (every doc labelled with its component's minimum
     * id, the canonical representative).
     *
+    * Two regimes, chosen per call from the bidirectional edge count (two
+    * rows per pair), which the edge checkpoint already pays for:
+    *  - at or below [[DriverCcMaxEdges]] edge rows, the edge list is
+    *    collected ONCE (one direction per pair) and labelled on the driver
+    *    by an iterative union-find; the labels come back as an RDD-backed
+    *    frame and the edge checkpoint is released. On graphs this small
+    *    the distributed loop's cost is pure per-stage scheduling latency:
+    *    a 1,130-doc corpus with 30 planted 16-doc chains (450 pairs, 900
+    *    edge rows) took 15 jobs and ~1.5 s in the loop, against 6 jobs and
+    *    ~0.2 s for the driver finish. The near-dup Bench rows
+    *    (`x_dedup_cluster`, `x_dedup_cluster_best`, `x_pipeline_near`)
+    *    send 32-92 edge rows per call at sf0.001 and sf0.01 and 2,904-3,652
+    *    at sf0.1, all on this side;
+    *  - above it, the distributed HashMin + pointer-jumping loop
+    *    ([[ccSqlLoop]]; Kiveris et al., "Connected Components in MapReduce
+    *    and Beyond", SoCC 2014), which scales past any one JVM. The same
+    *    rows at sf10 (1.15M edges over 190k ids, OPTIMIZATION_r19.md §4)
+    *    are above the bound and stay on the loop.
+    * Id types without an exact driver-side rendering of Spark's ordering
+    * and equality (anything but integral types and binary-collated
+    * strings) always take the loop.
+    *
+    * The bound is a constant, not an option: it is sized to driver heap,
+    * and the two regimes give identical rows, so the only thing a setting
+    * could trade is driver memory for scheduling latency, which the bound
+    * already settles. At the bound (500k pairs over 500k ids) the driver
+    * finish completes in a 512 MB driver heap, the smallest Spark accepts;
+    * sampled heap use peaked at 335 MB for long ids and 418 MB for
+    * 10-character string ids, inside Spark's 1 GB default. Both regimes
+    * evaluate the `pairs` plan exactly once, and the driver finish never
+    * touches session conf.
+    *
+    * `checkpointDir` selects the lineage-truncation policy — see
+    * [[graft.runtime.Checkpoints]]: pass a reliable directory on a real
+    * cluster so an executor loss mid-loop recovers instead of killing the
+    * job. Spills written under it follow the directory's lifecycle: the
+    * driver finish leaves the edge spill there (its labels never read it),
+    * the loop the edge spill and its final label spill.
+    *
+    * Input: pairs with columns (`idA`, `idB`). Output: (`id`, `component`).
+    * Isolated ids never present in `pairs` are absent — union the full id
+    * set with `coalesce(component, id)` downstream if needed. */
+  def connectedComponents(pairs: DataFrame, idA: String, idB: String,
+                          maxIter: Int = 50,
+                          checkpointDir: Option[String] = None): DataFrame = {
+    val edges = ccEdges(pairs, idA, idB, checkpointDir)
+    val edgeRows = edges.count()
+    driverCcOrdering(edgeRows, edges.schema("src").dataType) match {
+      case Some(ord) =>
+        log.info(s"connectedComponents: $edgeRows edge rows, driver union-find")
+        driverComponents(edges, ord)
+      case None =>
+        log.info(s"connectedComponents: $edgeRows edge rows, distributed loop")
+        hashMinLoop(edges, edgeRows, maxIter, checkpointDir)
+    }
+  }
+
+  /** The driver finish's id ordering when `edgeRows` edges of `idType` are
+    * at or below the bound, else None (the distributed loop). */
+  private[operators] def driverCcOrdering(edgeRows: Long,
+                                          idType: DataType): Option[Ordering[Any]] =
+    if (edgeRows > DriverCcMaxEdges) None
+    else idType match {
+      case LongType | IntegerType | ShortType | ByteType =>
+        Some(Ordering.by[Any, Long](_.asInstanceOf[Number].longValue))
+      case StringType => // the default UTF8_BINARY collation only
+        // Spark orders these by their UTF-8 bytes, which differs from
+        // String.compareTo's UTF-16 order above the BMP
+        Some(Ordering.fromLessThan[Any] { (a, b) =>
+          UTF8String.fromString(a.asInstanceOf[String])
+            .binaryCompare(UTF8String.fromString(b.asInstanceOf[String])) < 0
+        })
+      case _ => None
+    }
+
+  /** Bidirectional edge list in ONE pass over `pairs` (r19): the former
+    * `select(a,b).union(select(b,a))` evaluated the pairs PLAN twice —
+    * invisible while the pair generators ended in a `.distinct()` whose
+    * exchange ReuseExchange shared across the branches, but the r19
+    * witness-filter rendering removed that exchange (guide §2.4) and the
+    * union then re-ran the whole banded self-join per branch (measured:
+    * x_dedup_cluster +37% at sf10). The in-row explode emits both
+    * directions from a single evaluation whatever shape the pairs plan
+    * has. Checkpointed PRE-PARTITIONED on `dst`, the key every loop
+    * round's HashMin join probes. */
+  private def ccEdges(pairs: DataFrame, idA: String, idB: String,
+                      checkpointDir: Option[String]): DataFrame =
+    graft.runtime.Checkpoints.policy(pairs.sparkSession, checkpointDir)(
+      pairs.select(explode(array(
+          struct(col(idA).as("src"), col(idB).as("dst")),
+          struct(col(idB).as("src"), col(idA).as("dst")))).as("_e"))
+        .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
+        .repartition(col("dst")))
+
+  /** The driver finish: one collect of one direction per pair, then
+    * union-find with the root always the smaller id index, so every root
+    * IS its component's minimum. Reproduces the loop's rows exactly,
+    * null ids included: the loop never joins on a null id, so a null node
+    * joins no component and takes the final label of its smallest
+    * non-null neighbour (null if it has none). */
+  private def driverComponents(edges: DataFrame, ord: Ordering[Any]): DataFrame = {
+    val spark = edges.sparkSession
+    val srcField = edges.schema("src")
+    // (a, b) and (b, a) both sit in the bidirectional list: keep a <= b,
+    // and keep null-src rows whole (their reverses compare to null)
+    val half = edges
+      .filter(coalesce(col("src") <= col("dst"), col("src").isNull))
+      .collect()
+    graft.runtime.Checkpoints.releaseLocal(edges)
+    val ids = half.iterator.flatMap(r => Iterator(r.get(0), r.get(1)))
+      .filter(_ != null).toArray.distinct.sorted(ord)
+    val index = new java.util.HashMap[Any, Int](ids.length * 2)
+    ids.indices.foreach(i => index.put(ids(i), i))
+    val parent = Array.range(0, ids.length)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    // the null node's smallest non-null neighbour, as an id index
+    var nullNode = false
+    var nullNbr = Int.MaxValue
+    half.foreach { r =>
+      if (r.isNullAt(0)) {
+        nullNode = true
+        if (!r.isNullAt(1)) nullNbr = math.min(nullNbr, index.get(r.get(1)))
+      } else {
+        val (ra, rb) = (find(index.get(r.get(0))), find(index.get(r.get(1))))
+        if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+      }
+    }
+    val labelled = ids.indices.map(i => Row(ids(i), ids(find(i))))
+    val nullRow = Option.when(nullNode)(
+      Row(null, if (nullNbr == Int.MaxValue) null else ids(find(nullNbr))))
+    val schema = StructType(Seq(srcField.copy(name = "id"),
+      srcField.copy(name = "component")))
+    spark.createDataFrame(spark.sparkContext.parallelize(labelled ++ nullRow), schema)
+  }
+
+  /** The distributed loop alone, whatever the edge count: the entry its
+    * own tests pin, since [[connectedComponents]] finishes small graphs on
+    * the driver.
+    *
     * Min-label propagation with pointer jumping: each round every node
     * adopts the minimum of its own and its neighbours' labels (HashMin),
     * then follows its label's label (`component := label(component)`, path
-    * doubling). The jump halves pointer chains, so even a pure path graph
-    * converges in O(log diameter) rounds rather than O(diameter) — deep
-    * chains become results, not `maxIter` errors. Labels only ever
+    * doubling). The jump halves pointer chains, so a path whose ids
+    * ascend or descend along it converges in O(log diameter) rounds rather
+    * than O(diameter) (7 rounds for 100 nodes). Along a scattered id
+    * order the jumps shortcut far less: 100-node paths with ids stepping
+    * by 37 mod 101 and by 7919 mod 1013 need 39 and 89 rounds, the latter
+    * past the default `maxIter`; and past ~15 rounds each round's planning
+    * time grows, because a label checkpoint inherits its round plan's size
+    * estimate, a product over the previous labels' own. Labels only ever
     * decrease, never below the component minimum, and the minimum node's
     * label is pinned at itself, so the fixpoint is exactly min-id
-    * labelling — independent of iteration schedule, which is what lets the
-    * r18 shape changes below keep output bit-identical.
+    * labelling — independent of iteration schedule, which is what lets
+    * the r18 shape changes below keep output bit-identical.
     *
     * Round-18 shape (guide §2.4 — remove shuffles outright; measured in
     * OPTIMIZATION_r18.md):
@@ -549,10 +711,10 @@ object TextDedup {
     *    union of an `idA < idB` pair list cannot collide, so the distinct
     *    only ever paid for caller-supplied duplicates — linear extra rows
     *    for such callers, never a wrong label;
-    *  - edges are instead checkpointed PRE-PARTITIONED on `dst`, the key
-    *    every round's HashMin join probes, so the loop re-shuffles only
-    *    the (node-sized) label frame per round, never the edge list
-    *    (`Dataset.checkpoint` preserves the physical partitioning);
+    *  - edges are instead checkpointed PRE-PARTITIONED on `dst`, so the
+    *    loop re-shuffles only the (node-sized) label frame per round, never
+    *    the edge list (`Dataset.checkpoint` preserves the physical
+    *    partitioning);
     *  - label init fuses the first HashMin: labels start at
     *    `min(id, min(neighbour ids))` from ONE aggregate over the edges —
     *    the same state the old identity init reached only after a full
@@ -566,11 +728,6 @@ object TextDedup {
     *    through `Dataset.rdd`/`createDataFrame`, deserialising the frame
     *    and rebuilding it outside whole-stage codegen.
     *
-    * `checkpointDir` selects the lineage-truncation policy — see
-    * [[graft.runtime.Checkpoints]]: pass a reliable directory on a real
-    * cluster so an executor loss mid-loop recovers instead of killing the
-    * job.
-    *
     * Round-19 refuted experiment (kept as a measurement, guide §1.1): a
     * raw-RDD rendering of this loop — shared HashPartitioner, narrow
     * co-partitioned joins, two node-sized shuffles per round, ZERO
@@ -580,42 +737,22 @@ object TextDedup {
     * 31.7 s vs 14.4 s for the same sf10 CC (1.5-2.5 s/round), because
     * RDD shuffles move Java-serialised boxed tuples where the SQL loop
     * moves Tungsten binary rows — the per-row cost dominates the
-    * planning fixed cost it saved. The SQL loop stands.
-    *
-    * Input: pairs with columns (`idA`, `idB`). Output: (`id`, `component`).
-    * Isolated ids never present in `pairs` are absent — union the full id
-    * set with `coalesce(component, id)` downstream if needed. */
-  def connectedComponents(pairs: DataFrame, idA: String, idB: String,
-                          maxIter: Int = 50,
-                          checkpointDir: Option[String] = None): DataFrame =
-    ccSqlLoop(pairs, idA, idB, maxIter, checkpointDir)
+    * planning fixed cost it saved. The SQL loop stands. */
+  private[operators] def ccSqlLoop(pairs: DataFrame, idA: String, idB: String,
+                                   maxIter: Int = 50,
+                                   checkpointDir: Option[String] = None): DataFrame = {
+    val edges = ccEdges(pairs, idA, idB, checkpointDir)
+    hashMinLoop(edges, edges.count(), maxIter, checkpointDir)
+  }
 
-
-  private def ccSqlLoop(pairs: DataFrame, idA: String, idB: String,
-                        maxIter: Int,
-                        checkpointDir: Option[String]): DataFrame = {
-    val spark = pairs.sparkSession
-    val ckpt = graft.runtime.Checkpoints.policy(spark, checkpointDir)
+  private def hashMinLoop(edges: DataFrame, edgeRows: Long, maxIter: Int,
+                          checkpointDir: Option[String]): DataFrame = {
+    val spark = edges.sparkSession
     // labels roll: each round's spill supersedes the last, which is
     // deleted once the new round is durably written — a long loop holds
     // at most two label spills, not one per round. Edges persist for the
     // whole loop and use the plain policy.
     val labelCkpt = new graft.runtime.Checkpoints.Rolling(spark, checkpointDir)
-    // Bidirectional edge list in ONE pass over `pairs` (r19): the former
-    // `select(a,b).union(select(b,a))` evaluated the pairs PLAN twice —
-    // invisible while the pair generators ended in a `.distinct()` whose
-    // exchange ReuseExchange shared across the branches, but the r19
-    // witness-filter rendering removed that exchange (guide §2.4) and the
-    // union then re-ran the whole banded self-join per branch (measured:
-    // x_dedup_cluster +37% at sf10). The in-row explode emits both
-    // directions from a single evaluation whatever shape the pairs plan
-    // has.
-    val edges0 = ckpt(
-      pairs.select(explode(array(
-          struct(col(idA).as("src"), col(idB).as("dst")),
-          struct(col(idB).as("src"), col(idA).as("dst")))).as("_e"))
-        .select(col("_e.src").as("src"), col("_e.dst").as("dst"))
-        .repartition(col("dst")))
     // Rounds are dominated by per-stage SCHEDULING latency, not data:
     // the label/edge frames are node-sized (near-dup participants), and
     // AQE turns each round's three joins into 5-6 materialised query
@@ -635,7 +772,6 @@ object TextDedup {
     // session-width edge pin keeps that join wide while the derived count
     // still bounds the tiny label-side stages. Edges stay pinned at the
     // session partitioning.
-    val edges = edges0
     // fused init: one aggregate gives every node (all appear as src of the
     // bidirectional list) its min(self, neighbours) label — the state the
     // identity init only reached after a full HashMin round
@@ -652,7 +788,6 @@ object TextDedup {
     val aqeWas = spark.conf.get(aqeKey, "true")
     val smjWas = spark.conf.get(smjKey, "true")
     val partWas = spark.conf.get(partKey)
-    val edgeRows = edges.count()
     val loopAqeOff = aqeWas == "true" && edgeRows <= 50L * 1000 * 1000
     if (loopAqeOff) {
       spark.conf.set(aqeKey, "false")
@@ -698,9 +833,8 @@ object TextDedup {
         converged = ckpted.filter(col("_changed")).isEmpty
         labels = ckpted.select("id", "component")
         iter += 1
-        if (sys.env.contains("SPARK_GRAFT_CC_TRACE")) System.err.println(
-          f"[cc] round $iter: materialise ${(t1 - t0) / 1e9}%.3f s, " +
-            f"probe ${(System.nanoTime() - t1) / 1e9}%.3f s")
+        log.info(f"connectedComponents round $iter: materialise " +
+          f"${(t1 - t0) / 1e9}%.3f s, probe ${(System.nanoTime() - t1) / 1e9}%.3f s")
       }
     } finally if (loopAqeOff) {
       spark.conf.set(aqeKey, aqeWas)
@@ -792,7 +926,7 @@ object TextDedup {
     val useBroadcast = benchEstBytes <= BigInt(benchBroadcastMaxBytes)
     // a silently flipping join strategy is a debugging trap at scale —
     // one visible line records the route and the estimate that chose it
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
+    log.info(
       s"decontaminate: bench gram side estimated $benchEstBytes bytes " +
         s"(threshold $benchBroadcastMaxBytes) -> " +
         (if (useBroadcast) "BROADCAST" else "SHUFFLE_HASH") + " join")
@@ -835,7 +969,7 @@ object TextDedup {
       .select(col("_bgram")).distinct()
     val benchEstBytes = benchGrams.queryExecution.optimizedPlan.stats.sizeInBytes
     val useBroadcast = benchEstBytes <= BigInt(benchBroadcastMaxBytes)
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
+    log.info(
       s"contaminationFraction: bench gram side estimated $benchEstBytes bytes " +
         s"(threshold $benchBroadcastMaxBytes) -> " +
         (if (useBroadcast) "BROADCAST" else "SHUFFLE_HASH") + " join")
@@ -1024,7 +1158,7 @@ object TextDedup {
       .select(col("_bs.gram_h").as("_bgram_h")).distinct()
     val benchEstBytes = benchGrams.queryExecution.optimizedPlan.stats.sizeInBytes
     val useBroadcast = benchEstBytes <= BigInt(benchBroadcastMaxBytes)
-    org.slf4j.LoggerFactory.getLogger(getClass).info(
+    log.info(
       s"removeContaminatedSpans: bench window side estimated $benchEstBytes " +
         s"bytes (threshold $benchBroadcastMaxBytes) -> " +
         (if (useBroadcast) "BROADCAST" else "SHUFFLE_HASH") + " join")

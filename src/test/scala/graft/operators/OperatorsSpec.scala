@@ -127,7 +127,7 @@ class OperatorsSpec extends SparkSpec {
     // would raise under the old algorithm, so this pins the speedup.
     val n = 64
     val chain = (0 until n - 1).map(i => (i.toLong, i.toLong + 1)).toDF("a", "b")
-    val got = TextDedup.connectedComponents(chain, "a", "b", maxIter = 10)
+    val got = TextDedup.ccSqlLoop(chain, "a", "b", maxIter = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got.size == n)
     assert(got.values.forall(_ == 0L), "every node must label to the min id 0")
@@ -137,7 +137,7 @@ class OperatorsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("cc-ckpt").toFile
     try {
       val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("a", "b")
-      val got = TextDedup.connectedComponents(pairs, "a", "b",
+      val got = TextDedup.ccSqlLoop(pairs, "a", "b",
           checkpointDir = Some(dir.getAbsolutePath))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
@@ -154,7 +154,7 @@ class OperatorsSpec extends SparkSpec {
     try {
       // a 16-chain takes several rounds — each must supersede the last spill
       val chain = (0 until 15).map(i => (i.toLong, i.toLong + 1)).toDF("a", "b")
-      val got = TextDedup.connectedComponents(chain, "a", "b",
+      val got = TextDedup.ccSqlLoop(chain, "a", "b",
           checkpointDir = Some(dir.getAbsolutePath))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got.values.forall(_ == 0L))
@@ -188,7 +188,7 @@ class OperatorsSpec extends SparkSpec {
       val chain = (0 until 15).map(i => (i.toLong, i.toLong + 1)).toDF("a", "b")
       val labels = graft.runtime.Checkpoints.withCheckpointScope(
           spark, dir.getAbsolutePath) { scoped =>
-        TextDedup.connectedComponents(chain, "a", "b",
+        TextDedup.ccSqlLoop(chain, "a", "b",
           checkpointDir = Some(scoped))
       }
       // the scope (and every spill under it) is gone...

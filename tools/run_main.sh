@@ -1,7 +1,7 @@
 #!/bin/bash
 # Direct-JVM runner for graft mains (Bench, ScaleGen, TokProbe, ...)
-# outside sbt: same --add-opens set and -Xmx default as build.sbt's
-# `run / javaOptions`, so a campaign invoked here is the same JVM shape
+# outside sbt: same --add-opens set, -Xmx default and reserved code cache
+# as build.sbt's `run / javaOptions`, so a campaign invoked here is the same JVM shape
 # as `sbt runMain` without sbt's project-lock serialization or startup.
 # Usage: SPARK_GRAFT_SF_DIR=... tools/run_main.sh Bench [args...]
 set -euo pipefail
@@ -14,6 +14,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
 done
 exec java $OPENS \
   -Xmx"${SPARK_DRIVER_MEM:-8g}" \
+  -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
