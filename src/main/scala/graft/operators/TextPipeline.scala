@@ -33,8 +33,12 @@ import org.apache.spark.sql.functions._
   *     below `minQRank` — one stratum-keyed exchange whose partitioning
   *     stage 6 REUSES.
   *  5. Temperature mixing ([[TextStats.applyTemperature]], downsample
-  *     to share^`alpha`): O(strata) driver collect for the rate table,
-  *     then a narrow membership filter.
+  *     to share^`alpha`): ONE `(stratum, n)` aggregation over stage 4's
+  *     output, collected (O(strata) rows); the rates are derived on the
+  *     driver, then a narrow membership filter. The rate algebra must
+  *     not be written as self-joined aggregates of the calibrated frame:
+  *     each reference re-plans the stage 4 window over its joins (about
+  *     30 jobs per call, where the one aggregation runs 5).
   *  6. Pack ([[TextStats.packSequences]]): running-token window
   *     partitioned by `strataCol` — same hash partitioning as stage 4's
   *     window, so EnsureRequirements inserts a sort, NOT a new exchange

@@ -464,51 +464,91 @@ object TextStats {
   /** Temperature-based corpus mixing (the multilingual-pretraining
     * resampler): per-stratum target shares ∝ share^alpha, alpha in (0, 1]
     * — alpha = 1 keeps the natural mix, smaller alpha flattens it toward
-    * the tail. Returns one row per stratum with its observed share, the
-    * target share, and a downsample-only `rate` normalised so the most
-    * upweighted stratum keeps everything — feed the rates straight into
-    * [[stratifiedSample]]. One aggregation over the corpus; everything
-    * after operates on the #strata-row table (broadcast by construction). */
+    * the tail. Returns one row per stratum (a null stratum included) with
+    * its count `n`, observed share, target share and a downsample-only
+    * `rate` normalised so the most upweighted stratum keeps everything —
+    * feed the rates straight into [[stratifiedSample]]. All three are
+    * rounded to 4 places.
+    *
+    * Runs its one aggregation when called: the corpus is grouped and
+    * counted by stratum in one job, the O(strata) counts are collected,
+    * and share, target and rate are derived on the driver. The result is
+    * a local frame that reads no file. */
   def temperatureRates(df: org.apache.spark.sql.DataFrame, strataCol: String,
                        alpha: Double): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
+    val (stratumField, rates) = temperatureRateTable(df, strataCol, alpha)
+    val schema = StructType(Seq(stratumField,
+      StructField("n", LongType, nullable = false),
+      StructField("share", DoubleType), StructField("target_share", DoubleType),
+      StructField("rate", DoubleType)))
+    df.sparkSession.createDataFrame(rates.map(r =>
+      Row(r.stratum, r.n, r.share, r.targetShare, r.rate)).asJava, schema)
+  }
+
+  /** One row of the temperature rate table; `key` is the stratum cast to
+    * string, the key [[stratifiedSample]] looks its fraction up by. */
+  private final case class TemperatureRate(stratum: Any, key: String, n: Long,
+                                           share: Double, targetShare: Double,
+                                           rate: Double)
+
+  /** The rate table behind [[temperatureRates]] and [[applyTemperature]]:
+    * one `(stratum, n)` aggregation, collected, then the rate algebra on
+    * the driver in Spark's own arithmetic, so the values equal those of
+    * the same algebra written as column expressions. The total is a long
+    * sum and the share `n.toDouble / total` (what `/` does on two longs);
+    * the power is `StrictMath.pow` (what `pow` calls); the normaliser is a
+    * left-to-right double sum in the collected row order; rounding is
+    * `BigDecimal(x).setScale(4, HALF_UP)` (what `round` does on a double).
+    * Also returns the stratum column's field, for the result schema. */
+  private def temperatureRateTable(df: org.apache.spark.sql.DataFrame,
+                                   strataCol: String, alpha: Double)
+      : (org.apache.spark.sql.types.StructField, Seq[TemperatureRate]) = {
     require(alpha > 0 && alpha <= 1, s"alpha must be in (0, 1], got $alpha")
     val counts = df.groupBy(col(strataCol)).agg(count(lit(1)).as("n"))
-    val shared = counts
-      .crossJoin(broadcast(counts.agg(sum(col("n")).as("_tot"))))
-      .withColumn("_share", col("n") / col("_tot"))
-      .withColumn("_pw", pow(col("_share"), lit(alpha)))
-    val targeted = shared
-      .crossJoin(broadcast(shared.agg(sum(col("_pw")).as("_z"))))
-      .withColumn("_target", col("_pw") / col("_z"))
-      .withColumn("_rate", col("_target") / col("_share"))
-    targeted
-      .crossJoin(broadcast(targeted.agg(max(col("_rate")).as("_rmax"))))
-      .select(col(strataCol), col("n"),
-        round(col("_share"), 4).as("share"),
-        round(col("_target"), 4).as("target_share"),
-        round(col("_rate") / col("_rmax"), 4).as("rate"))
+    val rows = counts
+      .select(col(strataCol), col(strataCol).cast("string"), col("n"))
+      .collect().toSeq
+    val total = rows.map(_.getLong(2)).sum.toDouble
+    val shares = rows.map(_.getLong(2) / total)
+    val pw = shares.map(StrictMath.pow(_, alpha))
+    val z = pw.foldLeft(0.0)(_ + _)
+    val targets = pw.map(_ / z)
+    val rates = targets.lazyZip(shares).map(_ / _)
+    // rates are positive, so folding from 0.0 is their max (and an empty
+    // table never reads it)
+    val rmax = rates.foldLeft(0.0)(math.max)
+    def round4(x: Double) =
+      BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
+    (counts.schema.fields(0), rows.indices.map { i =>
+      TemperatureRate(rows(i).get(0), rows(i).getString(1), rows(i).getLong(2),
+        round4(shares(i)), round4(targets(i)), round4(rates(i) / rmax))
+    })
   }
 
   /** Temperature mixing APPLIED — the composition users actually run:
     * [[temperatureRates]]' share^alpha flattening rates feed
     * [[stratifiedSample]]'s deterministic hash-mod filter, returning the
-    * resampled corpus itself rather than a rate table. The rate table is
-    * O(strata) rows, so collecting it to the driver is the repo's
-    * legitimate-collect class (header rows, centroid ids — never
-    * corpus-sized); the corpus pass stays [[stratifiedSample]]'s narrow
-    * pushdown-friendly filter, zero shuffle. Rates are used at their
-    * published 4-decimal rounding, so the sample is bit-reproducible
-    * from the rate table alone — an auditor can re-derive membership
-    * from the published rates without re-running the aggregate. NULL
-    * strata (absent from the rate table by groupBy semantics — they
-    * form their own group but a null key cannot enter a Map) fall to
-    * `defaultFraction` 1.0 and survive whole. */
+    * resampled corpus itself rather than a rate table. Building the
+    * frame runs one job: the `(stratum, n)` aggregation, whose O(strata)
+    * rows are collected (the repo's legitimate-collect class — header
+    * rows, centroid ids, never corpus-sized) and turned into rates on the
+    * driver. The input's plan runs once for the rates and again when
+    * the sample is read. The corpus pass stays
+    * [[stratifiedSample]]'s narrow pushdown-friendly filter, zero
+    * shuffle. Rates are used at their published 4-decimal rounding, so
+    * the sample is bit-reproducible from the rate table alone — an
+    * auditor can re-derive membership from the published rates without
+    * re-running the aggregate. A NULL stratum counts in the totals, but
+    * a null key cannot enter the fraction map, so its rows fall to
+    * `defaultFraction` 1.0 and survive whole. Non-string strata are keyed
+    * by their string cast. */
   def applyTemperature(df: org.apache.spark.sql.DataFrame, strataCol: String,
                        keyCol: String, alpha: Double): org.apache.spark.sql.DataFrame = {
-    val fractions = temperatureRates(df, strataCol, alpha)
-      .select(col(strataCol).cast("string"), col("rate"))
-      .collect()
-      .flatMap(r => Option(r.getString(0)).map(_ -> r.getDouble(1)))
+    val fractions = temperatureRateTable(df, strataCol, alpha)._2
+      .flatMap(r => Option(r.key).map(_ -> r.rate))
       .toMap
     stratifiedSample(df, strataCol, keyCol, fractions, defaultFraction = 1.0)
   }
@@ -563,17 +603,21 @@ object TextStats {
   def stratifiedSample(df: org.apache.spark.sql.DataFrame, strataCol: String,
                        keyCol: String, fractions: Map[String, Double],
                        defaultFraction: Double = 1.0): org.apache.spark.sql.DataFrame = {
+    // a stratum is keyed by its string cast, the fractions' key type (a
+    // no-op on a string column; without it a non-string stratum fails
+    // analysis in the map lookup)
+    val stratum = col(strataCol).cast("string")
     // round, not truncate: (0.043 * 10000).toLong is 429; hundreds of
     // exact four-decimal fractions mis-truncate by one basis point
     val bps = coalesce(
       element_at(typedLit(fractions.view.mapValues(f => math.round(f * 10000)).toMap),
-        col(strataCol)),
+        stratum),
       lit(math.round(defaultFraction * 10000)))
     // a NULL stratum is its own stratum under defaultFraction — the hash
     // input coalesces so the comparison never goes NULL (which would
     // silently drop every null-stratum row)
     df.filter(
-      conv(substring(md5(concat(coalesce(col(strataCol), lit("")), lit(":"),
+      conv(substring(md5(concat(coalesce(stratum, lit("")), lit(":"),
         col(keyCol).cast("string"))), 1, 8), 16, 10).cast("bigint") % 10000 < bps)
   }
 

@@ -475,25 +475,40 @@ class PlanQualitySpec extends SparkSpec {
     assert(scans <= 1, s"span pipeline duplicated: $scans scans\n$plan")
   }
 
-  test("temperature mix: one corpus aggregate, tiny sides broadcast") {
-    val plan = formattedPlan(QueryPack.xTemperatureMix(spark, sf))
-    assert(!plan.contains("SortMergeJoin") && !plan.contains("CartesianProduct"),
-      s"strata-table joins must broadcast:\n$plan")
-    // the three crossJoin(broadcast(agg)) stages each re-derive the corpus
-    // groupBy in their LINEAGE (the static plan shows 16 scans); only
-    // AQE's RUNTIME stage reuse collapses them to one physical scan. Pin
-    // the executed final plan: exactly one FileScan survives and the rest
-    // arrive as ReusedExchange — a regression here silently multiplies
-    // the corpus read at 100 TB.
-    val df = QueryPack.xTemperatureMix(spark, sf)
-    df.collect()
-    val finalPlan = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
+  test("temperature mix: one SQL execution, one corpus scan, reads no file") {
+    // the rate table is one (lang, n) aggregation collected while the
+    // frame is built; the share/target/rate algebra runs on the driver.
+    // A rate algebra over self-joined aggregates re-plans the corpus
+    // groupBy once per reference — a regression here multiplies the
+    // corpus read at 100 TB.
+    val executed = collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        executed.synchronized { executed += qe.executedPlan.toString }
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit =
+        executed.synchronized { executed += qe.executedPlan.toString }
+    }
+    org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val df = try {
+      val built = QueryPack.xTemperatureMix(spark, sf)
+      org.apache.spark.GraftListenerBridge.drain(spark.sparkContext)
+      built
+    } finally spark.listenerManager.unregister(listener)
+    val plans = executed.synchronized { executed.toList }
+    assert(plans.size == 1,
+      s"building the rate table must run exactly one SQL execution:\n" +
+        plans.mkString("\n---\n"))
+    val finalPlan = plans.head.split("== Initial Plan ==")(0)
     val corpusScans = "FileScan parquet".r.findAllMatchIn(finalPlan).size
     assert(corpusScans == 1,
       s"corpus must be scanned exactly once (found $corpusScans):\n$finalPlan")
-    assert(finalPlan.contains("ReusedExchange"),
-      s"downstream strata aggregates must reuse the corpus exchange:\n$finalPlan")
+    assert(df.inputFiles.isEmpty, s"the rate table reads ${df.inputFiles.toSeq}")
+    val resultPlan = df.queryExecution.executedPlan.toString
+    assert(resultPlan.contains("LocalTableScan") && !resultPlan.contains("FileScan"),
+      s"the rate table must be a local relation:\n$resultPlan")
   }
 
   test("stratified sample is a narrow filter: no exchange, filter reaches the scan") {
