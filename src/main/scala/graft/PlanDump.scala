@@ -2,10 +2,10 @@ package graft
 
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence artifact (plans/<round>/<q>_<tag>.txt).
-  * Runs under the SAME session configuration as [[Bench]] (master,
-  * shuffle partitions, AQE, broadcast threshold), so the dumped plan is
-  * the plan the bench actually executes — a plan captured under a
-  * different planner would pin claims Bench never runs.
+  * Both this and [[Bench]] build their session from
+  * [[graft.runtime.GraftSession]], so the dumped plan is the plan the
+  * bench actually executes — a plan captured under a different planner
+  * would pin claims Bench never runs.
   *
   * Usage: PlanDump <sfDir> <outDir> <tag> [q1,q2,...]
   * (no query list = every non-negative-control query). */
@@ -20,21 +20,7 @@ object PlanDump {
       val unknown = names.filterNot(SparkEntry.queries.keySet)
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        (256L * 1024 * 1024).toString)
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.runtime.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     val picked = SparkEntry.queries

@@ -15,10 +15,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * alternation — are correct but allocation-bound: each one MATERIALISES
   * an array of every token / every punctuation character just to take
   * its length, and the regex engine walks the pattern per input char.
-  * Measured (one-JVM interleaved A/B, `graft.CharScanAb`, sf10
-  * documents, round 10): the four counter projections cost 46.44 s in
-  * the regex renderings vs 0.283 s here — **164×**
-  * (`CHARSCAN_AB_sf10.json`). This expression counts in ONE pass over
+  * Measured (one-JVM interleaved A/B, sf10 documents, round 10;
+  * `CHARSCAN_AB_sf10.json`): the four counter projections cost 46.44 s
+  * in the regex renderings vs 0.283 s here — **164×**. This expression counts in ONE pass over
   * the UTF-8 bytes — no arrays, no regex — and is codegen'd into the
   * surrounding stage.
   *

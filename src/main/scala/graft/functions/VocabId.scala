@@ -17,9 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * Why this exists when `element_at(map(...), sym)` looks equivalent:
   * a `map()` over literals folds to an `ArrayBasedMapData` LITERAL,
   * and `GetMapValue` probes that by scanning the key array — O(V) per
-  * probe. TokProbe measured the difference at the production point:
-  * 26.6 s vs 0.91 s at V = 32k on the same corpus (SCALING.md r15
-  * ladder row; at the 42-entry toy vocab the two are indistinguishable,
+  * probe. The r15 tokenizer ladder (SCALING.md) measured the difference
+  * at the production point: 26.6 s vs 0.91 s at V = 32k on the same
+  * corpus (at the 42-entry toy vocab the two are indistinguishable,
   * which is how the trap shipped). The join rendering
   * ([[graft.operators.TextStats.bpeEncode]]'s broadcast vocab join) is
   * the right shape when the symbols are already EXPLODED to rows; for

@@ -48,7 +48,7 @@ object Retrieval {
     * via the native [[graft.functions.TermCounts]] map expression, so
     * the first shuffle moves one row per distinct (doc, term) instead of
     * one row per token occurrence — at sf10 that exchange was 2.9 s of
-    * termStats's 3.0 s (`graft.Probe` measurement in TermCounts's
+    * termStats's 3.0 s (measured in SCALING.md, cited in TermCounts's
     * scaladoc). */
   private def termFreqs(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol),

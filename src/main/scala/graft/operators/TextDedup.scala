@@ -110,8 +110,8 @@ object TextDedup {
     // rebuilt lazily from the pinned longs by each join side (struct
     // packing + posexplode, pure arithmetic). The r19 first cut
     // checkpointed the EXPLODED frame with `_keys` riding it instead,
-    // and building that checkpoint took 78 s at sf10 (R19Probe, vs 3.0 s
-    // for this shape): `_keys` appears both as a generator input and an
+    // and building that checkpoint took 78 s at sf10 (OPTIMIZATION_r19.md,
+    // vs 3.0 s for this shape): `_keys` appears both as a generator input and an
     // output column, and the optimizer resolves that by duplicating the
     // whole minhash chain (md5 per shingle × 6 affine array_mins) into
     // every reference. Pinning the flat signatures once makes every

@@ -29,7 +29,9 @@ object QueryPack {
   /** events.ts has shipped in three parquet generations, all normalised
     * here to one epoch-millis column:
     *   - TIMESTAMP(NANOS): Spark 4 reads it only as a long (raw nanos,
-    *     via the nanosAsLong conf set below) — INTEGER division to ms
+    *     via the nanosAsLong conf set below, which the GraftSession
+    *     profile also sets but `graft.SparkEntry.entry`'s externally built
+    *     session need not) — INTEGER division to ms
     *     (double division would lose precision at 1e18);
     *   - µs TIMESTAMP_NTZ (the current driver testdata) and µs TIMESTAMP
     *     (ScaleGen output from nanos-era sources): `cast(ts as timestamp)`

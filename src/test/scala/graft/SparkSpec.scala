@@ -14,7 +14,6 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   lazy val session: SparkSession = {
     val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4)
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

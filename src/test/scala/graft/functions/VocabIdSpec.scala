@@ -4,8 +4,8 @@ import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
 /** [[VocabId]] — the constant-time vocab-id probe: parity with the
-  * literal-map rendering it replaced (the O(V)-per-probe trap, TokProbe
-  * r15), the OOV → −1 contract, and survival at a production-sized
+  * literal-map rendering it replaced (the O(V)-per-probe trap, SCALING.md
+  * r15 ladder), the OOV → −1 contract, and survival at a production-sized
   * table (where the literal-map rendering is the thing being avoided,
   * not a viable parity arm — parity there is against a driver-side
   * map). */

@@ -644,7 +644,7 @@ class PlanQualitySpec extends SparkSpec {
     //  - the vocabulary lookup is the native hash-probe VocabId inside
     //    the projection (addReferenceObj table — O(1) per symbol at any
     //    V; the plan-literal map()+element_at it replaced scans its key
-    //    array O(V) per probe, TokProbe r15), never a corpus join; the
+    //    array O(V) per probe, SCALING.md r15), never a corpus join; the
     //    native BpeSegment runs in the same projection
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}

@@ -62,4 +62,11 @@ class ReadmeSpec extends SparkSpec {
     assert(recs(1).getString(1) == "2222222222")
     assert(recs(1).getString(2) == "Second\nreport body")
   }
+
+  test("README's oracle-battery query count matches the registry") {
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+    val counts = """(\d+)-query oracle battery""".r
+      .findAllMatchIn(readme).map(_.group(1).toInt).toSeq
+    assert(counts == Seq(graft.SparkEntry.queries.size))
+  }
 }

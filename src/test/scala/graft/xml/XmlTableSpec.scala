@@ -241,7 +241,7 @@ class XmlTableSpec extends AnyFunSuite {
   }
 
   test("streaming records variant matches the batch split (bounded memory)") {
-    val spark = graft.runtime.GraftSession.local
+    val spark = graft.SparkSpec.session
     val dir = java.nio.file.Files.createTempDirectory("xmlstream")
     val xml = "<root>" + (1 to 50).map(i =>
       s"<record><id>$i</id><v a='x$i'>payload $i</v></record>").mkString + "</root>"
@@ -256,7 +256,7 @@ class XmlTableSpec extends AnyFunSuite {
   }
 
   test("streaming records decode UTF-16 (BOM) and Windows-1252 like the batch probe") {
-    val spark = graft.runtime.GraftSession.local
+    val spark = graft.SparkSpec.session
     val dir = java.nio.file.Files.createTempDirectory("xmlenc")
     val mapping = graft.model.TableMapping(xmlRecordXpath = Some("record"))
     val xml = "<root><record><v>café über</v></record></root>"
@@ -277,7 +277,7 @@ class XmlTableSpec extends AnyFunSuite {
   }
 
   test("X5 groupedRecords batches one row per source record (table.rb:41-53)") {
-    val spark = graft.runtime.GraftSession.local
+    val spark = graft.SparkSpec.session
     import spark.implicits._
     val mapping = TableMapping(columns = repeatingMapping)
     val xml =

@@ -1,5 +1,5 @@
 #!/bin/bash
-# Direct-JVM runner for graft mains (Bench, ScaleGen, TokProbe, ...)
+# Direct-JVM runner for graft mains (Bench, Verify, PlanDump, ScaleGen)
 # outside sbt: same --add-opens set, -Xmx default and reserved code cache
 # as build.sbt's `run / javaOptions`, so a campaign invoked here is the same JVM shape
 # as `sbt runMain` without sbt's project-lock serialization or startup.
