@@ -1,31 +1,19 @@
 package graft
+import graft.queries.QueryPack
 import graft.runtime.GraftSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Optional args(0): comma-separated query names — time just those
     // (same warmup + timing protocol), so a query added after a full
-    // campaign can be measured alone without re-running the suite.
-    val only: Option[Set[String]] =
-      args.headOption.map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    // Fail fast on names that match nothing — a typo (or passing the SF
-    // dir as args(0): it comes from SPARK_GRAFT_SF_DIR) would otherwise
-    // emit a zero-query JSON line that looks like a clean measurement.
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.keySet)
-      require(unknown.isEmpty,
-        s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")} " +
-          "(args(0) is ONLY a comma-separated query filter; the data dir " +
-          "comes from SPARK_GRAFT_SF_DIR)")
-    }
-    // Headline suite = all queries minus the oracle-pinned negative
-    // controls (SparkEntry.negativeControls — configurations the code's
-    // own scaladoc steers users away from; x_ann_ivf_hier alone would
-    // otherwise dominate every sf10 campaign total). Naming one
-    // explicitly in args(0) still times it.
-    val picked = SparkEntry.queries.filter { case (n, _) =>
-      only.map(_(n)).getOrElse(!SparkEntry.negativeControls(n))
-    }
+    // campaign can be measured alone without re-running the suite. It is
+    // ONLY a query filter (the data dir comes from SPARK_GRAFT_SF_DIR), so
+    // an unknown name fails fast instead of emitting a zero-query line.
+    // Without it, the headline suite leaves out the negative controls
+    // (x_ann_ivf_hier alone would otherwise dominate every sf10 total).
+    val only = args.headOption.map(QueryPack.filterNames)
+    val picked = QueryPack.registry.filter(q => only.fold(!q.negativeControl)(_(q.name)))
+      .sortBy(_.name)
     // Timed runs per query (per-query MIN is reported): this box is a
     // microVM with 20-50% host-neighbour drift between runs, and min-of-N
     // independent passes is the de-noising every published campaign and
@@ -69,9 +57,9 @@ object Bench {
     // per-query fixture generation, codegen compilation and shuffle-file
     // creation land outside the timings — scan-bound queries were swinging
     // ±20-60% round-to-round from exactly these first-run costs.
-    picked.toSeq.sortBy(_._1).foreach { case (_, fn) =>
+    picked.foreach { q =>
       val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
-      val df = try Some(fn(spark, sfDir)) catch { case _: Throwable => None }
+      val df = try Some(q.build(spark, sfDir)) catch { case _: Throwable => None }
       df.foreach(d => try force(d) catch { case _: Throwable => })
       releaseQueryState(df.toSeq, pinnedBefore)
     }
@@ -80,7 +68,7 @@ object Bench {
     // order keeps runs comparable across rounds. A query that throws in
     // any timed run is FAILED: its time-to-failure is not a time, so it
     // stays out of `queries`, `runs` and the total, and the run exits 1.
-    val results = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val results = picked.map { case QueryPack.Query(name, fn, _, _) =>
       val pinnedBefore = spark.sparkContext.getPersistentRDDs.keySet
       val frames = scala.collection.mutable.ArrayBuffer
         .empty[org.apache.spark.sql.DataFrame]
@@ -109,9 +97,9 @@ object Bench {
     val status = results.map { case (k, passed, _) =>
       s"\"" + k + "\":\"" + (if (passed) "ok" else "failed") + "\""
     }.mkString("{", ",", "}")
-    val excluded = SparkEntry.negativeControls
-      .filter(n => !picked.contains(n) && SparkEntry.queries.contains(n))
-      .toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val excluded = QueryPack.registry
+      .filter(q => q.negativeControl && !picked.contains(q))
+      .map(_.name).sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = ok.map(_._3.min).sum
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"status":$status,"protocol":"min-of-$runs","runs":$raw,"negative_controls_excluded":$excluded,"sf":"$sfDir"}"""
     println(line)

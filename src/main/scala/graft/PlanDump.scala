@@ -1,5 +1,7 @@
 package graft
 
+import graft.queries.QueryPack
+
 /** Dump `.explain("formatted")` for named queries to files — the
   * optimization-round evidence artifact (plans/<round>/<q>_<tag>.txt).
   * Both this and [[Bench]] build their session from
@@ -14,19 +16,13 @@ object PlanDump {
     val sfDir = args(0)
     val outDir = args(1)
     val tag = args(2)
-    val only: Option[Set[String]] =
-      args.lift(3).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.keySet)
-      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    }
+    val only = args.lift(3).map(QueryPack.filterNames)
     val spark = graft.runtime.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
-    val picked = SparkEntry.queries
-      .filter { case (n, _) => only.map(_(n)).getOrElse(!SparkEntry.negativeControls(n)) }
-      .toSeq.sortBy(_._1)
-    picked.foreach { case (name, fn) =>
+    val picked = QueryPack.registry.filter(q => only.fold(!q.negativeControl)(_(q.name)))
+      .sortBy(_.name)
+    picked.foreach { case QueryPack.Query(name, fn, _, _) =>
       try {
         val plan = fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)

@@ -1,48 +1,21 @@
 package graft
+import graft.queries.QueryPack.registry
 import org.apache.spark.sql.{SparkSession, DataFrame}
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
+/** The battery's entry points for external tools, derived from the one
+  * query list [[graft.queries.QueryPack.registry]]: every query carries
+  * its oracle. */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     graft.queries.QueryPack.q1Agg(spark, "/root/testdata/sf0.001")
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every query's DataFrame function over a data directory, by name. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    graft.queries.QueryPack.all
-  /** Oracle-pinned NEGATIVE CONTROLS: queries whose own scaladoc steers
-    * users away from running them, kept in `queries` so the correctness
-    * gate pins their semantics bit-for-bit, but excluded from
-    * `graft.Bench`'s headline timing (they can still be timed by naming
-    * them explicitly in Bench's query filter).
-    *
-    * `x_ann_ivf_hier` pairs the two-level coarse quantizer with the
-    * all-pairs within-cell consumer — the configuration
-    * `Ann.assignCellsHier`'s scaladoc forbids (the hier assignment's
-    * measured Σpop² skew is exactly what the all-pairs join pays: 66.8 s
-    * at sf10 vs 1.2 s for the shipped probe pairing). It exists to pin
-    * the raw hier assignment against DuckDB at correctness scale; timing
-    * it in every campaign would let a query the docs tell users not to
-    * run dominate the totals (round-10 verdict, "What's wrong" #2).
-    *
-    * `x_simhash_pairs` (fixed 32-bit signature) and `x_ann_lsh` (fixed
-    * 8-plane bucket key) are the cross-scale-comparability twins of
-    * `x_simhash_pairs_sized` / `x_ann_lsh_sized`: a fixed hash-space
-    * width means band/bucket density grows linearly with the corpus, so
-    * the candidate join densifies quadratically (measured 25.8 s and
-    * 17.4 s at sf10 vs 5.0× / linear curves for the sized twins —
-    * SCALING.md). Their scaladocs steer users to the sized variants;
-    * they stay oracle-pinned at sf0.01 where fixed and sized widths
-    * coincide (round-11 verdict, "What's wrong" #1/#2).
-    *
-    * `x_ann_ivf` is the exhaustive within-cell consumer: the documented
-    * index-build trade (√N-sized cells, all-pairs inside each cell)
-    * whose user path is the probe family (`x_ann_ivf_probe`,
-    * `x_ann_ivfpq*`). 18.5× cost for 100× data (10.1 s at sf10) is the
-    * expected Σpop² of exhaustive cells, not a plan defect — but a
-    * query whose own docs point elsewhere should not ride every
-    * campaign total (round-11 verdict, "What's wrong" #3). */
+    registry.map(q => q.name -> q.build).toMap
+  /** Oracle-pinned queries left out of `graft.Bench`'s headline suite
+    * unless named; each query function's scaladoc gives the reason. */
   def negativeControls: Set[String] =
-    Set("x_ann_ivf_hier", "x_simhash_pairs", "x_ann_lsh", "x_ann_ivf")
+    registry.filter(_.negativeControl).map(_.name).toSet
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] = graft.queries.QueryPack.oracles
+    * the same parquet tables. */
+  def oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracleSql).toMap
 }

@@ -1,8 +1,10 @@
 package graft
+import graft.queries.QueryPack
 import graft.runtime.GraftSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each registry query's result → parquet (negative
+  * controls included), plus oracle_sql.json, for the DuckDB compare
+  * (`tools/check_oracle.py`). */
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
@@ -10,22 +12,15 @@ object Verify {
     // (oracle_sql.json still covers them), so one new row can be checked
     // without re-running the whole suite. The driver passes two args, so
     // its gate always dumps everything.
-    val only: Option[Set[String]] =
-      args.lift(2).map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names.filterNot(SparkEntry.queries.keySet)
-      require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
-    }
+    val only = args.lift(2).map(QueryPack.filterNames)
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    QueryPack.registry.filter(q => only.forall(_(q.name))).foreach { q =>
+      try q.build(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

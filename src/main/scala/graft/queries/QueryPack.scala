@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   *
   * Each entry is one operator from SURVEY.md §2 (named by its operator id) or
   * one of the large-scale training-data extensions, expressed as a
-  * deterministic query over the driver's parquet tables with a DuckDB oracle
-  * in [[oracles]]. Design rules for oracle hash-stability:
+  * deterministic query over the test-data parquet tables with a DuckDB oracle:
+  * one [[QueryPack.Query]] each in [[registry]]. Design rules for oracle
+  * hash-stability:
   *
   *   - money aggregates go through DECIMAL casts (exact, order-independent)
   *     and only the final value is rendered as DOUBLE;
@@ -895,7 +896,7 @@ object QueryPack {
     * sized operating point (725 pairs), the same grow-the-hash-space
     * lesson as `planesFor`.
     *
-    * NEGATIVE CONTROL ([[graft.SparkEntry.negativeControls]]): a fixed
+    * NEGATIVE CONTROL (`negativeControl` in [[registry]]): a fixed
     * 32-bit width means 8-bit band buckets densify linearly with the
     * corpus and the candidate join quadratically — 25.7× cost for 100×
     * data (25.8 s at sf10, SCALING.md). Use [[xSimhashPairsSized]]
@@ -1042,7 +1043,7 @@ object QueryPack {
     * never all-pairs). Emits each vector's bucket and its best
     * within-bucket neighbour. The brute-force twin is `x_ann_cosine`.
     *
-    * NEGATIVE CONTROL ([[graft.SparkEntry.negativeControls]]): 8 fixed
+    * NEGATIVE CONTROL (`negativeControl` in [[registry]]): 8 fixed
     * planes = 256 buckets forever, so bucket population grows linearly
     * with the corpus and the within-bucket join quadratically (17.4 s at
     * sf10, SCALING.md, vs 1.15 s for the sized twin). Use [[xAnnLshSized]]
@@ -1092,26 +1093,33 @@ object QueryPack {
     * would OOM at 100×. Hot cells (a skewed quantizer) are spread with
     * `Skew.saltedJoin`; AQE's skew-join splitting backs this up at runtime.
     *
-    * NEGATIVE CONTROL ([[graft.SparkEntry.negativeControls]]): this is
+    * NEGATIVE CONTROL (`negativeControl` in [[registry]]): this is
     * the EXHAUSTIVE within-cell consumer — every vector meets all ~√N
     * cell-mates, so total work is Σpop² ≈ N^1.5 (18.5× cost for 100×
     * data, 10.1 s at sf10 — SCALING.md). The user path is the probe
     * family ([[xAnnIvfProbe]], `x_ann_ivfpq*`): k probed cells per query,
     * not all-pairs per cell. Stays oracle-pinned to protect the
     * assignment + salted-cell-join semantics. */
-  def xAnnIvf(s: SparkSession, dir: String, centroids: Option[Int] = None): DataFrame = {
+  def xAnnIvf(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
     // Assignment (narrow argmin over the literal centroid matrix) and the
     // salted shuffle-hash cell join are the public operator.
     graft.operators.Ann.annIvf(emb, "vec_id", "embedding",
-      ivfCentroids(emb, centroids), salts = 4)
+      ivfCentroids(emb), salts = 4)
   }
 
   /** x_ann_ivf with the two-level index build (`Ann.assignCellsHier`):
     * same centroids, same within-cell search, but assignment costs
     * ~2√K distances per row instead of K — the sub-O(N^1.5) build. The
     * DuckDB twin replicates the block layout and both argmin tie-breaks,
-    * so the hash pins the hierarchical assignment bit-for-bit. */
+    * so the hash pins the hierarchical assignment bit-for-bit.
+    *
+    * NEGATIVE CONTROL (`negativeControl` in [[registry]]): this pairs the
+    * hier assignment with the all-pairs within-cell consumer, the
+    * configuration `Ann.assignCellsHier`'s scaladoc forbids. Its Σpop²
+    * skew is exactly what the all-pairs join pays: 66.8 s at sf10 vs
+    * 1.2 s for the shipped probe pairing ([[xAnnIvfHierProbe]]). It stays
+    * oracle-pinned to hold the raw hier assignment against DuckDB. */
   def xAnnIvfHier(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
     graft.operators.Ann.annIvf(emb, "vec_id", "embedding",
@@ -2935,126 +2943,6 @@ object QueryPack {
       col("doc_id"),
       graft.operators.TextStats.repetitionRatio(col("text")).as("rep_ratio"))
 
-  // === Registry =============================================================
-
-  val all: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q1_agg" -> (q1Agg _),
-    "q3_top_orders" -> (q3TopOrders _),
-    "q5_region_revenue" -> (q5RegionRevenue _),
-    "q6_forecast_revenue" -> (q6ForecastRevenue _),
-    "agg_rollup" -> (aggRollup _),
-    "agg_distinct" -> (aggDistinct _),
-    "set_ops" -> (setOps _),
-    "dedup_rows" -> (dedupRows _),
-    "w1_running_total" -> (w1RunningTotal _),
-    "w2_sessionize" -> (w2Sessionize _),
-    "s5_json_props" -> (s5JsonProps _),
-    "t7_klass_fanout" -> (t7KlassFanout _),
-    "t9_fixed_width" -> (t9FixedWidth _),
-    "t12_importer_union" -> (t12ImporterUnion _),
-    "t12b_7z_union" -> (t12b7zUnion _),
-    "n3_segments" -> (n3Segments _),
-    "x3_xml_repeat" -> (x3XmlRepeat _),
-    "s12_pdf_text" -> (s12PdfText _),
-    "s9_avro" -> (s9Avro _),
-    "s11_vcf" -> (s11Vcf _),
-    "s15_acroform" -> (s15Acroform _),
-    "m8_dates" -> (m8Dates _),
-    "m10_map_dict" -> (m10MapDict _),
-    "m11_match" -> (m11Match _),
-    "m16_priority" -> (m16Priority _),
-    "m17_join" -> (m17Join _),
-    "m9_cleaners" -> (m9Cleaners _),
-    "x_bucketed_join" -> (xBucketedJoin _),
-    "x_dedup_exact" -> (xDedupExact _),
-    "x_minhash" -> (xMinhash _),
-    "x_minhash_pairs" -> (xMinhashPairs _),
-    "x_simhash" -> (xSimhash _),
-    "x_simhash_pairs" -> (xSimhashPairs _),
-    "x_simhash_pairs_sized" -> (xSimhashPairsSized _),
-    "x_image_dedup_pairs" -> (xImageDedupPairs _),
-    "x_video_dedup_pairs" -> (xVideoDedupPairs _),
-    "x_audio_dedup_pairs" -> (xAudioDedupPairs _),
-    "x_jaccard" -> (xJaccard _),
-    "x_ann_cosine" -> (xAnnCosine _),
-    "x_ann_lsh" -> (xAnnLsh _),
-    "x_ann_lsh_sized" -> (xAnnLshSized _),
-    "x_ann_ivf" -> ((s, d) => xAnnIvf(s, d)),
-    "x_ann_ivf_hier" -> (xAnnIvfHier _),
-    "x_ann_ivf_hier_probe" -> (xAnnIvfHierProbe _),
-    "x_ann_ivf_lloyd" -> (xAnnIvfLloyd _),
-    "x_ann_ivf_probe" -> (xAnnIvfProbe _),
-    "x_ann_ivfpq" -> (xAnnIvfPq _),
-    "x_ann_ivfpq_rerank" -> (xAnnIvfPqRerank _),
-    "x_ann_ivfpq_res" -> (xAnnIvfPqRes _),
-    "x_ann_pq" -> (xAnnPq _),
-    "x_ann_pq256" -> (xAnnPq256 _),
-    "x_ann_pq_lloyd" -> (xAnnPqLloyd _),
-    "x_dedup_embedding" -> (xDedupEmbedding _),
-    "x_dedup_embedding_sized" -> (xDedupEmbeddingSized _),
-    "x_semdedup" -> (xSemDedup _),
-    "x_semdedup_text" -> (xSemDedupText _),
-    "w3_sliding" -> (w3Sliding _),
-    "x_lang_id" -> (xLangId _),
-    "x_quality" -> (xQuality _),
-    "x_quality_learned" -> (xQualityLearned _),
-    "x_quality_trained" -> (xQualityTrained _),
-    "x_text_embed" -> (xTextEmbed _),
-    "x_dsir_select" -> (xDsirSelect _),
-    "x_ppl_buckets" -> (xPplBuckets _),
-    "x_token_count" -> (xTokenCount _),
-    "x_fingerprint" -> (xFingerprint _),
-    "x_dedup_cluster" -> (xDedupCluster _),
-    "x_dedup_cluster_best" -> (xDedupClusterBest _),
-    "x_train_split" -> (xTrainSplit _),
-    "x_decontaminate" -> (xDecontaminate _),
-    "x_contamination_frac" -> (xContaminationFrac _),
-    "x_contaminated_spans" -> (xContaminatedSpans _),
-    "x_shuffle_shards" -> (xShuffleShards _),
-    "x_stratified" -> (xStratified _),
-    "x_pack" -> (xPack _),
-    "x_pack_salted" -> (xPackSalted _),
-    "x_unigram_logprob" -> (xUnigramLogprob _),
-    "x_bigram_logprob" -> (xBigramLogprob _),
-    "x_bigram_logprob_hashed" -> (xBigramLogprobHashed _),
-    "x_inverted_index" -> (xInvertedIndex _),
-    "x_bm25" -> (xBm25 _),
-    "x_rrf_hybrid" -> (xRrfHybrid _),
-    "x_tfidf_keywords" -> (xTfidfKeywords _),
-    "x_weighted_sample" -> (xWeightedSample _),
-    "x_chunk_overlap" -> (xChunkOverlap _),
-    "x_vocab_encode" -> (xVocabEncode _),
-    "x_bpe_train" -> (xBpeTrain _),
-    "x_bpe_encode" -> (xBpeEncode _),
-    "x_unigram_train" -> (xUnigramTrain _),
-    "x_unigram_encode" -> (xUnigramEncode _),
-    "x_pipeline_e2e" -> (xPipelineE2e _),
-    "x_pipeline_tok" -> (xPipelineTok _),
-    "x_pipeline_near" -> (xPipelineNear _),
-    "x_near_ingest" -> (xNearIngest _),
-    "x_near_ingest_incr" -> (xNearIngestIncr _),
-    "x_near_ingest_lifecycle" -> (xNearIngestLifecycle _),
-    "x_sem_ingest_lifecycle" -> (xSemIngestLifecycle _),
-    "x_incremental_dedup" -> (xIncrementalDedup _),
-    "x_cluster_topics" -> (xClusterTopics _),
-    "x_quality_filter" -> (xQualityFilter _),
-    "x_source_cap" -> (xSourceCap _),
-    "x_token_budget" -> (xTokenBudget _),
-    "x_paragraph_dedup" -> (xParagraphDedup _),
-    "x_gopher_quality" -> (xGopherQuality _),
-    "x_lexicon_hits" -> (xLexiconHits _),
-    "x_substring_spans" -> (xSubstringSpans _),
-    "x_remove_spans" -> (xRemoveSpans _),
-    "x_temperature_mix" -> (xTemperatureMix _),
-    "x_temperature_apply" -> (xTemperatureApply _),
-    "x_quality_calibrated" -> (xQualityCalibrated _),
-    "x_profile" -> (xProfile _),
-    "x_redact" -> (xRedact _),
-    "x_rep_ratio" -> (xRepRatio _),
-    "x_asof_join" -> (xAsofJoin _),
-    "x_range_join" -> (xRangeJoin _),
-    "x_salted_agg" -> (xSaltedAgg _))
-
   private val minhashPairsSql: String =
     """WITH sh AS (
       |  SELECT doc_id,
@@ -3642,65 +3530,94 @@ object QueryPack {
       |    ('0x' || substr(md5('42:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS hv
       |  FROM s6)""".stripMargin
 
-  /** DuckDB equivalents. Shared md5-prefix hash:
+  // === Registry =============================================================
+
+  /** One battery entry: its DataFrame over a data directory, the DuckDB SQL
+    * that pins its result on the same parquet tables, and whether it is a
+    * negative control — a configuration its own scaladoc steers users
+    * away from, oracle-pinned all the same but left out of `graft.Bench`'s
+    * headline suite unless named. */
+  final case class Query(name: String,
+                         build: (SparkSession, String) => DataFrame,
+                         oracleSql: String,
+                         negativeControl: Boolean = false)
+
+  /** The given queries as a list; fails on a duplicated name, which a
+    * name-keyed map literal would silently resolve to its last entry. */
+  def registryOf(queries: Query*): Seq[Query] = {
+    val dups = queries.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty, s"duplicate query name(s): ${dups.toSeq.sorted.mkString(", ")}")
+    queries
+  }
+
+  /** The names in a comma-separated query filter; fails, listing them
+    * sorted, on names that match no registry entry. */
+  def filterNames(arg: String): Set[String] = {
+    val names = arg.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- registry.map(_.name)
+    require(unknown.isEmpty, s"unknown query name(s): ${unknown.toSeq.sorted.mkString(", ")}")
+    names
+  }
+
+  /** The battery. Shared md5-prefix hash in the oracles:
     * `('0x'||substr(md5(x),1,8))::BIGINT` == Spark `conv(substr(md5(x),1,8),16,10)`. */
-  val oracles: Map[String, String] = Map(
-    "q1_agg" ->
+  val registry: Seq[Query] = registryOf(
+    Query("q1_agg", q1Agg,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2))) AS DOUBLE) AS sum_base_price,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(12,2))) AS DOUBLE) AS sum_disc_price,
         |  count(*) AS count_order
-        |FROM lineitem GROUP BY 1, 2""".stripMargin,
-    "q3_top_orders" ->
+        |FROM lineitem GROUP BY 1, 2""".stripMargin),
+    Query("q3_top_orders", q3TopOrders,
       """SELECT o_orderkey, o_orderpriority,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |WHERE c_mktsegment = 'BUILDING'
-        |GROUP BY 1, 2 ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin,
-    "q5_region_revenue" ->
+        |GROUP BY 1, 2 ORDER BY revenue DESC, o_orderkey LIMIT 10""".stripMargin),
+    Query("q5_region_revenue", q5RegionRevenue,
       """SELECT n_name,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |JOIN customer ON o_custkey = c_custkey
         |JOIN nation ON c_nationkey = n_nationkey
         |JOIN region ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA' GROUP BY 1""".stripMargin,
-    "q6_forecast_revenue" ->
+        |WHERE r_name = 'ASIA' GROUP BY 1""".stripMargin),
+    Query("q6_forecast_revenue", q6ForecastRevenue,
       """SELECT CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue,
         |  count(*) AS n
         |FROM lineitem
-        |WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin,
-    "x_bucketed_join" ->
+        |WHERE l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""".stripMargin),
+    Query("x_bucketed_join", xBucketedJoin,
       """SELECT o_orderpriority,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(12,2)) * CAST(1 - l_discount AS DECIMAL(12,2))) AS DOUBLE) AS revenue,
         |  count(*) AS n_items
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-        |GROUP BY 1""".stripMargin,
-    "agg_rollup" ->
+        |GROUP BY 1""".stripMargin),
+    Query("agg_rollup", aggRollup,
       """SELECT l_returnflag, l_linestatus, count(*) AS n,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(12,2))) AS DOUBLE) AS qty
-        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin,
-    "agg_distinct" ->
+        |FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""".stripMargin),
+    Query("agg_distinct", aggDistinct,
       """SELECT event_type, count(DISTINCT user_id) AS users, count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "set_ops" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    Query("set_ops", setOps,
       """SELECT k, 'active' AS status FROM (
         |  SELECT c_custkey AS k FROM customer INTERSECT SELECT o_custkey AS k FROM orders)
         |UNION ALL
         |SELECT k, 'inactive' AS status FROM (
-        |  SELECT c_custkey AS k FROM customer EXCEPT SELECT o_custkey AS k FROM orders)""".stripMargin,
-    "dedup_rows" ->
+        |  SELECT c_custkey AS k FROM customer EXCEPT SELECT o_custkey AS k FROM orders)""".stripMargin),
+    Query("dedup_rows", dedupRows,
       """SELECT DISTINCT l_returnflag, l_linestatus, CAST(l_shipdate AS DATE) AS ship_date
-        |FROM lineitem""".stripMargin,
-    "w1_running_total" ->
+        |FROM lineitem""".stripMargin),
+    Query("w1_running_total", w1RunningTotal,
       """SELECT event_id, user_id,
         |  CAST(sum(CAST(value AS DECIMAL(12,2))) OVER
         |    (PARTITION BY user_id ORDER BY event_id
         |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS running_value
-        |FROM events WHERE user_id % 10 = 0""".stripMargin,
-    "w2_sessionize" ->
+        |FROM events WHERE user_id % 10 = 0""".stripMargin),
+    Query("w2_sessionize", w2Sessionize,
       """WITH ev AS (
         |  SELECT user_id, event_id, epoch_ms(ts) AS ms,
         |    lag(epoch_ms(ts)) OVER (PARTITION BY user_id ORDER BY event_id) AS prev_ms
@@ -3715,11 +3632,11 @@ object QueryPack {
         |  FROM flagged)
         |SELECT user_id, session_id, count(*) AS n_events,
         |  min(ms) AS start_ms, max(ms) AS end_ms
-        |FROM sess GROUP BY 1, 2""".stripMargin,
-    "s5_json_props" ->
+        |FROM sess GROUP BY 1, 2""".stripMargin),
+    Query("s5_json_props", s5JsonProps,
       """SELECT CAST(props->>'$.k' AS INT) AS k, count(*) AS n
-        |FROM events GROUP BY 1""".stripMargin,
-    "t7_klass_fanout" ->
+        |FROM events GROUP BY 1""".stripMargin),
+    Query("t7_klass_fanout", t7KlassFanout,
       """SELECT 'CustomerRecord' AS klass,
         |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(upper(c_name),'\.','','g'),'[,;]',' ','g'),'`','''','g'),'\s{2,}',' ','g')) AS name,
         |  c_mktsegment AS segment, NULL AS acctbal, c_custkey AS index
@@ -3727,13 +3644,13 @@ object QueryPack {
         |UNION ALL
         |SELECT 'AccountRecord' AS klass, NULL AS name, NULL AS segment,
         |  CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS VARCHAR) AS acctbal, c_custkey AS index
-        |FROM customer""".stripMargin,
-    "t9_fixed_width" ->
+        |FROM customer""".stripMargin),
+    Query("t9_fixed_width", t9FixedWidth,
       """SELECT p_partkey AS partkey,
         |  lpad(CAST(p_partkey AS VARCHAR), 8, '0') AS key_text,
         |  rtrim(rpad(p_brand, 12, ' ')) AS brand
-        |FROM part""".stripMargin,
-    "t12_importer_union" ->
+        |FROM part""".stripMargin),
+    Query("t12_importer_union", t12ImporterUnion,
       """SELECT CAST(n_nationkey AS VARCHAR) AS key, n_name AS name FROM nation
         |UNION ALL
         |SELECT CAST(r_regionkey AS VARCHAR) AS key, r_name AS name FROM region
@@ -3742,27 +3659,27 @@ object QueryPack {
         |WHERE s_suppkey < 1000
         |UNION ALL
         |SELECT CAST(c_custkey AS VARCHAR) AS key, c_name AS name FROM customer
-        |WHERE c_custkey < 2000""".stripMargin,
-    "t12b_7z_union" ->
+        |WHERE c_custkey < 2000""".stripMargin),
+    Query("t12b_7z_union", t12b7zUnion,
       """SELECT CAST(n_nationkey AS VARCHAR) AS key, n_name AS name FROM nation
         |UNION ALL
-        |SELECT CAST(r_regionkey AS VARCHAR) AS key, r_name AS name FROM region""".stripMargin,
-    "s12_pdf_text" ->
+        |SELECT CAST(r_regionkey AS VARCHAR) AS key, r_name AS name FROM region""".stripMargin),
+    Query("s12_pdf_text", s12PdfText,
       """SELECT p_partkey AS partkey, p_brand AS brand FROM part
-        |WHERE p_partkey < 2000""".stripMargin,
-    "s9_avro" ->
-      """SELECT CAST(n_nationkey AS VARCHAR) AS key, n_name AS name FROM nation""".stripMargin,
-    "s11_vcf" ->
+        |WHERE p_partkey < 2000""".stripMargin),
+    Query("s9_avro", s9Avro,
+      """SELECT CAST(n_nationkey AS VARCHAR) AS key, n_name AS name FROM nation""".stripMargin),
+    Query("s11_vcf", s11Vcf,
       """SELECT CAST(p_partkey AS VARCHAR) AS pos, p_brand AS id FROM part
-        |WHERE p_partkey < 2000""".stripMargin,
-    "s15_acroform" ->
-      """SELECT 'k' || n_nationkey AS field, n_name AS value FROM nation""".stripMargin,
-    "x_train_split" ->
+        |WHERE p_partkey < 2000""".stripMargin),
+    Query("s15_acroform", s15Acroform,
+      """SELECT 'k' || n_nationkey AS field, n_name AS value FROM nation""".stripMargin),
+    Query("x_train_split", xTrainSplit,
       """SELECT doc_id,
         |  CASE WHEN ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 100 < 90
         |       THEN 'train' ELSE 'eval' END AS split
-        |FROM documents""".stripMargin,
-    "x_decontaminate" ->
+        |FROM documents""".stripMargin),
+    Query("x_decontaminate", xDecontaminate,
       """WITH g AS (
         |  SELECT doc_id, unnest(list_distinct(
         |    list_transform(range(1, len(string_split(text, ' ')) - 1),
@@ -3773,8 +3690,8 @@ object QueryPack {
         |SELECT g.doc_id, COUNT(*) AS n_shared
         |FROM g JOIN bench USING (gram)
         |WHERE g.doc_id % 50 <> 0
-        |GROUP BY 1""".stripMargin,
-    "x_contamination_frac" ->
+        |GROUP BY 1""".stripMargin),
+    Query("x_contamination_frac", xContaminationFrac,
       """WITH g AS (
         |  SELECT doc_id, unnest(list_distinct(
         |    list_transform(range(1, len(string_split(text, ' ')) - 1),
@@ -3794,33 +3711,33 @@ object QueryPack {
         |  CASE WHEN s.n_grams IS NULL THEN 0.0
         |       ELSE round(s.n_shared::DOUBLE / s.n_grams, 4) END AS frac
         |FROM (SELECT doc_id FROM documents WHERE doc_id % 50 <> 0) d
-        |LEFT JOIN scored s USING (doc_id)""".stripMargin,
-    "x_shuffle_shards" ->
+        |LEFT JOIN scored s USING (doc_id)""".stripMargin),
+    Query("x_shuffle_shards", xShuffleShards,
       """WITH h AS (
         |  SELECT doc_id,
         |    ('0x' || substr(md5('42:' || CAST(doc_id AS VARCHAR)), 1, 12))::BIGINT AS hv
         |  FROM documents)
         |SELECT doc_id, CAST(hv % 8 AS INT) AS shard,
         |  CAST(row_number() OVER (PARTITION BY hv % 8 ORDER BY hv, doc_id) AS BIGINT) AS pos
-        |FROM h""".stripMargin,
-    "x_stratified" ->
+        |FROM h""".stripMargin),
+    Query("x_stratified", xStratified,
       """SELECT doc_id, lang FROM documents
         |WHERE ('0x' || substr(md5(lang || ':' || CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
-        |  < CASE lang WHEN 'en' THEN 3000 WHEN 'zh' THEN 8000 ELSE 10000 END""".stripMargin,
-    "x_profile" ->
+        |  < CASE lang WHEN 'en' THEN 3000 WHEN 'zh' THEN 8000 ELSE 10000 END""".stripMargin),
+    Query("x_profile", xProfile,
       """SELECT lang, count(*) AS n, round(avg(n_chars), 4) AS mean,
         |  round(quantile_cont(n_chars, 0.5), 4) AS p50,
         |  round(quantile_cont(n_chars, 0.95), 4) AS p95
-        |FROM documents GROUP BY lang""".stripMargin,
-    "x_pack" ->
+        |FROM documents GROUP BY lang""".stripMargin),
+    Query("x_pack", xPack,
       """SELECT doc_id,
         |  lang || '#' || CAST((SUM(len(string_split(text, ' '))) OVER w
         |      - len(string_split(text, ' '))) // 2000 AS VARCHAR) AS seq_id,
         |  CAST((SUM(len(string_split(text, ' '))) OVER w
         |      - len(string_split(text, ' '))) % 2000 AS BIGINT) AS seq_offset
         |FROM documents
-        |WINDOW w AS (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)""".stripMargin,
-    "x_pack_salted" ->
+        |WINDOW w AS (PARTITION BY lang ORDER BY doc_id ROWS UNBOUNDED PRECEDING)""".stripMargin),
+    Query("x_pack_salted", xPackSalted,
       """WITH d AS (
         |  SELECT doc_id, lang, len(string_split(text, ' ')) AS tok,
         |    ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIGINT % 4 AS shard
@@ -3838,8 +3755,8 @@ object QueryPack {
         |SELECT doc_id,
         |  lang || '#' || CAST((local_start + shard_off) // 2000 AS VARCHAR) AS seq_id,
         |  CAST((local_start + shard_off) % 2000 AS BIGINT) AS seq_offset
-        |FROM loc JOIN off USING (lang, shard)""".stripMargin,
-    "x_chunk_overlap" ->
+        |FROM loc JOIN off USING (lang, shard)""".stripMargin),
+    Query("x_chunk_overlap", xChunkOverlap,
       """WITH d AS (SELECT doc_id, string_split(text, ' ') AS toks,
         |    len(string_split(text, ' ')) AS n FROM documents),
         |c AS (SELECT doc_id, toks, n,
@@ -3851,16 +3768,16 @@ object QueryPack {
         |  CAST(least(64, n - ord * 48) AS INT) AS n_tok,
         |  array_to_string(list_slice(toks, ord * 48 + 1,
         |    ord * 48 + least(64, n - ord * 48)), ' ') AS chunk
-        |FROM c, unnest(generate_series(0, nchunks - 1)) AS t(ord)""".stripMargin,
-    "x_incremental_dedup" ->
+        |FROM c, unnest(generate_series(0, nchunks - 1)) AS t(ord)""".stripMargin),
+    Query("x_incremental_dedup", xIncrementalDedup,
       """WITH f AS (SELECT doc_id,
         |    md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS content_fp
         |  FROM documents),
         |newb AS (SELECT * FROM f WHERE doc_id % 10 = 0 OR doc_id % 7 = 0),
         |hist AS (SELECT content_fp FROM f WHERE doc_id % 10 != 0)
         |SELECT doc_id, content_fp FROM newb
-        |WHERE NOT EXISTS (SELECT 1 FROM hist WHERE hist.content_fp = newb.content_fp)""".stripMargin,
-    "x_vocab_encode" ->
+        |WHERE NOT EXISTS (SELECT 1 FROM hist WHERE hist.content_fp = newb.content_fp)""".stripMargin),
+    Query("x_vocab_encode", xVocabEncode,
       """WITH w0 AS (SELECT doc_id,
         |    list_filter(string_split(text, ' '), w -> w != '') AS ws FROM documents),
         |tok AS (SELECT doc_id, pos, ws[pos] AS w
@@ -3874,26 +3791,26 @@ object QueryPack {
         |SELECT doc_id, count(*) AS n_tokens,
         |  CAST(sum(CASE WHEN tid = -1 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
         |  md5(string_agg(CAST(tid AS VARCHAR), ',' ORDER BY pos)) AS ids_fp
-        |FROM enc GROUP BY doc_id""".stripMargin,
-    "x_bpe_train" -> duckBpeTrain(bpeMergeCount),
-    "x_bpe_encode" -> duckBpeEncode(bpeMergeCount),
-    "x_unigram_train" -> duckUnigramTrain,
-    "x_unigram_encode" -> duckUnigramEncode,
+        |FROM enc GROUP BY doc_id""".stripMargin),
+    Query("x_bpe_train", xBpeTrain, duckBpeTrain(bpeMergeCount)),
+    Query("x_bpe_encode", xBpeEncode, duckBpeEncode(bpeMergeCount)),
+    Query("x_unigram_train", xUnigramTrain, duckUnigramTrain),
+    Query("x_unigram_encode", xUnigramEncode, duckUnigramEncode),
     // The seven-stage composition re-derived relationally; each stage's
     // idiom is copied verbatim from its single-operator oracle row
     // (x_gopher_quality's gram fragment, x_lexicon_hits, x_dedup_exact's
     // keeper, x_decontaminate at n = 10, x_quality_calibrated,
     // x_temperature_apply's window algebra, x_pack, x_shuffle_shards).
-    "x_pipeline_e2e" -> duckPipelineE2e,
-    "x_pipeline_tok" -> duckPipelineTok(bpeMergeCount),
-    "x_pipeline_near" -> duckPipelineNear,
-    "x_near_ingest" -> duckNearIngest,
+    Query("x_pipeline_e2e", xPipelineE2e, duckPipelineE2e),
+    Query("x_pipeline_tok", xPipelineTok, duckPipelineTok(bpeMergeCount)),
+    Query("x_pipeline_near", xPipelineNear, duckPipelineNear),
+    Query("x_near_ingest", xNearIngest, duckNearIngest),
     // merge ≡ rebuild THROUGH the gate: the incremental-refresh row's
     // oracle is the same full-corpus replay — any merge defect diverges
-    "x_near_ingest_incr" -> duckNearIngest,
-    "x_near_ingest_lifecycle" -> duckNearIngest,
-    "x_sem_ingest_lifecycle" -> semIngestLifecycleOracleSql,
-    "x_cluster_topics" ->
+    Query("x_near_ingest_incr", xNearIngestIncr, duckNearIngest),
+    Query("x_near_ingest_lifecycle", xNearIngestLifecycle, duckNearIngest),
+    Query("x_sem_ingest_lifecycle", xSemIngestLifecycle, semIngestLifecycleOracleSql),
+    Query("x_cluster_topics", xClusterTopics,
       s"""WITH cents AS (SELECT vec_id AS cent_id, embedding AS cent
         |  FROM embeddings WHERE vec_id < 16),
         |assigned AS (
@@ -3906,19 +3823,19 @@ object QueryPack {
         |        FROM assigned GROUP BY 1)
         |SELECT topic, n,
         |  round(CAST(n AS DOUBLE) / (SELECT sum(n) FROM agg), 4) AS pct, mean_label
-        |FROM agg""".stripMargin,
-    "x_quality_filter" ->
+        |FROM agg""".stripMargin),
+    Query("x_quality_filter", xQualityFilter,
       s"""WITH q AS (SELECT doc_id, lang, $duckQualityExpr AS q FROM documents),
         |thr AS (SELECT round(avg(q), 4) AS q_threshold FROM q)
         |SELECT lang, count(*) AS n_kept, round(avg(q), 4) AS mean_q,
         |  max(q_threshold) AS q_threshold
-        |FROM q, thr WHERE q >= q_threshold GROUP BY lang""".stripMargin,
-    "x_source_cap" ->
+        |FROM q, thr WHERE q >= q_threshold GROUP BY lang""".stripMargin),
+    Query("x_source_cap", xSourceCap,
       s"""WITH q AS (SELECT doc_id, source, $duckQualityExpr AS q FROM documents),
         |r AS (SELECT doc_id, source,
         |  row_number() OVER (PARTITION BY source ORDER BY q DESC, doc_id) AS rk FROM q)
-        |SELECT doc_id, source, rk FROM r WHERE rk <= 10""".stripMargin,
-    "x_token_budget" ->
+        |SELECT doc_id, source, rk FROM r WHERE rk <= 10""".stripMargin),
+    Query("x_token_budget", xTokenBudget,
       s"""WITH q AS (SELECT doc_id, lang, len(string_split(text, ' ')) AS toks,
         |    $duckQualityExpr AS q FROM documents),
         |w AS (SELECT doc_id, lang, toks,
@@ -3926,8 +3843,8 @@ object QueryPack {
         |    ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum_tokens,
         |  CAST(sum(toks) OVER (PARTITION BY lang) AS BIGINT) AS total FROM q)
         |SELECT doc_id, lang, cum_tokens FROM w
-        |WHERE CAST(cum_tokens - toks AS DOUBLE) < 0.3 * CAST(total AS DOUBLE)""".stripMargin,
-    "x_unigram_logprob" ->
+        |WHERE CAST(cum_tokens - toks AS DOUBLE) < 0.3 * CAST(total AS DOUBLE)""".stripMargin),
+    Query("x_unigram_logprob", xUnigramLogprob,
       """WITH w0 AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
         |w AS (SELECT * FROM w0 WHERE w != ''),
         |v AS (SELECT w, count(*) AS c FROM w GROUP BY 1),
@@ -3936,8 +3853,8 @@ object QueryPack {
         |  round(avg(log10((c + 1)::DOUBLE / (n + vsz))), 4) AS avg_logprob,
         |  count(*) AS n_tokens
         |FROM w JOIN v USING (w) CROSS JOIN t
-        |GROUP BY 1""".stripMargin,
-    "x_bigram_logprob" ->
+        |GROUP BY 1""".stripMargin),
+    Query("x_bigram_logprob", xBigramLogprob,
       """WITH w0 AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w != '') AS ws FROM documents),
         |uni AS (SELECT w, count(*) AS c1 FROM (SELECT unnest(ws) AS w FROM w0) GROUP BY 1),
         |t AS (SELECT count(*) AS vsz FROM uni),
@@ -3948,8 +3865,8 @@ object QueryPack {
         |  round(avg(log10((c12 + 1)::DOUBLE / (c1 + vsz))), 4) AS avg_logprob,
         |  count(*) AS n_bigrams
         |FROM bg JOIN bc USING (w1, w2) JOIN uni ON bg.w1 = uni.w CROSS JOIN t
-        |GROUP BY 1""".stripMargin,
-    "x_bigram_logprob_hashed" ->
+        |GROUP BY 1""".stripMargin),
+    Query("x_bigram_logprob_hashed", xBigramLogprobHashed,
       """WITH w0 AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w != '') AS ws FROM documents),
         |uni AS (SELECT w, count(*) AS c1 FROM (SELECT unnest(ws) AS w FROM w0) GROUP BY 1),
         |t AS (SELECT count(*) AS vsz FROM uni),
@@ -3964,8 +3881,8 @@ object QueryPack {
         |FROM bg
         |  JOIN hc ON hc.b = ('0x'||substr(md5(bg.w1||' '||bg.w2),1,8))::BIGINT % 2097152
         |  JOIN uni ON bg.w1 = uni.w CROSS JOIN t
-        |GROUP BY 1""".stripMargin,
-    "x_inverted_index" ->
+        |GROUP BY 1""".stripMargin),
+    Query("x_inverted_index", xInvertedIndex,
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
         |tf AS (
@@ -3975,9 +3892,9 @@ object QueryPack {
         |  round(ln((n.n_docs - count(*) + 0.5) / (count(*) + 0.5) + 1), 4) AS idf,
         |  array_to_string((list(doc_id ORDER BY doc_id))[1:5], ',') AS postings_sample
         |FROM tf CROSS JOIN n
-        |GROUP BY term, n.n_docs""".stripMargin,
-    "x_bm25" -> bm25OracleSqlFor(k = 5),
-    "x_tfidf_keywords" ->
+        |GROUP BY term, n.n_docs""".stripMargin),
+    Query("x_bm25", xBm25, bm25OracleSqlFor(k = 5)),
+    Query("x_tfidf_keywords", xTfidfKeywords,
       """WITH toks AS (
         |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
         |tf AS (
@@ -3993,16 +3910,16 @@ object QueryPack {
         |  SELECT doc_id, term, score,
         |    row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, term) AS rank
         |  FROM scored)
-        |SELECT doc_id, rank, term, score FROM ranked WHERE rank <= 3""".stripMargin,
-    "x_weighted_sample" ->
+        |SELECT doc_id, rank, term, score FROM ranked WHERE rank <= 3""".stripMargin),
+    Query("x_weighted_sample", xWeightedSample,
       """WITH keyed AS (
         |  SELECT doc_id, n_chars,
         |    ln((('0x'||substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT + 1.0) / 4294967296.0)
         |      / n_chars AS wkey
         |  FROM documents)
         |SELECT doc_id, n_chars, round(wkey, 4) + 0.0 AS sample_key
-        |FROM keyed ORDER BY wkey DESC, doc_id LIMIT 50""".stripMargin,
-    "x_rrf_hybrid" ->
+        |FROM keyed ORDER BY wkey DESC, doc_id LIMIT 50""".stripMargin),
+    Query("x_rrf_hybrid", xRrfHybrid,
       s"""WITH lex AS (${bm25OracleSqlFor(k = 20)}),
          |qv AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
          |cs AS (
@@ -4025,8 +3942,8 @@ object QueryPack {
          |  SELECT q_id, doc_id, rrf,
          |    row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, doc_id) AS rank
          |  FROM fused)
-         |SELECT q_id, rank, doc_id, rrf FROM ranked WHERE rank <= 5""".stripMargin,
-    "x_paragraph_dedup" ->
+         |SELECT q_id, rank, doc_id, rrf FROM ranked WHERE rank <= 5""".stripMargin),
+    Query("x_paragraph_dedup", xParagraphDedup,
       """WITH base AS (
         |  SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
         |p0 AS (
@@ -4043,8 +3960,8 @@ object QueryPack {
         |  count(*) AS n_paras,
         |  CAST(count(*) FILTER (WHERE n_docs > 8) AS BIGINT) AS n_dropped
         |FROM paras JOIN f USING (para)
-        |GROUP BY 1""".stripMargin,
-    "x_lexicon_hits" ->
+        |GROUP BY 1""".stripMargin),
+    Query("x_lexicon_hits", xLexiconHits,
       """WITH toks AS (
         |  SELECT doc_id, lower(tok) AS tok FROM (
         |    SELECT doc_id,
@@ -4061,8 +3978,8 @@ object QueryPack {
         |  CAST(coalesce(a.n_terms_hit, 0) AS INT) AS n_terms_hit,
         |  CASE WHEN a.n_tokens IS NULL THEN 0.0
         |       ELSE round(a.n_hits::DOUBLE / a.n_tokens, 4) END AS hit_frac
-        |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin,
-    "x_gopher_quality" ->
+        |FROM documents d LEFT JOIN agg a USING (doc_id)""".stripMargin),
+    Query("x_gopher_quality", xGopherQuality,
       """WITH base AS (
         |  SELECT doc_id, source, string_split(text, ' ') AS ws FROM documents),
         |p0 AS (
@@ -4109,8 +4026,8 @@ object QueryPack {
         |  round(l.dupchars::DOUBLE / l.linechars, 4) AS dup_line_char_frac,
         |  round(l.nell::DOUBLE / l.n_lines, 4) AS ellipsis_line_frac,
         |  round(coalesce(g.topchars, 0)::DOUBLE / len(d.ptext), 4) AS top_2gram_char_frac
-        |FROM lstats l JOIN docs2 d USING (doc_id) LEFT JOIN gbest g USING (doc_id)""".stripMargin,
-    "x_substring_spans" ->
+        |FROM lstats l JOIN docs2 d USING (doc_id) LEFT JOIN gbest g USING (doc_id)""".stripMargin),
+    Query("x_substring_spans", xSubstringSpans,
       """WITH base AS (
         |  SELECT doc_id,
         |    array_to_string(list_transform(range(1, 21),
@@ -4126,8 +4043,8 @@ object QueryPack {
         |  FROM w),
         |f AS (SELECT gram_h, count(DISTINCT doc_id) AS n_docs FROM spans
         |      GROUP BY 1 HAVING count(DISTINCT doc_id) >= 2)
-        |SELECT doc_id, start, gram_h, n_docs FROM spans JOIN f USING (gram_h)""".stripMargin,
-    "x_contaminated_spans" ->
+        |SELECT doc_id, start, gram_h, n_docs FROM spans JOIN f USING (gram_h)""".stripMargin),
+    Query("x_contaminated_spans", xContaminatedSpans,
       """WITH w0 AS (
         |  SELECT doc_id, list_filter(string_split(text, ' '), w -> w != '') AS ws
         |  FROM documents WHERE doc_id % 50 <> 0),
@@ -4152,8 +4069,8 @@ object QueryPack {
         |  coalesce(string_agg(t.tok, ' ' ORDER BY t.idx) FILTER (WHERE c.idx IS NULL), '') AS clean_text,
         |  count(c.idx) AS n_removed
         |FROM toks t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.idx = c.idx
-        |GROUP BY t.doc_id""".stripMargin,
-    "x_remove_spans" ->
+        |GROUP BY t.doc_id""".stripMargin),
+    Query("x_remove_spans", xRemoveSpans,
       """WITH base AS (
         |  SELECT doc_id,
         |    array_to_string(list_transform(range(1, 21),
@@ -4179,8 +4096,8 @@ object QueryPack {
         |  coalesce(string_agg(t.tok, ' ' ORDER BY t.idx) FILTER (WHERE c.idx IS NULL), '') AS clean_text,
         |  count(c.idx) AS n_removed
         |FROM toks t LEFT JOIN cov c ON t.doc_id = c.doc_id AND t.idx = c.idx
-        |GROUP BY t.doc_id""".stripMargin,
-    "x_temperature_mix" ->
+        |GROUP BY t.doc_id""".stripMargin),
+    Query("x_temperature_mix", xTemperatureMix,
       """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
         |s AS (SELECT lang, n, n::DOUBLE / SUM(n) OVER () AS share FROM c),
         |p AS (SELECT lang, n, share, POW(share, 0.5) AS pw FROM s),
@@ -4189,8 +4106,8 @@ object QueryPack {
         |SELECT lang, n, round(share, 4) AS share,
         |  round(target, 4) AS target_share,
         |  round(rate / MAX(rate) OVER (), 4) AS rate
-        |FROM r""".stripMargin,
-    "x_temperature_apply" ->
+        |FROM r""".stripMargin),
+    Query("x_temperature_apply", xTemperatureApply,
       """WITH c AS (SELECT lang, count(*) AS n FROM documents GROUP BY 1),
         |s AS (SELECT lang, n, n::DOUBLE / SUM(n) OVER () AS share FROM c),
         |p AS (SELECT lang, share, POW(share, 0.5) AS pw FROM s),
@@ -4201,68 +4118,68 @@ object QueryPack {
         |SELECT d.doc_id, d.lang
         |FROM documents d JOIN r USING (lang)
         |WHERE ('0x' || substr(md5(d.lang || ':' || CAST(d.doc_id AS VARCHAR)), 1, 8))::BIGINT % 10000
-        |  < CAST(round(r.rate * 10000) AS BIGINT)""".stripMargin,
-    "x_quality_calibrated" ->
+        |  < CAST(round(r.rate * 10000) AS BIGINT)""".stripMargin),
+    Query("x_quality_calibrated", xQualityCalibrated,
       """SELECT doc_id, lang, q AS quality,
         |  round(percent_rank() OVER (PARTITION BY lang ORDER BY q, doc_id), 4) AS q_rank
         |FROM (
         |  SELECT doc_id, lang,
         |    round(least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 50.0, 1.0) *
         |      (1.0 - CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS DOUBLE) / length(text)), 4) AS q
-        |  FROM documents)""".stripMargin,
-    "x_redact" ->
+        |  FROM documents)""".stripMargin),
+    Query("x_redact", xRedact,
       """SELECT doc_id,
         |  md5(regexp_replace(regexp_replace(
         |    text || ' contact user' || doc_id || '@example.com or 0161 496 ' ||
         |      lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0'),
         |    '[A-Za-z0-9._]+@[A-Za-z0-9.]+', '<EMAIL>', 'g'),
         |    '0161 496 [0-9]{4}', '<PHONE>', 'g')) AS clean_hash
-        |FROM documents""".stripMargin,
-    "x_rep_ratio" ->
+        |FROM documents""".stripMargin),
+    Query("x_rep_ratio", xRepRatio,
       """SELECT doc_id,
         |  round(1.0 - CAST(len(list_distinct(string_split_regex(trim(text), ' +'))) AS DOUBLE)
         |            / CAST(len(string_split_regex(trim(text), ' +')) AS DOUBLE), 4) AS rep_ratio
-        |FROM documents""".stripMargin,
-    "n3_segments" ->
+        |FROM documents""".stripMargin),
+    Query("n3_segments", n3Segments,
       """SELECT CAST(o_orderkey AS VARCHAR) AS okey, o_orderpriority AS prio,
         |  o_orderstatus AS status
-        |FROM orders""".stripMargin,
-    "x3_xml_repeat" ->
+        |FROM orders""".stripMargin),
+    Query("x3_xml_repeat", x3XmlRepeat,
       """SELECT 'Cust#1' AS klass, c_custkey AS custkey, c_name AS phone FROM customer
         |UNION ALL
         |SELECT 'Cust#2' AS klass, c_custkey AS custkey, 'alt-' || c_name AS phone
-        |FROM customer""".stripMargin,
-    "m8_dates" ->
+        |FROM customer""".stripMargin),
+    Query("m8_dates", m8Dates,
       """SELECT o_orderkey,
         |  strptime(strftime(o_orderdate, '%d/%m/%Y'), '%d/%m/%Y')::DATE AS parsed_date,
         |  (DATE '1970-01-01' + INTERVAL (o_orderkey % 1000) DAY)::DATE AS daysafter_date
-        |FROM orders""".stripMargin,
-    "m10_map_dict" ->
+        |FROM orders""".stripMargin),
+    Query("m10_map_dict", m10MapDict,
       """SELECT CASE l_returnflag WHEN 'A' THEN 'ACCEPTED' WHEN 'R' THEN 'RETURNED'
         |  ELSE l_returnflag END AS flag, count(*) AS n
-        |FROM lineitem GROUP BY 1""".stripMargin,
-    "m11_match" ->
+        |FROM lineitem GROUP BY 1""".stripMargin),
+    Query("m11_match", m11Match,
       """SELECT p_partkey,
         |  CASE WHEN regexp_matches(p_name, '^(\w+) ')
         |    THEN regexp_extract(p_name, '^(\w+) ', 1) END AS first_word
-        |FROM part""".stripMargin,
-    "m16_priority" ->
+        |FROM part""".stripMargin),
+    Query("m16_priority", m16Priority,
       """SELECT p_partkey,
         |  coalesce(nullif(trim(p_brand), ''), nullif(trim(p_type), '')) AS best
-        |FROM part""".stripMargin,
-    "m17_join" ->
+        |FROM part""".stripMargin),
+    Query("m17_join", m17Join,
       """SELECT p_partkey, concat_ws(' ', p_brand, p_type, p_name) AS joined
-        |FROM part""".stripMargin,
-    "m9_cleaners" ->
+        |FROM part""".stripMargin),
+    Query("m9_cleaners", m9Cleaners,
       """SELECT c_custkey,
         |  trim(regexp_replace(regexp_replace(regexp_replace(regexp_replace(upper(c_name),'\.','','g'),'[,;]',' ','g'),'`','''','g'),'\s{2,}',' ','g')) AS cleaned_name,
         |  regexp_replace(upper(c_name), '[^A-Z0-9]', '', 'g') AS lpi,
         |  regexp_replace(c_name, '[^0-9]', '', 'g') AS digits
-        |FROM customer""".stripMargin,
-    "x_dedup_exact" ->
+        |FROM customer""".stripMargin),
+    Query("x_dedup_exact", xDedupExact,
       """SELECT md5(text) AS content_hash, min(doc_id) AS keeper, count(*) AS n_copies
-        |FROM documents GROUP BY 1""".stripMargin,
-    "x_minhash" ->
+        |FROM documents GROUP BY 1""".stripMargin),
+    Query("x_minhash", xMinhash,
       """WITH sh AS (
         |  SELECT doc_id,
         |    CASE WHEN len(string_split(text, ' ')) >= 3 THEN
@@ -4281,9 +4198,9 @@ object QueryPack {
         |  list_min(list_transform(hs, h -> (h * 9 + 3012354) % 4294967311)) AS mh3,
         |  list_min(list_transform(hs, h -> (h * 11 + 4012357) % 4294967311)) AS mh4,
         |  list_min(list_transform(hs, h -> (h * 13 + 5012360) % 4294967311)) AS mh5
-        |FROM hashed""".stripMargin,
-    "x_minhash_pairs" -> minhashPairsSql,
-    "x_dedup_cluster" ->
+        |FROM hashed""".stripMargin),
+    Query("x_minhash_pairs", xMinhashPairs, minhashPairsSql),
+    Query("x_dedup_cluster", xDedupCluster,
       s"""WITH RECURSIVE pairs AS ($minhashPairsSql),
          |edges AS (
          |  SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -4292,8 +4209,8 @@ object QueryPack {
          |  SELECT DISTINCT src, src FROM edges
          |  UNION
          |  SELECT e.src, cc.comp FROM edges e JOIN cc ON cc.id = e.dst)
-         |SELECT id AS doc_id, min(comp) AS component FROM cc GROUP BY id""".stripMargin,
-    "x_dedup_cluster_best" ->
+         |SELECT id AS doc_id, min(comp) AS component FROM cc GROUP BY id""".stripMargin),
+    Query("x_dedup_cluster_best", xDedupClusterBest,
       s"""WITH RECURSIVE pairs AS ($minhashPairsSql),
          |edges AS (
          |  SELECT doc_a AS src, doc_b AS dst FROM pairs
@@ -4313,8 +4230,8 @@ object QueryPack {
          |  FROM q d LEFT JOIN comp c USING (doc_id))
          |SELECT doc_id, component, q,
          |  row_number() OVER (PARTITION BY component ORDER BY q DESC, doc_id) = 1 AS is_canonical
-         |FROM f""".stripMargin,
-    "x_simhash" -> (
+         |FROM f""".stripMargin),
+    Query("x_simhash", xSimhash, (
       """WITH ex AS (
         |  SELECT doc_id, ('0x'||substr(md5(w),1,8))::BIGINT AS h
         |  FROM documents, unnest(string_split(text, ' ')) AS t(w)),
@@ -4330,8 +4247,8 @@ object QueryPack {
       (0 until 16).map(b => s"  (CASE WHEN s$b > 0 THEN ${1L << b} ELSE 0 END)")
         .mkString(" +\n") +
       """ AS simhash16
-        |FROM agg""".stripMargin),
-    "x_simhash_pairs" -> (
+        |FROM agg""".stripMargin)),
+    Query("x_simhash_pairs", xSimhashPairs, (
       """WITH ex AS (
         |  SELECT doc_id, ('0x'||substr(md5(w),1,8))::BIGINT AS h
         |  FROM documents, unnest(string_split(text, ' ')) AS t(w)),
@@ -4353,8 +4270,8 @@ object QueryPack {
         |  CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
         |FROM banded a JOIN banded b
         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin),
-    "x_video_dedup_pairs" -> (
+        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin), negativeControl = true),
+    Query("x_video_dedup_pairs", xVideoDedupPairs, (
       """WITH fr AS (
         |  SELECT doc_id,
         |    xor(xor(('0x'||substr(md5('vfam:'||CAST(doc_id // 12 AS VARCHAR)),1,14))::BIGINT,
@@ -4378,8 +4295,8 @@ object QueryPack {
         |  CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
         |FROM banded a JOIN banded b
         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin),
-    "x_audio_dedup_pairs" -> (
+        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin)),
+    Query("x_audio_dedup_pairs", xAudioDedupPairs, (
       """WITH tt AS (
         |  SELECT doc_id,
         |    xor(('0x'||substr(md5('aufam:'||CAST(doc_id // 12 AS VARCHAR)),1,14))::BIGINT,
@@ -4407,8 +4324,8 @@ object QueryPack {
         |  CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
         |FROM banded a JOIN banded b
         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin),
-    "x_image_dedup_pairs" ->
+        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin)),
+    Query("x_image_dedup_pairs", xImageDedupPairs,
       """WITH sig AS (
         |  SELECT doc_id,
         |    xor(('0x'||substr(md5('fam:'||CAST(doc_id // 12 AS VARCHAR)),1,14))::BIGINT,
@@ -4420,8 +4337,8 @@ object QueryPack {
         |  CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
         |FROM banded a JOIN banded b
         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin,
-    "x_simhash_pairs_sized" -> (
+        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin),
+    Query("x_simhash_pairs_sized", xSimhashPairsSized, (
       // the coalesce mirrors simhashWidthFor's clamp (w = 14 above
       // 64 << 14 ≈ 1.05M docs, where MIN(p) over range(8, 15) is NULL)
       // — same rendering as duckNearKeeper/duckNearIngest, so the three
@@ -4453,8 +4370,8 @@ object QueryPack {
         |  CAST(bit_count(xor(a.sh, b.sh)) AS INT) AS hamming
         |FROM banded a JOIN banded b
         |  ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id
-        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin),
-    "x_jaccard" ->
+        |WHERE bit_count(xor(a.sh, b.sh)) <= 3""".stripMargin)),
+    Query("x_jaccard", xJaccard,
       """WITH g AS (
         |  SELECT doc_id,
         |    CASE WHEN len(string_split(text, ' ')) >= 2 THEN
@@ -4467,8 +4384,8 @@ object QueryPack {
         |        len(list_distinct(list_concat(a.grams, b.grams))), 4) AS jaccard
         |FROM g a JOIN g b ON a.doc_id < b.doc_id
         |WHERE round(CAST(len(list_intersect(a.grams, b.grams)) AS DOUBLE) /
-        |        len(list_distinct(list_concat(a.grams, b.grams))), 4) > 0.1""".stripMargin,
-    "x_ann_cosine" ->
+        |        len(list_distinct(list_concat(a.grams, b.grams))), 4) > 0.1""".stripMargin),
+    Query("x_ann_cosine", xAnnCosine,
       """WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 8),
         |scored AS (
         |  SELECT q.q_id, e.vec_id,
@@ -4482,25 +4399,25 @@ object QueryPack {
         |    row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
         |  FROM scored)
         |SELECT q_id, rank, vec_id AS neighbor, round(cos, 4) AS cos_sim
-        |FROM ranked WHERE rank <= 5""".stripMargin,
-    "x_ann_lsh" -> lshOracleSqlFor(lshPlanes, sized = false),
-    "x_ann_lsh_sized" -> lshOracleSqlFor(sizedPlanes, sized = true),
-    "x_ann_ivf" -> ivfOracleSql,
-    "x_ann_ivf_hier" -> ivfHierOracleSql,
-    "x_ann_ivf_hier_probe" -> ivfHierProbeOracleSql,
-    "x_ann_ivf_lloyd" -> ivfLloydProbeOracleSql,
-    "x_ann_ivf_probe" -> ivfProbeOracleSql,
-    "x_ann_ivfpq" -> ivfPqOracleSql,
-    "x_ann_ivfpq_rerank" -> ivfPqOracleSqlFor(nprobe = 8, residual = false, rerank = 20),
-    "x_ann_ivfpq_res" -> ivfPqOracleSqlFor(nprobe = 3, residual = true, rerank = 0),
-    "x_ann_pq" -> pqOracleSql,
-    "x_ann_pq256" -> pqLloydOracleSqlFor(ksub = 256, sampleN = 8192),
-    "x_ann_pq_lloyd" -> pqLloydOracleSql,
-    "x_dedup_embedding" -> dedupEmbeddingOracleSqlFor(lshPlanes, sized = false),
-    "x_dedup_embedding_sized" -> dedupEmbeddingOracleSqlFor(sizedPlanes, sized = true),
-    "x_semdedup" -> semDedupOracleSql,
-    "x_semdedup_text" -> semDedupTextOracleSql,
-    "w3_sliding" ->
+        |FROM ranked WHERE rank <= 5""".stripMargin),
+    Query("x_ann_lsh", xAnnLsh, lshOracleSqlFor(lshPlanes, sized = false), negativeControl = true),
+    Query("x_ann_lsh_sized", xAnnLshSized, lshOracleSqlFor(sizedPlanes, sized = true)),
+    Query("x_ann_ivf", xAnnIvf, ivfOracleSql, negativeControl = true),
+    Query("x_ann_ivf_hier", xAnnIvfHier, ivfHierOracleSql, negativeControl = true),
+    Query("x_ann_ivf_hier_probe", xAnnIvfHierProbe, ivfHierProbeOracleSql),
+    Query("x_ann_ivf_lloyd", xAnnIvfLloyd, ivfLloydProbeOracleSql),
+    Query("x_ann_ivf_probe", xAnnIvfProbe, ivfProbeOracleSql),
+    Query("x_ann_ivfpq", xAnnIvfPq, ivfPqOracleSql),
+    Query("x_ann_ivfpq_rerank", xAnnIvfPqRerank, ivfPqOracleSqlFor(nprobe = 8, residual = false, rerank = 20)),
+    Query("x_ann_ivfpq_res", xAnnIvfPqRes, ivfPqOracleSqlFor(nprobe = 3, residual = true, rerank = 0)),
+    Query("x_ann_pq", xAnnPq, pqOracleSql),
+    Query("x_ann_pq256", xAnnPq256, pqLloydOracleSqlFor(ksub = 256, sampleN = 8192)),
+    Query("x_ann_pq_lloyd", xAnnPqLloyd, pqLloydOracleSql),
+    Query("x_dedup_embedding", xDedupEmbedding, dedupEmbeddingOracleSqlFor(lshPlanes, sized = false)),
+    Query("x_dedup_embedding_sized", xDedupEmbeddingSized, dedupEmbeddingOracleSqlFor(sizedPlanes, sized = true)),
+    Query("x_semdedup", xSemDedup, semDedupOracleSql),
+    Query("x_semdedup_text", xSemDedupText, semDedupTextOracleSql),
+    Query("w3_sliding", w3Sliding,
       """WITH base AS (
         |  SELECT event_type, epoch_ms(ts) - (epoch_ms(ts) % 3600000) AS hour0 FROM events),
         |expanded AS (
@@ -4508,8 +4425,8 @@ object QueryPack {
         |  UNION ALL
         |  SELECT event_type, hour0 - 3600000 AS win_start FROM base)
         |SELECT event_type, win_start, count(*) AS n
-        |FROM expanded GROUP BY 1, 2""".stripMargin,
-    "x_lang_id" ->
+        |FROM expanded GROUP BY 1, 2""".stripMargin),
+    Query("x_lang_id", xLangId,
       """SELECT doc_id, lang,
         |  len(string_split(text, ' ')) AS n_tokens,
         |  len(list_filter(string_split(text, ' '),
@@ -4520,14 +4437,14 @@ object QueryPack {
         |  CASE WHEN CAST(len(list_filter(string_split(text, ' '),
         |    t -> t IN ('the','a','and','of','to','in','is','on'))) AS DOUBLE) /
         |    len(string_split(text, ' ')) > 0.05 THEN 'en' ELSE 'other' END AS predicted
-        |FROM documents""".stripMargin,
+        |FROM documents""".stripMargin),
     // The relational rendering of the hashed-ngram scorer: explode every
     // token and bigram, re-derive bucket weights from the shared integer
     // rule, aggregate. Exactly the scale-hostile shape the native
     // expression replaces — fine at oracle scale, the measured loser at
     // sf1+ (SCALING.md).
-    "x_quality_trained" -> qualityTrainedOracleSql,
-    "x_text_embed" ->
+    Query("x_quality_trained", xQualityTrained, qualityTrainedOracleSql),
+    Query("x_text_embed", xTextEmbed,
       """WITH toks AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[ \n\t\r]+'), t -> t != '') AS ts
@@ -4550,8 +4467,8 @@ object QueryPack {
         |  string_agg(
         |    printf('%.4f', round(CASE WHEN n.n > 0 THEN v.v / n.n ELSE 0.0 END, 4) + 0.0),
         |    ',' ORDER BY v.j) AS emb_csv
-        |FROM vec v JOIN nrm n USING (doc_id) GROUP BY v.doc_id""".stripMargin,
-    "x_dsir_select" ->
+        |FROM vec v JOIN nrm n USING (doc_id) GROUP BY v.doc_id""".stripMargin),
+    Query("x_dsir_select", xDsirSelect,
       """WITH toks AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[ \n\t\r]+'), t -> t != '') AS ts
@@ -4574,8 +4491,8 @@ object QueryPack {
         |SELECT t.doc_id, CAST(coalesce(sc.nf, 0) AS INT) AS n_features,
         |  round(coalesce(sc.s, 0.0), 4) AS logw
         |FROM toks t LEFT JOIN scored sc USING (doc_id)
-        |ORDER BY logw DESC, t.doc_id LIMIT 200""".stripMargin,
-    "x_ppl_buckets" ->
+        |ORDER BY logw DESC, t.doc_id LIMIT 200""".stripMargin),
+    Query("x_ppl_buckets", xPplBuckets,
       """WITH w0 AS (SELECT doc_id, list_filter(string_split(text, ' '), w -> w != '') AS ws FROM documents),
         |uni AS (SELECT w, count(*) AS c1 FROM (SELECT unnest(ws) AS w FROM w0) GROUP BY 1),
         |t AS (SELECT count(*) AS vsz FROM uni),
@@ -4593,8 +4510,8 @@ object QueryPack {
         |FROM (SELECT d.doc_id AS doc_id, d.lang AS lang, lm.avg_logprob, lm.n_bigrams,
         |        ntile(3) OVER (PARTITION BY d.lang
         |                       ORDER BY lm.avg_logprob DESC, d.doc_id) AS bucket
-        |      FROM lm JOIN documents d USING (doc_id))""".stripMargin,
-    "x_quality_learned" ->
+        |      FROM lm JOIN documents d USING (doc_id))""".stripMargin),
+    Query("x_quality_learned", xQualityLearned,
       """WITH toks AS (
         |  SELECT doc_id,
         |    list_filter(string_split_regex(lower(text), '[ \n\t\r]+'), t -> t != '') AS ts
@@ -4610,8 +4527,8 @@ object QueryPack {
         |  FROM feats GROUP BY doc_id)
         |SELECT t.doc_id, CAST(coalesce(sc.nf, 0) AS INT) AS n_features,
         |  round(1.0 / (1.0 + exp(-(0.1 + coalesce(sc.s / sc.nf, 0.0)))), 4) AS q_learned
-        |FROM toks t LEFT JOIN scored sc USING (doc_id)""".stripMargin,
-    "x_quality" ->
+        |FROM toks t LEFT JOIN scored sc USING (doc_id)""".stripMargin),
+    Query("x_quality", xQuality,
       """SELECT doc_id,
         |  len(string_split(text, ' ')) AS n_tokens,
         |  len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS n_punct,
@@ -4619,18 +4536,18 @@ object QueryPack {
         |    len(string_split(text, ' ')), 4) AS mean_word_len,
         |  round(least(CAST(len(string_split(text, ' ')) AS DOUBLE) / 50.0, 1.0) *
         |    (1.0 - CAST(len(regexp_extract_all(text, '[^A-Za-z0-9 ]')) AS DOUBLE) / length(text)), 4) AS quality
-        |FROM documents""".stripMargin,
-    "x_token_count" ->
+        |FROM documents""".stripMargin),
+    Query("x_token_count", xTokenCount,
       """SELECT doc_id,
         |  len(regexp_split_to_array(trim(text), '\s+')) AS ws_tokens,
         |  len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS bpe_ish_tokens
-        |FROM documents""".stripMargin,
-    "x_fingerprint" ->
+        |FROM documents""".stripMargin),
+    Query("x_fingerprint", xFingerprint,
       """SELECT doc_id,
         |  md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS content_fp,
         |  md5(list_aggregate(list_sort(string_split(text, ' ')), 'string_agg', ' ')) AS bag_fp
-        |FROM documents""".stripMargin,
-    "x_asof_join" ->
+        |FROM documents""".stripMargin),
+    Query("x_asof_join", xAsofJoin,
       """SELECT event_id, user_id, ts_ms, last_click_id, last_click_ms FROM (
         |  SELECT event_id, user_id, event_type, epoch_ms(ts) AS ts_ms,
         |    last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS) OVER
@@ -4640,8 +4557,8 @@ object QueryPack {
         |      (PARTITION BY user_id ORDER BY epoch_ms(ts), event_id
         |       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_click_ms
         |  FROM events)
-        |WHERE event_type = 'purchase'""".stripMargin,
-    "x_range_join" ->
+        |WHERE event_type = 'purchase'""".stripMargin),
+    Query("x_range_join", xRangeJoin,
       """SELECT s.event_id AS signup_id, s.user_id AS user_id,
         |  count(*) AS n_clicks, min(c.event_id) AS first_click_id
         |FROM events s JOIN events c
@@ -4649,9 +4566,9 @@ object QueryPack {
         | AND s.event_type = 'signup' AND c.event_type = 'click'
         | AND epoch_ms(c.ts) > epoch_ms(s.ts)
         | AND epoch_ms(c.ts) <= epoch_ms(s.ts) + 3600000
-        |GROUP BY 1, 2""".stripMargin,
-    "x_salted_agg" ->
+        |GROUP BY 1, 2""".stripMargin),
+    Query("x_salted_agg", xSaltedAgg,
       """SELECT event_type, count(*) AS n,
         |  CAST(sum(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS value_sum
-        |FROM events GROUP BY 1""".stripMargin)
+        |FROM events GROUP BY 1""".stripMargin))
 }

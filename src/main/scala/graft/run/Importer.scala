@@ -69,12 +69,16 @@ object Importer {
       case "txt" | "text" | "nontabular" =>
         single { m =>
           val lines = LineSource.lines(spark, Seq(file))
-          nonTabularOrPlain(m, lines)
+          val unpack = m.columns.flatMap(_.unpackPattern)
+          // T9: a fixed-width mapping is tabular, header and footer included
+          if (m.nonTabular.isEmpty && unpack.nonEmpty)
+            tabularRecords(spark, m, Tabular.fixedWidth(lines, unpack))
+          else nonTabularOrPlain(m, lines)
         }
       case "jsonl" =>
         single { m =>
-          val colNames = m.columns.flatMap(_.column)
-          tabularRecords(spark, m, jsonlCells(spark, file, m, colNames))
+          val lines = LineSource.lines(spark, Seq(file))
+          tabularRecords(spark, m, Tabular.jsonCells(lines, m.columns.flatMap(_.column)))
         }
       case "vcf" =>
         single(m => tabularRecords(spark, m, Tabular.vcf(spark, Seq(file))))
@@ -194,14 +198,10 @@ object Importer {
   private def single(f: TableMapping => DataFrame)
       : Seq[(Option[String], TableMapping => DataFrame)] = Seq((None, f))
 
-  /** Fixed-width unpack (T9) routes through its unpack patterns; everything
-    * else is already (file, lineno, cells). */
+  /** Header validation, header/footer trim and mapping of a single file's
+    * (file, lineno, cells) rows. */
   private def tabularRecords(spark: SparkSession, mapping: TableMapping,
-                             rows0: DataFrame): DataFrame = {
-    val rows =
-      if (mapping.columns.exists(_.unpackPattern.isDefined) && rows0.columns.contains("line"))
-        Tabular.fixedWidth(rows0, mapping.columns.flatMap(_.unpackPattern))
-      else rows0
+                             rows: DataFrame): DataFrame = {
     // T5: last_data_column caps cells for header rows too (`table.rb:55-57`
     // — process_line slices before validation).
     val lastCol = mapping.lastColumnToTransform
@@ -250,20 +250,6 @@ object Importer {
       val rows = lines.select(col("file"), col("lineno"), array(col("line")).as("cells"))
       MappingCompiler(mapping).records(MappingCompiler.dataRows(rows, mapping))
     }
-  }
-
-  /** JSONL: array rows → cells by position; object rows → cells by mapping
-    * column name (`file/json_lines.rb:16-50`). */
-  private def jsonlCells(spark: SparkSession, file: String, mapping: TableMapping,
-                         colNames: Seq[String]): DataFrame = {
-    val lines = LineSource.lines(spark, Seq(file))
-    val asArray = from_json(col("line"), org.apache.spark.sql.types.ArrayType(
-      org.apache.spark.sql.types.StringType))
-    val asMap = from_json(col("line"), org.apache.spark.sql.types.MapType(
-      org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
-    val cells = when(asArray.isNotNull, asArray)
-      .otherwise(array(colNames.map(n => try_element_at(asMap, lit(n))): _*))
-    lines.select(col("file"), col("lineno"), cells.as("cells"))
   }
 
   /** AcroForm: validate all hash keys are mapped (T10,

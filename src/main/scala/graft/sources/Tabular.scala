@@ -3,7 +3,7 @@ package graft.sources
 import graft.model.TableMapping
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, MapType, StringType, StructField, StructType}
 
 /** Tabular sources: delimited (S2), fixed-width (T9), JSON Lines (S5) and
   * VCF (S11) — each producing the mapping compiler's input contract
@@ -101,15 +101,17 @@ object Tabular {
     linesDf.select(col("file"), col("lineno"), cells.as("cells"))
   }
 
-  /** S5 — JSON Lines: per-line JSON objects; cells materialised in mapping
-    * column order (hash rows are keyed by column name in the reference —
-    * `lib/ndr_import/file/json_lines.rb:16-50`). */
+  /** S5 — JSON Lines: array rows give cells by position; object rows give
+    * cells in mapping column order (hash rows are keyed by column name in
+    * the reference — `lib/ndr_import/file/json_lines.rb:16-50`). */
   def jsonLines(spark: SparkSession, paths: Seq[String], columnNames: Seq[String]): DataFrame =
     jsonCells(LineSource.lines(spark, paths), columnNames)
 
   def jsonCells(linesDf: DataFrame, columnNames: Seq[String]): DataFrame = {
-    val m = from_json(col("line"), org.apache.spark.sql.types.MapType(StringType, StringType))
-    val cells = array(columnNames.map(n => try_element_at(m, lit(n))): _*)
+    val asArray = from_json(col("line"), ArrayType(StringType))
+    val asMap = from_json(col("line"), MapType(StringType, StringType))
+    val cells = when(asArray.isNotNull, asArray)
+      .otherwise(array(columnNames.map(n => try_element_at(asMap, lit(n))): _*))
     linesDf.select(col("file"), col("lineno"), cells.as("cells"))
   }
 

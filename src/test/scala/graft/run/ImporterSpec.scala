@@ -1,7 +1,9 @@
 package graft.run
 
 import graft.SparkSpec
+import graft.compile.MappingCompiler
 import graft.model.MappingLoader
+import graft.sources.{LineSource, Tabular}
 import org.apache.spark.sql.functions._
 
 import java.io.{File, FileOutputStream}
@@ -192,6 +194,53 @@ class ImporterSpec extends SparkSpec {
     assert(jrows.toSeq == Seq(Seq("1", "1", "1", "1"), Seq("2", "2", "2", "2")))
   }
 
+
+  test("fixed-width text mapping: unpacked, header validated, footer trimmed") {
+    val dir = tmpDir()
+    val path = write(dir, "people.txt",
+      ("idname      flag\n" +
+        "01Alice     Y   \n" +
+        "02Bob       N   \n" +
+        "END OF FILE\n").getBytes("UTF-8"))
+    val mappings = MappingLoader.loadTables(
+      """|- canonical_name: people
+         |  filename_pattern: !ruby/regexp /\.txt\z/i
+         |  header_lines: 1
+         |  footer_lines: 1
+         |  klass: Person
+         |  columns:
+         |  - column: id
+         |    unpack_pattern: a2
+         |    mappings:
+         |    - field: id
+         |  - column: name
+         |    unpack_pattern: A10
+         |    mappings:
+         |    - field: name
+         |  - column: flag
+         |    unpack_pattern: a4
+         |    mappings:
+         |    - field: flag
+         |""".stripMargin)
+    def fields(df: org.apache.spark.sql.DataFrame) = df.orderBy("index")
+      .select("fields", "rawtext").collect()
+      .map(r => (r.getMap[String, String](0).toMap, r.getMap[String, String](1).toMap)).toSeq
+    val got = fields(Importer.mappedTables(spark, path, mappings)("people"))
+
+    val m = mappings.head
+    val cells = Tabular.fixedWidth(
+      LineSource.lines(spark, Seq(path)), m.columns.flatMap(_.unpackPattern))
+    val header = cells.filter(col("lineno") < 1).collect().map(_.getSeq[String](2)).toSeq
+    val validated = MappingCompiler.consumeHeader(m, header)
+    val expected = fields(
+      MappingCompiler(validated).records(MappingCompiler.dataRows(cells, validated)))
+    assert(expected.map(_._1.view.filterKeys(Set("id", "name", "flag")).toMap) == Seq(
+      Map("id" -> "01", "name" -> "Alice", "flag" -> "Y"),
+      Map("id" -> "02", "name" -> "Bob", "flag" -> "N")))
+    // `a` keeps the padding, `A` trims it
+    assert(expected.map(e => (e._2("name"), e._2("flag"))) == Seq(("Alice", "Y   "), ("Bob", "N   ")))
+    assert(got == expected)
+  }
 
   test("file_password docx through non-tabular mapping (reference :75-103)") {
     val docxPath = "/root/reference/test/resources/password_protected_hello_world.docx"

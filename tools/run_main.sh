@@ -4,8 +4,11 @@
 # as build.sbt's `run / javaOptions`, so a campaign invoked here is the same JVM shape
 # as `sbt runMain` without sbt's project-lock serialization or startup.
 # Usage: SPARK_GRAFT_SF_DIR=... tools/run_main.sh Bench [args...]
+# Needs SPARK_HOME (the Spark install whose jars go on the classpath).
 set -euo pipefail
 MAIN="$1"; shift
+# the classes of the checkout this script lives in, wherever it is run from
+CLASSES="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes"
 OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          java.nio java.util java.util.concurrent java.util.concurrent.atomic \
@@ -17,5 +20,5 @@ exec java $OPENS \
   -XX:ReservedCodeCacheSize=512m \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$CLASSES:${SPARK_HOME:?SPARK_HOME must name the Spark install}/jars/*" \
   "graft.$MAIN" "$@"
