@@ -338,17 +338,6 @@ final class MappingCompiler(mapping: TableMapping) {
               col("rec.rawtext").as("rawtext"), col("index"), col("file"))
       .filter(!coalesce(element_at(col("fields"), "skip") === "true", lit(false)))
   }
-
-  /** Per-klass typed projection: one named column per field (string-typed,
-    * dates ISO-rendered), plus rawtext/index. Catalyst prunes unused fields.
-    */
-  def recordsFor(klass: String, df: DataFrame): DataFrame = {
-    val pairs = fieldExprsFor(klass, col("cells"))
-    val out = pairs.map { case (f, v) => v.as(f) } ++
-      Seq(rawtextFor(klass, col("cells")).as("rawtext"),
-          col("lineno").as("index"), col("file"))
-    df.select(out: _*)
-  }
 }
 
 object MappingCompiler {

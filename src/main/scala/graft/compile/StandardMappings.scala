@@ -15,19 +15,6 @@ object StandardMappings {
 
   def set(mappings: Map[String, ColumnMapping]): Unit = { registry = mappings }
 
-  /** Load the registry from the reference's YAML shape: a top-level map of
-    * name → column mapping. */
-  def loadYaml(yamlText: String): Unit = {
-    val parsed = MappingLoader.parse(yamlText)
-    parsed match {
-      case m: Map[_, _] =>
-        registry = m.asInstanceOf[Map[String, Any]].map { case (name, v) =>
-          name -> MappingLoader.columnsFromAny(List(v)).head
-        }
-      case other => throw new IllegalArgumentException(s"Bad standard mappings: $other")
-    }
-  }
-
   private def defaults: Map[String, ColumnMapping] = {
     def simple(col: String, cleaner: String) =
       col -> MappingLoader.columnsFromAny(List(Map(

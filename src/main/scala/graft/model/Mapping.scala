@@ -137,8 +137,4 @@ final case class TableMapping(
       require(label.matches("(?i)[A-Z]+"), s"Unknown 'last_data_column' format: $label")
       label.toUpperCase.foldLeft(0)((acc, ch) => acc * 26 + (ch - 'A' + 1)) - 1
   }
-
-  /** Header names as expected on a header row (`table.rb:239-241`). */
-  def expectedHeader: Seq[String] =
-    columns.map(c => c.column.orElse(c.standardMapping).map(_.toLowerCase).orNull)
 }

@@ -11,8 +11,10 @@ import org.apache.spark.sql.functions._
   * which degenerates quadratically at scale. The shapes here — a
   * carry-forward window for as-of, bounded bucket fan-out for range — keep
   * every shuffle keyed and every task's work proportional to its input.
-  * The oracle-checked `x_asof_join` / `x_range_join` queries pin these
-  * operators' semantics against DuckDB.
+  * OperatorsSpec checks both against naive inequality joins. The
+  * `x_asof_join` / `x_range_join` oracle queries inline their own window
+  * and bucketed-join plans of the same shapes; they do not call these
+  * operators.
   */
 object Joins {
 

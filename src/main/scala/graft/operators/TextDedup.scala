@@ -894,50 +894,40 @@ object TextDedup {
 
   /** Test-set decontamination: count, per training doc, the distinct word
     * `n`-grams it shares with a benchmark/eval set — the standard guard
-    * against evaluation leakage in a training corpus. Scale shape: the
-    * benchmark's distinct gram set is usually small (benchmarks are
-    * thousands of docs) and is BROADCAST; the training side is a narrow
-    * per-doc explode of its distinct grams, one join, one aggregation — no
-    * shuffle of the corpus itself beyond the final per-doc count. Docs
-    * sharing nothing are absent (anti-join the output to keep the clean
-    * set).
+    * against evaluation leakage in a training corpus. Output: one row per
+    * contaminated id, (idCol, n_shared); docs sharing nothing are absent
+    * (anti-join the output to keep the clean set), and the counts of docs
+    * sharing an id are summed.
     *
-    * The broadcast is SIZE-ROUTED, not unconditional: Catalyst's own
-    * estimate of the gram side (`optimizedPlan.stats.sizeInBytes`, the same
-    * signal `autoBroadcastJoinThreshold` consults) is compared against
-    * `benchBroadcastMaxBytes`; a large eval suite degrades to a
-    * shuffle-hash join (bench side builds the hash table, the corpus side
-    * never sorts) instead of OOMing the driver and every executor. */
+    * Shape, routed by the benchmark's size ([[benchGramRoute]]):
+    *  - under `benchBroadcastMaxBytes` (benchmarks are usually thousands
+    *    of docs): the benchmark's gram set is broadcast as a hash set,
+    *    and each doc is PROBED in-row by the native
+    *    [[graft.functions.NgramProbe]] — one narrow pass over the corpus,
+    *    no gram rows, no join; only docs with a shared gram reach the
+    *    per-id sum's exchange (the `n_shared > 0` filter is pushed under
+    *    the projection, so the probe runs a second time on those docs
+    *    only);
+    *  - above it: the corpus's distinct grams are exploded and joined to
+    *    the benchmark's by a shuffle-hash join (bench side builds the
+    *    hash table, the corpus side never sorts), instead of OOMing the
+    *    driver and every executor. */
   def decontaminate(docs: DataFrame, idCol: String, textCol: String,
                     benchmark: DataFrame, benchTextCol: String,
                     n: Int = 3,
-                    benchBroadcastMaxBytes: Long = 256L << 20): DataFrame = {
-    // word-count filters, never a computed-column filter (see the LSH
-    // note); `_w` materialised before the gram transform so the split
-    // isn't re-evaluated per gram inside the lambda
-    def gramRows(df: DataFrame, textC: String, out: String) =
-      df.filter(graft.operators.TextStats.spaceTokens(col(textC)) >= n)
-        .withColumn("_w", words(col(textC)))
-        .withColumn(out, explode(array_distinct(wordNgrams(col("_w"), n))))
-    val docGrams = gramRows(docs, textCol, "_gram").select(col(idCol), col("_gram"))
-    val benchGrams = gramRows(benchmark, benchTextCol, "_bgram")
-      .select(col("_bgram")).distinct()
-    val benchEstBytes = benchGrams.queryExecution.optimizedPlan.stats.sizeInBytes
-    val useBroadcast = benchEstBytes <= BigInt(benchBroadcastMaxBytes)
-    // a silently flipping join strategy is a debugging trap at scale —
-    // one visible line records the route and the estimate that chose it
-    log.info(
-      s"decontaminate: bench gram side estimated $benchEstBytes bytes " +
-        s"(threshold $benchBroadcastMaxBytes) -> " +
-        (if (useBroadcast) "BROADCAST" else "SHUFFLE_HASH") + " join")
-    val joined =
-      if (useBroadcast)
-        docGrams.join(broadcast(benchGrams), col("_gram") === col("_bgram"))
-      else
-        docGrams.join(benchGrams.hint("SHUFFLE_HASH"), col("_gram") === col("_bgram"))
-    // both sides are per-key distinct, so plain count = distinct overlap
-    joined.groupBy(idCol).agg(count(lit(1)).as("n_shared"))
-  }
+                    benchBroadcastMaxBytes: Long = 256L << 20): DataFrame =
+    benchGramRoute("decontaminate", benchmark, benchTextCol, n,
+        benchBroadcastMaxBytes) match {
+      case Left(probe) =>
+        docs.select(col(idCol), probe(col(textCol)).getField("n_shared").as("_s"))
+          .filter(col("_s") > 0)
+          .groupBy(idCol).agg(sum(col("_s")).as("n_shared"))
+      case Right(benchGrams) =>
+        // both sides are per-key distinct, so plain count = distinct overlap
+        gramRows(docs, textCol, n, "_gram").select(col(idCol), col("_gram"))
+          .join(benchGrams.hint("SHUFFLE_HASH"), col("_gram") === col("_bgram"))
+          .groupBy(idCol).agg(count(lit(1)).as("n_shared"))
+    }
 
   /** Fraction-based contamination scoring — the GPT-3-style gate that
     * [[decontaminate]]'s raw count can't express: a 10 000-token document
@@ -946,48 +936,85 @@ object TextDedup {
     * `n_shared` (those also in the benchmark), `frac` = shared/total
     * rounded to 4 places (0.0 for sub-`n`-token docs, which have no
     * grams to contaminate) — callers threshold `frac` themselves, so
-    * one scoring pass serves any cutoff.
+    * one scoring pass serves any cutoff. Docs sharing an id each carry
+    * the id's summed counts.
     *
-    * Shape: ONE gram pass over the corpus feeding a single LEFT join +
-    * conditional-count aggregate — a separate total-grams branch would
-    * re-plan the gram pipeline (the BM25 duplicated-subtree trap, and
-    * the exchange wouldn't be reused because the branches prune
-    * different columns). The benchmark side routes
-    * broadcast/shuffle-hash by Catalyst's own size estimate exactly as
-    * [[decontaminate]] does; the id frame joining the gramless docs
-    * back in is column-pruned to the id alone. */
+    * Shape: [[decontaminate]]'s route. Under the threshold the
+    * [[graft.functions.NgramProbe]] yields both counts per doc in one
+    * narrow pass, so the per-id sum reads one row per doc; above
+    * it ONE gram explode feeds a LEFT shuffle-hash join + conditional
+    * count (a separate total-grams branch would re-plan the gram
+    * pipeline — the BM25 duplicated-subtree trap). Either way the id
+    * frame joining the docs back in is column-pruned to the id alone. */
   def contaminationFraction(docs: DataFrame, idCol: String, textCol: String,
                             benchmark: DataFrame, benchTextCol: String,
                             n: Int = 3,
                             benchBroadcastMaxBytes: Long = 256L << 20): DataFrame = {
-    def gramRows(df: DataFrame, textC: String, out: String) =
-      df.filter(graft.operators.TextStats.spaceTokens(col(textC)) >= n)
-        .withColumn("_w", words(col(textC)))
-        .withColumn(out, explode(array_distinct(wordNgrams(col("_w"), n))))
-    val docGrams = gramRows(docs, textCol, "_gram").select(col(idCol), col("_gram"))
-    val benchGrams = gramRows(benchmark, benchTextCol, "_bgram")
-      .select(col("_bgram")).distinct()
-    val benchEstBytes = benchGrams.queryExecution.optimizedPlan.stats.sizeInBytes
-    val useBroadcast = benchEstBytes <= BigInt(benchBroadcastMaxBytes)
-    log.info(
-      s"contaminationFraction: bench gram side estimated $benchEstBytes bytes " +
-        s"(threshold $benchBroadcastMaxBytes) -> " +
-        (if (useBroadcast) "BROADCAST" else "SHUFFLE_HASH") + " join")
-    val joined =
-      if (useBroadcast)
-        docGrams.join(broadcast(benchGrams), col("_gram") === col("_bgram"), "left")
-      else
-        docGrams.join(benchGrams.hint("SHUFFLE_HASH"),
-          col("_gram") === col("_bgram"), "left")
-    val scored = joined.groupBy(idCol).agg(
-      count(lit(1)).as("n_grams"),
-      count(col("_bgram")).as("n_shared"))
+    val scored = benchGramRoute("contaminationFraction", benchmark, benchTextCol,
+        n, benchBroadcastMaxBytes) match {
+      case Left(probe) =>
+        docs.select(col(idCol), probe(col(textCol)).as("_p"))
+          .groupBy(idCol).agg(
+            sum(col("_p.n_grams")).as("n_grams"),
+            sum(col("_p.n_shared")).as("n_shared"))
+      case Right(benchGrams) =>
+        gramRows(docs, textCol, n, "_gram").select(col(idCol), col("_gram"))
+          .join(benchGrams.hint("SHUFFLE_HASH"), col("_gram") === col("_bgram"), "left")
+          .groupBy(idCol).agg(
+            count(lit(1)).as("n_grams"),
+            count(col("_bgram")).as("n_shared"))
+    }
+    // a gramless doc (under `n` pieces, or null text) scores (0, 0, 0.0)
+    val nGrams = coalesce(col("n_grams"), lit(0L))
     docs.select(col(idCol)).join(scored, Seq(idCol), "left")
-      .select(col(idCol),
-        coalesce(col("n_grams"), lit(0L)).as("n_grams"),
+      .select(col(idCol), nGrams.as("n_grams"),
         coalesce(col("n_shared"), lit(0L)).as("n_shared"),
-        when(col("n_grams").isNull, lit(0.0))
+        when(nGrams === 0, lit(0.0))
           .otherwise(round(col("n_shared") / col("n_grams"), 4)).as("frac"))
+  }
+
+  /** One row per (doc, distinct word `n`-gram), for docs of at least `n`
+    * pieces. Word-count filter, never a computed-column filter (see the
+    * LSH note); `_w` is materialised before the gram transform so the
+    * split isn't re-evaluated per gram inside the lambda. */
+  private def gramRows(df: DataFrame, textC: String, n: Int, out: String): DataFrame =
+    df.filter(TextStats.spaceTokens(col(textC)) >= n)
+      .withColumn("_w", words(col(textC)))
+      .withColumn(out, explode(array_distinct(wordNgrams(col("_w"), n))))
+
+  /** The benchmark side of [[decontaminate]] and [[contaminationFraction]],
+    * routed by Catalyst's own estimate of its distinct gram set
+    * (`optimizedPlan.stats.sizeInBytes`, the signal
+    * `autoBroadcastJoinThreshold` consults) against `maxBytes`:
+    *  - Left: at or under it, the benchmark's texts are collected to the
+    *    driver — fewer bytes than the gram set a broadcast join would
+    *    collect to build its hash relation — windowed into a
+    *    [[graft.functions.GramSet]] exactly as the probe windows a row,
+    *    and shipped once as a `SparkContext.broadcast`; the result is the
+    *    [[graft.functions.NgramProbe]] column over a text column;
+    *  - Right: over it, the distinct gram frame (`_bgram`) for a
+    *    shuffle-hash join.
+    * A silently flipping route is a debugging trap at scale, so one log
+    * line records the route and the estimate that chose it. */
+  private def benchGramRoute(op: String, benchmark: DataFrame, benchTextCol: String,
+                             n: Int, maxBytes: Long)
+      : Either[Column => Column, DataFrame] = {
+    val benchGrams = gramRows(benchmark, benchTextCol, n, "_bgram")
+      .select(col("_bgram")).distinct()
+    val est = benchGrams.queryExecution.optimizedPlan.stats.sizeInBytes
+    val probe = est <= BigInt(maxBytes)
+    log.info(s"$op: bench gram side estimated $est bytes (threshold $maxBytes) -> " +
+      (if (probe) "BROADCAST gram-set probe" else "SHUFFLE_HASH join"))
+    if (!probe) Right(benchGrams)
+    else {
+      // the texts, not their gram rows: one narrow job instead of the
+      // distinct's shuffle + collect
+      val texts = benchmark.filter(col(benchTextCol).isNotNull)
+        .select(col(benchTextCol).cast("binary")).collect().map(_.getAs[Array[Byte]](0))
+      val bc = benchmark.sparkSession.sparkContext
+        .broadcast(graft.functions.GramSet.ofTexts(texts, n))
+      Left(text => graft.functions.NgramProbe.ngramProbe(text, n, bc))
+    }
   }
 
   /** Incremental (batch-vs-history) exact dedup — the production shape a

@@ -23,8 +23,9 @@ import org.apache.spark.sql.functions._
   *  2. Exact dedup: md5 fingerprint keeper (min id per hash) — one
   *     fingerprint-keyed exchange.
   *  3. Decontaminate ([[TextDedup.decontaminate]], distinct word
-  *     `contamN`-grams vs `benchmark`) then LEFT-ANTI join the
-  *     contaminated ids out. The anti join is deliberately UNHINTED:
+  *     `contamN`-grams vs `benchmark`: one native in-row probe per doc
+  *     against the broadcast benchmark gram set) then LEFT-ANTI join
+  *     the contaminated ids out. The anti join is deliberately UNHINTED:
   *     AQE sees the contaminated-id set's runtime size (contaminated
   *     docs ≪ corpus) and picks broadcast itself; a static broadcast()
   *     would gamble on an estimate the aggregate can't provide.
@@ -47,8 +48,8 @@ import org.apache.spark.sql.functions._
   *     permutation, one shard-keyed exchange.
   *
   * The frame is persisted ONCE, after dedup (`materialize`): stage 3
-  * fans the survivors into two consumers (gram branch + main branch)
-  * and stage 5's rate collect is a separate action — without the
+  * fans the survivors into two consumers (the drop-set pass + the main
+  * branch) and stage 5's rate collect is a separate action — without the
   * materialization each would re-run the gate+dedup subtree from the
   * parquet scan. The default materializer is
   * `persist(MEMORY_AND_DISK)`; the caller owns the returned frame's
@@ -78,8 +79,8 @@ object TextPipeline {
   /** Stages 1–5 (gates → dedup → [near-dup keeper] → decontaminate →
     * calibrate → temperature), shared by [[e2e]] and [[e2eTokenized]].
     * Returns (release, mixed): `release` frees everything this stage
-    * pinned — the persisted post-dedup frame and, with `nearDedup`, the
-    * eagerly checkpointed loser-id frame (whose executor blocks would
+    * pinned — the persisted post-dedup frame and the eagerly pinned
+    * drop-set frame (near-dup losers ∪ contaminated ids; its blocks would
     * otherwise accrete across repeated pipeline runs in one session:
     * `localCheckpoint` blocks live on the RDD, not in the cache manager,
     * so only [[graft.runtime.Checkpoints.releaseLocal]] frees them) —
@@ -142,73 +143,61 @@ object TextPipeline {
         row_number().over(Window.partitionBy(col("_fp")).orderBy(col(idCol))))
       .filter(col("_rn") === 1).drop("_fp", "_rn")
     val training = materialize(deduped)
-    // 2b. near-dup cluster keeper (see scaladoc). The loser-id set is
-    // materialised EAGERLY (checkpoint policy) so the member window runs
-    // exactly once — lazily it would re-plan inside every downstream
-    // consumer of the survivor set.
-    val losers: Option[DataFrame] =
-      if (!nearDedup) None
-      else {
-        val n = training.count()
-        // an empty post-dedup corpus has no near-dups to keep or drop —
-        // fall through to the nearDedup=false shape rather than letting
-        // simhashWidthFor(0)'s require throw (enabling the flag must not
-        // change empty-input behavior)
-        if (n == 0) None
-        else {
-        val bits = 4 * TextDedup.simhashWidthFor(n)
-        // the WHOLE build runs inside the checkpoint scope: simhashPairs
-        // and connectedComponents checkpoint EAGERLY as they construct,
-        // so their loop survivors (the signature checkpoint, CC edges,
-        // CC final labels) must be pinned after the scope's snapshot to
-        // be released by it — correct to keep while the loops run,
-        // unreachable once the loser-id set is pinned. dir=Some: those
-        // survivors live as spills under the caller-owned dir instead,
-        // whose lifecycle the caller already owns.
-        def loserPlan(): DataFrame = {
-          val pairs = TextDedup.simhashPairs(training, idCol, textCol, bits,
-            wideHash = true, checkpointDir = checkpointDir)
-          val comp = TextDedup
-            .connectedComponents(pairs, s"${idCol}_a", s"${idCol}_b",
-              checkpointDir = checkpointDir)
-            .select(col("id").as(idCol), col("component"))
-          training
-            .select(col(idCol), TextStats.quality(col(textCol)).as("_nq"))
-            .join(comp, Seq(idCol)) // members only — comp is tiny, AQE broadcasts
-            .withColumn("_rk", row_number().over(
-              Window.partitionBy(col("component"))
-                .orderBy(col("_nq").desc, col(idCol))))
-            .filter(col("_rk") > 1).select(col(idCol))
-        }
-        Some(checkpointDir match {
-          case Some(_) => graft.runtime.Checkpoints.policy(
-            training.sparkSession, checkpointDir)(loserPlan())
-          case None => graft.runtime.Checkpoints.withLocalCheckpointScope(
-            training.sparkSession)(loserPlan())
-        })
-        }
-      }
+    // 2b. near-dup cluster keeper (see scaladoc), built only when there
+    // is a post-dedup corpus: an empty one has no near-dups to keep or
+    // drop, and simhashWidthFor(0)'s require would throw (enabling the
+    // flag must not change empty-input behavior). The count doubles as
+    // the cache-warming action.
+    val n = if (nearDedup) training.count() else 0L
+    def loserPlan(): DataFrame = {
+      val bits = 4 * TextDedup.simhashWidthFor(n)
+      val pairs = TextDedup.simhashPairs(training, idCol, textCol, bits,
+        wideHash = true, checkpointDir = checkpointDir)
+      val comp = TextDedup
+        .connectedComponents(pairs, s"${idCol}_a", s"${idCol}_b",
+          checkpointDir = checkpointDir)
+        .select(col("id").as(idCol), col("component"))
+      training
+        .select(col(idCol), TextStats.quality(col(textCol)).as("_nq"))
+        .join(comp, Seq(idCol)) // members only — comp is tiny, AQE broadcasts
+        .withColumn("_rk", row_number().over(
+          Window.partitionBy(col("component"))
+            .orderBy(col("_nq").desc, col(idCol))))
+        .filter(col("_rk") > 1).select(col(idCol))
+    }
     // 3. decontamination. Contamination is PER-DOC against the benchmark
-    // (independent of which near-dups survive), so the gram branch runs
-    // over the cache and the near-dup losers simply UNION into the drop
-    // set: ONE anti join carries both exclusions. Dropping
+    // (independent of which near-dups survive), so the probe runs over
+    // the cache and the near-dup losers simply UNION into the drop set:
+    // ONE anti join carries both exclusions. Dropping
     // contaminated(training) vs contaminated(survivors) is equivalent
     // set algebra: survivors ∖ contaminated(survivors) =
     // training ∖ losers ∖ contaminated(training).
-    //
-    // The drop-set ids are materialised EAGERLY (r18, guide §1.2): stage
-    // 5's rate collect and the final consumer are two separate actions
-    // over the anti join, so a lazy drop set re-ran the whole `contamN`-
-    // gram explode + benchmark join per action — the most expensive
-    // branch in the composition, paid twice. Pinned, the gram branch
-    // runs once; the pinned frame is O(dropped ids), and the anti join
-    // still resolves to a runtime broadcast (AQE sees the tiny relation).
     val contaminated = TextDedup
       .decontaminate(training, idCol, textCol, benchmark, benchTextCol, n = contamN)
       .select(col(idCol))
-    val toDrop = graft.runtime.Checkpoints
-      .policy(training.sparkSession, checkpointDir)(
-        losers.fold(contaminated)(_.union(contaminated)))
+    // The drop set (near-dup losers ∪ contaminated ids) is materialised
+    // in ONE eager pass: stage 5's rate collect and the final consumer
+    // are two separate actions over the anti join, so a lazy drop set
+    // re-runs the member window and the probe per action (measured
+    // slower on `curate_near`). Pinned, both run once; the
+    // pinned frame is O(dropped ids), and the anti join still resolves
+    // to a runtime broadcast (AQE sees the tiny relation).
+    //
+    // The near-dup build runs inside a checkpoint scope: simhashPairs and
+    // connectedComponents checkpoint EAGERLY as they construct, so their
+    // loop survivors (the signature checkpoint, CC edges, CC final
+    // labels) are pinned after the scope's snapshot and released by it
+    // once the drop set is pinned. Only then: the scope releases every
+    // RDD pinned inside it, and without the count above the training
+    // cache would first be pinned inside this pass. dir=Some: the
+    // survivors are spills under the caller-owned dir instead, whose
+    // lifecycle the caller owns.
+    def dropPlan = if (n == 0) contaminated else loserPlan().union(contaminated)
+    val spark = training.sparkSession
+    val toDrop =
+      if (n > 0 && checkpointDir.isEmpty)
+        graft.runtime.Checkpoints.withLocalCheckpointScope(spark)(dropPlan)
+      else graft.runtime.Checkpoints.policy(spark, checkpointDir)(dropPlan)
     val clean = training.join(toDrop, Seq(idCol), "left_anti")
     // 4. calibrated quality gate. Quality (and the caller's narrow
     // columns) are row-local over the cached text and evaluate in the
@@ -224,10 +213,9 @@ object TextPipeline {
     // 5. temperature mixing (O(strata) collect + narrow filter)
     val release = () => {
       training.unpersist()
-      // dir=None losers/toDrop are localCheckpoints — pinned RDD blocks,
-      // not cache entries; dir=Some spills live under the caller-owned
-      // dir (releaseLocal no-ops on the parquet-read plan)
-      losers.foreach(graft.runtime.Checkpoints.releaseLocal)
+      // dir=None toDrop is a localCheckpoint — pinned RDD blocks, not a
+      // cache entry; a dir=Some spill lives under the caller-owned dir
+      // (releaseLocal no-ops on the parquet-read plan)
       graft.runtime.Checkpoints.releaseLocal(toDrop)
       ()
     }

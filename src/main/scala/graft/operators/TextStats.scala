@@ -1775,10 +1775,11 @@ object TextStats {
     // so the regime only applies to the localCheckpoint policy.
     val aqeKey = "spark.sql.adaptive.enabled"
     val partKey = "spark.sql.shuffle.partitions"
-    val aqeWas = spark.conf.get(aqeKey, "true")
-    val partWas = spark.conf.get(partKey)
+    // restored on exit as they were: a key the caller never set is
+    // unset again, not pinned to the default it read as
+    val confWas = Seq(aqeKey, partKey).map(k => k -> spark.conf.getAll.get(k))
     val baseRows = base0.count()
-    val loopStatic = checkpointDir.isEmpty && aqeWas == "true" &&
+    val loopStatic = checkpointDir.isEmpty && spark.conf.get(aqeKey, "true") == "true" &&
       baseRows <= 10L * 1000 * 1000
     val w = Array.fill(buckets)(0.0)
     var bias = 0.0
@@ -1865,9 +1866,9 @@ object TextStats {
         }
       }
     } finally {
-      if (loopStatic) {
-        spark.conf.set(aqeKey, aqeWas)
-        spark.conf.set(partKey, partWas)
+      if (loopStatic) confWas.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
       }
       // the loop's survivors are intermediate state: the trained model is
       // the return value, so nothing may stay pinned (repeated training

@@ -21,17 +21,6 @@ object Registry {
   final class UnknownFormatError(format: String)
     extends RuntimeException(s"""Error: Unknown file format "$format"""")
 
-  /** Formats with a handler (the reference's per-format registrations). */
-  val knownFormats: Set[String] = Set(
-    "csv", "delimited", "txt", "text", "nontabular", "jsonl", "xls", "xlsm",
-    "xlsx", "xml_table", "avro", "vcf", "pdf", "doc", "docx", "acroform",
-    "zip", "7z",
-    // Spark-native extension: columnar drops flow through the same mapping
-    // pipeline (no reference equivalent — its gem stack has no columnar IO).
-    "parquet", "orc")
-
-  val containerFormats: Set[String] = Set("zip", "7z")
-
   def formatFor(filename: String, explicit: Option[String] = None): String =
     explicit.getOrElse {
       val name = new File(filename).getName

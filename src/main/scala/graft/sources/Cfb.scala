@@ -131,8 +131,6 @@ object Cfb {
           out.toByteArray.take(e.size.toInt)
         }
       }
-
-    def streamNames: Seq[String] = entries.filter(_.entryType == 2).map(_.name)
   }
 
   def isCfb(bytes: Array[Byte]): Boolean =

@@ -67,6 +67,31 @@ class QualityTrainSpec extends SparkSpec {
     assert(w.length == 32)
   }
 
+  test("a loop that throws restores AQE and shuffle partitions; an unset key stays unset") {
+    // an all-featureless corpus takes the loop-static path (AQE on, a
+    // 0-row frame), flips both keys, then throws in iteration 1's
+    // nothing-to-train-on check — inside the loop, after the flip
+    val empty = Seq((1L, "", true), (2L, "", false)).toDF("doc_id", "text", "y")
+    val keys = Seq("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    def state() = keys.map(k => k -> spark.conf.getAll.get(k)) // None: unset
+    val saved = state()
+    try {
+      for (prior <- Seq(Seq(None, Some("7")), Seq(Some("true"), None))) {
+        keys.zip(prior).foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+        intercept[IllegalArgumentException] {
+          TextStats.trainQualityModel(empty, "doc_id", "text", col("y"), buckets = 16)
+        }
+        assert(state() == keys.zip(prior), s"conf not restored to $prior")
+      }
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("an all-featureless corpus fails loudly") {
     val empty = Seq((1L, "", true), (2L, "", false)).toDF("doc_id", "text", "y")
     intercept[IllegalArgumentException] {

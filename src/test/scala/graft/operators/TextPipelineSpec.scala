@@ -26,14 +26,14 @@ class TextPipelineSpec extends SparkSpec {
     .toDF("doc_id", "text")
 
   test("nearDedup run releases ALL pinned blocks on unpersistPipeline") {
-    // the near-dup build pins four localCheckpoints (signature, CC edges,
-    // CC final labels, the loser-id set) plus the training cache; the
-    // scoped build releases the first three once the losers are pinned.
-    // Since r18 the unioned drop-set ids are ALSO pinned (so the gram
-    // branch runs once, not once per downstream action), so a live run
-    // holds exactly three blocks and unpersistPipeline must free all of
-    // them — repeated pipeline runs in one session must not accrete
-    // executor blocks
+    // the near-dup build pins three localCheckpoints (signature, CC
+    // edges, CC final labels) inside the drop-set scope, plus the
+    // training cache; the scope releases the three once the drop set
+    // (near-dup losers ∪ contaminated ids, one eager pass so neither
+    // branch re-runs per downstream action) is pinned. A live run holds
+    // exactly two blocks and unpersistPipeline must free both —
+    // repeated pipeline runs in one session must not accrete executor
+    // blocks
     def pinned() = spark.sparkContext.getPersistentRDDs.keySet
     val before = pinned()
     val df = TextPipeline.e2e(corpus, "doc_id", "text", "lang",
@@ -44,9 +44,9 @@ class TextPipelineSpec extends SparkSpec {
     assert(!out.map(_.getLong(0)).contains(2L),
       "doc 2 is the reordered twin of doc 1 and must lose the keeper rank")
     val mid = pinned() -- before
-    assert(mid.size == 3,
-      s"a nearDedup run holds exactly the training cache + loser + " +
-        s"drop-set checkpoints, got $mid")
+    assert(mid.size == 2,
+      s"a nearDedup run holds exactly the training cache + the drop-set " +
+        s"checkpoint, got $mid")
     TextPipeline.unpersistPipeline(df)
     val after = pinned() -- before
     assert(after.isEmpty, s"unpersistPipeline must return to baseline, leaked: $after")

@@ -219,12 +219,16 @@ class PlanQualitySpec extends SparkSpec {
     }
   }
 
-  test("decontaminate: benchmark grams broadcast, corpus side never sort-merged") {
+  test("decontaminate: one probe pass, no corpus Generate, no join, no sort") {
+    // the benchmark's gram set is collected and broadcast before the plan
+    // runs, so the corpus side is ONE native in-row probe feeding the
+    // per-id sum: no gram explode, no join of any kind, one exchange
     val plan = formattedPlan(QueryPack.xDecontaminate(spark, sf))
-    assert(plan.contains("BroadcastHashJoin"),
-      s"bench side must broadcast:\n$plan")
-    assert(!plan.contains("SortMergeJoin"),
-      s"the corpus must never shuffle into a sort-merge join:\n$plan")
+    assert(plan.contains("graft_ngram_probe"), s"native probe missing:\n$plan")
+    assert(!plan.contains("Generate"), s"a gram explode crept back:\n$plan")
+    assert(!plan.contains("Join"), s"the probe route joins nothing:\n$plan")
+    val exchanges = """\(\d+\) Exchange""".r.findAllIn(plan).length
+    assert(exchanges == 1, s"expected only the per-id sum's exchange, got $exchanges:\n$plan")
   }
 
   test("decontaminate: an over-threshold benchmark degrades to a shuffle-hash join") {
@@ -243,18 +247,20 @@ class PlanQualitySpec extends SparkSpec {
       s"the corpus must never sort:\n$plan")
   }
 
-  test("contamination fraction: one gram subtree, bench broadcast, no corpus sort") {
+  test("contamination fraction: one probe per doc, no Generate, no sort") {
     val plan = formattedPlan(QueryPack.xContaminationFrac(spark, sf))
-    assert(plan.contains("BroadcastHashJoin"),
-      s"bench side must broadcast:\n$plan")
+    assert(!plan.contains("Generate"), s"a gram explode crept back:\n$plan")
     assert(!plan.contains("SortMergeJoin"),
       s"the corpus must never shuffle into a sort-merge join:\n$plan")
-    // one Generate = one gram explode: a separate total-grams branch would
-    // re-plan the gram pipeline (the BM25 duplicated-subtree trap) and
-    // show up here as a second corpus-side Generate
-    val generates = """\(\d+\) Generate""".r.findAllIn(plan).length
-    assert(generates <= 2, // corpus grams + bench grams
-      s"gram pipeline planned more than twice ($generates Generates):\n$plan")
+    // one probe evaluation: a separate total-grams branch would re-plan
+    // the corpus pass (the BM25 duplicated-subtree trap)
+    val probes = "graft_ngram_probe\\(".r.findAllIn(plan).length
+    assert(probes == 1, s"corpus probed $probes times:\n$plan")
+    // the only join is the id frame's join back onto the scores, and it
+    // broadcasts the per-id scores
+    val joins = """\(\d+\) \w*Join""".r.findAllIn(plan).toSeq
+    assert(joins.size == 1 && joins.head.endsWith("BroadcastHashJoin"),
+      s"expected the one broadcast id join-back, got $joins:\n$plan")
   }
 
   test("remove spans: no product, no nested-loop, in-row excision (no token explode join-back)") {
@@ -582,15 +588,15 @@ class PlanQualitySpec extends SparkSpec {
   test("pipeline e2e: one corpus scan (cached, consumed twice), one lang exchange shared by calibrate+pack") {
     // The composition-time claims no single-operator row can pin:
     //  - the training corpus is read from parquet ONCE (the persist after
-    //    dedup); the decontamination gram branch and the main branch both
+    //    dedup); the decontamination probe and the main branch both
     //    consume the cache — without the materialization each would
     //    re-plan gate+dedup from the scan (the duplicated-subtree trap).
-    //    Since r18 the gram branch runs inside the EAGER drop-set
-    //    materialisation (it was re-evaluated per action before — once
-    //    under the rate collect, once under the final job), so the FINAL
-    //    job scans the cache exactly once (main branch) and touches no
-    //    parquet at all: the benchmark's only parquet read happened in
-    //    the drop-set job
+    //    The contamination probe runs inside the EAGER drop-set
+    //    materialisation (it would be re-evaluated per action otherwise
+    //    — once under the rate collect, once under the final job), so the
+    //    FINAL job scans the cache exactly once (main branch) and touches
+    //    no parquet at all: the benchmark's only parquet read is the gram
+    //    collect before the drop-set job
     //  - calibrate's stratum window and pack's stratum window share ONE
     //    hashpartitioning(lang) exchange (EnsureRequirements inserts only
     //    a sort between them)
@@ -614,7 +620,7 @@ class PlanQualitySpec extends SparkSpec {
       val ns = nodes(df.queryExecution.executedPlan)
       val cacheScans = ns.count(_.isInstanceOf[InMemoryTableScanExec])
       assert(cacheScans == 1,
-        s"final job must scan the training cache exactly once (the gram " +
+        s"final job must scan the training cache exactly once (the probe " +
           s"branch consumed it in the drop-set job), got $cacheScans")
       val parquetScans = ns.count(_.isInstanceOf[FileSourceScanExec])
       assert(parquetScans == 0,
@@ -638,7 +644,7 @@ class PlanQualitySpec extends SparkSpec {
     // the tokenized pipeline's composition claims: folding BPE encode into
     // the plan must not cost anything structural —
     //  - same scan discipline as e2e (cache feeds two consumers, one
-    //    parquet rescan for the benchmark side)
+    //    parquet read for the benchmark's gram collect)
     //  - calibrate+pack STILL share one lang exchange (the narrow encode
     //    projection between them preserves the partitioning)
     //  - the vocabulary lookup is the native hash-probe VocabId inside
@@ -663,7 +669,7 @@ class PlanQualitySpec extends SparkSpec {
       val ns = nodes(df.queryExecution.executedPlan)
       val cacheScans = ns.count(_.isInstanceOf[InMemoryTableScanExec])
       assert(cacheScans == 1,
-        s"final job must scan the training cache exactly once (the gram " +
+        s"final job must scan the training cache exactly once (the probe " +
           s"branch consumed it in the drop-set job), got $cacheScans")
       val parquetScans = ns.count(_.isInstanceOf[FileSourceScanExec])
       assert(parquetScans == 0,
@@ -694,7 +700,7 @@ class PlanQualitySpec extends SparkSpec {
     // the near-dup stage's composition claims:
     //  - the corpus parquet is STILL read once (the signature build and
     //    the keeper's quality branch both consume the post-dedup cache;
-    //    only the benchmark side rescans parquet)
+    //    only the benchmark's gram collect reads parquet again)
     //  - the keeper window partitions by COMPONENT over the member set
     //    only (the comp-labels inner join bounds the window's input to
     //    docs that collided in a band — never a corpus-wide component
@@ -722,8 +728,8 @@ class PlanQualitySpec extends SparkSpec {
       import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
       val cacheScans = ns.count(_.isInstanceOf[InMemoryTableScanExec])
       assert(cacheScans == 1,
-        s"final job must scan the training cache exactly once (gram branch " +
-          s"and keeper consumed it in their eager jobs), got $cacheScans")
+        s"final job must scan the training cache exactly once (probe " +
+          s"and keeper consumed it in the eager drop-set job), got $cacheScans")
       def exchangesOn(key: String) = ns.collect {
         case e: ShuffleExchangeLike => e.outputPartitioning
       }.count {
@@ -733,7 +739,7 @@ class PlanQualitySpec extends SparkSpec {
       assert(exchangesOn("lang") == 1,
         s"calibrate+pack must share one lang exchange, got ${exchangesOn("lang")}")
       // the keeper window (component exchange) ran ONCE, eagerly, when the
-      // loser-id set was checkpointed — the final plan carries only the
+      // drop set was checkpointed — the final plan carries only the
       // id-keyed anti join residue
       assert(exchangesOn("component") == 0,
         s"keeper window must not re-plan in the final job, got ${exchangesOn("component")}")

@@ -31,7 +31,7 @@ READING = {
     "x_stratified": "narrow md5 filter",
     "n3_segments": "per-file window state machine; parallel across files",
     "x_redact": "narrow regexp_replace",
-    "x_decontaminate": "broadcast route (gram side under threshold at both SFs)",
+    "x_decontaminate": "broadcast gram-set probe route (gram side under threshold at both SFs)",
     "w3_sliding": "windowed agg",
     "q5_region_revenue": "broadcast dims + one fact shuffle",
     "x_dedup_cluster": "pointer-jumping CC: O(log d) rounds, round cost linear",
