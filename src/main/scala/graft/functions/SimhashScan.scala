@@ -24,9 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * bits b is strictly positive.
   *
   * Because it is row-local it applies to a STREAMING frame unchanged —
-  * the property [[graft.streaming.Streams]] near-dup dedup needs, where
-  * the explode+groupBy rendering would be a per-micro-batch shuffle and
-  * a cross-batch wrong answer. */
+  * the property [[graft.operators.TextDedup.nearDropAtIngest]]'s
+  * stream-static gate needs, where the explode+groupBy rendering would
+  * be a per-micro-batch shuffle and a cross-batch wrong answer. */
 case class SimhashScan(child: Expression, bits: Int, wide: Boolean)
     extends UnaryExpression {
 

@@ -959,7 +959,7 @@ object Ann {
     * array. Bucket populations are held ~64 by [[planesFor]]'s sizing
     * law, so a member array is a bounded in-row object, and an ingest
     * stream can probe the whole index with ONE stateless stream-static
-    * equi-join ([[graft.streaming.Streams.semDropAtIngest]]) instead of
+    * equi-join ([[semDropAtIngest]]) instead of
     * a stateful pair stage. Member order inside an array is
     * nondeterministic (collect_list); every consumer must select
     * witnesses by VALUE (max cos, then min id), never by position. */
@@ -1033,6 +1033,84 @@ object Ann {
         col("built_fp").cast("string"),
         lit(") — cell and bucket keys are not comparable across " +
           "parameter sets; rebuild the index"))))
+  }
+
+  /** Semantic drop-at-ingest against a BATCH-BUILT SemDedup index: each
+    * arriving embedded document is assigned its nearest centroid
+    * (plan-literal, row-local native argmin), LSH-bucketed (plan-literal
+    * planes), probed against the packed index ([[semIndexBuckets]])
+    * with ONE stream-static left equi-join on (cell, bucket), and
+    * judged IN-ROW over the bucket's ~64 members — dropped iff some
+    * indexed member reaches `cos ≥ tau` (4-dp rounded, [[semDedup]]'s
+    * rounding). One output row per ingested doc: (id, cell, cent_cos,
+    * witness, cos_sim, dropped) — witness = highest-cosine member,
+    * ties to the smallest id (selected by VALUE via an array_min over
+    * (−cos, id) structs, so collect_list's member order never matters).
+    *
+    * STATELESS by construction — every operator is row-local or a
+    * stream-static join, so the query runs in append mode with no
+    * watermark and no keyed state; the same DataFrame code runs
+    * unchanged on a batch frame (StreamsSpec pins the two bit-equal).
+    * Policy note: ingest priority, not [[semDedup]]'s symmetric
+    * greedy — an arriving duplicate always loses to the index, whatever
+    * its centroid-cosine; self-ids already present in the index are
+    * excluded so re-ingest replays are idempotent.
+    *
+    * `centroids`/`planes` must fingerprint-match the index's build
+    * parameters — ENFORCED against the stamp columns
+    * ([[stampedSemMembers]]): a mismatched probe raises instead of
+    * silently mis-keying every bucket lookup.
+    *
+    * Scale shape: the index is O(corpus) but bucket-PACKED (~64-member
+    * rows); the stream side never shuffles — the join is the static
+    * side's lookup. Unlike the simhash twin (24 B/member, broadcastable
+    * by construction at any corpus size), the members here CARRY the
+    * embedding vectors (~4·dim B each), so the probe join has two
+    * regimes: under the broadcast threshold it is the BroadcastHashJoin
+    * lookup the small-scale plan shows; past it Spark co-partitions
+    * both sides on (cell, bucket) — measured at sf10 (index ~105 MB):
+    * sort-merge with one exchange per side, 4.2 s for the full 200k
+    * probe. Either plan judges in-row over ~64 members; neither is
+    * ever all-pairs. If per-batch probing at the co-partitioned scale
+    * becomes the measured cost, the amortization path is persisting
+    * the refreshed index as a (cell, bucket)-bucketed table
+    * ([[graft.runtime.Bucketing]]) so the index-side exchange+sort is
+    * priced per refresh instead of per probe. The in-row
+    * member scan is two interpreted HOFs over ≤~64 elements around the
+    * native dot; if ingest throughput ever makes that the measured
+    * bottleneck, the upgrade path is a native best-witness expression
+    * (the BpeSegment playbook). */
+  def semDropAtIngest(docs: DataFrame, idCol: String, embCol: String,
+                      index: DataFrame,
+                      centroids: Seq[(Long, Seq[Double])],
+                      planes: Seq[Seq[Int]], tau: Double): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val cents = broadcast(centroids.toDF("_cent_id", "_cent"))
+    assignCells(docs, embCol, centroids)
+      .withColumn("bucket", lshBucket(col(embCol), planes))
+      .withColumn("_nrm", norm(col(embCol)))
+      .join(cents, col("cell") === col("_cent_id"))
+      .withColumn("cent_cos", round(
+        dot(col(embCol), col("_cent")) / (col("_nrm") * norm(col("_cent"))), 4))
+      // the stamp guard rides the members read (the simhash gate's
+      // pattern): a probe under different centroids/planes than the
+      // index was built with raises on the first bucket row instead of
+      // silently mis-keying every (cell, bucket) lookup
+      .join(index.select(col("cell"), col("bucket"),
+          stampedSemMembers(index, centroids, planes).as("members")),
+        Seq("cell", "bucket"), "left")
+      .withColumn("_cands", filter(
+        transform(col("members"), m => struct(
+          (-round(dot(col(embCol), m.getField("emb")) /
+            (col("_nrm") * m.getField("nrm")), 4)).as("ncos"),
+          m.getField("id").as("witness"))),
+        c => (-c.getField("ncos") >= tau) && c.getField("witness") =!= col(idCol)))
+      .withColumn("_best", array_min(col("_cands")))
+      .select(col(idCol), col("cell"), col("cent_cos"),
+        col("_best.witness").as("witness"),
+        (-col("_best.ncos")).as("cos_sim"),
+        col("_best").isNotNull.as("dropped"))
   }
 
   /** Incremental refresh of a packed semantic index: fold `newVectors`

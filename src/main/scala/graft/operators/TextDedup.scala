@@ -2,8 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType,
-  ShortType, StringType, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType,
+  IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Document-level deduplication operators for training-data pipelines, each
@@ -237,9 +237,10 @@ object TextDedup {
       idCol, s"simhash$bits", bits, bands, maxHamming, checkpointDir)
 
   /** The band-join half of [[simhashPairs]], generic over any integer
-    * signature column — the machinery image perceptual hashes
-    * ([[graft.multimodal.Multimodal.imagePHashes]], 64-bit dHash) reuse
-    * wholesale: cut the `bits`-bit signature into `bands` equal slices,
+    * signature column — the machinery the image, video
+    * ([[videoSignatureFromFrames]]) and audio
+    * ([[envelopeSignatureFromSlots]]) near-dup rows reuse wholesale:
+    * cut the `bits`-bit signature into `bands` equal slices,
     * collide candidates on (band index, slice value), verify each by
     * exact hamming distance. Pigeonhole contract as in [[simhashPairs]]:
     * hamming < `bands` ⇒ at least one identical band ⇒ the pair is always
@@ -299,14 +300,60 @@ object TextDedup {
       .filter(col("hamming") <= maxHamming)
   }
 
+  /** Per-bit MAJORITY combine of per-(doc, frame) hashes into ONE
+    * `bits`-bit temporal signature per doc: bit k is set iff strictly
+    * more than half the doc's frames set it (ties → 0). Transient
+    * per-frame noise — a re-encoded frame, a dropped frame, a scene
+    * insert — flips any given bit in a minority of frames and VANISHES;
+    * content that persists across the clip survives, so near-dup videos
+    * land within a few bits, the property [[bandedHammingPairs]]'s
+    * banding exploits. One hash aggregate with `bits` bounded
+    * conditional sums — the exchange carries (doc, `bits` longs), never
+    * the frames. MultimodalSpec pins it against a row-local majority
+    * loop on random frames. */
+  def videoSignatureFromFrames(frames: DataFrame, idCol: String,
+                               hashCol: String, bits: Int = 64): DataFrame = {
+    require(bits >= 1 && bits <= 64, s"bits must be 1..64, got $bits")
+    val sums = (0 until bits).map(k =>
+      sum(shiftright(col(hashCol), k).bitwiseAND(lit(1L))).as(s"_b$k"))
+    val sig = (0 until bits).map(k =>
+      when(lit(2L) * col(s"_b$k") > col("_n"), lit(1L << k)).otherwise(lit(0L)))
+      .reduce(_.bitwiseOR(_))
+    frames.groupBy(col(idCol))
+      .agg(count(lit(1)).as("_n"), sums: _*)
+      .select(col(idCol), sig.as("vhash"))
+  }
+
+  /** Energy-envelope dHash (the Krawetz dHash formulation applied to an
+    * audio clip's energy envelope) for envelope SLOTS-AS-ROWS inputs:
+    * per id, pivot the `bits + 1` slot energies into primitive
+    * aggregation buffers (one codegen'd hash aggregate — the exchange
+    * carries (doc, `bits + 1` doubles), never samples) and set bit `b`
+    * iff slot `b` holds more energy than slot `b + 1`. Comparisons are
+    * monotone in the energy, so the signature is invariant to volume
+    * scaling; feed it into [[bandedHammingPairs]]. AudioDedupSpec pins
+    * it against the slot-comparison loop. */
+  def envelopeSignatureFromSlots(slots: DataFrame, idCol: String,
+                                 slotCol: String, energyCol: String,
+                                 bits: Int = 64): DataFrame = {
+    require(bits >= 1 && bits <= 64, s"bits must be 1..64, got $bits")
+    val es = (0 to bits).map(k =>
+      max(when(col(slotCol) === k, col(energyCol))).as(s"_e$k"))
+    val sig = (0 until bits).map(b =>
+      when(col(s"_e$b") > col(s"_e${b + 1}"), lit(1L << b)).otherwise(lit(0L)))
+      .reduce(_.bitwiseOR(_))
+    slots.groupBy(col(idCol))
+      .agg(es.head, es.tail: _*)
+      .select(col(idCol), sig.as("ahash"))
+  }
+
   /** Packed banded-simhash index over a batch corpus — the simhash twin
     * of [[Ann.semIndexBuckets]]: one row per (band, key) bucket holding
     * the bucket's members as (id, sig, q) structs, where `q` is the
     * 4-dp [[TextStats.quality]] keeper score. Built for
-    * [[graft.streaming.Streams.nearDropAtIngest]]'s stream-static
-    * probes: an arriving doc looks up its `bands` bucket keys and
-    * judges the packed members in-row, so the ingest side never
-    * shuffles.
+    * [[nearDropAtIngest]]'s stream-static probes: an arriving doc
+    * looks up its `bands` bucket keys and judges the packed members
+    * in-row, so the ingest side never shuffles.
     *
     * Scale shape: O(corpus × bands) rows before packing, grouped by
     * (band, key) — ONE exchange at build time, priced once per index
@@ -318,12 +365,12 @@ object TextDedup {
     * (`built_bits`/`built_bands`/`built_wide` literal columns — they
     * survive checkpoints and parquet round-trips, unlike plan-level
     * metadata): signatures are meaningless across widths, and before the
-    * stamp a [[simhashIndexMerge]] or
-    * [[graft.streaming.Streams.nearDropAtIngest]] probe configured at a
-    * different width silently mis-keyed every bucket — near-dups sailed
-    * through with no error. Both consumers now verify the stamp (see
-    * [[stampedMembers]]); the per-row cost is three constants the
-    * optimizer folds away whenever the index is still plan-literal. */
+    * stamp a [[simhashIndexMerge]] or [[nearDropAtIngest]] probe
+    * configured at a different width silently mis-keyed every bucket —
+    * near-dups sailed through with no error. Both consumers now verify
+    * the stamp (see [[stampedMembers]]); the per-row cost is three
+    * constants the optimizer folds away whenever the index is still
+    * plan-literal. */
   def simhashIndexBuckets(docs: DataFrame, idCol: String, textCol: String,
                           bits: Int, bands: Int = 4,
                           wideHash: Boolean = false): DataFrame = {
@@ -382,6 +429,105 @@ object TextDedup {
           "rebuild the index"))))
   }
 
+  /** Near-duplicate drop-at-ingest against a BATCH-BUILT simhash index
+    * ([[simhashIndexBuckets]]) — the [[Ann.semDropAtIngest]] pattern
+    * applied to the simhash track, and the ingest-side composition of
+    * the batch pipeline's near-dup keeper ([[TextPipeline]] stage 2b):
+    * each arriving doc computes its signature and 4-dp keeper quality
+    * IN-ROW ([[graft.functions.SimhashScan]] + [[TextStats.quality]] —
+    * both row-local, so they apply to a stream unchanged), probes its
+    * `bands` bucket keys with stream-static LEFT equi-joins against the
+    * packed index, and judges the collected members in-row: the doc is
+    * DROPPED iff some indexed member within `maxHamming` beats it on
+    * (quality desc, id asc) — the keeper window's exact ordering,
+    * decided locally. One output row per ingested doc:
+    * (id, sig, witness, witness_q, dropped) — witness = the
+    * best-quality qualifying member, ties to the smallest id (selected
+    * by VALUE via `array_min` over (−q, id) structs, so the index's
+    * member packing order never matters).
+    *
+    * STATELESS by construction — row-local kernels plus `bands`
+    * stream-static joins, so the query runs in append mode with no
+    * watermark and no keyed state, and the same DataFrame code runs
+    * unchanged on a batch frame (StreamsSpec pins the two bit-equal).
+    * The pigeonhole contract (`maxHamming < bands`, enforced) makes the
+    * banded probe EXACT: every indexed member within `maxHamming`
+    * shares at least one band key, so the local decision sees every
+    * qualifying witness. Policy note: ingest-local best-witness, not
+    * the batch stage's global cluster keeper — on a transitive chain
+    * a→b→c where only adjacent docs collide, the batch CC keeper keeps
+    * exactly one doc per CLUSTER, while the ingest gate judges each doc
+    * against its direct neighbours only (a doc survives iff no indexed
+    * near-dup beats it). Self-ids already present in the index are
+    * excluded, so re-ingest replays are idempotent.
+    *
+    * Scale shape: the index is O(corpus × bands) but bucket-packed
+    * (size `bits` via [[simhashWidthFor]] to hold populations ~64); the
+    * stream side never shuffles — each probe is the static side's
+    * lookup, and the in-row judge is linear in the probed buckets'
+    * members.
+    *
+    * `bits`/`bands`/`wideHash` must match the index's build parameters
+    * — ENFORCED against the index's stamp columns ([[stampedMembers]]):
+    * a mismatched probe raises instead of silently mis-keying every
+    * bucket lookup.
+    *
+    * Three registry queries call it: `x_near_ingest`,
+    * `x_near_ingest_incr` and `x_near_ingest_lifecycle`. */
+  def nearDropAtIngest(docs: DataFrame, idCol: String, textCol: String,
+                       index: DataFrame, bits: Int, bands: Int = 4,
+                       maxHamming: Int = 3,
+                       wideHash: Boolean = false): DataFrame = {
+    require(bits >= 1 && bits <= 56, s"simhash supports 1..56 bits, got $bits")
+    require(bands > 0 && bits % bands == 0,
+      s"bits ($bits) must split evenly into bands ($bands)")
+    require(maxHamming >= 0 && maxHamming < bands,
+      s"pigeonhole guarantee needs maxHamming < bands, got $maxHamming/$bands")
+    val w = bits / bands
+    val mask = (1L << w) - 1
+    val memberType = ArrayType(StructType(Seq(
+      StructField("id", LongType), StructField("sig", LongType),
+      StructField("q", DoubleType))))
+    val withSig = docs
+      .withColumn("_id", col(idCol).cast("long"))
+      .withColumn("sig",
+        graft.functions.SimhashScan.simhashScan(col(textCol), bits, wideHash))
+      .withColumn("_q", TextStats.quality(col(textCol)))
+    // one stream-static LEFT join per band — a single join would need the
+    // probe keys EXPLODED to rows and the verdict re-aggregated per doc,
+    // which append mode without watermarks cannot express; `bands` is 4,
+    // not corpus-sized, and each join is the static side's lookup
+    val probed = (0 until bands).foldLeft(withSig) { (acc, b) =>
+      // the stamp guard rides the members read: a probe configured at a
+      // different width than the index was built with raises on the
+      // first bucket row instead of silently mis-keying every lookup
+      // (near-dups would sail through with no error otherwise)
+      val bucket = index.filter(col("band") === b)
+        .select(col("key").as(s"_k$b"),
+          stampedMembers(index, bits, bands, wideHash).as(s"_m$b"))
+      acc
+        .withColumn(s"_key$b",
+          shiftrightunsigned(col("sig"), b * w).bitwiseAND(mask))
+        .join(bucket, col(s"_key$b") === col(s"_k$b"), "left")
+    }
+    // concat propagates a null operand to a null result, so each missed
+    // bucket coalesces to the empty member list first
+    val allMembers = concat((0 until bands).map(b =>
+      coalesce(col(s"_m$b"), array().cast(memberType))): _*)
+    probed
+      .withColumn("_cands", filter(allMembers, m =>
+        bit_count(m.getField("sig").bitwiseXOR(col("sig"))) <= maxHamming &&
+          m.getField("id") =!= col("_id") &&
+          (m.getField("q") > col("_q") ||
+            (m.getField("q") === col("_q") && m.getField("id") < col("_id")))))
+      .withColumn("_best", array_min(transform(col("_cands"), m =>
+        struct((-m.getField("q")).as("nq"), m.getField("id").as("witness")))))
+      .select(col(idCol), col("sig"),
+        col("_best.witness").as("witness"),
+        (-col("_best.nq")).as("witness_q"),
+        col("_best").isNotNull.as("dropped"))
+  }
+
   /** Incremental refresh of a packed simhash index
     * ([[simhashIndexBuckets]]'s shape): fold a NEW batch of documents
     * into an existing index WITHOUT re-reading the indexed corpus. Only
@@ -396,7 +542,7 @@ object TextDedup {
     * O(batch text scan) + O(index-bytes shuffle) — the corpus text is
     * never touched. Member order inside a merged bucket differs from a
     * rebuild's (collect_list is arrival-ordered), which is immaterial
-    * by [[graft.streaming.Streams.nearDropAtIngest]]'s contract: the
+    * by [[nearDropAtIngest]]'s contract: the
     * witness is selected by VALUE, never by packing order (the merge ≡
     * rebuild probe equality is spec-pinned).
     *
@@ -761,7 +907,8 @@ object TextDedup {
     // chain. For loops over AQE-trivial inputs the adaptive machinery is
     // pure overhead (nothing to coalesce or skew-split at this size), so
     // it is switched off FOR THE LOOP ONLY when the edge list is small
-    // (bounded count on the pinned blocks), and restored after. The
+    // (bounded count on the pinned blocks), and restored after
+    // (`GraftSession.withConf`). The
     // threshold is data-derived, not core-count-derived: big edge lists
     // keep AQE (coalescing and skew handling matter there).
     // r19 refuted variant #2 (kept as a measurement): re-pinning the edge
@@ -783,24 +930,21 @@ object TextDedup {
     var iter = 0
     var converged = false
     val aqeKey = "spark.sql.adaptive.enabled"
-    val smjKey = "spark.sql.join.preferSortMergeJoin"
-    val partKey = "spark.sql.shuffle.partitions"
-    val aqeWas = spark.conf.get(aqeKey, "true")
-    val smjWas = spark.conf.get(smjKey, "true")
-    val partWas = spark.conf.get(partKey)
-    val loopAqeOff = aqeWas == "true" && edgeRows <= 50L * 1000 * 1000
-    if (loopAqeOff) {
-      spark.conf.set(aqeKey, "false")
-      // no sorts on node-sized frames: hash joins build in-memory tables
-      // a few MB wide; sort-merge would sort the labels 3× per round
-      spark.conf.set(smjKey, "false")
-      // partition count from DATA (the decision AQE coalescing would have
-      // made): ~2M edge rows per partition, floor 4 — 32+ tasks per tiny
-      // stage is pure scheduling overhead in this regime
-      spark.conf.set(partKey,
-        math.max(4L, edgeRows / (2L * 1000 * 1000)).toString)
-    }
-    try {
+    val loopAqeOff = spark.conf.get(aqeKey, "true") == "true" &&
+      edgeRows <= 50L * 1000 * 1000
+    val loopConf =
+      if (!loopAqeOff) Nil
+      else Seq(
+        aqeKey -> "false",
+        // no sorts on node-sized frames: hash joins build in-memory tables
+        // a few MB wide; sort-merge would sort the labels 3× per round
+        "spark.sql.join.preferSortMergeJoin" -> "false",
+        // partition count from DATA (the decision AQE coalescing would have
+        // made): ~2M edge rows per partition, floor 4 — 32+ tasks per tiny
+        // stage is pure scheduling overhead in this regime
+        "spark.sql.shuffle.partitions" ->
+          math.max(4L, edgeRows / (2L * 1000 * 1000)).toString)
+    graft.runtime.GraftSession.withConf(spark, loopConf: _*) {
       while (iter < maxIter && !converged) {
         // HashMin: each node adopts the min of its own and its neighbours'
         // labels, keeping the previous label for the convergence flag
@@ -836,10 +980,6 @@ object TextDedup {
         log.info(f"connectedComponents round $iter: materialise " +
           f"${(t1 - t0) / 1e9}%.3f s, probe ${(System.nanoTime() - t1) / 1e9}%.3f s")
       }
-    } finally if (loopAqeOff) {
-      spark.conf.set(aqeKey, aqeWas)
-      spark.conf.set(smjKey, smjWas)
-      spark.conf.set(partKey, partWas)
     }
     // silent wrong answers are worse than failing: an unconverged result
     // would split one real cluster into several with no signal

@@ -1774,13 +1774,16 @@ object TextStats {
     // parquet round-trips (no partitioning survives a write anyway),
     // so the regime only applies to the localCheckpoint policy.
     val aqeKey = "spark.sql.adaptive.enabled"
-    val partKey = "spark.sql.shuffle.partitions"
-    // restored on exit as they were: a key the caller never set is
-    // unset again, not pinned to the default it read as
-    val confWas = Seq(aqeKey, partKey).map(k => k -> spark.conf.getAll.get(k))
     val baseRows = base0.count()
     val loopStatic = checkpointDir.isEmpty && spark.conf.get(aqeKey, "true") == "true" &&
       baseRows <= 10L * 1000 * 1000
+    val loopConf =
+      if (!loopStatic) Nil
+      else Seq(aqeKey -> "false",
+        // ~1M rows/partition (≈ AQE's own advisory-size decision at
+        // these row widths), floor 4 — loop-small caps this at 10
+        "spark.sql.shuffle.partitions" ->
+          math.max(4L, baseRows / (1L * 1000 * 1000)).toString)
     val w = Array.fill(buckets)(0.0)
     var bias = 0.0
     // The per-doc error frame is computed ONCE per iteration and pinned
@@ -1799,20 +1802,16 @@ object TextStats {
     // make the partitioning survive.)
     val errsRoll = new graft.runtime.Checkpoints.Rolling(spark, checkpointDir)
     var lastErrs: org.apache.spark.sql.DataFrame = null
-    // EVERYTHING from the first conf mutation onward runs under one
-    // try/finally: a failure anywhere (the re-pin job included) restores
-    // the session confs and releases every pinned block (advisor r18 —
-    // the re-pin used to run unguarded, so its failure left the session
-    // permanently with AQE off and shuffle.partitions at the loop value,
-    // and a mid-loop failure leaked the errs/base checkpoint blocks).
+    // EVERYTHING from the first conf mutation onward runs inside
+    // `withConf` and one try/finally: a failure anywhere (the re-pin job
+    // included) restores the session confs and releases every pinned
+    // block (r18 — the re-pin used to run unguarded, so its failure left
+    // the session permanently with AQE off and shuffle.partitions at the
+    // loop value, and a mid-loop failure leaked the errs/base checkpoint
+    // blocks).
     var base: org.apache.spark.sql.DataFrame = base0
-    try {
+    try graft.runtime.GraftSession.withConf(spark, loopConf: _*) {
       if (loopStatic) {
-        spark.conf.set(aqeKey, "false")
-        // ~1M rows/partition (≈ AQE's own advisory-size decision at
-        // these row widths), floor 4 — loop-small caps this at 10
-        spark.conf.set(partKey,
-          math.max(4L, baseRows / (1L * 1000 * 1000)).toString)
         base = ckpt(base0.repartition(col("_id")))
         graft.runtime.Checkpoints.releaseLocal(base0)
       }
@@ -1866,10 +1865,6 @@ object TextStats {
         }
       }
     } finally {
-      if (loopStatic) confWas.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
-      }
       // the loop's survivors are intermediate state: the trained model is
       // the return value, so nothing may stay pinned (repeated training
       // runs in one session must not accrete executor blocks) — released

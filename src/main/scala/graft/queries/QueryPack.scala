@@ -927,15 +927,14 @@ object QueryPack {
 
   /** Image near-dup pairs via the perceptual-hash band machinery
     * ([[graft.operators.TextDedup.bandedHammingPairs]] — the generic half
-    * of `simhashPairs` that [[graft.multimodal.Multimodal.imagePHashes]]'s
-    * 64-bit dHash feeds in production). The image DECODE isn't
-    * SQL-expressible (MultimodalSpec pins it on real rasters); this row
-    * pins the banded pair generation itself on a deterministic 56-bit
-    * hash fixture both engines derive identically: documents in families
-    * of 12 (`doc_id div 12`) share a family base hash and each member
-    * flips one distinct bit (`doc_id % 56`), so within-family pairs sit
-    * at hamming 2 — under the 4-band pigeonhole guarantee every one MUST
-    * be generated (banded-not-all-pairs, plan-pinned by PlanQualitySpec). */
+    * of `simhashPairs`, fed any integer hash column). No image is
+    * decoded: this row pins the banded pair generation itself on a
+    * deterministic 56-bit hash fixture both engines derive identically:
+    * documents in families of 12 (`doc_id div 12`) share a family base
+    * hash and each member flips one distinct bit (`doc_id % 56`), so
+    * within-family pairs sit at hamming 2 — under the 4-band pigeonhole
+    * guarantee every one MUST be generated (banded-not-all-pairs,
+    * plan-pinned by PlanQualitySpec). */
   def xImageDedupPairs(s: SparkSession, dir: String): DataFrame = {
     val fixture = T(s, dir, "documents").selectExpr("doc_id",
       """cast(conv(substring(md5(concat('fam:', cast(doc_id div 12 as string))), 1, 14), 16, 10) as bigint)
@@ -947,10 +946,9 @@ object QueryPack {
   }
 
   /** Video near-dup pairs — the temporal-majority signature
-    * ([[graft.multimodal.Multimodal.videoSignatureFromFrames]]) into the
-    * banded Hamming machinery. The frame DECODE isn't SQL-expressible
-    * (MultimodalSpec pins real MJPEG-AVI clips, re-encode invariance and
-    * the row-local/engine-side combine parity); this row pins the
+    * ([[graft.operators.TextDedup.videoSignatureFromFrames]]) into the
+    * banded Hamming machinery. No video is decoded (MultimodalSpec pins
+    * the combine against a row-local majority loop); this row pins the
     * MAJORITY COMBINE and the banded pair generation cross-engine on a
     * deterministic per-(doc, frame) fixture: 5 frames per doc, each
     * carrying the family base hash (`doc_id div 12`) ⊕ a PERSISTENT
@@ -967,7 +965,7 @@ object QueryPack {
         """cast(conv(substring(md5(concat('vfam:', cast(doc_id div 12 as string))), 1, 14), 16, 10) as bigint)
            ^ shiftleft(cast(1 as bigint), cast(doc_id % 56 as int))
            ^ shiftleft(cast(1 as bigint), cast((doc_id * 31 + f) % 56 as int)) as fhash""")
-    val sig = graft.multimodal.Multimodal.videoSignatureFromFrames(
+    val sig = graft.operators.TextDedup.videoSignatureFromFrames(
       frames, "doc_id", "fhash", bits = 56)
     graft.operators.TextDedup.bandedHammingPairs(sig, "doc_id", "vhash",
         bits = 56, bands = 4, maxHamming = 3)
@@ -976,11 +974,11 @@ object QueryPack {
   }
 
   /** Audio near-dup pairs — the energy-envelope dHash derivation
-    * ([[graft.multimodal.Multimodal.audioDHash]]'s slot-comparison loop)
-    * into the banded Hamming machinery. The PCM decode isn't
-    * SQL-expressible (AudioDedupSpec pins real WAVs, resample/re-gain
-    * invariance); this row pins the ENVELOPE→BIT derivation and the
-    * banding cross-engine on a deterministic per-(doc, slot) fixture:
+    * ([[graft.operators.TextDedup.envelopeSignatureFromSlots]]) into the
+    * banded Hamming machinery. No audio is decoded (AudioDedupSpec pins
+    * the derivation against the slot-comparison loop); this row pins
+    * the ENVELOPE→BIT derivation and the banding cross-engine on a
+    * deterministic per-(doc, slot) fixture:
     * the target family signature (family base hash ⊕ one member bit,
     * the image-fixture shape) is ENCODED as a prefix-walk envelope —
     * slot k holds k − 2·popcount(t & (2^k − 1)), so the walk steps DOWN
@@ -997,7 +995,7 @@ object QueryPack {
       .selectExpr("doc_id", "t", "explode(sequence(0, 56)) as k")
       .selectExpr("doc_id", "k",
         "cast(k as bigint) - 2 * cast(bit_count(t & (shiftleft(cast(1 as bigint), k) - 1)) as bigint) as e")
-    val sig = graft.multimodal.Multimodal.envelopeSignatureFromSlots(
+    val sig = graft.operators.TextDedup.envelopeSignatureFromSlots(
       slots, "doc_id", "k", "e", bits = 56)
     graft.operators.TextDedup.bandedHammingPairs(sig, "doc_id", "ahash",
         bits = 56, bands = 4, maxHamming = 3)
@@ -2502,7 +2500,7 @@ object QueryPack {
   }
 
   /** Near-duplicate drop-at-ingest, batch shape
-    * ([[graft.streaming.Streams.nearDropAtIngest]] probing a
+    * ([[graft.operators.TextDedup.nearDropAtIngest]] probing a
     * [[graft.operators.TextDedup.simhashIndexBuckets]] index built over
     * the same corpus — StreamsSpec pins the STREAM run bit-equal to
     * exactly this frame, so this row is the streaming gate's oracle):
@@ -2518,7 +2516,7 @@ object QueryPack {
     val index = graft.operators.TextDedup
       .simhashIndexBuckets(docs, "doc_id", "text", bits, wideHash = true)
       .localCheckpoint()
-    graft.streaming.Streams
+    graft.operators.TextDedup
       .nearDropAtIngest(docs, "doc_id", "text", index, bits, wideHash = true)
   }
 
@@ -2545,7 +2543,7 @@ object QueryPack {
     val merged = graft.operators.TextDedup
       .simhashIndexMerge(base, batch, "doc_id", "text", bits, wideHash = true)
       .localCheckpoint()
-    graft.streaming.Streams
+    graft.operators.TextDedup
       .nearDropAtIngest(docs, "doc_id", "text", merged, bits, wideHash = true)
   }
 
@@ -2573,7 +2571,7 @@ object QueryPack {
       Some(idx1), batch, "doc_id", "text", fullCorpus = docs,
       wideHash = true)
     val bits = idx2.select(col("built_bits")).head().getInt(0)
-    graft.streaming.Streams
+    graft.operators.TextDedup
       .nearDropAtIngest(docs, "doc_id", "text", idx2, bits, wideHash = true)
   }
 
@@ -2591,7 +2589,7 @@ object QueryPack {
     * prefix-stable, so the regenerated matrix fingerprints identically;
     * the stamp is the contract, never a count the caller must keep in
     * sync). Probing ALL vectors through
-    * [[graft.streaming.Streams.semDropAtIngest]] makes this the full
+    * [[graft.operators.Ann.semDropAtIngest]] makes this the full
     * self-gate: a vector drops iff some OTHER indexed vector in its
     * (cell, bucket) reaches cos ≥ τ — a lost member, a wrong plane
     * decision, or a broken replay guard diverges loudly. Centroids are
@@ -2609,7 +2607,7 @@ object QueryPack {
       Some(idx1), batch, "vec_id", "embedding", fullCorpus = emb,
       centroids = centroids)
     val nPlanes = idx2.select(col("built_planes")).head().getInt(0)
-    graft.streaming.Streams.semDropAtIngest(emb, "vec_id", "embedding",
+    graft.operators.Ann.semDropAtIngest(emb, "vec_id", "embedding",
       idx2, centroids, graft.operators.Ann.hyperplanes(nPlanes, 64),
       tau = 0.2)
   }

@@ -49,4 +49,22 @@ object GraftSession {
       .appName("graft")
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config(profile.toMap)
+
+  /** Runs `body` with `settings` applied to the session conf, then puts
+    * each key back as it was, also when `body` throws: a key that was
+    * set gets its old value, and a key that was unset is unset again
+    * rather than pinned to the default it would have read as. Loop
+    * operators that re-plan under their own AQE/partition settings
+    * scope them with this. */
+  def withConf[T](spark: SparkSession, settings: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val was = settings.map { case (k, _) => k -> set.get(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally was.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

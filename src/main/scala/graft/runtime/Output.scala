@@ -73,27 +73,4 @@ object Output {
     sized.write.format(format).mode("overwrite").save(path)
     n
   }
-
-  /** Materialise a seeded deterministic training order as ONE ordered
-    * file per shard — the dataloader-facing end of
-    * [[graft.operators.TextStats.shuffleShards]]: `shard=<k>/` partition
-    * directories, each holding a single file whose row order IS the
-    * within-shard `pos` order, so a reader streaming a shard file top to
-    * bottom replays the epoch-0 permutation with no sort of its own.
-    *
-    * Shape: shard assignment is the narrow md5 projection; ONE
-    * repartition keyed on the shard column co-locates each shard in
-    * exactly one task (hash collisions may pack several shards into one
-    * task — each still writes its own partition directory, ordered,
-    * because the in-task sort is (shard, pos)); the writer preserves
-    * iterator order. `shards` is the parallelism of this write — pick it
-    * ≫ executor count at scale, as the operator scaladoc says. */
-  def writeShards(df: DataFrame, keyCol: String, shards: Int, seed: String,
-                  path: String, format: String = "parquet"): Unit = {
-    import org.apache.spark.sql.functions.col
-    graft.operators.TextStats.shuffleShards(df, keyCol, shards, seed)
-      .repartition(shards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("pos"))
-      .write.format(format).mode("overwrite").partitionBy("shard").save(path)
-  }
 }

@@ -39,16 +39,6 @@ object Skew {
            merge.tail.map { case (n, c) => c.as(n) }.toSeq: _*)
   }
 
-  /** Salted DISTINCT-count per key: exact, hot-key-safe. */
-  def saltedDistinctCount(df: DataFrame, key: Column, distinctCol: Column,
-                          salts: Int = 16): DataFrame =
-    df.select(key.as("k"), distinctCol.as("d"))
-      .withColumn("_salt", pmod(hash(col("d")), lit(salts)))
-      .groupBy(col("k"), col("_salt"))
-      .agg(countDistinct(col("d")).as("pd"))
-      .groupBy(col("k"))
-      .agg(sum(col("pd")).as("distinct_count"))
-
   /** Broadcast-salt a skewed JOIN key manually (for engines/paths without
     * AQE): replicate the small side over `salts` copies and salt the big
     * side's key, so one hot key fans across `salts` tasks. */

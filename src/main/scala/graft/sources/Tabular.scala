@@ -103,10 +103,8 @@ object Tabular {
 
   /** S5 — JSON Lines: array rows give cells by position; object rows give
     * cells in mapping column order (hash rows are keyed by column name in
-    * the reference — `lib/ndr_import/file/json_lines.rb:16-50`). */
-  def jsonLines(spark: SparkSession, paths: Seq[String], columnNames: Seq[String]): DataFrame =
-    jsonCells(LineSource.lines(spark, paths), columnNames)
-
+    * the reference — `lib/ndr_import/file/json_lines.rb:16-50`). Takes
+    * [[LineSource.lines]]' (file, lineno, line) frame. */
   def jsonCells(linesDf: DataFrame, columnNames: Seq[String]): DataFrame = {
     val asArray = from_json(col("line"), ArrayType(StringType))
     val asMap = from_json(col("line"), MapType(StringType, StringType))

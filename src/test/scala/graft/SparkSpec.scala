@@ -1,7 +1,8 @@
 package graft
 
 import graft.runtime.GraftSession
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session; suites run in
@@ -9,6 +10,22 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   def sqlc = spark
+
+  /** Runs `body` with whole-stage codegen off and expressions evaluated
+    * interpreted (`eval`/`nullSafeEval`), restoring both keys after.
+    * Plan a fresh frame inside `body`: an executed plan keeps the mode
+    * it was planned under. */
+  def withInterpreted[T](body: => T): T =
+    GraftSession.withConf(spark,
+      "spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
+
+  /** Whether `df`'s executed plan runs an expression named `name` inside
+    * a whole-stage codegen stage. */
+  def fusedInCodegen(df: DataFrame, name: String): Boolean =
+    df.queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w.child.toString
+    }.exists(_.contains(name))
 }
 
 object SparkSpec {

@@ -85,11 +85,14 @@ class ArrayMathSpec extends SparkSpec {
     val cents = Seq.fill(7)(Seq.fill(16)(rnd.nextDouble()))
     val ids = (0L until 7L).toSeq
     val rows = (1 to 100).map(i => (i.toLong, Seq.fill(16)(rnd.nextFloat())))
-    val df = rows.toDF("id", "v")
-    val got = df.select(col("id"),
-        ArrayMath.centroidSqDistances(col("v"), cents).as("ds"),
-        ArrayMath.nearestCentroid(col("v"), ids, cents).as("cell"))
-      .collect()
+    // an RDD-backed frame: a local relation's projection is folded at
+    // plan time by an interpreted projection, whatever the codegen settings
+    val df = spark.sparkContext.parallelize(rows, 3).toDF("id", "v")
+    val sel = df.select(col("id"),
+      ArrayMath.centroidSqDistances(col("v"), cents).as("ds"),
+      ArrayMath.nearestCentroid(col("v"), ids, cents).as("cell"))
+    val got = sel.collect()
+    assert(fusedInCodegen(sel, "graft_centroid_sqdists"))
     val byId = rows.toMap
     got.foreach { r =>
       val v = byId(r.getLong(0)).map(_.toDouble)
@@ -108,16 +111,13 @@ class ArrayMathSpec extends SparkSpec {
       assert(r.getLong(2) == ids(first), "table argmin != NearestCentroid")
     }
     // interpreted eval agrees
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = df.select(ArrayMath.centroidSqDistances(col("v"), cents)).collect()
-      val gen = got.map(_.getSeq[Double](1))
-      assert(interp.map(_.getSeq[Double](0)).toSeq == gen.toSeq)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    val interp = withInterpreted {
+      val q = df.select(ArrayMath.centroidSqDistances(col("v"), cents))
+      val out = q.collect()
+      assert(!fusedInCodegen(q, "graft_centroid_sqdists"))
+      out
     }
+    assert(interp.map(_.getSeq[Double](0)).toSeq == got.map(_.getSeq[Double](1)).toSeq)
     // null semantics: null array / null element / length mismatch → null
     val bad = Seq(
       (1L, Option(Seq[Option[Float]](Some(1f), None) ++ Seq.fill(14)(Option(0f)))),
@@ -132,33 +132,28 @@ class ArrayMathSpec extends SparkSpec {
   test("centroidResidual: subtraction, sparse-id lookup, null semantics, id-order guard") {
     val cents = Seq(Seq(1.0, 2.0, 3.0), Seq(-1.0, 0.0, 1.0))
     val ids = Seq(10L, 40L) // non-contiguous ascending — binary search path
-    val df = Seq(
+    val df = spark.sparkContext.parallelize(Seq(
       (1L, Option(Seq(4f, 4f, 4f)), Option(10L)),
       (2L, Option(Seq(4f, 4f, 4f)), Option(40L)),
       (3L, Option(Seq(4f, 4f, 4f)), Option(11L)), // unknown cell
       (4L, None: Option[Seq[Float]], Option(10L)), // null vector
-      (5L, Option(Seq(4f, 4f)), Option(10L)))      // length mismatch
+      (5L, Option(Seq(4f, 4f)), Option(10L))), 2)  // length mismatch
       .toDF("id", "v", "cell")
-    val got = df.select(col("id"),
+    // planned afresh per call: an executed plan keeps its codegen mode
+    def residuals(fused: Boolean) = {
+      val q = df.select(col("id"),
         ArrayMath.centroidResidual(col("v"), col("cell"), ids, cents).as("r"))
-      .collect().map(r => r.getLong(0) ->
+      val out = q.collect().map(r => r.getLong(0) ->
         (if (r.isNullAt(1)) None else Some(r.getSeq[Double](1)))).toMap
+      assert(fusedInCodegen(q, "graft_centroid_residual") == fused)
+      out
+    }
+    val got = residuals(fused = true)
     assert(got(1L).contains(Seq(3.0, 2.0, 1.0)))
     assert(got(2L).contains(Seq(5.0, 4.0, 3.0)))
     assert(got(3L).isEmpty && got(4L).isEmpty && got(5L).isEmpty)
     // interpreted eval agrees
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = df.select(col("id"),
-          ArrayMath.centroidResidual(col("v"), col("cell"), ids, cents).as("r"))
-        .collect().map(r => r.getLong(0) ->
-          (if (r.isNullAt(1)) None else Some(r.getSeq[Double](1)))).toMap
-      assert(interp == got)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-    }
+    assert(withInterpreted(residuals(fused = false)) == got)
     // descending ids must be rejected up front (binary search + tie parity)
     intercept[IllegalArgumentException] {
       df.select(ArrayMath.centroidResidual(col("v"), col("cell"),
@@ -167,20 +162,16 @@ class ArrayMathSpec extends SparkSpec {
   }
 
   test("mixed float/double (literal side) and interpreted eval agree") {
-    val df = Seq((1L, Seq(0.5f, -1.5f))).toDF("id", "a")
+    val df = spark.sparkContext.parallelize(Seq((1L, Seq(0.5f, -1.5f))), 1).toDF("id", "a")
     val v = Seq(2.0, 4.0)
-    val native = df.select(graft.operators.Ann.dotLit(col("a"), v)).head.getDouble(0)
-    assert(native == 0.5 * 2.0 + -1.5 * 4.0)
-    // interpreted path: evaluate via a non-codegen context (local relation
-    // with codegen disabled)
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = df.select(graft.operators.Ann.dotLit(col("a"), v)).head.getDouble(0)
-      assert(interp == native)
-    } finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    def dotValue(fused: Boolean) = {
+      val q = df.select(graft.operators.Ann.dotLit(col("a"), v))
+      val out = q.head.getDouble(0)
+      assert(fusedInCodegen(q, "graft_dot") == fused)
+      out
     }
+    val native = dotValue(fused = true)
+    assert(native == 0.5 * 2.0 + -1.5 * 4.0)
+    assert(withInterpreted(dotValue(fused = false)) == native)
   }
 }

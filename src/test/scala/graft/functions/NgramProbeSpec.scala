@@ -58,18 +58,6 @@ class NgramProbeSpec extends SparkSpec {
   private def benchGrams(n: Int): Set[String] =
     bench.toDF("t").select(explode(refGrams(col("t"), n))).as[String].collect().toSet
 
-  private def withInterpreted[T](body: => T): T = {
-    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try body
-    finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   for (n <- Seq(1, 3, 10)) test(s"probe equals the composable rendering at n = $n, codegen and interpreted") {
     val grams = benchGrams(n)
     val bc = spark.sparkContext.broadcast(GramSet(grams.map(utf8)))
@@ -89,9 +77,8 @@ class NgramProbeSpec extends SparkSpec {
       val probed = base.select(col("t"), NgramProbe.ngramProbe(col("t"), n, bc).as("p"))
         .select("t", "p.n_grams", "p.n_shared")
       val out = probed.collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-      assert(probed.queryExecution.executedPlan.collect {
-        case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w.child.toString
-      }.exists(_.contains("graft_ngram_probe")) == fused, s"whole-stage codegen != $fused")
+      assert(fusedInCodegen(probed, "graft_ngram_probe") == fused,
+        s"whole-stage codegen != $fused")
       out
     }
     val codegen = got(fused = true)

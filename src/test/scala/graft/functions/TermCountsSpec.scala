@@ -92,17 +92,17 @@ class TermCountsSpec extends SparkSpec {
   }
 
   test("term_counts interpreted eval agrees with codegen") {
-    val docs = texts.toDF("id", "t")
-    def run() = docs
-      .select(col("id"), explode(TermCounts.termCounts(col("t"))).as(Seq("term", "tf")))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
-    val gen = run()
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try assert(run() === gen)
-    finally {
-      spark.conf.set("spark.sql.codegen.wholeStage", "true")
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
+    // an RDD-backed frame, planned afresh per mode (see TextScanSpec)
+    val docs = spark.sparkContext.parallelize(texts, 3).toDF("id", "t")
+    def run(fused: Boolean) = {
+      val counted = docs
+        .select(col("id"), explode(TermCounts.termCounts(col("t"))).as(Seq("term", "tf")))
+      val out = counted.collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
+      assert(fusedInCodegen(counted, "graft_term_counts") == fused,
+        s"whole-stage codegen != $fused")
+      out
     }
+    val gen = run(fused = true)
+    assert(withInterpreted(run(fused = false)) === gen)
   }
 }

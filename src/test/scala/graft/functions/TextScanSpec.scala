@@ -73,26 +73,24 @@ class TextScanSpec extends SparkSpec {
   }
 
   test("interpreted eval agrees with codegen") {
-    val df = inputs.take(120).toDF("t")
-    val sel = df.select(
-      TextScan.spaces(col("t")), TextScan.punct(col("t")),
-      TextScan.wsRuns(col("t")), TextScan.bpeTokens(col("t")),
-      TextScan.spaceToks(col("t")))
-    val codegen = sel.collect().map(_.toSeq)
-    // restore whatever the suite was running with, not hardcoded defaults
-    val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    val saved = keys.map(k => k -> spark.conf.getOption(k))
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
-    try {
-      val interp = sel.collect().map(_.toSeq)
-      assert(codegen.toSeq == interp.toSeq)
-    } finally {
-      saved.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
-      }
+    // an RDD-backed frame: a local relation's projection is folded at
+    // plan time by an interpreted projection, bypassing both paths
+    val base = spark.sparkContext.parallelize(inputs.take(120), 3).toDF("t")
+    // a fresh frame per evaluation: an executed plan keeps the codegen
+    // mode it was planned under
+    def run(fused: Boolean): Seq[Seq[Any]] = {
+      val sel = base.select(
+        TextScan.spaces(col("t")), TextScan.punct(col("t")),
+        TextScan.wsRuns(col("t")), TextScan.bpeTokens(col("t")),
+        TextScan.spaceToks(col("t")))
+      val out = sel.collect().map(_.toSeq).toSeq
+      assert(fusedInCodegen(sel, "graft_charscan") == fused,
+        s"whole-stage codegen != $fused")
+      out
     }
+    val codegen = run(fused = true)
+    assert(withInterpreted(run(fused = false)) == codegen,
+      "interpreted eval diverged from codegen")
   }
 
   test("null input yields null, and the scans reach whole-stage codegen") {

@@ -1,85 +1,17 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import graft.multimodal.Multimodal.{MediaMeta, MediaRow}
-import javax.sound.sampled._
+import graft.operators.TextDedup
 
-/** [[Multimodal.audioDHash]] / [[Multimodal.audioPHashes]] — the audio
-  * leg of the near-dup triad. Decode is not SQL-expressible, so these
-  * goldens pin the invariances the hash claims (volume, sample rate)
-  * and the end-to-end banded-pairs path on REAL synthesized WAVs. */
+/** [[TextDedup.envelopeSignatureFromSlots]] — the envelope→bit derivation
+  * that `x_audio_dedup_pairs` feeds into the banded Hamming machinery —
+  * checked against the slot-comparison loop and on encoded targets. */
 class AudioDedupSpec extends SparkSpec {
 
   import spark.implicits._
 
-  /** 1.3 s WAV: a 440 Hz sine amplitude-modulated by a seeded 65-step
-    * envelope — structured at the hash's own slot granularity, so
-    * distinct seeds give uncorrelated slot-energy gradients. */
-  private def amWav(seed: Int, rate: Int, gain: Double = 0.8): Array[Byte] = {
-    val rnd = new scala.util.Random(seed)
-    val env = Array.fill(65)(0.15 + 0.8 * rnd.nextDouble())
-    val n = (rate * 1.3).toInt
-    val pcm = new Array[Byte](n * 2)
-    for (i <- 0 until n) {
-      val a = env(math.min(64, i * 65 / n)) * gain
-      val v = (a * math.sin(2 * math.Pi * 440 * i / rate) * 32767).toInt
-      pcm(i * 2) = (v & 0xFF).toByte
-      pcm(i * 2 + 1) = ((v >> 8) & 0xFF).toByte
-    }
-    val fmt = new AudioFormat(rate.toFloat, 16, 1, true, false)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(new AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, n.toLong),
-      AudioFileFormat.Type.WAVE, bos)
-    bos.toByteArray
-  }
-
-  private def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  test("volume invariance: the same clip re-gained hashes identically-ish") {
-    val h1 = Multimodal.audioDHash(amWav(1, 8000, gain = 0.8)).get
-    val h2 = Multimodal.audioDHash(amWav(1, 8000, gain = 0.3)).get
-    assert(hamming(h1, h2) <= 3, s"gain change moved ${hamming(h1, h2)} bits")
-  }
-
-  test("sample-rate invariance: 8 kHz and 16 kHz renderings hash close") {
-    val h1 = Multimodal.audioDHash(amWav(2, 8000)).get
-    val h2 = Multimodal.audioDHash(amWav(2, 16000)).get
-    assert(hamming(h1, h2) <= 3, s"resample moved ${hamming(h1, h2)} bits")
-  }
-
-  test("different material is far: distinct envelopes ~32 bits apart") {
-    val hs = (10 to 14).map(s => Multimodal.audioDHash(amWav(s, 8000)).get)
-    for (i <- hs.indices; j <- hs.indices if i < j)
-      assert(hamming(hs(i), hs(j)) > 10,
-        s"seeds ${10 + i}/${10 + j} collide at ${hamming(hs(i), hs(j))} bits")
-  }
-
-  test("undecodable bytes: None from the hash, deterministic stub downstream") {
-    assert(Multimodal.audioDHash("not audio".getBytes("UTF-8")).isEmpty)
-    val rows = Seq(
-      MediaRow(1, "audio", "not audio".getBytes("UTF-8"), MediaMeta("wav", 0, 0, 0, 0)),
-      MediaRow(2, "audio", "not audio".getBytes("UTF-8"), MediaMeta("wav", 0, 0, 0, 0)))
-    val got = Multimodal.audioPHashes(rows.toDS()).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got(1L) == got(2L), "identical bytes must stub to the same hash")
-  }
-
-  test("end-to-end: banded pairs find the planted near-dup, never cross-material") {
-    val clips = Seq(
-      MediaRow(100, "audio", amWav(7, 8000, gain = 0.8), MediaMeta("wav", 0, 0, 0, 0)),
-      MediaRow(101, "audio", amWav(7, 16000, gain = 0.4), MediaMeta("wav", 0, 0, 0, 0)),
-      MediaRow(200, "audio", amWav(8, 8000), MediaMeta("wav", 0, 0, 0, 0)),
-      MediaRow(300, "audio", amWav(9, 8000), MediaMeta("wav", 0, 0, 0, 0)))
-    val sig = Multimodal.audioPHashes(clips.toDS())
-    val pairs = graft.operators.TextDedup.bandedHammingPairs(
-        sig, "doc_id", "phash", bits = 64)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs == Set((100L, 101L)), s"got $pairs")
-  }
-
   test("engine twin matches the in-row slot-comparison loop bit-for-bit") {
-    // audioDHash's derivation, verbatim: bit b set iff slot b > slot b+1.
+    // the envelope dHash derivation: bit b set iff slot b > slot b+1
     def loopHash(slots: Array[Double], bits: Int): Long = {
       var hash = 0L
       var b = 0
@@ -94,7 +26,7 @@ class AudioDedupSpec extends SparkSpec {
     val rows = clips.flatMap { case (id, slots) =>
       slots.zipWithIndex.map { case (e, k) => (id, k, e) }
     }.toDF("doc_id", "k", "e")
-    val got = Multimodal.envelopeSignatureFromSlots(rows, "doc_id", "k", "e")
+    val got = TextDedup.envelopeSignatureFromSlots(rows, "doc_id", "k", "e")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     clips.foreach { case (id, slots) =>
       assert(got(id) == loopHash(slots, 64), s"doc $id diverged from the loop")
@@ -112,7 +44,7 @@ class AudioDedupSpec extends SparkSpec {
         (id.toLong, k, k.toLong - 2 * java.lang.Long.bitCount(t & ((1L << k) - 1)))
       }
     }.toDF("doc_id", "k", "e")
-    val got = Multimodal.envelopeSignatureFromSlots(rows, "doc_id", "k", "e", bits = 56)
+    val got = TextDedup.envelopeSignatureFromSlots(rows, "doc_id", "k", "e", bits = 56)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     targets.zipWithIndex.foreach { case (t, id) =>
       assert(got(id.toLong) == t, s"target $t came back as ${got(id.toLong)}")

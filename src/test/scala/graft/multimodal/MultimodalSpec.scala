@@ -1,447 +1,58 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import graft.operators.TextDedup
 
+/** [[TextDedup.videoSignatureFromFrames]] — the per-bit majority combine
+  * that `x_video_dedup_pairs` feeds into the banded Hamming machinery —
+  * checked against a row-local majority loop. */
 class MultimodalSpec extends SparkSpec {
 
-  import Multimodal._
+  import spark.implicits._
 
-  private def media(id: Long, kind: String, seed: String,
-                    w: Int = 4, h: Int = 4, frames: Int = 3) =
-    MediaRow(id, kind, seed.getBytes("UTF-8"), MediaMeta("fake", w, h, frames, 0))
-
-  test("image features: deterministic, one row per image, embedding unit-norm") {
-    import spark.implicits._
-    val ds = Seq(media(1, "image", "img-one"), media(2, "image", "img-two"),
-                 media(3, "video", "vid")).toDS()
-    val feats = imageFeatures(ds).collect().sortBy(_.docId)
-    assert(feats.map(_.docId).toSeq == Seq(1L, 2L))
-    val again = imageFeatures(ds).collect().sortBy(_.docId)
-    assert(feats.map(_.meanLuma).toSeq == again.map(_.meanLuma).toSeq)
-    val norm = math.sqrt(feats.head.embedding.map(x => x.toDouble * x).sum)
-    assert(math.abs(norm - 1.0) < 1e-5)
-  }
-
-  /** A real w×h PNG/JPEG: left half black, right half white. */
-  private def realImage(w: Int, h: Int, format: String): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w)
-      img.setRGB(x, y, if (x < w / 2) 0x000000 else 0xFFFFFF)
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, format, bos)
-    bos.toByteArray
-  }
-
-  test("real PNG decode: actual dimensions and Rec.601 mean luma from pixels") {
-    import spark.implicits._
-    val png = realImage(8, 4, "png")
-    val ds = Seq(MediaRow(1, "image", png, MediaMeta("png", 0, 0, 0, 0))).toDS()
-    val f = imageFeatures(ds).collect().head
-    // dimensions come from the raster, not the (zeroed) metadata
-    assert(f.width == 8 && f.height == 4)
-    // half black (0), half white (255) → mean luma 127.5 exactly
-    assert(math.abs(f.meanLuma - 127.5) < 1e-9, s"luma ${f.meanLuma}")
-  }
-
-  test("real JPEG decode: dimensions exact, luma within lossy tolerance") {
-    import spark.implicits._
-    val jpg = realImage(16, 16, "jpg")
-    val ds = Seq(MediaRow(2, "image", jpg, MediaMeta("jpg", 0, 0, 0, 0))).toDS()
-    val f = imageFeatures(ds).collect().head
-    assert(f.width == 16 && f.height == 16)
-    assert(math.abs(f.meanLuma - 127.5) < 10.0, s"luma ${f.meanLuma}")
-  }
-
-  test("resize: decodable image re-rasterised to the target size") {
-    import spark.implicits._
-    val png = realImage(8, 8, "png")
-    val ds = Seq(MediaRow(3, "image", png, MediaMeta("png", 8, 8, 0, 0))).toDS()
-    val out = resize(ds, 4, 2).collect().head
-    assert(out.meta.width == 4 && out.meta.height == 2)
-    val (w, h, _) = Multimodal.decodeImage(out.bytes).get
-    assert(w == 4 && h == 2, "re-encoded bytes must decode at the new size")
-    // undecodable bytes: metadata-only passthrough, bytes untouched
-    val fake = media(4, "image", "not-an-image")
-    val out2 = resize(Seq(fake).toDS(), 2, 2).collect().head
-    assert(out2.bytes.toSeq == fake.bytes.toSeq && out2.meta.width == 2)
-  }
-
-  test("frame sampling: k rows per video, embeddings differ per frame") {
-    import spark.implicits._
-    val ds = Seq(media(7, "video", "movie", frames = 5)).toDS()
-    val frames = sampleFrames(ds, 3).collect()
-    assert(frames.length == 3)
-    val embs = frames.map(_.getSeq[Float](3))
-    assert(embs.distinct.length == 3)
-  }
-
-  /** A minimal MJPEG AVI: RIFF("AVI ") → LIST("movi") → one 00dc chunk
-    * per JPEG frame (word-aligned), exactly the layout the RIFF walk
-    * reads. Frames are REAL JPEGs encoded via ImageIO. */
-  private def mjpegAvi(frames: Seq[Array[Byte]]): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    def le32(v: Int): Array[Byte] = Array(
-      (v & 0xFF).toByte, ((v >> 8) & 0xFF).toByte,
-      ((v >> 16) & 0xFF).toByte, ((v >> 24) & 0xFF).toByte)
-    val movi = {
-      val b = new java.io.ByteArrayOutputStream()
-      b.write("movi".getBytes("ISO-8859-1"))
-      frames.foreach { f =>
-        b.write("00dc".getBytes("ISO-8859-1")); b.write(le32(f.length)); b.write(f)
-        if (f.length % 2 == 1) b.write(0) // word alignment
-      }
-      b.toByteArray
+  /** The reference: bit k is set iff strictly more than half the frames
+    * set it (ties → 0). */
+  private def videoTemporalHash(frameHashes: Seq[Long], bits: Int = 64): Long = {
+    val n = frameHashes.length
+    var sig = 0L
+    var k = 0
+    while (k < bits) {
+      var cnt = 0
+      frameHashes.foreach { h => if (((h >> k) & 1L) == 1L) cnt += 1 }
+      if (2 * cnt > n) sig |= 1L << k
+      k += 1
     }
-    val inner = {
-      val b = new java.io.ByteArrayOutputStream()
-      b.write("AVI ".getBytes("ISO-8859-1"))
-      b.write("LIST".getBytes("ISO-8859-1")); b.write(le32(movi.length)); b.write(movi)
-      b.toByteArray
-    }
-    bos.write("RIFF".getBytes("ISO-8859-1")); bos.write(le32(inner.length)); bos.write(inner)
-    bos.toByteArray
-  }
-
-  test("real MJPEG-AVI decode: actual JPEG frames out, evenly sampled") {
-    import spark.implicits._
-    // 5 distinguishable frames (increasing brightness)
-    val jpegs = (0 until 5).map { i =>
-      val img = new java.awt.image.BufferedImage(8, 8,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val v = 40 * i
-      for (y <- 0 until 8; x <- 0 until 8) img.setRGB(x, y, (v << 16) | (v << 8) | v)
-      val b = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "jpg", b)
-      b.toByteArray
-    }
-    val avi = mjpegAvi(jpegs)
-    assert(mjpegAviFrames(avi).map(_.toSeq) == jpegs.map(_.toSeq),
-      "all frames recovered byte-exact, in order")
-
-    val ds = Seq(MediaRow(9, "video", avi, MediaMeta("avi", 8, 8, 5, 0))).toDS()
-    val sampled = sampleFrames(ds, 2).collect().sortBy(_.getInt(1))
-    assert(sampled.length == 2)
-    // sampled rows carry the REAL jpeg byte sizes (frames 0 and 2 of 5)
-    assert(sampled.map(_.getInt(2)).toSeq == Seq(jpegs(0).length, jpegs(2).length))
-    // and each sampled frame still decodes as an image
-    assert(Multimodal.decodeImage(jpegs(0)).get._1 == 8)
-    // non-AVI bytes fall back to the stub (same schema, k rows)
-    val stub = sampleFrames(Seq(media(10, "video", "not-avi", frames = 4)).toDS(), 3)
-    assert(stub.collect().length == 3)
-  }
-
-  /** A textured w×h frame: per-pixel luma from a seeded integer hash plus
-    * a horizontal gradient, optionally brightness-shifted — enough
-    * structure that dHash has real gradients to bite on. */
-  private def texturedFrame(seed: Int, shift: Int = 0,
-                            quality: Float = -1f): Array[Byte] = {
-    val (w, h) = (32, 24)
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) {
-      // low-frequency 8×8 blocks with seed-driven levels: JPEG-robust
-      // (smooth within a block) yet structurally different per seed
-      val (bx, by) = (x / 8, y / 8)
-      val lvl = math.floorMod(
-        scala.util.hashing.MurmurHash3.productHash((bx, by, seed)), 9)
-      val v0 = math.min(255, math.max(0, 30 + 24 * lvl + shift))
-      img.setRGB(x, y, (v0 << 16) | (v0 << 8) | v0)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    if (quality < 0) javax.imageio.ImageIO.write(img, "jpg", bos)
-    else {
-      val writer = javax.imageio.ImageIO.getImageWritersByFormatName("jpg").next()
-      val params = writer.getDefaultWriteParam
-      params.setCompressionMode(javax.imageio.ImageWriteParam.MODE_EXPLICIT)
-      params.setCompressionQuality(quality)
-      val ios = javax.imageio.ImageIO.createImageOutputStream(bos)
-      writer.setOutput(ios)
-      writer.write(null, new javax.imageio.IIOImage(img, null, null), params)
-      writer.dispose(); ios.close()
-    }
-    bos.toByteArray
-  }
-
-  test("video near-dup: temporal majority signature is re-encode/brightness invariant") {
-    import spark.implicits._
-    def hamming(a: Long, b: Long) = java.lang.Long.bitCount(a ^ b)
-    // clip A: 5 textured frames; A': the SAME content re-encoded at low
-    // JPEG quality AND brightness-shifted +12 — a classic near-dup; B: a
-    // different clip (different seeds)
-    val clipA  = mjpegAvi((0 until 5).map(i => texturedFrame(i)))
-    val clipA2 = mjpegAvi((0 until 5).map(i => texturedFrame(i, shift = 12, quality = 0.4f)))
-    val clipB  = mjpegAvi((0 until 5).map(i => texturedFrame(i + 100)))
-    val ds = Seq(
-      MediaRow(1, "video", clipA,  MediaMeta("avi", 32, 24, 5, 0)),
-      MediaRow(2, "video", clipA2, MediaMeta("avi", 32, 24, 5, 0)),
-      MediaRow(3, "video", clipB,  MediaMeta("avi", 32, 24, 5, 0))).toDS()
-    val sigs = videoPHashes(ds, k = 5).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(hamming(sigs(1L), sigs(2L)) <= 3,
-      s"near-dup clips drifted ${hamming(sigs(1L), sigs(2L))} bits apart")
-    assert(hamming(sigs(1L), sigs(3L)) >= 10,
-      s"distinct clips landed ${hamming(sigs(1L), sigs(3L))} bits apart")
-    // determinism
-    val again = videoPHashes(ds, k = 5).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(sigs == again)
+    sig
   }
 
   test("video majority combine: transient frame noise vanishes, persistent bits survive") {
-    // one frame of five flips extra bits (a scene insert / corrupted
-    // frame) — the temporal hash must equal the clean majority content
     val base = 0x5A5A5A5A5A5AL
-    val frames = Seq(base, base, base ^ 0xFF00L, base, base)
-    assert(Multimodal.videoTemporalHash(frames) == base)
-    // a bit present in 3 of 5 frames survives; 2 of 5 does not (strict)
-    val threeOfFive = Seq(1L, 1L, 1L, 0L, 0L)
-    assert(Multimodal.videoTemporalHash(threeOfFive) == 1L)
-    assert(Multimodal.videoTemporalHash(Seq(1L, 1L, 0L, 0L, 0L)) == 0L)
-    // tie (2 of 4) → 0, the documented strict-majority rule
-    assert(Multimodal.videoTemporalHash(Seq(1L, 1L, 0L, 0L)) == 0L)
+    val clips = Seq(
+      // one frame of five flips extra bits (a scene insert / corrupted
+      // frame) — the signature must equal the clean majority content
+      1L -> Seq(base, base, base ^ 0xFF00L, base, base),
+      // a bit present in 3 of 5 frames survives; 2 of 5 does not (strict)
+      2L -> Seq(1L, 1L, 1L, 0L, 0L),
+      3L -> Seq(1L, 1L, 0L, 0L, 0L),
+      // tie (2 of 4) → 0, the documented strict-majority rule
+      4L -> Seq(1L, 1L, 0L, 0L))
+    val frames = clips.flatMap { case (d, hs) => hs.map(d -> _) }.toDF("doc_id", "fhash")
+    val got = TextDedup.videoSignatureFromFrames(frames, "doc_id", "fhash")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> base, 2L -> 1L, 3L -> 0L, 4L -> 0L))
   }
 
   test("video combine parity: row-local hash == engine-side aggregate on random frames") {
-    import spark.implicits._
     val rnd = new scala.util.Random(13)
     val frames = (0 until 30).flatMap { d =>
       (0 until 1 + rnd.nextInt(6)).map(f => (d.toLong, rnd.nextLong()))
     }
-    val engine = Multimodal.videoSignatureFromFrames(
+    val engine = TextDedup.videoSignatureFromFrames(
         frames.toDF("doc_id", "fhash"), "doc_id", "fhash", bits = 64)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val local = frames.groupBy(_._1).map { case (d, fs) =>
-      d -> Multimodal.videoTemporalHash(fs.map(_._2), bits = 64)
+      d -> videoTemporalHash(fs.map(_._2), bits = 64)
     }
     assert(engine == local)
-  }
-
-  /** A minimal but structurally complete ISO-BMFF MP4: ftyp + mdat
-    * (frames concatenated, split across `chunks`) + moov/trak/mdia with
-    * real tkhd/mdhd/hdlr and full stbl sample tables (stsd/stts/stsc/
-    * stsz/stco) — exactly the layout [[Mp4]] resolves. `chunks` gives the
-    * samples-per-chunk split so the stsc×stco walk is exercised on
-    * non-uniform chunking, not just one-sample-per-chunk. */
-  private def mp4(frames: Seq[Array[Byte]], codec: String,
-                  chunks: Seq[Int]): Array[Byte] = {
-    require(chunks.sum == frames.length)
-    def be16(v: Int) = Array(((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def be32(v: Long) = Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-                              ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def box(typ: String, parts: Array[Byte]*): Array[Byte] = {
-      val payload = parts.flatten.toArray
-      be32(payload.length + 8L) ++ typ.getBytes("ISO-8859-1") ++ payload
-    }
-    val ftyp = box("ftyp", "isom".getBytes, be32(0), "isom".getBytes)
-    val mdat = box("mdat", frames.flatten.toArray)
-    val mdatPayloadAt = ftyp.length + 8L
-    // chunk offsets: absolute file positions of each chunk's first sample
-    val sampleSizes = frames.map(_.length)
-    val chunkFirstSample = chunks.scanLeft(0)(_ + _).init
-    val chunkOffsets = chunkFirstSample.map(fs =>
-      mdatPayloadAt + sampleSizes.take(fs).sum)
-    val stsd = box("stsd", be32(0), be32(1),
-      // one VisualSampleEntry (86 bytes): codec fourcc, dims at +32/+34
-      be32(86), codec.getBytes("ISO-8859-1"), new Array[Byte](6), be16(1),
-      be16(0), be16(0), new Array[Byte](12), be16(8), be16(8),
-      be32(0x00480000), be32(0x00480000), be32(0), be16(1),
-      new Array[Byte](32), be16(24), be16(0xFFFF))
-    val stts = box("stts", be32(0), be32(1), be32(frames.length.toLong), be32(100))
-    // stsc runs: collapse consecutive equal samples-per-chunk
-    val runs = chunks.zipWithIndex.filter { case (spc, i) =>
-      i == 0 || chunks(i - 1) != spc }
-    val stsc = box("stsc", be32(0), be32(runs.length.toLong),
-      runs.flatMap { case (spc, i) =>
-        be32(i + 1L) ++ be32(spc.toLong) ++ be32(1) }.toArray)
-    val stsz = box("stsz", be32(0), be32(0), be32(frames.length.toLong),
-      sampleSizes.flatMap(s => be32(s.toLong)).toArray)
-    val stco = box("stco", be32(0), be32(chunkOffsets.length.toLong),
-      chunkOffsets.flatMap(be32).toArray)
-    val stbl = box("stbl", stsd, stts, stsc, stsz, stco)
-    val minf = box("minf", stbl)
-    val hdlr = box("hdlr", be32(0), be32(0), "vide".getBytes,
-      new Array[Byte](12), Array(0.toByte))
-    val mdhd = box("mdhd", be32(0), be32(0), be32(0), be32(600),
-      be32(frames.length * 100L), be16(0x55C4), be16(0))
-    val mdia = box("mdia", mdhd, hdlr, minf)
-    val tkhd = box("tkhd", be32(0x00000007), be32(0), be32(0), be32(1),
-      new Array[Byte](84 - 16))
-    val trak = box("trak", tkhd, mdia)
-    val mvhd = box("mvhd", be32(0), be32(0), be32(0), be32(600),
-      be32(frames.length * 100L), new Array[Byte](80))
-    val moov = box("moov", mvhd, trak)
-    ftyp ++ mdat ++ moov
-  }
-
-  private def jpegFrames(n: Int): Seq[Array[Byte]] = (0 until n).map { i =>
-    val img = new java.awt.image.BufferedImage(8, 8,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val v = 200 - 40 * i
-    for (y <- 0 until 8; x <- 0 until 8) img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    val b = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "jpg", b)
-    b.toByteArray
-  }
-
-  test("MP4 metadata: track id, handler, codec, dims, timescale from the box tree") {
-    val bytes = mp4(jpegFrames(5), "jpeg", Seq(3, 2))
-    val ts = Mp4.tracks(bytes)
-    assert(ts.length == 1)
-    val t = ts.head
-    assert(t.trackId == 1 && t.handler == "vide" && t.codec == "jpeg")
-    assert(t.width == 8 && t.height == 8)
-    assert(t.timescale == 600 && t.duration == 500 && t.nSamples == 5)
-  }
-
-  test("MP4 sample-table resolution: stsc×stco×stsz yields exact byte ranges") {
-    val frames = jpegFrames(5)
-    val bytes = mp4(frames, "jpeg", Seq(3, 2)) // non-uniform chunking
-    val ranges = Mp4.videoSampleRanges(bytes)
-    assert(ranges.length == 5)
-    assert(ranges.map(_._2).toSeq == frames.map(_.length.toLong))
-    val recovered = ranges.map { case (off, sz) =>
-      java.util.Arrays.copyOfRange(bytes, off.toInt, (off + sz).toInt).toSeq }
-    assert(recovered == frames.map(_.toSeq), "byte-exact recovery from planned ranges")
-  }
-
-  test("real MJPEG-MP4 decode: frames out bit-exact; sampleFrames routes the container") {
-    import spark.implicits._
-    val frames = jpegFrames(5)
-    val bytes = mp4(frames, "jpeg", Seq(2, 2, 1))
-    assert(Mp4.mjpegMp4Frames(bytes).map(_.toSeq) == frames.map(_.toSeq))
-    val ds = Seq(MediaRow(11, "video", bytes, MediaMeta("mp4", 8, 8, 5, 0))).toDS()
-    val sampled = sampleFrames(ds, 2).collect().sortBy(_.getInt(1))
-    assert(sampled.map(_.getInt(2)).toSeq ==
-      Seq(frames(0).length, frames(2).length), "real frame sizes, evenly sampled")
-  }
-
-  test("MP4 non-MJPEG codec: metadata and ranges still real, decode falls back to stub") {
-    import spark.implicits._
-    // same sample layout, but the stsd entry claims avc1 — h264 NALs, not JPEGs
-    val fake = (0 until 3).map(i => Array.fill(32 + i)(i.toByte))
-    val bytes = mp4(fake, "avc1", Seq(3))
-    assert(Mp4.tracks(bytes).head.codec == "avc1")
-    assert(Mp4.videoSampleRanges(bytes).length == 3, "planning pass is codec-agnostic")
-    assert(Mp4.mjpegMp4Frames(bytes).isEmpty, "no JPEG decode claimed for h264")
-    val ds = Seq(MediaRow(12, "video", bytes, MediaMeta("mp4", 8, 8, 3, 0))).toDS()
-    assert(sampleFrames(ds, 2).collect().length == 2, "stub keeps the pipeline runnable")
-  }
-
-  test("MP4 parser: corrupt / truncated / non-BMFF bytes degrade to empty, never throw") {
-    assert(Mp4.tracks("not an mp4 at all".getBytes).isEmpty)
-    assert(Mp4.videoSampleRanges(Array[Byte](0, 0, 0, 9)).isEmpty)
-    val good = mp4(jpegFrames(2), "jpeg", Seq(2))
-    val truncated = java.util.Arrays.copyOfRange(good, 0, good.length / 2)
-    assert(Mp4.mjpegMp4Frames(truncated).isEmpty)
-  }
-
-  test("real WAV decode: sample rate, frames and RMS from actual PCM") {
-    import javax.sound.sampled._
-    import spark.implicits._
-    // 0.5 s of a full-scale-/2 sine at 440 Hz, 8 kHz mono PCM16 →
-    // RMS = 0.5/sqrt(2) ≈ 0.3536
-    val rate = 8000
-    val n = rate / 2
-    val pcm = new Array[Byte](n * 2)
-    for (i <- 0 until n) {
-      val v = (0.5 * math.sin(2 * math.Pi * 440 * i / rate) * 32767).toInt
-      pcm(i * 2) = (v & 0xFF).toByte
-      pcm(i * 2 + 1) = ((v >> 8) & 0xFF).toByte
-    }
-    val fmt = new AudioFormat(rate.toFloat, 16, 1, true, false)
-    val bos = new java.io.ByteArrayOutputStream()
-    AudioSystem.write(new AudioInputStream(
-      new java.io.ByteArrayInputStream(pcm), fmt, n.toLong),
-      AudioFileFormat.Type.WAVE, bos)
-    val wav = bos.toByteArray
-
-    val ds = Seq(MediaRow(7, "audio", wav, MediaMeta("wav", 0, 0, 0, 0))).toDS()
-    val f = audioFeatures(ds).collect().head
-    assert(f.sampleRateHz == rate && f.channels == 1 && f.nFrames == n)
-    assert(math.abs(f.durationSec - 0.5) < 1e-9)
-    assert(math.abs(f.rms - 0.5 / math.sqrt(2)) < 1e-3, s"rms=${f.rms}")
-    // undecodable bytes fall back to the deterministic stub
-    val stub = audioFeatures(Seq(media(8, "audio", "noise")).toDS()).collect().head
-    assert(stub.docId == 8 && stub.rms >= 0.0 && stub.rms <= 1.0)
-  }
-
-  /** A real PNG whose luma at (x, y) comes from a seeded pattern — smooth
-    * enough to survive JPEG, structured enough that distinct seeds give
-    * distant dHashes. `shift` adds uniform brightness (kept clamp-free). */
-  private def patternedImage(seed: Int, w: Int, h: Int, format: String,
-                             shift: Int = 0): Array[Byte] = {
-    val img = new java.awt.image.BufferedImage(
-      w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    for (y <- 0 until h; x <- 0 until w) {
-      val v = (96 + 64 * math.sin(seed * 1.7 + 6.0 * x / w) *
-        math.cos(seed * 0.9 + 6.0 * y / h)).toInt + shift
-      img.setRGB(x, y, (v << 16) | (v << 8) | v)
-    }
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, format, bos)
-    bos.toByteArray
-  }
-
-  private def hamming(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
-
-  test("dHash: brightness-shift invariant, JPEG-robust, distinct across patterns") {
-    val base = imageDHash(patternedImage(1, 64, 64, "png")).get
-    // uniform +40 brightness preserves every horizontal gradient exactly
-    val bright = imageDHash(patternedImage(1, 64, 64, "png", shift = 40)).get
-    assert(hamming(base, bright) == 0, "dHash must ignore uniform brightness")
-    // lossy re-encode: perceptually identical → within banding reach
-    val jpeg = imageDHash(patternedImage(1, 64, 64, "jpg")).get
-    assert(hamming(base, jpeg) <= 3, s"JPEG twin drifted ${hamming(base, jpeg)} bits")
-    // a different pattern is far away — dHashes don't collide by shape
-    val other = imageDHash(patternedImage(2, 64, 64, "png")).get
-    assert(hamming(base, other) > 10, s"distinct patterns only ${hamming(base, other)} apart")
-    // resolution change preserves the gradient structure (area-averaged grid)
-    val small = imageDHash(patternedImage(1, 32, 32, "png")).get
-    assert(hamming(base, small) <= 6, s"rescale drifted ${hamming(base, small)} bits")
-  }
-
-  test("image dedup: pHashes + banded hamming pairs find the planted near-dup only") {
-    import spark.implicits._
-    val ds = Seq(
-      MediaRow(1, "image", patternedImage(1, 64, 64, "png"), MediaMeta("png", 0, 0, 0, 0)),
-      MediaRow(2, "image", patternedImage(1, 64, 64, "jpg"), MediaMeta("jpg", 0, 0, 0, 0)),
-      MediaRow(3, "image", patternedImage(2, 64, 64, "png"), MediaMeta("png", 0, 0, 0, 0)),
-      MediaRow(4, "audio", "not-an-image".getBytes("UTF-8"), MediaMeta("wav", 0, 0, 0, 0))
-    ).toDS()
-    val hashes = imagePHashes(ds)
-    assert(hashes.count() == 3, "non-image rows must not hash")
-    val pairs = graft.operators.TextDedup
-      .bandedHammingPairs(hashes, "doc_id", "phash",
-        bits = 64, bands = 4, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(pairs == Seq((1L, 2L)), s"expected only the PNG/JPEG twin pair, got $pairs")
-  }
-
-  test("image dedup stub path: undecodable twins pair at hamming 0, singles don't") {
-    import spark.implicits._
-    val blobA = "blob-A-not-an-image".getBytes("UTF-8")
-    val ds = Seq(
-      MediaRow(10, "image", blobA, MediaMeta("bin", 0, 0, 0, 0)),
-      MediaRow(11, "image", blobA.clone(), MediaMeta("bin", 0, 0, 0, 0)),
-      MediaRow(12, "image", "blob-B-not-an-image".getBytes("UTF-8"), MediaMeta("bin", 0, 0, 0, 0))
-    ).toDS()
-    val pairs = graft.operators.TextDedup
-      .bandedHammingPairs(imagePHashes(ds), "doc_id", "phash",
-        bits = 64, bands = 4, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    assert(pairs == Seq((10L, 11L, 0)), s"stub hashes must pair only byte-identical twins: $pairs")
-  }
-
-  test("binary columns survive a parquet round-trip") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("mm").toString + "/media"
-    val ds = Seq(media(1, "image", "img-one")).toDS()
-    withMediaColumns(ds.toDF(), "bytes").write.parquet(dir)
-    val back = spark.read.parquet(dir)
-    val row = back.selectExpr("docId", "media_md5", "media_size", "bytes").collect().head
-    assert(row.getLong(0) == 1L)
-    assert(row.getAs[Array[Byte]]("bytes").toSeq == "img-one".getBytes("UTF-8").toSeq)
-    assert(row.getInt(2) == 7)
   }
 }

@@ -151,9 +151,13 @@ class ConnectedComponentsSpec extends SparkSpec {
   private val confKeys = Seq("spark.sql.adaptive.enabled",
     "spark.sql.join.preferSortMergeJoin", "spark.sql.shuffle.partitions")
 
+  /** The three loop keys as set in the session; None: unset (the
+    * getters would read an unset key as its default). */
+  private def confState() = confKeys.map(k => k -> spark.conf.getAll.get(k))
+
   /** Runs `body` with the three loop keys saved, restoring them after. */
   private def withSavedConf(body: => Unit): Unit = {
-    val saved = confKeys.map(k => k -> spark.conf.getOption(k))
+    val saved = confState()
     try body
     finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
@@ -163,15 +167,22 @@ class ConnectedComponentsSpec extends SparkSpec {
 
   test("the loop restores its three conf keys after failing to converge") {
     withSavedConf {
-      spark.conf.set("spark.sql.adaptive.enabled", "true") // the flip path
-      spark.conf.set("spark.sql.join.preferSortMergeJoin", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val before = confKeys.map(k => k -> spark.conf.get(k))
-      val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
-      val e = intercept[RuntimeException](
-        TextDedup.ccSqlLoop(chain, "a", "b", maxIter = 1))
-      assert(e.getMessage.contains("did not converge"))
-      assert(confKeys.map(k => k -> spark.conf.get(k)) == before)
+      // second pass: a key the caller never set must stay unset, not be
+      // pinned to the default it reads as
+      for (smj <- Seq(Some("true"), None)) {
+        spark.conf.set("spark.sql.adaptive.enabled", "true") // the flip path
+        smj match {
+          case Some(v) => spark.conf.set("spark.sql.join.preferSortMergeJoin", v)
+          case None => spark.conf.unset("spark.sql.join.preferSortMergeJoin")
+        }
+        spark.conf.set("spark.sql.shuffle.partitions", "7")
+        val before = confState()
+        val chain = (0L until 63L).map(i => (i, i + 1)).toDF("a", "b")
+        val e = intercept[RuntimeException](
+          TextDedup.ccSqlLoop(chain, "a", "b", maxIter = 1))
+        assert(e.getMessage.contains("did not converge"))
+        assert(confState() == before, s"conf not restored to $before")
+      }
     }
   }
 

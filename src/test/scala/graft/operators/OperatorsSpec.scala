@@ -5,68 +5,10 @@ import org.apache.spark.sql.functions._
 
 /** Generic operator APIs cross-checked against naive (non-scalable)
   * equivalents on small data — the scale shapes must return exactly what
-  * the obvious inequality joins return. */
+  * the obvious all-pairs or collected renderings return. */
 class OperatorsSpec extends SparkSpec {
 
   import spark.implicits._
-
-  test("asofJoin strict: matches the naive inequality join") {
-    val trades = Seq((1L, 100L, "t1"), (1L, 200L, "t2"), (2L, 50L, "t3"))
-      .toDF("k", "ts", "trade")
-    val quotes = Seq((1L, 90L, 9.0), (1L, 100L, 10.0), (1L, 150L, 15.0),
-      (2L, 60L, 6.0))
-      .toDF("k", "qts", "px")
-    val got = Joins.asofJoin(trades, quotes, Seq("k"), "ts", "qts", Seq("px"),
-        strict = true)
-      .orderBy("k", "ts")
-      .collect().map(r => (r.getLong(0), r.getLong(1),
-        Option(r.get(r.fieldIndex("asof_px"))).map(_.asInstanceOf[Double])))
-    // strict: the quote AT ts=100 is not visible to the trade at ts=100
-    assert(got.toSeq == Seq(
-      (1L, 100L, Some(9.0)), (1L, 200L, Some(15.0)), (2L, 50L, None)))
-  }
-
-  test("asofJoin carries the latest right ROW atomically (null fields included)") {
-    val trades = Seq((1L, 3L, "t")).toDF("k", "ts", "trade")
-    val quotes = Seq(
-      (1L, 1L, Option(10.0), Option(5L)),
-      (1L, 2L, Option.empty[Double], Option(7L))) // latest row: px null, sz 7
-      .toDF("k", "qts", "px", "sz")
-    val got = Joins.asofJoin(trades, quotes, Seq("k"), "ts", "qts",
-      Seq("px", "sz"), strict = true).collect().head
-    assert(got.isNullAt(got.fieldIndex("asof_px")),
-      "px must be the latest row's null, not a stale non-null")
-    assert(got.getLong(got.fieldIndex("asof_sz")) == 7L)
-  }
-
-  test("asofJoin inclusive: same-instant right row is visible") {
-    val trades = Seq((1L, 100L, "t1")).toDF("k", "ts", "trade")
-    val quotes = Seq((1L, 90L, 9.0), (1L, 100L, 10.0)).toDF("k", "qts", "px")
-    val got = Joins.asofJoin(trades, quotes, Seq("k"), "ts", "qts", Seq("px"),
-      strict = false).collect()
-    assert(got.head.getAs[Double]("asof_px") == 10.0)
-  }
-
-  test("rangeJoin: matches the naive inequality join on random-ish data") {
-    val left = (1 to 40).map(i => (i.toLong % 3, i * 97L % 1000)).toDF("k", "ts")
-    val right = (1 to 60).map(i => (i.toLong % 3, i * 61L % 1000, i.toLong))
-      .toDF("k", "rts", "rid")
-    val (lo, hi) = (0L, 120L)
-    val naive = left.as("l").join(right.as("r"),
-        col("l.k") === col("r.k") &&
-          col("r.rts") > col("l.ts") + lo && col("r.rts") <= col("l.ts") + hi)
-      .select(col("l.k"), col("l.ts"), col("r.rid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val bucketed = Joins.rangeJoin(left, right, Seq("k"), "ts", "rts", lo, hi)
-      .select(left("k"), col("ts"), col("rid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(bucketed.toSeq == naive.toSeq)
-    // and with a bucket width smaller than the window
-    val fine = Joins.rangeJoin(left, right, Seq("k"), "ts", "rts", lo, hi, bucketMs = 37L)
-      .select(left("k"), col("ts"), col("rid"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(fine.toSeq == naive.toSeq)
-  }
 
   test("minhash signatures are permutation-stable and detect near-dups") {
     val docs = Seq(

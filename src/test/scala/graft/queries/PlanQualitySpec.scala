@@ -759,7 +759,7 @@ class PlanQualitySpec extends SparkSpec {
 
   test("near ingest: one parquet scan, 4 broadcast band probes, zero probe-side exchanges") {
     // the streaming gate's batch-shape claims (scaladoc on
-    // Streams.nearDropAtIngest), as assertions:
+    // TextDedup.nearDropAtIngest), as assertions:
     //  - the probe side reads the corpus parquet ONCE (signature +
     //    quality are in-row over the same scan; the index is a
     //    checkpointed RDD, never a parquet rescan)
@@ -809,7 +809,7 @@ class PlanQualitySpec extends SparkSpec {
 
   test("sem ingest lifecycle: one scan, broadcast probe in the small-index regime, no probe-side shuffle") {
     // the SEMANTIC gate's batch-shape claims (scaladoc on
-    // Streams.semDropAtIngest) for the broadcast regime the spec scale
+    // Ann.semDropAtIngest) for the broadcast regime the spec scale
     // exercises:
     //  - the probe side reads the embeddings parquet ONCE (cell, bucket,
     //    norm and cent_cos are in-row over the same scan; the

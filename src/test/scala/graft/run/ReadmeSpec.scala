@@ -69,4 +69,16 @@ class ReadmeSpec extends SparkSpec {
       .findAllMatchIn(readme).map(_.group(1).toInt).toSeq
     assert(counts == Seq(graft.SparkEntry.queries.size))
   }
+
+  test("every dir/File.scala path in the coverage map exists under src/main/scala/graft") {
+    val readme = new String(Files.readAllBytes(Paths.get("README.md")), "UTF-8")
+    val table = readme.linesIterator.dropWhile(!_.startsWith("## Coverage map"))
+      .dropWhile(!_.startsWith("|")).takeWhile(_.startsWith("|")).mkString("\n")
+    val cited = """`([a-z]+/[A-Za-z0-9]+\.scala)""".r
+      .findAllMatchIn(table).map(_.group(1)).toSeq.distinct
+    assert(cited.size >= 20, s"too few cited files for a meaningful check: $cited")
+    val missing = cited.filterNot(f =>
+      Files.isRegularFile(Paths.get("src/main/scala/graft", f)))
+    assert(missing.isEmpty, s"README coverage map cites missing files: $missing")
+  }
 }

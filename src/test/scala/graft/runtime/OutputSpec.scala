@@ -81,35 +81,4 @@ class OutputSpec extends SparkSpec {
     assert(sizes.max <= sizes.min * 3,
       s"files should be near-even after balance: ${sizes.mkString(", ")}")
   }
-
-  test("writeShards: one ordered file per shard replaying the permutation") {
-    import spark.implicits._
-    val df = (0L until 500L).toDF("id")
-    val base = java.nio.file.Files.createTempDirectory("write_shards").toFile
-    Output.writeShards(df, "id", shards = 4, seed = "epoch0", base.getPath)
-    val shardDirs = base.listFiles((f, n) => n.startsWith("shard="))
-    assert(shardDirs.map(_.getName).sorted.toSeq ==
-      (0 until 4).map(k => s"shard=$k"))
-    var total = 0L
-    shardDirs.foreach { d =>
-      // ONE data file per shard: the repartition co-located the shard
-      assert(parquetFiles(d).length == 1,
-        s"${d.getName}: expected a single ordered file")
-      // file row order IS pos order — a reader needs no sort of its own
-      val rows = spark.read.parquet(parquetFiles(d).head.getPath)
-        .select("pos").collect().map(_.getLong(0))
-      assert(rows.toSeq == (1L to rows.length).toSeq,
-        s"${d.getName}: rows not in pos order")
-      total += rows.length
-    }
-    assert(total == 500L, "every row lands in exactly one shard")
-    // determinism: a second write is file-for-file identical row content
-    val base2 = java.nio.file.Files.createTempDirectory("write_shards2").toFile
-    Output.writeShards(df, "id", shards = 4, seed = "epoch0", base2.getPath)
-    val a = spark.read.parquet(base.getPath).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Int]("shard"))).sorted.toSeq
-    val b = spark.read.parquet(base2.getPath).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getAs[Int]("shard"))).sorted.toSeq
-    assert(a == b, "same seed must reproduce the same shard layout")
-  }
 }

@@ -32,7 +32,7 @@ class EncodingFixturesSpec extends SparkSpec {
     for (f <- Seq("hello_utf8.jsonl", "hello_utf16le.jsonl", "hello_utf16be.jsonl",
                   "hello_windows.jsonl")) {
       assume(exists(f))
-      val texts = Tabular.jsonLines(spark, Seq(s"$res/$f"), Seq("text"))
+      val texts = Tabular.jsonCells(LineSource.lines(spark, Seq(s"$res/$f")), Seq("text"))
         .orderBy("lineno").select(element_at(col("cells"), 1))
         .collect().map(_.getString(0)).toSeq
       assert(texts.length == 2 && texts.head.startsWith("Hello"), s"$f -> $texts")

@@ -1,13 +1,12 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.compile.MappingCompiler
 import graft.model.MappingLoader
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 class StreamsSpec extends SparkSpec {
-
-  import Streams._
 
   test("records() applies a mapping to a memory stream incrementally") {
     implicit val sq = spark.sqlContext
@@ -22,7 +21,7 @@ class StreamsSpec extends SparkSpec {
          |""".stripMargin)
     val in = MemoryStream[(String, Long, Seq[String])]
     val lines = in.toDF.toDF("file", "lineno", "cells")
-    val q = records(lines, mapping)
+    val q = MappingCompiler(mapping).records(lines)
       .select(element_at(col("fields"), "surname").as("surname"))
       .writeStream.format("memory").queryName("recs").outputMode("append").start()
     in.addData(("f", 0L, Seq("smith ")), ("f", 1L, Seq(" doe")))
@@ -30,268 +29,6 @@ class StreamsSpec extends SparkSpec {
     val out = spark.sql("select surname from recs").collect().map(_.getString(0)).sorted
     assert(out.toSeq == Seq("DOE", "SMITH"))
     q.stop()
-  }
-
-  test("tumbling window with watermark aggregates per key") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val df = in.toDF.toDF("ts", "k", "value")
-    val q = tumblingCounts(df, "ts", "k", "1 hour", "2 hours")
-      .writeStream.format("memory").queryName("win").outputMode("update").start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    in.addData(
-      (t("2024-01-01 10:05:00"), "a", 1.5),
-      (t("2024-01-01 10:55:00"), "a", 2.0),
-      (t("2024-01-01 11:05:00"), "a", 3.0),
-      (t("2024-01-01 10:10:00"), "b", 4.0))
-    q.processAllAvailable()
-    val rows = spark.sql("select k, n, total from win order by k, n").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq
-    assert(rows.contains(("a", 2L, 3.5)))   // 10:00 window
-    assert(rows.contains(("a", 1L, 3.0)))   // 11:00 window
-    assert(rows.contains(("b", 1L, 4.0)))
-    q.stop()
-  }
-
-  test("delimitedStream matches the batch delimited path on the same files") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graftstream")
-    java.nio.file.Files.write(dir.resolve("a.csv"),
-      "surname,forename\nSMITH,JOHN\nDOE,JANE\n".getBytes("UTF-8"))
-    java.nio.file.Files.write(dir.resolve("b.csv"),
-      "surname,forename\nBLOGGS,FRED\n".getBytes("UTF-8"))
-    val mapping = graft.model.MappingLoader.loadTable(
-      """|header_lines: 1
-         |klass: Person
-         |columns:
-         |- column: surname
-         |  mappings:
-         |  - field: surname
-         |- column: forename
-         |  mappings:
-         |  - field: forename
-         |""".stripMargin)
-    val q = delimitedStream(spark, dir.toString, mapping)
-      .writeStream.format("memory").queryName("par").outputMode("append").start()
-    q.processAllAvailable()
-    val streamed = spark.sql("select fields['surname'] s, fields['forename'] f from par")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    // batch twin over the same two files
-    val batch = graft.run.Importer.mappedTables(spark,
-        dir.resolve("a.csv").toString,
-        Seq(mapping.copy(filenamePattern = Some("\\.csv\\z"), canonicalName = Some("p"))))("p")
-      .unionByName(graft.run.Importer.mappedTables(spark,
-        dir.resolve("b.csv").toString,
-        Seq(mapping.copy(filenamePattern = Some("\\.csv\\z"), canonicalName = Some("p"))))("p"))
-      .select(element_at(col("fields"), "surname"), element_at(col("fields"), "forename"))
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(streamed.toSeq == batch.toSeq)
-    assert(streamed.length == 3)
-    q.stop()
-  }
-
-  test("delimitedStream assigns distinct indexes to byte-identical rows") {
-    val dir = java.nio.file.Files.createTempDirectory("graftstreamdup")
-    // three byte-identical data rows in one file
-    java.nio.file.Files.write(dir.resolve("dups.csv"),
-      "surname\nSMITH\nSMITH\nSMITH\n".getBytes("UTF-8"))
-    val mapping = graft.model.MappingLoader.loadTable(
-      """|header_lines: 1
-         |klass: Person
-         |row_identifier: index
-         |columns:
-         |- column: surname
-         |  mappings:
-         |  - field: surname
-         |""".stripMargin)
-    val q = delimitedStream(spark, dir.toString, mapping)
-      .writeStream.format("memory").queryName("dups").outputMode("append").start()
-    q.processAllAvailable()
-    val ids = spark.sql("select fields['row_identifier'] from dups")
-      .collect().map(_.getString(0))
-    assert(ids.length == 3, "all three identical rows must survive")
-    assert(ids.distinct.length == 3,
-      s"identical rows must get distinct indexes, got ${ids.toSeq}")
-    q.stop()
-  }
-
-  test("streaming exact dedup drops watermark-window duplicates across batches") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[(java.sql.Timestamp, String)]
-    val df = in.toDF.toDF("ts", "text")
-    val q = dedupStream(df, "text", "ts", "1 hour")
-      .writeStream.format("memory").queryName("dedup").outputMode("append").start()
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    in.addData((t("2024-01-01 10:00:00"), "alpha"), (t("2024-01-01 10:01:00"), "alpha"))
-    q.processAllAvailable()
-    in.addData((t("2024-01-01 10:02:00"), "alpha"), (t("2024-01-01 10:03:00"), "beta"))
-    q.processAllAvailable()
-    val rows = spark.sql("select text from dedup").collect().map(_.getString(0)).sorted
-    assert(rows.toSeq == Seq("alpha", "beta"))
-    q.stop()
-  }
-
-  test("streaming near-dup pairs match batch simhashPairs over a replay") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    // 18 docs in 6 families of 3 near-identical texts (one word varies),
-    // all within the 1 h horizon — family members land within small
-    // hamming of each other, cross-family texts far apart
-    val docs = (0 until 18).map { i =>
-      val fam = i % 6
-      (i.toLong,
-        s"family $fam shares almost every word of this sentence variant v${i / 6}",
-        t(f"2024-01-01 10:${i * 3}%02d:00"))
-    }
-    val batch = graft.operators.TextDedup
-      .simhashPairs(docs.toDF("doc_id", "text", "ts"), "doc_id", "text",
-        bits = 16, bands = 4, maxHamming = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(batch.nonEmpty, "replay must actually contain near-dup pairs")
-
-    val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = nearDupPairsStream(in.toDF.toDF("doc_id", "text", "ts"),
-        "doc_id", "text", "ts", bits = 16, bands = 4, maxHamming = 3,
-        watermarkMs = 60 * 60 * 1000L)
-      .writeStream.format("memory").queryName("g_neardup").outputMode("append").start()
-    docs.grouped(7).foreach { b => in.addData(b); q.processAllAvailable() }
-    val streamed = spark.sql("select idA, idB, hamming from g_neardup")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    q.stop()
-    assert(streamed.length == streamed.distinct.length,
-      "a pair must be emitted exactly once across bands and batches")
-    assert(streamed.toSet == batch,
-      s"stream/batch divergence:\n  stream-only: ${streamed.toSet -- batch}\n" +
-        s"  batch-only: ${batch -- streamed.toSet}")
-  }
-
-  test("near-dup stream prunes state past the watermark horizon") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val text = "identical text every time for the horizon check"
-    val in = MemoryStream[(Long, String, java.sql.Timestamp)]
-    val q = nearDupPairsStream(in.toDF.toDF("doc_id", "text", "ts"),
-        "doc_id", "text", "ts", watermarkMs = 10 * 60 * 1000L)
-      .writeStream.format("memory").queryName("g_ndhorizon").outputMode("append").start()
-    in.addData((1L, text, t("2024-01-01 10:00:00"))); q.processAllAvailable()
-    // push the watermark far past doc 1, then send its twin: the pair
-    // must NOT appear — doc 1's state was pruned at the horizon
-    in.addData((2L, "totally different words entirely", t("2024-01-01 12:00:00")))
-    q.processAllAvailable()
-    in.addData((3L, text, t("2024-01-01 12:01:00"))); q.processAllAvailable()
-    val pairs = spark.sql("select idA, idB from g_ndhorizon")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    q.stop()
-    assert(!pairs.contains((1L, 3L)),
-      s"horizon-expired member still paired: $pairs")
-  }
-
-  // ---------------------------------------------------------------------
-  // Committed parity goldens: the full, deterministic output of each
-  // streaming operator over a fixed replay, asserted byte-for-byte against
-  // src/test/resources/streaming/*.golden. Regenerate (after an
-  // intentional semantic change) with GRAFT_REGEN_GOLDENS=1 sbt test,
-  // then review the diff like any other golden.
-  private def assertGolden(name: String, actual: Seq[String]): Unit = {
-    val path = java.nio.file.Paths.get("src/test/resources/streaming", name)
-    val text = actual.mkString("", "\n", "\n")
-    if (sys.env.contains("GRAFT_REGEN_GOLDENS")) {
-      java.nio.file.Files.createDirectories(path.getParent)
-      java.nio.file.Files.write(path, text.getBytes("UTF-8"))
-    }
-    assert(java.nio.file.Files.exists(path), s"missing golden $path — " +
-      "run once with GRAFT_REGEN_GOLDENS=1 and commit the file")
-    val want = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-    assert(text == want,
-      s"golden mismatch for $name:\n--- got ---\n$text--- want ---\n$want")
-  }
-
-  test("golden: tumblingCounts full finalized output over a fixed replay") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    // 48 events, 3 keys, 4 busy hours; formula-generated (no RNG)
-    val events = (0 until 48).map { i =>
-      (t(f"2024-01-01 ${9 + i % 4}%02d:${(i * 7) % 60}%02d:00"),
-        s"k${i % 3}", (i % 10) / 2.0)
-    }
-    val in = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val q = tumblingCounts(in.toDF.toDF("ts", "k", "value"), "ts", "k",
-        "1 hour", "2 hours")
-      .writeStream.format("memory").queryName("g_win").outputMode("append").start()
-    in.addData(events.take(30)); q.processAllAvailable()
-    in.addData(events.drop(30)); q.processAllAvailable()
-    // a far-future row pushes the watermark past every window → all finalize
-    in.addData((t("2024-01-02 12:00:00"), "flush", 0.0)); q.processAllAvailable()
-    val out = spark.sql(
-        "select window.start, k, n, total from g_win order by 1, 2")
-      .collect().map(r => s"${r.get(0)}|${r.getString(1)}|${r.getLong(2)}|${r.getDouble(3)}")
-    q.stop()
-    assertGolden("tumbling_counts.golden", out.toSeq)
-  }
-
-  test("golden: dedupStream full survivor set over a fixed replay") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    // 24 docs cycling over 8 distinct texts, duplicates within and across
-    // batches; all inside the 1 h watermark window → exactly 8 survive
-    val docs = (0 until 24).map { i =>
-      (t(f"2024-01-01 10:${i * 2}%02d:00"), s"text-${i % 8}")
-    }
-    val in = MemoryStream[(java.sql.Timestamp, String)]
-    val q = dedupStream(in.toDF.toDF("ts", "text"), "text", "ts", "1 hour")
-      .writeStream.format("memory").queryName("g_dedup").outputMode("append").start()
-    docs.grouped(8).foreach { b => in.addData(b); q.processAllAvailable() }
-    val out = spark.sql("select text, content_hash from g_dedup order by text")
-      .collect().map(r => s"${r.getString(0)}|${r.getString(1)}")
-    q.stop()
-    assertGolden("dedup_stream.golden", out.toSeq)
-  }
-
-  test("golden: delimitedStream full mapped records over fixed files") {
-    val dir = java.nio.file.Files.createTempDirectory("graftgolden")
-    java.nio.file.Files.write(dir.resolve("a.csv"),
-      ("surname,forename,dob\n" +
-        "smith ,JOHN,2001-02-03\n" +
-        "o'brien,MARY ANN,1999-12-31\n" +
-        "doe,JANE,2010-06-15\n").getBytes("UTF-8"))
-    java.nio.file.Files.write(dir.resolve("b.csv"),
-      ("surname,forename,dob\n" +
-        "bloggs,FRED,1985-01-01\n" +
-        "smith ,JOHN,2001-02-03\n").getBytes("UTF-8"))
-    val mapping = MappingLoader.loadTable(
-      """|header_lines: 1
-         |klass: Person
-         |columns:
-         |- column: surname
-         |  mappings:
-         |  - field: surname
-         |    clean: :name
-         |- column: forename
-         |  mappings:
-         |  - field: forename
-         |- column: dob
-         |  mappings:
-         |  - field: dob
-         |    format: yyyy-mm-dd
-         |""".stripMargin)
-    val q = delimitedStream(spark, dir.toString, mapping)
-      .writeStream.format("memory").queryName("g_par").outputMode("append").start()
-    q.processAllAvailable()
-    // row ids are partition-relative surrogates (excluded: scheduling-
-    // dependent); everything semantic — klass, fields, rawtext — is pinned
-    val out = spark.sql(
-        """select klass, fields['surname'] s, fields['forename'] f,
-          |  cast(fields['dob'] as string) d, rawtext['surname'] rs
-          |from g_par order by s, f, d""".stripMargin)
-      .collect().map(r => (0 until 5).map(r.get(_)).mkString("|"))
-    q.stop()
-    assertGolden("delimited_stream.golden", out.toSeq)
   }
 
   test("TextStats expressions apply to a stream unchanged, equal to batch") {
@@ -369,24 +106,6 @@ class StreamsSpec extends SparkSpec {
     val kept = spark.sql("select id from incr").collect().map(_.getLong(0)).sorted
     assert(kept.toSeq == Seq(11L, 13L),
       s"replays must die against the static history across micro-batches: ${kept.toSeq}")
-    q.stop()
-  }
-
-  test("stateful sessionization closes sessions across batches") {
-    implicit val sq = spark.sqlContext
-    import spark.implicits._
-    val in = MemoryStream[Event]
-    val q = sessionize(in.toDS(), gapMs = 1000)
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    // batch 1: two events within gap
-    in.addData(Event(1, 1000, 1.0), Event(1, 1500, 2.0))
-    q.processAllAvailable()
-    // batch 2: a far-future event closes the first session
-    in.addData(Event(1, 100000, 5.0))
-    q.processAllAvailable()
-    val sessions = spark.sql("select * from sess").as[Session].collect()
-    assert(sessions.length == 1)
-    assert(sessions.head == Session(1, 1000, 1500, 2, 3.0))
     q.stop()
   }
 
@@ -570,13 +289,12 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("semantic drop-at-ingest against a batch-built semDedup index: batch parity + policy") {
-    // stateless ingest gate (Streams.semDropAtIngest): nearest centroid +
+    // stateless ingest gate (Ann.semDropAtIngest): nearest centroid +
     // LSH bucket + one stream-static join against the PACKED index, the
     // drop decision judged in-row — no keyed state, no watermark
     implicit val sq = spark.sqlContext
     import spark.implicits._
     import graft.operators.Ann
-    import graft.streaming.Streams
     val centroids = Seq(0L -> Seq(1.0, 0, 0, 0), 1L -> Seq(0.0, 1, 0, 0))
     val planes = Seq(Seq(1, 1, 1, 1), Seq(1, -1, 1, -1))
     val tau = 0.95
@@ -594,7 +312,7 @@ class StreamsSpec extends SparkSpec {
       (1L, Seq(1.0, 0.1, 0.0, 0.0))    // re-ingest of 1: self excluded, 3 wins
     )
     def gate(df: org.apache.spark.sql.DataFrame) =
-      Streams.semDropAtIngest(df, "doc_id", "emb", index, centroids, planes, tau)
+      Ann.semDropAtIngest(df, "doc_id", "emb", index, centroids, planes, tau)
     val in = MemoryStream[(Long, Seq[Double])]
     val q = gate(in.toDF.toDF("doc_id", "emb"))
       .writeStream.format("memory").queryName("semgate").outputMode("append").start()
@@ -618,7 +336,7 @@ class StreamsSpec extends SparkSpec {
 
   test("near-dup drop-at-ingest against a batch-built simhash index: batch parity + keeper policy") {
     // the batch pipeline's near-dup keeper composed at the ingest side
-    // (Streams.nearDropAtIngest): row-local signature + keeper quality,
+    // (TextDedup.nearDropAtIngest): row-local signature + keeper quality,
     // `bands` stream-static joins against the packed simhash index, the
     // (quality desc, id asc) keeper decision judged in-row — stateless,
     // no watermark. The semantic pin derives the EXPECTED drop set from
@@ -643,7 +361,7 @@ class StreamsSpec extends SparkSpec {
     val index = TextDedup.simhashIndexBuckets(corpus, "doc_id", "text", bits)
       .localCheckpoint()
     def gate(df: org.apache.spark.sql.DataFrame) =
-      Streams.nearDropAtIngest(df, "doc_id", "text", index, bits)
+      TextDedup.nearDropAtIngest(df, "doc_id", "text", index, bits)
     // expected drops/witnesses from the batch pair list + keeper quality
     val q = corpus.select(col("doc_id"),
         TextStats.quality(col("text")).as("q")).collect()
@@ -719,12 +437,12 @@ class StreamsSpec extends SparkSpec {
     assert(canon(merged) == canon(rebuilt),
       "merged index must equal a full rebuild bucket-for-bucket")
     def probe(idx: org.apache.spark.sql.DataFrame) =
-      Streams.nearDropAtIngest(corpus, "doc_id", "text",
+      TextDedup.nearDropAtIngest(corpus, "doc_id", "text",
           idx.localCheckpoint(), bits)
         .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.head)
     assert(probe(merged).toSeq == probe(rebuilt).toSeq,
       "gate verdicts through the merged index must be bit-equal to the rebuild's")
-    val verdicts = Streams.nearDropAtIngest(corpus, "doc_id", "text",
+    val verdicts = TextDedup.nearDropAtIngest(corpus, "doc_id", "text",
         merged.localCheckpoint(), bits)
       .collect().map(r => r.getLong(0) ->
         (if (r.getBoolean(4)) Some(r.getLong(2)) else None)).toMap
@@ -757,7 +475,7 @@ class StreamsSpec extends SparkSpec {
     val index = TextDedup.simhashIndexBuckets(corpus, "doc_id", "text", 16)
       .localCheckpoint()
     // matching width: green, and the reordered twin still drops
-    val ok = Streams.nearDropAtIngest(corpus, "doc_id", "text", index, 16)
+    val ok = TextDedup.nearDropAtIngest(corpus, "doc_id", "text", index, 16)
       .collect().map(r => r.getLong(0) -> r.getBoolean(4)).toMap
     assert(ok(2L), "matching-width probe must still catch the twin")
     // executor-side raises arrive wrapped (SparkException → ... → the
@@ -768,7 +486,7 @@ class StreamsSpec extends SparkSpec {
     // probe at a different bits: raises at execution (stamp is data
     // behind the checkpoint), message names both sides
     val e1 = intercept[Exception] {
-      Streams.nearDropAtIngest(corpus, "doc_id", "text", index, 24)
+      TextDedup.nearDropAtIngest(corpus, "doc_id", "text", index, 24)
         .collect()
     }
     assert(chain(e1).exists(_.contains("width mismatch")),
@@ -782,7 +500,7 @@ class StreamsSpec extends SparkSpec {
       s"merge mismatch must name the width conflict: ${chain(e2)}")
     // same bits, different hash family: only the stamp can tell
     val e3 = intercept[Exception] {
-      Streams.nearDropAtIngest(corpus, "doc_id", "text", index, 16,
+      TextDedup.nearDropAtIngest(corpus, "doc_id", "text", index, 16,
           wideHash = true)
         .collect()
     }
@@ -791,7 +509,7 @@ class StreamsSpec extends SparkSpec {
     // an unstamped index (the pre-stamp shape) refuses at plan time
     val unstamped = index.select(col("band"), col("key"), col("members"))
     val e4 = intercept[IllegalArgumentException] {
-      Streams.nearDropAtIngest(corpus, "doc_id", "text", unstamped, 16)
+      TextDedup.nearDropAtIngest(corpus, "doc_id", "text", unstamped, 16)
     }
     assert(e4.getMessage.contains("stamp"),
       s"unstamped index must refuse at construction: ${e4.getMessage}")
@@ -887,7 +605,6 @@ class StreamsSpec extends SparkSpec {
     // unstamped index refuses at plan construction.
     import spark.implicits._
     import graft.operators.Ann
-    import graft.streaming.Streams
     val centroids = Seq(0L -> Seq(1.0, 0, 0, 0), 1L -> Seq(0.0, 1, 0, 0))
     val planes = Seq(Seq(1, 1, 1, 1), Seq(1, -1, 1, -1))
     val vecs = Seq(
@@ -900,18 +617,18 @@ class StreamsSpec extends SparkSpec {
     def chain(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
         .map(e => String.valueOf(e.getMessage)).toSeq
-    val ok = Streams.semDropAtIngest(vecs, "doc_id", "emb", index,
+    val ok = Ann.semDropAtIngest(vecs, "doc_id", "emb", index,
         centroids, planes, 0.95)
       .collect().map(r => r.getLong(0) -> r.getBoolean(5)).toMap
     assert(ok(2L), "matching-parameter probe must still catch the twin")
     val e1 = intercept[Exception] {
-      Streams.semDropAtIngest(vecs, "doc_id", "emb", index,
+      Ann.semDropAtIngest(vecs, "doc_id", "emb", index,
         centroids, Seq(Seq(1, 1, 1, 1)), 0.95).collect()
     }
     assert(chain(e1).exists(_.contains("parameter mismatch")),
       s"plane mismatch must name the conflict: ${chain(e1)}")
     val e2 = intercept[Exception] {
-      Streams.semDropAtIngest(vecs, "doc_id", "emb", index,
+      Ann.semDropAtIngest(vecs, "doc_id", "emb", index,
         Seq(0L -> Seq(1.0, 0, 0, 0)), planes, 0.95).collect()
     }
     assert(chain(e2).exists(_.contains("parameter mismatch")),
@@ -924,7 +641,7 @@ class StreamsSpec extends SparkSpec {
       s"merge mismatch must name the conflict: ${chain(e3)}")
     val unstamped = index.select(col("cell"), col("bucket"), col("members"))
     val e4 = intercept[IllegalArgumentException] {
-      Streams.semDropAtIngest(vecs, "doc_id", "emb", unstamped,
+      Ann.semDropAtIngest(vecs, "doc_id", "emb", unstamped,
         centroids, planes, 0.95)
     }
     assert(e4.getMessage.contains("stamp"),
