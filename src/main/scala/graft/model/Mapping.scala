@@ -111,7 +111,6 @@ final case class TableMapping(
     significantMappedFields: Seq[String] = Nil,
     xmlRecordXpath: Option[String] = None,
     patternMatchRecordXpath: Boolean = false,
-    yieldXmlRecord: Boolean = false,
     fileMetadata: Map[String, String] = Map.empty,
     nonTabular: Option[NonTabularSpec] = None,
     columns: Seq[ColumnMapping] = Nil) {

@@ -150,7 +150,6 @@ object MappingLoader {
         case _ => Map.empty[String, String]
       },
       patternMatchRecordXpath = bool(m, "pattern_match_record_xpath"),
-      yieldXmlRecord = bool(m, "yield_xml_record"),
       nonTabular = nonTab,
       columns = m.get("columns").map(columnsFromAny).getOrElse(Nil))
   }

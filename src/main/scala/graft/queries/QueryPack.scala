@@ -694,7 +694,7 @@ object QueryPack {
   /** N1–N5 — the non-tabular segmentation pipeline end-to-end, distributed:
     * each order is rendered as a three-line text block (still a narrow
     * per-row transform — no driver-side collect), the block stream is
-    * segmented by the REAL window-function state machine
+    * segmented by the REAL per-file line walk
     * ([[graft.tabulate.NonTabular]]) and tabulated, and the records flow
     * through the REAL mapping compiler. The oracle is a plain projection of
     * the same orders table. */
@@ -726,8 +726,8 @@ object QueryPack {
          |""".stripMargin
     val mapping = MappingLoader.loadTable(yaml)
     // 32 synthetic files — record blocks never span a file, so the per-file
-    // window state machine parallelises across files (the 100 TB shape:
-    // sequential within a file, parallel across many).
+    // walk parallelises across files (the 100 TB shape: sequential within a
+    // file, parallel across many).
     val lines = T(s, dir, "orders")
       .select(col("o_orderkey").cast("long").as("k"),
               posexplode(array(

@@ -2,35 +2,24 @@ package graft.tabulate
 
 import graft.clean.RubyTranslate
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.runtime.Messages
+import java.util.regex.Pattern
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import scala.collection.mutable
 
-/** Non-tabular (multi-line record) segmentation — the Spark rendering of the
-  * reference's `NdrImport::NonTabular::Table` (N1–N6,
-  * `lib/ndr_import/non_tabular/table.rb:100-167`,
-  * `non_tabular/record.rb:71-99`, `non_tabular/column_mapping.rb:26-48`).
+/** Non-tabular (multi-line record) segmentation: a port of the reference's
+  * `NdrImport::NonTabular::Table` walk (`non_tabular/table.rb:100-167`,
+  * N1–N3) and its per-record cell extractor (`non_tabular/record.rb:71-99`,
+  * N4), with the mapping checks of `non_tabular/column_mapping.rb:50-72`
+  * (N6).
   *
-  * The reference walks lines once with mutable state (in-record flag,
-  * current record, removed flags). Here the same state machine is expressed
-  * with window functions over `(file, lineno)`:
-  *
-  *   - `remove_lines` (N2): a line is removed when it sits inside a
-  *     consecutive block matching one of the named pattern sequences —
-  *     `lead()` conjunctions detect block starts, `lag()` spreads the flag.
-  *   - segmentation (N3): record id = running count of start-marker lines
-  *     (plus a virtual start for `start_in_a_record`); with an
-  *     `end_line_pattern`, open/closed state = start-count − end-count.
-  *   - tabulation (N4): captured lines are collected per record (sorted by
-  *     line number = the reference's `record_line_number`) and each column's
-  *     `non_tabular_cell` becomes a pure expression chain — slice /
-  *     array_position for line ranges (incl. RegexpRange), regexp_extract
-  *     chains for `capture`, array_join for `join`.
-  *
-  * Everything per-line is narrow; the only shuffles are the per-file window
-  * partitioning and the per-record groupBy — both keyed so that one file's
-  * lines stay together (the reference's semantics are inherently per-file
-  * sequential; parallelism comes from MANY files, the honest 100 TB shape).
+  * One exchange puts each file's lines in one partition, sorted by
+  * `(file, lineno)`; a typed `mapPartitions` then walks each file's run of
+  * lines once, as the reference does, keeping only the open record's
+  * captured lines and a `remove_lines` lookahead as deep as the longest
+  * pattern sequence. Parallelism comes from many files; within a file the
+  * semantics are sequential.
   *
   * Input: (file, lineno, line). Output: the MappingCompiler input contract
   * (file, lineno = 0-based record ordinal per file, cells array<string>).
@@ -44,7 +33,6 @@ object NonTabular {
   def validate(mapping: TableMapping): NonTabularSpec = {
     // error TEXTS route through the Messages catalogue (the reference's
     // I18n seam); error TYPES stay MappingError — the asserted contract
-    import graft.runtime.Messages
     val spec = mapping.nonTabular.getOrElse(
       throw new MappingError(Messages("mapping.errors.missing_start_line_pattern")))
     if (mapping.tablenamePattern.isDefined)
@@ -67,309 +55,178 @@ object NonTabular {
   /** Segment + tabulate: (file, lineno, line) → (file, lineno, cells). */
   def tabulate(linesDf: DataFrame, mapping: TableMapping): DataFrame = {
     val spec = validate(mapping)
-    val startPat = RubyTranslate.regex(spec.startLinePattern)
-    val endPat = spec.endLinePattern.map(RubyTranslate.regex)
-    val sBase = if (spec.startInARecord) 1 else 0
-
-    val wOrd = Window.partitionBy("file").orderBy("lineno")
-
-    // N1: rstrip, absolute line numbers already present.
-    val base = linesDf.select(col("file"), col("lineno"), rtrim(col("line")).as("rline"))
-
-    // Aggregate-free fast path (the r12 "primitive buffer" cure, taken to
-    // its conclusion): when every cell is a non-negative single-line
-    // selector, there is no end pattern, no remove_lines, and the start
-    // line is captured, a record's k-th captured line is simply lead(k)
-    // from its start line — so the whole tabulation is THREE window passes
-    // over one (file, lineno) sort with NO per-record aggregate at all.
-    // The r12 pivot attempt failed because max(when(rn=k, line)) keeps a
-    // string-valued aggregation buffer (SortAggregate); lead() keeps no
-    // buffer whatsoever. Semantics are pinned by NonTabularSpec's goldens
-    // (which route through tabulate()) and the n3_segments oracle hash.
-    val atOnly: Option[Seq[Int]] =
-      if (endPat.isEmpty && !spec.startInARecord && spec.captureStartLine &&
-          spec.removeLines.isEmpty) {
-        val idx = mapping.columns.map(_.nonTabularCell.get.lines.get).map {
-          case LineSelector.At(i) if i >= 0 => Some(i)
-          case _                            => None
-        }
-        if (idx.forall(_.isDefined)) Some(idx.map(_.get)) else None
-      } else None
-    if (atOnly.isDefined)
-      return fastTabulate(base, mapping, spec, startPat, atOnly.get, wOrd)
-
-    // N2: remove_lines — block starts via lead() conjunction, then spread.
-    val removeSeqs = spec.removeLines.values.toSeq.map(_.map(RubyTranslate.regex))
-    val withBlockStarts = removeSeqs.zipWithIndex.foldLeft(base) {
-      case (df, (pats, si)) =>
-        val blockStart = pats.zipWithIndex.map { case (p, k) =>
-          coalesce(lead(col("rline"), k).over(wOrd).rlike(p), lit(false))
-        }.reduce(_ && _)
-        df.withColumn(s"_bs$si", blockStart)
-    }
-    val removed =
-      if (removeSeqs.isEmpty) lit(false)
-      else removeSeqs.zipWithIndex.flatMap { case (pats, si) =>
-        (0 until pats.length).map(j =>
-          coalesce(lag(col(s"_bs$si"), j).over(wOrd), lit(false)))
-      }.reduce(_ || _)
-
-    // N3: classify lines and count start/end markers.
-    val flagged = withBlockStarts
-      .withColumn("removed", removed)
-      .withColumn("is_start", col("rline").rlike(startPat))
-      .withColumn("is_end", endPat match {
-        case Some(p) => !col("is_start") && col("rline").rlike(p)
-        case None    => lit(false)
-      })
-      .withColumn("start_cnt",
-        sum(col("is_start").cast("int")).over(wOrd) + lit(sBase))
-      .withColumn("end_cnt", sum(col("is_end").cast("int")).over(wOrd))
-      .withColumn("start_cnt_x", col("start_cnt") - col("is_start").cast("int"))
-      .withColumn("end_cnt_x", col("end_cnt") - col("is_end").cast("int"))
-
-    // start-before-end (`non_tabular/table.rb:139-141`): only with an end
-    // pattern; a start while a record is open is a mapping error.
-    val guarded = endPat match {
-      case Some(_) =>
-        flagged.withColumn("rline",
-          when(col("is_start") && col("start_cnt_x") > col("end_cnt_x"),
-            raise_error(lit(graft.runtime.Messages(
-              "mapping.errors.start_pattern_before_end"))))
-            .otherwise(col("rline")))
-      case None => flagged
-    }
-
-    val inRecord = endPat match {
-      case Some(_) =>
-        when(col("is_start"), lit(true))
-          .when(col("is_end"), col("start_cnt_x") > col("end_cnt_x"))
-          .otherwise(col("start_cnt") > col("end_cnt"))
-      case None =>
-        when(col("is_start"), lit(true)).otherwise(col("start_cnt") > 0)
-    }
-    val captured = inRecord && !col("removed") &&
-      when(col("is_start"), lit(spec.captureStartLine))
-        .when(col("is_end"), lit(spec.captureEndLine))
-        .otherwise(lit(true))
-
-    // A line "closes" its record: an end line closing an open record.
-    val closes = col("is_end") && col("start_cnt_x") > col("end_cnt_x")
-
-    val perLine = guarded
-      .withColumn("rec_id", col("start_cnt"))
-      .withColumn("captured", captured)
-      .withColumn("closes", closes)
-
-    // Group captured lines per (file, record); keep per-record flags.
-    // File-level facts (highest record id, whether the first start opens
-    // the file) are windows over the GROUPS, not the lines — one row per
-    // record instead of one per line, so no full-line buffering pass.
-    //
-    // collect_list(struct)+sort_array runs as an ObjectHashAggregate (no
-    // codegen) and is the single largest n3_segments cost at sf10 (~10 s
-    // of 27; SCALING.md r12). The obvious cure — pivot single-line
-    // selectors into per-position `max(when(rn = k))` columns — was
-    // BUILT AND MEASURED in r12 and did not pay: a string-valued
-    // aggregation buffer disqualifies HashAggregateExec, so the pivot
-    // planned as Sort(45M on (file, rec_id)) + SortAggregate plus two
-    // extra Window passes for the in-record ordinal, landing within
-    // noise of this shape (27.2 vs 26.6 s). Kept as the measurement; a
-    // future cure must make the buffer primitive, not just the value.
-    val groups0 = perLine
-      .filter(col("rec_id") >= 1)
-      .groupBy(col("file"), col("rec_id"))
-      .agg(
-        sort_array(collect_list(when(col("captured"),
-          struct(col("lineno"), col("rline"))))).as("cap"),
-        max(col("closes").cast("int")).as("any_close"),
-        // the open/closed state at this group's LAST line; for the file's
-        // final group that is the file's last line — the reference's
-        // end-of-file state (map-side combining agg, no window pass)
-        max_by(endPat match {
-          case Some(_) => col("start_cnt") > col("end_cnt")
-          case None    => col("start_cnt") > 0
-        }, col("lineno")).as("last_open"))
-      // native GetArrayStructFields, not transform() — a higher-order
-      // function here would evaluate interpreted once per record
-      .withColumn("lines", col("cap").getField("rline"))
-      .withColumn("n_cap", size(col("lines")))
-    // Deliberately ORDERLESS (don't "fuse" this with the row_number
-    // window below by giving it the same ordering): when a consumer
-    // drops `lineno` — the records() fan-out does — Catalyst prunes the
-    // numbering window entirely, and an orderless window here then costs
-    // only a near-free 32-key sort by `file` instead of a full
-    // (file, rec_id) sort of every record group. Measured at sf1: the
-    // "fused" variant is ~15% slower on n3_segments for exactly this
-    // reason.
-    val wFile = Window.partitionBy("file")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val groups = groups0
-      .withColumn("max_rec", max(col("rec_id")).over(wFile))
-      .withColumn("has_seg1",
-        max(when(col("rec_id") === 1, 1).otherwise(0)).over(wFile))
-
-    // Record validity (`table.rb:134-167` start_record/end_record/
-    // process_end_of_record): closed records always emit (even empty);
-    // the trailing open record emits only if end_in_a_record AND non-empty
-    // — "open at EOF" is the final group's own last-line state.
-    val valid = endPat match {
-      case Some(_) =>
-        col("any_close") === 1 ||
-          (col("rec_id") === col("max_rec") && col("last_open") &&
-            lit(spec.endInARecord) && col("n_cap") > 0)
-      case None =>
-        col("rec_id") < col("max_rec") ||
-          (lit(spec.endInARecord) && col("n_cap") > 0)
-    }
-
-    // Synthetic record for `start_in_a_record` when no line precedes the
-    // first start marker (the reference still tabulates that empty record).
-    val withSynthetic = if (sBase == 1) {
-      val synth = groups.filter(col("has_seg1") === 0 && col("rec_id") === col("max_rec"))
-        .select(col("file"), lit(1L).as("rec_id"),
-          array().cast("array<struct<lineno:long,rline:string>>").as("cap"),
-          lit(0).as("any_close"), lit(false).as("last_open"),
-          array().cast("array<string>").as("lines"), lit(0).as("n_cap"),
-          col("max_rec"), col("has_seg1"))
-      groups.unionByName(synth)
-    } else groups
-
-    val validRecords = withSynthetic.filter(valid)
-
-    // N4: tabulate each record into cells.
-    val cells = array(mapping.columns.map(cm => cellExpr(cm, col("lines"))): _*)
-
-    val wRec = Window.partitionBy("file").orderBy("rec_id")
-    validRecords
-      .select(col("file"), col("rec_id"), cells.as("cells"))
-      .withColumn("lineno", row_number().over(wRec).cast("long") - 1)
-      .select(col("file"), col("lineno"), col("cells"))
+    val cells = mapping.columns.map(_.nonTabularCell.get)
+    val spark = linesDf.sparkSession
+    import spark.implicits._
+    linesDf.select(col("file"), col("lineno").cast("long"), col("line"))
+      .repartition(col("file")).sortWithinPartitions("file", "lineno")
+      .as[(String, Long, String)]
+      .mapPartitions(lines => new Walk(spec, cells, lines))
+      .toDF("file", "lineno", "cells")
   }
 
-  /** The aggregate-free rendering for all-`lines: k` mappings (see the
-    * guard in [[tabulate]]). With the start line captured and no end
-    * pattern, record r's captured lines are exactly the consecutive lines
-    * from its start marker up to (not including) the next start marker, so
-    * cell `At(k)` = `lead(rline, k)` from the start line, gated by
-    * `lead(rec_id, k) === rec_id` (beyond the record the lead lands in the
-    * next record — or off the file end, where lead is null). All three
-    * window passes share one (file, lineno) sort; the per-record
-    * collect_list/sort_array ObjectHashAggregate (the single largest
-    * n3_segments cost at sf10, ~10 s of 27 — SCALING.md r12) disappears
-    * along with its (file, rec_id) exchange of materialised arrays. */
-  private def fastTabulate(base: DataFrame, mapping: TableMapping,
-      spec: NonTabularSpec, startPat: String, idxs: Seq[Int],
-      wOrd: org.apache.spark.sql.expressions.WindowSpec): DataFrame = {
-    val c = base
-      .withColumn("is_start", col("rline").rlike(startPat))
-      .withColumn("rec_id", sum(col("is_start").cast("int")).over(wOrd))
-      .filter(col("rec_id") >= 1)
-    // One lead pair per DISTINCT referenced index (k = 0 is the start line
-    // itself). Computed on the full in-record stream BEFORE the start-line
-    // filter — lead must see the record's interior lines.
-    val ks = idxs.distinct.filter(_ > 0).sorted
-    val withLeads = ks.foldLeft(c) { (df, k) =>
-      df.withColumn(s"_ld$k",
-        when(lead(col("rec_id"), k).over(wOrd) === col("rec_id"),
-          lead(col("rline"), k).over(wOrd)))
+  /** The `capture` chain (`record.rb:84-99`): each pattern keeps group 1
+    * of the previous value (nil reads as "" for the next pattern; an absent
+    * group is ""), and the survivor is Ruby-stripped of whitespace and NUL
+    * at both ends. Null when the last pattern misses. */
+  private[tabulate] def capture(line: String, patterns: Seq[Pattern]): String = {
+    var v = line
+    patterns.foreach { p =>
+      val m = p.matcher(if (v == null) "" else v)
+      v = if (m.find()) Option(m.group(1)).getOrElse("") else null
     }
-    val starts = withLeads.filter(col("is_start"))
-    // Validity (`table.rb:134-167`, endPat-None branch): every record here
-    // has n_cap >= 1 (its captured start line), so the trailing record is
-    // valid iff end_in_a_record.
-    val wFile = Window.partitionBy("file")
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val cells = array(mapping.columns.map { cm =>
-      val cell = cm.nonTabularCell.get
-      val i = cell.lines.get.asInstanceOf[LineSelector.At].i
-      val el = if (i == 0) col("rline") else col(s"_ld$i")
-      graft.functions.CaptureChain.captureChain(
-        el, cell.capture.map(RubyTranslate.regex))
-    }: _*)
-    val wRec = Window.partitionBy("file").orderBy("lineno")
-    starts
-      .withColumn("_max_rec", max(col("rec_id")).over(wFile))
-      .filter(col("rec_id") < col("_max_rec") || lit(spec.endInARecord))
-      .select(col("file"), col("lineno"), cells.as("cells"))
-      .withColumn("recno", row_number().over(wRec).cast("long") - 1)
-      .select(col("file"), col("recno").as("lineno"), col("cells"))
+    if (v == null) null
+    else {
+      def strip(ch: Char) = ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' ||
+        ch == '\f' || ch == '\r' || ch == '\u0000'
+      var a = 0
+      var b = v.length
+      while (a < b && strip(v.charAt(a))) a += 1
+      while (b > a && strip(v.charAt(b - 1))) b -= 1
+      v.substring(a, b)
+    }
   }
 
-  /** One column's `non_tabular_cell` as an expression over the record's
-    * captured-lines array (`non_tabular/record.rb:71-99`). */
-  private def cellExpr(cm: ColumnMapping, lines: Column): Column = {
-    val cell = cm.nonTabularCell.get
-    val n = size(lines)
+  private def compile(rubyPattern: String): Pattern =
+    Pattern.compile(RubyTranslate.regex(rubyPattern))
 
-    // Resolve the line selector to a (possibly null) sub-array.
-    def intIdx(i: Int): Column = if (i < 0) n + i else lit(i)
-    def boundIdx(b: LineSelector.Bound): Column = b match {
-      case LineSelector.IntBound(i) => intIdx(i)
-      case LineSelector.RegexBound(p) =>
-        val pos = array_position(
-          transform(lines, l => l.rlike(RubyTranslate.regex(p))), lit(true))
-        // 0 = no match = RegexpRange::PatternMatchError → null cell
-        when(pos === 0, lit(null).cast("int")).otherwise((pos - 1).cast("int"))
+  private type Lines = scala.collection.IndexedSeq[String]
+
+  /** One column's `non_tabular_cell` over a record's captured lines
+    * (`record.rb:71-99`): select the lines, capture each, drop nils (and
+    * blanks unless `preserve_blank_lines`), join. Null when a RegexpRange
+    * bound matches no line (`PatternMatchError`). */
+  private final class Cell(cell: NonTabularCell) {
+    private val patterns = cell.capture.map(compile)
+    private val join = cell.join.getOrElse("")
+
+    private def index(b: LineSelector.Bound): Lines => Option[Int] = b match {
+      case LineSelector.IntBound(i) => lines => Some(if (i < 0) lines.length + i else i)
+      case LineSelector.RegexBound(rubyPattern) =>
+        val p = compile(rubyPattern)
+        lines => Some(lines.indexWhere(p.matcher(_).find())).filter(_ >= 0)
     }
 
-    // Single-line selectors (`lines: k`, by far the common mapping shape)
-    // take a NO-ARRAY fast path: the whole capture chain is ONE fused
-    // native call ([[graft.functions.CaptureChain]]) on the one element.
-    // The composed rendering it replaces repeated the
-    // rlike→extract→strip chain in four CASE positions (subexpression
-    // elimination does not reach conditional branches) — ~7 regex
-    // executions per cell where one Matcher.find per pattern suffices;
-    // the general path below additionally routes through
-    // `transform`/`filter` higher-order functions, which evaluate
-    // interpreted (same disease the native DotProduct cured). Semantics
-    // are pinned identical by NonTabularSpec's goldens, CaptureChainSpec
-    // parity cases and the n3_segments oracle: a missing/out-of-range
-    // line, a failed capture, or a blank result all still produce the
-    // joined-empty cell ("").
-    cell.lines.get match {
-      case LineSelector.At(i) =>
-        val el = when(n > 0, element_at(lines,
-          if (i >= 0) lit(i + 1) else lit(i)))
-        return graft.functions.CaptureChain.captureChain(
-          el, cell.capture.map(RubyTranslate.regex))
-      case _ => ()
-    }
-
-    val selected: Column = cell.lines.get match {
-      case LineSelector.At(i) =>
-        val el = when(n > 0, element_at(lines,
-          if (i >= 0) lit(i + 1) else lit(i)))
-        when(el.isNull, array().cast("array<string>")).otherwise(array(el))
+    private val select: Lines => Option[Iterable[String]] = cell.lines.get match {
+      case LineSelector.At(i) => lines =>
+        val k = if (i < 0) lines.length + i else i
+        Some(if (k >= 0 && k < lines.length) Seq(lines(k)) else Nil)
       case LineSelector.Range(a, b, excl) =>
-        val ai = boundIdx(a)
-        val biRaw = boundIdx(b)
-        val bi = if (excl) biRaw - 1 else biRaw
-        val len = bi - ai + 1
-        when(ai.isNull || biRaw.isNull, lit(null).cast("array<string>"))
-          .when(ai < 0 || ai >= n, array().cast("array<string>"))
-          .when(len <= 0, array().cast("array<string>"))
-          .otherwise(slice(lines, ai + 1, least(len, n - ai)))
+        val (first, last) = (index(a), index(b))
+        lines => for (from <- first(lines); to <- last(lines))
+          yield if (from < 0 || from >= lines.length) Nil
+                else lines.slice(from, if (excl) to else to + 1)
     }
 
-    val mapped = transform(selected, l => capture(cell, l))
-    val kept =
-      if (cell.preserveBlankLines) filter(mapped, v => v.isNotNull)
-      else filter(mapped, v => v.isNotNull && trim(v) =!= "")
-    when(selected.isNull, lit(null).cast("string"))
-      .otherwise(array_join(kept, cell.join.getOrElse("")))
+    def value(lines: Lines): String = select(lines) match {
+      case None => null
+      case Some(sel) =>
+        sel.iterator.map(capture(_, patterns))
+          .filter(v => v != null && (cell.preserveBlankLines || v.nonEmpty))
+          .mkString(join)
+    }
   }
 
-  /** The `capture` chain: sequential group-1 extraction; nil → "" between
-    * patterns; final Ruby strip (all whitespace + NUL)
-    * (`non_tabular/record.rb:84-99`). */
-  private def capture(cell: NonTabularCell, l: Column): Column = {
-    val out = cell.capture.foldLeft(l) { (v, rubyPat) =>
-      val p = RubyTranslate.regex(rubyPat)
-      val s = coalesce(v, lit(""))
-      when(s.rlike(p), regexp_extract(s, p, 1)).otherwise(lit(null).cast("string"))
+  /** The reference's line walk (`table.rb:100-167`) over one partition's
+    * `(file, lineno)`-sorted lines, each file one contiguous run. Emits
+    * each record as it closes. */
+  private final class Walk(spec: NonTabularSpec, cellSpecs: Seq[NonTabularCell],
+      input: Iterator[(String, Long, String)])
+      extends Iterator[(String, Long, Seq[String])] {
+
+    private val startPat = compile(spec.startLinePattern)
+    private val endPat = spec.endLinePattern.map(compile)
+    private val removeSeqs = spec.removeLines.values.map(_.map(compile)).toSeq
+    private val lookahead = (0 +: removeSeqs.map(_.length)).max
+    private val cells = cellSpecs.map(new Cell(_))
+
+    private val out = mutable.Queue.empty[(String, Long, Seq[String])]
+    // N2's lookahead: lines not yet past every remove_lines block they
+    // could start, with their removed flags
+    private val pending = mutable.ArrayDeque.empty[(String, Boolean)]
+    private var started = false
+    private var file: String = _
+    private var lastLineno = 0L
+    private var ordinal = 0L
+    private var inRecord = false
+    private val record = mutable.ArrayBuffer.empty[String]
+
+    def hasNext: Boolean = {
+      while (out.isEmpty && input.hasNext) {
+        val (f, lineno, line) = input.next()
+        if (!started || f != file) {
+          if (started) endOfFile()
+          started = true
+          file = f
+          ordinal = 0
+          inRecord = spec.startInARecord
+        } else if (lineno <= lastLineno)
+          throw new IllegalStateException(
+            s"non-tabular input repeats line $lineno of file $file")
+        lastLineno = lineno
+        read(rstrip(line))
+      }
+      if (out.isEmpty && started) { endOfFile(); started = false }
+      out.nonEmpty
     }
-    when(out.isNull, out)
-      .otherwise(regexp_replace(out, "^[\\s\\u0000]+|[\\s\\u0000]+$", ""))
+
+    def next(): (String, Long, Seq[String]) =
+      if (hasNext) out.dequeue() else Iterator.empty.next()
+
+    // N1: trailing spaces go, as Spark's `rtrim` trims them (Ruby's
+    // `rstrip` would also drop tabs and NUL)
+    private def rstrip(line: String): String = {
+      if (line == null) return ""
+      var b = line.length
+      while (b > 0 && line.charAt(b - 1) == ' ') b -= 1
+      line.substring(0, b)
+    }
+
+    // N2 (`table.rb:88-98`): a line is removed when it sits in a block of
+    // consecutive lines matching one of the remove_lines sequences
+    private def read(line: String): Unit =
+      if (lookahead == 0) step(line, removed = false)
+      else {
+        pending.append((line, false))
+        removeSeqs.foreach { seq =>
+          val from = pending.length - seq.length
+          if (from >= 0 && seq.indices.forall(k => seq(k).matcher(pending(from + k)._1).find()))
+            seq.indices.foreach(k => pending(from + k) = (pending(from + k)._1, true))
+        }
+        if (pending.length == lookahead) stepHead()
+      }
+
+    private def stepHead(): Unit = {
+      val (line, removed) = pending.removeHead()
+      step(line, removed)
+    }
+
+    // N3 (`table.rb:100-167`)
+    private def step(line: String, removed: Boolean): Unit =
+      if (startPat.matcher(line).find()) {
+        if (inRecord) {
+          if (endPat.isDefined)
+            throw new MappingError(Messages("mapping.errors.start_pattern_before_end"))
+          emit()
+        }
+        inRecord = true
+        if (spec.captureStartLine && !removed) record += line
+      } else if (inRecord && endPat.exists(_.matcher(line).find())) {
+        if (spec.captureEndLine && !removed) record += line
+        emit()
+        inRecord = false
+      } else if (inRecord && !removed) record += line
+
+    private def emit(): Unit = {
+      out.enqueue((file, ordinal, cells.map(_.value(record))))
+      ordinal += 1
+      record.clear()
+    }
+
+    private def endOfFile(): Unit = {
+      while (pending.nonEmpty) stepHead()
+      if (inRecord && spec.endInARecord && record.nonEmpty) emit()
+      record.clear()
+    }
   }
 }

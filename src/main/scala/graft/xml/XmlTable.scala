@@ -3,7 +3,6 @@ package graft.xml
 import graft.compile.RowMapper
 import graft.model._
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.col
 
 import scala.collection.mutable
 import scala.xml.{Elem, Node}
@@ -230,31 +229,12 @@ object XmlTable {
     xml => loader.loadString(xml)
   }
 
-  /** X5 — the reference's `yield_xml_record` batching
-    * (`lib/ndr_import/xml/table.rb:41-53`): one output row per source XML
-    * record, with that record's klass-records nested as an ordered array of
-    * (klass, fields, rawtext) structs. Narrow (no shuffle) — the grouping
-    * happens inside the per-record transform, so batch order matches the
-    * reference's yield order deterministically. */
-  def groupedRecords(df: DataFrame, mapping: TableMapping): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select("file", "index", "record_xml").as[(String, Long, String)]
-      .mapPartitions { it =>
-        val load = partitionLoader()
-        it.map { case (file, index, xml) =>
-          val batch = transformRecord(mapping, load(xml), index)
-            .map { case (k, f, r, _) => (k, f, r) }
-          (file, index, batch)
-        }
-      }.toDF("file", "index", "records")
-      .withColumn("records",
-        col("records").cast(
-          "array<struct<klass:string,fields:map<string,string>,rawtext:map<string,string>>>"))
-  }
-
   /** (file, index, record_xml) → records DataFrame. Executor-side parse;
-    * narrow; one reused SAX parser per partition. */
+    * narrow; one reused SAX parser per partition. The reference's
+    * `yield_xml_record` option (X5, `xml/table.rb:41-53`) is accepted and
+    * ignored: it only batches each source record's klass-records into one
+    * yield, which changes no record, and `index` already names the source
+    * record. */
   def records(df: DataFrame, mapping: TableMapping): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._

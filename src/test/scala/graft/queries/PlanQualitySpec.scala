@@ -528,19 +528,29 @@ class PlanQualitySpec extends SparkSpec {
     assert(!plan.contains("Join"), s"XML transform joins:\n$plan")
   }
 
-  test("n3_segments: segmentation is pure windows over ONE exchange — no aggregate, no join") {
-    val plan = formattedPlan(QueryPack.n3Segments(spark, sf))
-    assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop"),
-      s"segmentation must not degrade to a product:\n$plan")
-    assert(plan.contains("Window"), "per-file window state machine missing")
-    // the r14 fast path: all-`lines: k` mappings tabulate via lead() with
-    // NO per-record aggregate — losing this reintroduces the
-    // collect_list ObjectHashAggregate that cost ~10 s of 27 at sf10
-    assert(!plan.contains("ObjectHashAggregate") && !plan.contains("SortAggregate"),
-      s"record assembly regressed to an object/sort aggregate:\n$plan")
+  /** The non-tabular segmentation shape: the one per-file Exchange (+ Sort)
+    * feeding the line walk, and nothing else that shuffles or buffers. */
+  private def assertOneWalk(plan: String): Unit = {
+    assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop") &&
+      !plan.contains("Join"), s"segmentation must not join:\n$plan")
+    assert(plan.contains("MapPartitions"), s"per-file walk missing:\n$plan")
+    assert(!plan.contains("Window"), s"window rendering crept back:\n$plan")
+    // no per-record aggregate: the collect_list ObjectHashAggregate cost
+    // ~10 s of 27 at sf10 when records were assembled that way
+    assert(!plan.contains("Aggregate"), s"record assembly became an aggregate:\n$plan")
     val shuffles = """\(\d+\) Exchange""".r.findAllIn(plan).length
     assert(shuffles == 1,
       s"expected exactly the one per-file Exchange, got $shuffles:\n$plan")
+  }
+
+  test("n3_segments: one per-file walk over ONE exchange — no window, no aggregate, no join") {
+    assertOneWalk(formattedPlan(QueryPack.n3Segments(spark, sf)))
+  }
+
+  test("t12_importer_union: the docx non-tabular branch is one walk over ONE exchange") {
+    // the csv/xlsx/xls branches plan no exchange, so the union's single
+    // Exchange is the docx branch's
+    assertOneWalk(formattedPlan(QueryPack.t12ImporterUnion(spark, sf)))
   }
 
   test("source cap: rank-filter compiles to WindowGroupLimit (map-side top-k)") {

@@ -100,12 +100,19 @@ class BinarySourcesSpec extends SparkSpec {
     }
   }
 
+  /** A PDF of the reference's test resources; the test cancels when the
+    * reference checkout is absent, like ReferenceFixturesSpec. */
+  private def referencePdf(name: String): java.nio.file.Path = {
+    val p = java.nio.file.Paths.get("/root/reference/test/resources", name)
+    assume(Files.exists(p), s"reference fixture $name is absent")
+    p
+  }
+
   test("pdf: reference hello_world.pdf matches pdf-reader's output exactly") {
     // a Word-generated PDF: object streams, Tm positioning, positional
     // layout with a skipped row — the reference's own golden
     // (`test/file/pdf_test.rb:12-21`)
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/test/resources/hello_world.pdf"))
+    val bytes = Files.readAllBytes(referencePdf("hello_world.pdf"))
     val lines = Pdf.extractTextLines(bytes)
     assert(lines == Seq(
       "Hello                                      World", "",
@@ -113,14 +120,35 @@ class BinarySourcesSpec extends SparkSpec {
   }
 
   test("pdf: reference flat_file.pdf — full text, reading order, q/Q + cm transforms") {
-    val bytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/root/reference/test/resources/flat_file.pdf"))
+    val bytes = Files.readAllBytes(referencePdf("flat_file.pdf"))
     val lines = Pdf.extractTextLines(bytes)
     val text = lines.mkString("\n")
     assert(text.contains("Lorem ipsum dolor sit amet"))
     // reading order: page markers appear ascending
     val order = "== Page (\\d) of 5 ==".r.findAllMatchIn(text).map(_.group(1).toInt).toSeq
     assert(order == Seq(1, 2, 3, 4, 5), s"page markers out of order: $order")
+  }
+
+  test("pdf: synthetic multi-page file — page-tree reading order, q/cm/Q transforms") {
+    // Kids list page 1 (object 5) before page 2 (object 3), against object
+    // order. On page 1 a `cm` inside q/Q moves "shifted down" 100 units
+    // down; Q restores the CTM, so "after restore" lands between the two.
+    def page(contents: Int) =
+      s"<< /Type /Page /Parent 2 0 R /Contents $contents 0 R >>"
+    def stream(body: String) = s"<< /Length ${body.length} >> stream\n$body\nendstream"
+    val page1 = "BT 72 700 Td (== Page 1 of 2 ==) Tj ET " +
+      "q 1 0 0 1 0 -100 cm BT 72 700 Td (shifted down) Tj ET Q " +
+      "BT 72 650 Td (after restore) Tj ET"
+    val page2 = "BT 72 700 Td (== Page 2 of 2 ==) Tj ET"
+    val objs = Seq(
+      "<< /Type /Catalog /Pages 2 0 R >>",
+      "<< /Type /Pages /Kids [5 0 R 3 0 R] /Count 2 >>",
+      page(4), stream(page2), page(6), stream(page1))
+    val pdf = objs.zipWithIndex
+      .map { case (o, i) => s"${i + 1} 0 obj $o endobj\n" }
+      .mkString("%PDF-1.4\n", "", "%%EOF").getBytes("ISO-8859-1")
+    assert(Pdf.extractTextLines(pdf).filter(_.nonEmpty) == Seq(
+      "== Page 1 of 2 ==", "after restore", "shifted down", "== Page 2 of 2 =="))
   }
 
   test("pdf: CID font text via ToUnicode CMap and hex strings") {

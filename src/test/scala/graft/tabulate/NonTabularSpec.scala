@@ -315,4 +315,48 @@ class NonTabularSpec extends SparkSpec {
     assert(ex.getMessage.contains("before the end") ||
            Option(ex.getCause).exists(_.getMessage.contains("before the end")))
   }
+
+  test("capture chain: edge cases of record.rb's capture and strip") {
+    val cases: Seq[(String, Seq[String], String)] = Seq(
+      ("=== ORDER 42", Seq("^=== ORDER (\\d+)$"), "42"),            // plain hit
+      ("=== ORDER 42", Seq("^NOPE (\\d+)$"), null),                 // miss -> nil
+      (null, Seq("^(.*)$"), ""),                                    // null line -> chain from ""
+      ("PRIORITY:   padded\t ", Seq("^PRIORITY: (.*)$"), "padded"), // strip both ends
+      ("STATUS:  x\u0000 ", Seq("^STATUS: (.*)$"), "x"),            // NUL strip
+      ("a: x b: y", Seq("^a: (.*)$", "x b: (.*)$"), "y"),           // chained captures
+      ("a: x", Seq("^a: (.*)$", "^MISS (.*)$", "(.*)"), ""),        // mid-chain miss -> "" rematch
+      ("blank:   ", Seq("^blank:(.*)$"), ""),                       // blank survivor
+      ("opt", Seq("^opt(?: (\\S+))?$"), ""),                        // absent group -> ""
+      ("  keep inner  spaces  ", Seq("^\\s*(.*\\S)\\s*$"), "keep inner  spaces"))
+    cases.zipWithIndex.foreach { case ((line, patterns, expected), i) =>
+      val got = NonTabular.capture(line, patterns.map(java.util.regex.Pattern.compile))
+      assert(got == expected, s"case $i: got '$got', expected '$expected'")
+    }
+  }
+
+  test("a repeated (file, lineno) fails loudly, naming the file") {
+    import spark.implicits._
+    val df = Seq(("dup.txt", 0L, "------"), ("dup.txt", 1L, "a"), ("dup.txt", 1L, "b"))
+      .toDF("file", "lineno", "line")
+    val ex = intercept[Exception] {
+      NonTabular.tabulate(df, MappingLoader.loadTable(dividerYaml())).collect()
+    }
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null && m.contains("repeats line 1 of file dup.txt")),
+      messages.mkString("\n"))
+  }
+
+  test("interleaved files shuffled over 4 partitions give the per-file records") {
+    val mapping = MappingLoader.loadTable(
+      dividerYaml("start_in_a_record: true\nend_in_a_record: true"))
+    val a = linesDf(simpleDivider, "a.txt")
+    val b = linesDf(simpleDivider.replace("Lorem", "Other").replace("444", "555"), "b.txt")
+    def records(df: org.apache.spark.sql.DataFrame) =
+      NonTabular.tabulate(df, mapping).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).toSet
+    val oneAtATime = records(a) ++ records(b)
+    assert(oneAtATime.size == 8)
+    assert(records(a.union(b).orderBy(rand(7)).repartition(4)) == oneAtATime)
+  }
 }

@@ -73,6 +73,22 @@ class XmlTableSpec extends AnyFunSuite {
       "pathology_date_2" -> "",
       "should_be_blank" -> ""))
     assert(fields.isEmpty)
+
+    // yield_xml_record (X5) is accepted and ignored: the flagged mapping
+    // loads and yields the same records as the plain one
+    val yaml =
+      """|klass: SomeTestKlass
+         |xml_record_xpath: record
+         |columns:
+         |- column: no_path_or_att
+         |  xml_cell:
+         |    relative_path: ''
+         |""".stripMargin
+    val Seq(plain, flagged) =
+      Seq(yaml, yaml + "yield_xml_record: true\n").map(MappingLoader.loadTable)
+    val small = scala.xml.XML.loadString("<record><no_path_or_att>v</no_path_or_att></record>")
+    val yielded = XmlTable.transformRecord(flagged, small, 0L)
+    assert(yielded.nonEmpty && yielded == XmlTable.transformRecord(plain, small, 0L))
   }
 
   test("fails with unmapped nodes, reference message") {
@@ -274,62 +290,6 @@ class XmlTableSpec extends AnyFunSuite {
       assert(batch.toSeq == streamed.toSeq, f)
       assert(streamed.head.contains("café"), s"$f: ${streamed.head}")
     }
-  }
-
-  test("X5 groupedRecords batches one row per source record (table.rb:41-53)") {
-    val spark = graft.SparkSpec.session
-    import spark.implicits._
-    val mapping = TableMapping(columns = repeatingMapping)
-    val xml =
-      """<root>
-        |<record>
-        |  <no_relative_path value="A value"/>
-        |  <no_path_or_att>Another value</no_path_or_att>
-        |  <demographics>
-        |    <demographics_1>AAA</demographics_1>
-        |    <address><address_line1>Address</address_line1><address_line1>Address 2</address_line1></address>
-        |    <demographics_2 code="03">Inner text</demographics_2>
-        |  </demographics>
-        |  <pathology>
-        |    <sample><pathology_date>2018-01-01</pathology_date><pathology_id>AAA</pathology_id></sample>
-        |    <sample><pathology_date>2019-01-01</pathology_date><pathology_id>BBB</pathology_id></sample>
-        |  </pathology>
-        |  <pathology>
-        |    <sample><pathology_date>2020-01-01</pathology_date><pathology_id>CCC</pathology_id></sample>
-        |  </pathology>
-        |</record>
-        |<record>
-        |  <no_relative_path value="B value"/>
-        |  <no_path_or_att>Another value</no_path_or_att>
-        |  <demographics>
-        |    <demographics_1>AAA</demographics_1>
-        |    <address><address_line1>Address</address_line1><address_line1>Address 2</address_line1></address>
-        |    <demographics_2 code="03">Inner text</demographics_2>
-        |  </demographics>
-        |  <pathology>
-        |    <sample><pathology_date>2023-01-01</pathology_date><pathology_id>FFF</pathology_id></sample>
-        |  </pathology>
-        |</record>
-        |</root>""".stripMargin
-    val recs = graft.sources.XmlSource.splitRecords(xml, "record", patternMatch = false)
-    val df = recs.zipWithIndex
-      .map { case (r, i) => ("mem.xml", i.toLong, r) }
-      .toDF("file", "index", "record_xml")
-
-    val grouped = XmlTable.groupedRecords(df, mapping).orderBy("index").collect()
-    assert(grouped.length == 2) // one row per source XML record
-    val batch0 = grouped(0).getSeq[org.apache.spark.sql.Row](grouped(0).fieldIndex("records"))
-    // record 0 fans to the two masked repeat-klasses, batched together in
-    // yield order (#1 before #2)
-    assert(batch0.map(_.getString(0)) == Seq("SomeTestKlass#1", "SomeTestKlass#2"))
-    val raw01 = batch0(0).getMap[String, String](2)
-    assert(raw01("pathology_date_1.1") == "2018-01-01" &&
-      raw01("pathology_date_1.2") == "2019-01-01")
-    // record 1 has no repeat beyond one pathology group per base klass: a
-    // single batched record carrying the whole flattened rawtext
-    val batch1 = grouped(1).getSeq[org.apache.spark.sql.Row](grouped(1).fieldIndex("records"))
-    assert(batch1.map(_.getString(0)) == Seq("SomeTestKlass"))
-    assert(batch1(0).getMap[String, String](2)("no_relative_path") == "B value")
   }
 
   test("pattern_match_record_xpath: regex on root children names") {
