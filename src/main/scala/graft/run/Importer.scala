@@ -150,15 +150,13 @@ object Importer {
         }
       case "xml" | "xml_table" =>
         single { m =>
-          // Size-routed like the text sources: oversized XML files go
-          // through the StAX cursor (memory bounded by one record, never
-          // the file); normal files keep the slurp path's full semantics
-          // (encoding probe + control-char escape retry).
-          val big = try {
-            val hp = new org.apache.hadoop.fs.Path(file)
-            hp.getFileSystem(spark.sessionState.newHadoopConf())
-              .getFileStatus(hp).getLen > LineSource.DefaultInMemoryMaxBytes
-          } catch { case _: Exception => false }
+          // Size-routed like Excel: oversized XML files go through the
+          // StAX cursor (memory bounded by one record, never the file);
+          // normal files, and files whose stat failed, keep the slurp
+          // path's full semantics (encoding probe + control-char escape
+          // retry).
+          val big = LineSource.statLengths(spark, Seq(file))
+            .getOrElse(file, -1L) > LineSource.DefaultInMemoryMaxBytes
           val source =
             if (big) XmlSource.recordsStreaming(spark, Seq(file), m)
             else XmlSource.records(spark, Seq(file), m)

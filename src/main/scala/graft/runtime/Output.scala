@@ -30,13 +30,9 @@ import org.apache.spark.sql.DataFrame
 object Output {
 
   /** Write `df` as `format` at `path` in approximately
-    * `sizeInBytes / targetBytesPerFile` files. `balance = true` (default)
-    * round-robin repartitions — one extra shuffle, evenly sized files,
-    * the right choice after a skewed aggregation; `balance = false`
-    * coalesces — no shuffle, but file sizes inherit upstream partition
-    * skew and the plan above the write runs at the REDUCED parallelism
-    * (coalesce folds into the parent stage), so reserve it for
-    * already-balanced narrow pipelines. Returns the chosen file count
+    * `sizeInBytes / targetBytesPerFile` files, round-robin repartitioned —
+    * one extra shuffle, evenly sized files even after a skewed
+    * aggregation. Returns the chosen file count
     * (one visible sizing decision, the [[graft.operators.TextDedup
     * .decontaminate]] route-logging convention).
     *
@@ -51,7 +47,7 @@ object Output {
     * just to count partitions, then the write would run them again.) */
   def sizedWrite(df: DataFrame, path: String, format: String = "parquet",
                  targetBytesPerFile: Long = 256L << 20,
-                 balance: Boolean = true, maxFiles: Int = 0): Int = {
+                 maxFiles: Int = 0): Int = {
     require(targetBytesPerFile > 0, "targetBytesPerFile must be positive")
     require(maxFiles >= 0, "maxFiles must be >= 0 (0 = auto)")
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -69,8 +65,7 @@ object Output {
     val n = raw.min(cap).min(1L << 20).toInt
     log.info(
       s"sizedWrite: estimated $est bytes / target $targetBytesPerFile -> $n file(s)")
-    val sized = if (balance) df.repartition(n) else df.coalesce(n)
-    sized.write.format(format).mode("overwrite").save(path)
+    df.repartition(n).write.format(format).mode("overwrite").save(path)
     n
   }
 }

@@ -254,8 +254,9 @@ object Excel {
 
   /** One row per (file, tablename=sheet, lineno, cells) — the engine's
     * uniform tabular contract, one task per file. Size-routed like the
-    * text/CSV/XML sources: workbooks up to `inMemoryMaxBytes` ride
-    * `binaryFile` (whole-workbook parse, full retry semantics); larger
+    * importer's XML branch: workbooks up to
+    * [[LineSource.DefaultInMemoryMaxBytes]] ride `binaryFile`
+    * (whole-workbook parse, full retry semantics); larger
     * xlsx files take the streaming reader ([[streamedTables]]) so a
     * multi-GiB workbook never hits binaryFile's 2 GiB record limit or
     * materialises on one task's heap. The reference's own xlsx streaming
@@ -265,8 +266,7 @@ object Excel {
     * full in-memory parse on the executor task up to the 2 GiB format
     * ceiling, so size routing never regresses an input that used to parse. */
   def tables(spark: SparkSession, paths: Seq[String],
-             password: Option[String] = None,
-             inMemoryMaxBytes: Long = LineSource.DefaultInMemoryMaxBytes): DataFrame = {
+             password: Option[String] = None): DataFrame = {
     import spark.implicits._
     if (paths.isEmpty)
       return spark.emptyDataset[(String, String, Long, Seq[String])]
@@ -275,7 +275,8 @@ object Excel {
     // streamed route's 2 GiB fallback guard — re-statting the big subset
     // serially would add per-file driver RPC latency on wide path lists
     val lengths = LineSource.statLengths(spark, paths)
-    val (big, small) = paths.partition(p => lengths.getOrElse(p, -1L) > inMemoryMaxBytes)
+    val (big, small) =
+      paths.partition(p => lengths.getOrElse(p, -1L) > LineSource.DefaultInMemoryMaxBytes)
     val inMem =
       if (small.isEmpty) None
       else Some(
@@ -317,7 +318,6 @@ object Excel {
                      password: Option[String] = None,
                      lengths: Map[String, Long] = Map.empty): DataFrame = {
     import spark.implicits._
-    val parallelism = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
     // qualified AND statted driver-side with the SESSION conf, like
     // binaryFile's path — an executor-side fresh Configuration could
     // resolve differently, and a failed stat must arm (not disarm) the
@@ -331,7 +331,9 @@ object Excel {
       (p, LineSource.qualifiedPath(spark, p),
         lengths.getOrElse(p, statted.getOrElse(p, -1L)))
     }
-    spark.createDataset(qualified).repartition(parallelism)
+    // a local relation spreads the list over min(files, defaultParallelism)
+    // partitions with no exchange
+    spark.createDataset(qualified)
       .mapPartitions(_.flatMap { case (p, q, len) => streamedFileRows(p, q, len, password) })
       .toDF("file", "tablename", "lineno", "cells")
   }

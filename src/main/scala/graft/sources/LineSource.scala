@@ -8,15 +8,16 @@ import org.apache.spark.sql.functions._
   * encoding probe (`file/text.rb:35-47`: try UTF-16 first via BOM, then
   * UTF-8, then fall back to Windows-1252 — ndr_support `ensure_utf8!`).
   *
-  * Files are read one-per-task so line numbers are exact and per-file
-  * ordering is free — no global sort, no shuffle. This is the honest
-  * 100 TB posture for the reference's workload: parallelism across MANY
-  * files (one task per file), never within one text file whose semantics
-  * (header/footer/segmentation) are inherently sequential. Small files
-  * ride `binaryFile` + expressions; files beyond [[DefaultInMemoryMaxBytes]]
-  * take a streaming reader (two-pass probe, O(line) memory) so a single
-  * multi-GiB text never hits binaryFile's 2 GiB record limit or
-  * materialises on an executor.
+  * One reader serves every text, CSV, JSON Lines and VCF file
+  * ([[streamedLines]]): each file is read by one task, line by line, in
+  * O(line) memory whatever its size, so line numbers are exact and
+  * per-file ordering is free — no global sort, no shuffle. Parallelism
+  * comes from MANY files, never from within one text file, whose
+  * semantics (header/footer/segmentation) are sequential.
+  *
+  * [[fileTexts]]/[[splitLines]] decode a whole document as one string;
+  * they serve only readers that need the full text (the XML slurp and its
+  * control-character retry, the XML metadata probe, Word).
   */
 object LineSource {
 
@@ -59,90 +60,34 @@ object LineSource {
       .otherwise(arr)
   }
 
-  /** Files up to this size take the in-memory (binaryFile) expression
-    * path; larger files stream line-by-line in constant memory.
-    * `binaryFile` hard-fails beyond 2 GiB and decoding a multi-GiB text
-    * as one String doubles it on an executor — the streaming reader is
-    * the honest shape for pathological single files. */
+  /** Workbooks and XML files above this size take their streaming
+    * readers ([[Excel.tables]], the importer's XML branch); smaller ones
+    * keep the whole-document parse, whose retry semantics need every
+    * byte. Text, CSV, JSON Lines and VCF always stream. */
   val DefaultInMemoryMaxBytes: Long = 256L * 1024 * 1024
 
-  /** (file, lineno, line) — lineno 0-based per file, exact. Small files
-    * ride binaryFile; files over `inMemoryMaxBytes` stream. */
-  def lines(spark: SparkSession, paths: Seq[String],
-            inMemoryMaxBytes: Long = DefaultInMemoryMaxBytes): DataFrame =
-    dispatchBySize(spark, paths, inMemoryMaxBytes, csvQuoteAware = false)
+  /** (file, lineno, line) — lineno 0-based per file, exact. */
+  def lines(spark: SparkSession, paths: Seq[String]): DataFrame =
+    streamedLines(spark, paths, lineIterator)
 
-  /** Quote-aware CSV record split: newlines inside a quoted field belong
-    * to the record (Ruby CSV semantics — `CSV.foreach` row enumeration).
-    * Stateful, so a pure-Scala walk rather than an expression; still one
-    * pass per file. */
-  def splitCsvRecords(text: String, quote: Char = '"'): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val sb = new StringBuilder
-    var inQuotes = false
-    var i = 0
-    while (i < text.length) {
-      val c = text.charAt(i)
-      if (c == quote) { inQuotes = !inQuotes; sb += c }
-      else if (!inQuotes && (c == '\n' || c == '\r')) {
-        if (c == '\r' && i + 1 < text.length && text.charAt(i + 1) == '\n') i += 1
-        out += sb.toString; sb.clear()
-      } else sb += c
-      i += 1
-    }
-    if (sb.nonEmpty) out += sb.toString
-    out.toSeq
-  }
+  /** (file, lineno, line) with quote-aware record splitting for CSV:
+    * newlines inside a quoted field belong to the record (Ruby CSV
+    * semantics — `CSV.foreach` row enumeration). */
+  def csvLines(spark: SparkSession, paths: Seq[String]): DataFrame =
+    streamedLines(spark, paths, csvRecordIterator)
 
-  private val csvRecordsUdf = udf((t: String) =>
-    if (t == null) Seq.empty[String] else splitCsvRecords(t))
-
-  /** (file, lineno, line) with quote-aware record splitting for CSV. */
-  def csvLines(spark: SparkSession, paths: Seq[String],
-               inMemoryMaxBytes: Long = DefaultInMemoryMaxBytes): DataFrame =
-    dispatchBySize(spark, paths, inMemoryMaxBytes, csvQuoteAware = true)
-
-  def explodeLines(fileTextDf: DataFrame): DataFrame =
-    fileTextDf
-      .select(col("file"), posexplode(splitLines(col("text"))).as(Seq("lineno", "line")))
-      .select(col("file"), col("lineno").cast("long").as("lineno"), col("line"))
-
-  // ------------------------------------------------------------- streaming
-
-  /** Route each path by its size: ≤ max → in-memory expression path,
-    * > max → streaming reader. Unknown sizes (exotic filesystems) keep
-    * today's in-memory behaviour. */
-  private def dispatchBySize(spark: SparkSession, paths: Seq[String],
-                             inMemoryMaxBytes: Long,
-                             csvQuoteAware: Boolean): DataFrame = {
+  /** The one text reader: (file, lineno, line), each file read by one task,
+    * two passes like the reference's delimited encoding probe
+    * (`helpers/file/delimited.rb:48-88` — the first pass proves the
+    * encoding, the second streams), so memory stays O(line), never
+    * O(file). `records` splits a decoded file into its lines; a line it
+    * drops takes no `lineno`. The path list is a local relation, which
+    * spreads its rows over min(files, defaultParallelism) partitions with
+    * no exchange. */
+  private[sources] def streamedLines(spark: SparkSession, paths: Seq[String],
+      records: java.io.BufferedReader => Iterator[String]): DataFrame = {
     import spark.implicits._
-    if (paths.isEmpty)
-      return spark.emptyDataset[(String, Long, String)].toDF("file", "lineno", "line")
-    val isBig = oversized(spark, paths, inMemoryMaxBytes)
-    val (big, small) = paths.partition(isBig)
-    val inMem =
-      if (small.isEmpty) None
-      else if (csvQuoteAware) Some(
-        fileTexts(spark, small)
-          .select(col("file"), posexplode(csvRecordsUdf(col("text"))).as(Seq("lineno", "line")))
-          .select(col("file"), col("lineno").cast("long").as("lineno"), col("line")))
-      else Some(explodeLines(fileTexts(spark, small)))
-    val streamed =
-      if (big.isEmpty) None else Some(streamedLines(spark, big, csvQuoteAware))
-    (inMem.toSeq ++ streamed.toSeq).reduce(_ unionByName _)
-  }
-
-  /** Streaming (file, lineno, line): one task per file, two passes like
-    * the reference's delimited encoding probe (`helpers/file/delimited.rb:
-    * 48-88` — the first pass proves the encoding, the second streams), so
-    * memory stays O(line), never O(file). Same probe order and line
-    * semantics as [[decodeSmart]]/[[splitLines]]. */
-  def streamedLines(spark: SparkSession, paths: Seq[String],
-                    csvQuoteAware: Boolean): DataFrame = {
-    import spark.implicits._
-    val parallelism = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
-    val qualified = paths.map(p => p -> qualifiedPath(spark, p))
-    spark.createDataset(qualified).repartition(parallelism)
+    spark.createDataset(listFiles(spark, paths))
       .mapPartitions { it =>
         // one reader open at a time per partition; close it even when the
         // consumer abandons the iterator early (limit/head)
@@ -151,28 +96,53 @@ object LineSource {
           _.addTaskCompletionListener[Unit] { _ =>
             if (open != null) try open.close() catch { case _: Exception => () }
           })
-        it.flatMap { case (p, q) =>
-          val cs = probeCharset(p)
-          val br = openReader(p, cs)
+        it.flatMap { f =>
+          val cs = probeCharset(f)
+          val br = openReader(f, cs)
           // close the predecessor on handoff: it is either already closed
           // (iterator exhausted) or was abandoned mid-file (zero-line file,
           // consumer short-circuit) — double-close is a no-op, so handoff
           // plus the completion listener covers every path
           if (open != null) try open.close() catch { case _: Exception => () }
           open = br
-          val recs = if (csvQuoteAware) csvRecordIterator(br) else lineIterator(br)
-          recs.zipWithIndex.map { case (l, i) => (q, i.toLong, l) }
+          records(br).zipWithIndex.map { case (l, i) => (f, i.toLong, l) }
         }
       }.toDF("file", "lineno", "line")
+  }
+
+  /** Every file `paths` name, qualified as `binaryFile` reports them
+    * ("file:/tmp/x", "hdfs://nn/x"): a glob expands to its visible matches
+    * and a directory to the visible files under it ("_" and "." names are
+    * hidden, as in Spark's file listing). A path that names nothing stays
+    * as given, so reading it fails when an action runs, naming it. */
+  private def listFiles(spark: SparkSession, paths: Seq[String]): Seq[String] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    val conf = spark.sessionState.newHadoopConf()
+    def visible(st: FileStatus) = !st.getPath.getName.matches("[_.].*")
+    def leaves(fs: FileSystem, st: FileStatus): Seq[String] =
+      if (!st.isDirectory) Seq(st.getPath.toString)
+      else fs.listStatus(st.getPath).toSeq.filter(visible)
+        .sortBy(_.getPath.toString).flatMap(leaves(fs, _))
+    paths.flatMap { p =>
+      val hp = new Path(p)
+      val matched =
+        try {
+          val fs = hp.getFileSystem(conf)
+          Option(fs.globStatus(hp)).filter(_.nonEmpty).map(_.toSeq
+            .filter(st => st.getPath.getName == hp.getName || visible(st))
+            .flatMap(leaves(fs, _)))
+        } catch { case _: java.io.IOException => None }
+      matched.getOrElse(Seq(qualifiedPath(spark, p)))
+    }
   }
 
   /** Byte length of every path (-1 where the stat failed — exotic
     * filesystems). Stats in parallel on a DEDICATED bounded pool: serial
     * per-path HEAD calls would block the driver for minutes over object
     * stores with 100k-file inputs, and blocking I/O on the JVM-wide
-    * commonPool would starve its other users. ONE stat per path per import:
-    * size-routing consumers ([[oversized]]) and the routed readers (Excel's
-    * fallback 2 GiB guard) share this map instead of re-statting. */
+    * commonPool would starve its other users. The one stat behind every
+    * size-routed reader: Excel's routing and its fallback 2 GiB guard share
+    * one map, and the importer's XML branch routes on it too. */
   private[graft] def statLengths(spark: SparkSession,
                                  paths: Seq[String]): Map[String, Long] = {
     if (paths.isEmpty) return Map.empty
@@ -193,34 +163,29 @@ object LineSource {
     } finally pool.shutdown()
   }
 
-  /** Which of `paths` exceed `inMemoryMaxBytes`? Unknown sizes (failed
-    * stats) report small — keeping today's in-memory behaviour. Shared by
-    * every size-routed source (text, CSV, XML, Excel). */
-  private[graft] def oversized(spark: SparkSession, paths: Seq[String],
-                               inMemoryMaxBytes: Long): Set[String] =
-    statLengths(spark, paths).collect {
-      case (p, len) if len > inMemoryMaxBytes => p
-    }.toSet
-
   /** The Hadoop-qualified form of a path ("file:/tmp/x", "hdfs://nn/x") —
     * what `binaryFile`'s `path` column reports. Streamed sources emit THIS
-    * as their `file` value so the two routes stay byte-identical: a caller
-    * mixing small and oversized files must see one spelling per file.
-    * Resolved DRIVER-SIDE with the session's Hadoop conf (session-level
-    * `fs.defaultFS`/scheme settings included) — an executor-side fresh
-    * `Configuration()` could qualify differently from binaryFile. */
+    * as their `file` value, so a file has one spelling whichever reader
+    * read it. Resolved DRIVER-SIDE with the session's Hadoop conf
+    * (session-level `fs.defaultFS`/scheme settings included) — an
+    * executor-side default `Configuration()` could qualify differently
+    * from binaryFile. */
   private[graft] def qualifiedPath(spark: SparkSession, p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
     try hp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(hp).toString
     catch { case _: Exception => p }
   }
 
+  /** One default Hadoop Configuration per JVM: it resolves file:// and
+    * default-scheme paths. Building one parses the default resources
+    * (~7 ms), and every file read opens its file twice. A deployment with
+    * kerberised HDFS/S3 credentials would propagate the session's Hadoop
+    * conf to executors instead. */
+  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+
   private[sources] def openStream(p: String): java.io.InputStream = {
-    // a fresh Configuration resolves file:// and default-scheme paths; a
-    // deployment with kerberised HDFS/S3 credentials would propagate the
-    // session's Hadoop conf to executors instead
     val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(new org.apache.hadoop.conf.Configuration()).open(hp)
+    hp.getFileSystem(hadoopConf).open(hp)
   }
 
   /** Pass 1: BOM sniff + strict UTF-8 validation, streaming (no
@@ -271,7 +236,7 @@ object LineSource {
   /** readLine-based iterator: \n, \r and \r\n all terminate, terminator
     * dropped, no phantom empty line after a trailing newline — the exact
     * splitLines semantics. Closes the reader at exhaustion. */
-  private def lineIterator(br: java.io.BufferedReader): Iterator[String] =
+  private[sources] def lineIterator(br: java.io.BufferedReader): Iterator[String] =
     new Iterator[String] {
       private var nxt = br.readLine()
       def hasNext: Boolean = nxt != null
@@ -283,10 +248,10 @@ object LineSource {
       }
     }
 
-  /** Streaming twin of [[splitCsvRecords]]: newlines inside quoted fields
-    * stay in their record. Closes the reader at exhaustion. */
-  private def csvRecordIterator(br: java.io.BufferedReader,
-                                quote: Char = '"'): Iterator[String] =
+  /** CSV records: newlines inside quoted fields stay in their record, and
+    * `\r\n`, `\r` and `\n` end one outside quotes. Stateful, so a walk
+    * rather than an expression. Closes the reader at exhaustion. */
+  private def csvRecordIterator(br: java.io.BufferedReader): Iterator[String] =
     new Iterator[String] {
       private var done = false
       private var nxt: String = advance()
@@ -298,7 +263,7 @@ object LineSource {
         var inQuotes = false
         while (c >= 0) {
           val ch = c.toChar
-          if (ch == quote) { inQuotes = !inQuotes; sb += ch }
+          if (ch == '"') { inQuotes = !inQuotes; sb += ch }
           else if (!inQuotes && (ch == '\n' || ch == '\r')) {
             if (ch == '\r') {
               br.mark(1)

@@ -115,16 +115,12 @@ object Tabular {
 
   /** S11 — VCF: drop `##` meta lines, strip the leading '#' off the #CHROM
     * header, split on tabs; header_lines is forced to 1 by the VCF table
-    * (`lib/ndr_import/vcf/table.rb:8-19`). Line numbers are re-assigned
-    * after the meta-line filter inside each file's array — still narrow.
-    */
-  def vcf(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val texts = LineSource.fileTexts(spark, paths)
-    val kept = filter(LineSource.splitLines(col("text")),
-                      l => !l.startsWith("##"))
-    texts
-      .select(col("file"), posexplode(kept).as(Seq("lineno", "line")))
-      .select(col("file"), col("lineno").cast("long").as("lineno"),
+    * (`lib/ndr_import/vcf/table.rb:8-19`). The meta lines are dropped per
+    * file as it streams, before lines are numbered, so `lineno` counts the
+    * kept lines only. */
+  def vcf(spark: SparkSession, paths: Seq[String]): DataFrame =
+    LineSource.streamedLines(spark, paths,
+        br => LineSource.lineIterator(br).filterNot(_.startsWith("##")))
+      .select(col("file"), col("lineno"),
               split(regexp_replace(col("line"), "^#", ""), "\t", -1).as("cells"))
-  }
 }

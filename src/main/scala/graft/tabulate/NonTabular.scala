@@ -77,15 +77,18 @@ object NonTabular {
     }
     if (v == null) null
     else {
-      def strip(ch: Char) = ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' ||
-        ch == '\f' || ch == '\r' || ch == '\u0000'
       var a = 0
       var b = v.length
-      while (a < b && strip(v.charAt(a))) a += 1
-      while (b > a && strip(v.charAt(b - 1))) b -= 1
+      while (a < b && rubySpace(v.charAt(a))) a += 1
+      while (b > a && rubySpace(v.charAt(b - 1))) b -= 1
       v.substring(a, b)
     }
   }
+
+  /** What Ruby's `strip`/`rstrip` remove: space, `\t \n \v \f \r` and NUL. */
+  private def rubySpace(ch: Char): Boolean =
+    ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' || ch == '\f' ||
+      ch == '\r' || ch == '\u0000'
 
   private def compile(rubyPattern: String): Pattern =
     Pattern.compile(RubyTranslate.regex(rubyPattern))
@@ -173,12 +176,11 @@ object NonTabular {
     def next(): (String, Long, Seq[String]) =
       if (hasNext) out.dequeue() else Iterator.empty.next()
 
-    // N1: trailing spaces go, as Spark's `rtrim` trims them (Ruby's
-    // `rstrip` would also drop tabs and NUL)
+    // N1 (`line.rb`): each line is Ruby-`rstrip`ped
     private def rstrip(line: String): String = {
       if (line == null) return ""
       var b = line.length
-      while (b > 0 && line.charAt(b - 1) == ' ') b -= 1
+      while (b > 0 && rubySpace(line.charAt(b - 1))) b -= 1
       line.substring(0, b)
     }
 

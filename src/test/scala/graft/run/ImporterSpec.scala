@@ -276,6 +276,32 @@ class ImporterSpec extends SparkSpec {
     assert(got == Seq(0L, 1L))
   }
 
+  test("csv and jsonl imports read by streaming: no binaryFile scan, no Exchange") {
+    val dir = tmpDir()
+    val csv = write(dir, "people.csv", "name\nSMITH\nDOE\n".getBytes("UTF-8"))
+    val jsonl = write(dir, "people.jsonl",
+      "{\"name\": \"SMITH\"}\n{\"name\": \"DOE\"}\n".getBytes("UTF-8"))
+    def mappings(ext: String, headerLines: Int) = MappingLoader.loadTables(
+      s"""|- canonical_name: people
+          |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
+          |  header_lines: $headerLines
+          |  klass: Person
+          |  columns:
+          |  - column: name
+          |    mappings:
+          |    - field: name
+          |""".stripMargin)
+    Seq(csv -> mappings("csv", 1), jsonl -> mappings("jsonl", 0)).foreach { case (path, ms) =>
+      val people = Importer.mappedTables(spark, path, ms)("people")
+      val plan = people.queryExecution.executedPlan.toString
+      assert(plan.contains("MapPartitions") && !plan.contains("binaryFile"),
+        s"$path must be read by the streaming reader:\n$plan")
+      assert(!plan.contains("Exchange"), s"$path plans a shuffle:\n$plan")
+      assert(people.select(element_at(col("fields"), "name")).collect()
+        .map(_.getString(0)).sorted.toSeq == Seq("DOE", "SMITH"))
+    }
+  }
+
   test("parquet and orc files route through the mapping pipeline (extension)") {
     val dir = tmpDir()
     import spark.implicits._

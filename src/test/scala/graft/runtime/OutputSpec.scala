@@ -25,14 +25,10 @@ class OutputSpec extends SparkSpec {
     assert(Output.sizedWrite(df, one.getPath, targetBytesPerFile = 1L << 40) == 1)
     assert(parquetFiles(one).length == 1)
 
-    // sizing must never change answers — bit-exact round trip both routes
+    // sizing must never change answers — bit-exact round trip
     val back = spark.read.parquet(many.getPath)
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted
     assert(back.toSeq == df.collect().map(r => (r.getLong(0), r.getString(1))).sorted.toSeq)
-    val viaCoalesce = new java.io.File(base, "coal")
-    Output.sizedWrite(df, viaCoalesce.getPath, targetBytesPerFile = 64L << 10,
-      balance = false)
-    assert(spark.read.parquet(viaCoalesce.getPath).count() == 20000L)
 
     intercept[IllegalArgumentException](
       Output.sizedWrite(df, new java.io.File(base, "bad").getPath,
@@ -66,7 +62,7 @@ class OutputSpec extends SparkSpec {
     assert(parquetFiles(capped).length == 7)
   }
 
-  test("sizedWrite(balance = true) evens out a skewed upstream partitioning") {
+  test("sizedWrite evens out a skewed upstream partitioning") {
     import spark.implicits._
     // all rows in ONE input partition — the post-aggregation skew shape
     val skewed = (1L to 8000L).map(i => (i, "y" * 64)).toDF("id", "body")

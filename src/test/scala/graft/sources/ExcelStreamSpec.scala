@@ -26,8 +26,7 @@ class ExcelStreamSpec extends SparkSpec {
   test("streamed tables == in-memory tables on the shared fixture") {
     val p = writeTemp(ExcelFixtures.testXlsx, ".xlsx")
     val inMem = collectRows(Excel.tables(spark, Seq(p)))
-    // force the streaming route with a 1-byte bound
-    val streamed = collectRows(Excel.tables(spark, Seq(p), inMemoryMaxBytes = 1L))
+    val streamed = collectRows(Excel.streamedTables(spark, Seq(p)))
     assert(streamed == inMem)
     assert(inMem.nonEmpty)
   }
@@ -50,7 +49,7 @@ class ExcelStreamSpec extends SparkSpec {
           |</sheetData></worksheet>""".stripMargin))
     val p = writeTemp(xlsx, ".xlsx")
     val inMem = collectRows(Excel.tables(spark, Seq(p)))
-    val streamed = collectRows(Excel.tables(spark, Seq(p), inMemoryMaxBytes = 1L))
+    val streamed = collectRows(Excel.streamedTables(spark, Seq(p)))
     assert(streamed == inMem)
     // span B..C over rows 2..5: two populated rows, two all-null gap rows
     assert(inMem.map { case (_, t, l, c) => (t, l, c) } == Set(
@@ -73,7 +72,7 @@ class ExcelStreamSpec extends SparkSpec {
           |</worksheet>""".stripMargin))
     val p = writeTemp(xlsx, ".xlsx")
     val inMem = collectRows(Excel.tables(spark, Seq(p)))
-    val streamed = collectRows(Excel.tables(spark, Seq(p), inMemoryMaxBytes = 1L))
+    val streamed = collectRows(Excel.streamedTables(spark, Seq(p)))
     assert(streamed == inMem)
     assert(inMem.map(_._2) == Set("A", "B"), "both sheet names must surface")
   }
@@ -91,7 +90,7 @@ class ExcelStreamSpec extends SparkSpec {
     val p = writeTemp(
       SyntheticOffice.biff8Xls("Sheet1", Seq(Seq("1A", "1B"), Seq("2A", "2B"))), ".xls")
     val inMem = collectRows(Excel.tables(spark, Seq(p)))
-    val fallback = collectRows(Excel.tables(spark, Seq(p), inMemoryMaxBytes = 1L))
+    val fallback = collectRows(Excel.streamedTables(spark, Seq(p)))
     assert(fallback == inMem)
     assert(inMem.map { case (_, t, l, c) => (t, l, c) } == Set(
       ("Sheet1", 0L, Seq("1A", "1B")), ("Sheet1", 1L, Seq("2A", "2B"))))
@@ -101,7 +100,7 @@ class ExcelStreamSpec extends SparkSpec {
     val p = writeTemp(encryptedXlsx, ".xlsx")
     val inMem = collectRows(Excel.tables(spark, Seq(p), password = Some("carrot")))
     val fallback = collectRows(
-      Excel.tables(spark, Seq(p), password = Some("carrot"), inMemoryMaxBytes = 1L))
+      Excel.streamedTables(spark, Seq(p), password = Some("carrot")))
     assert(fallback == inMem)
     assert(inMem.nonEmpty)
   }
@@ -109,7 +108,7 @@ class ExcelStreamSpec extends SparkSpec {
   test("oversized encrypted OOXML without a password raises the documented error") {
     val p = writeTemp(encryptedXlsx, ".xlsx")
     val e = intercept[org.apache.spark.SparkException] {
-      Excel.tables(spark, Seq(p), inMemoryMaxBytes = 1L).collect()
+      Excel.streamedTables(spark, Seq(p)).collect()
     }
     val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
     assert(msg.contains("password protected"))
@@ -118,7 +117,7 @@ class ExcelStreamSpec extends SparkSpec {
   test("oversized file that is neither zip nor OLE raises the streaming bound error") {
     val p = writeTemp("definitely not a workbook".getBytes("UTF-8"), ".xlsx")
     val e = intercept[org.apache.spark.SparkException] {
-      Excel.tables(spark, Seq(p), inMemoryMaxBytes = 1L).collect()
+      Excel.streamedTables(spark, Seq(p)).collect()
     }
     val msg = Option(e.getCause).map(_.getMessage).getOrElse(e.getMessage)
     assert(msg.contains("Unable to stream oversized workbook"))

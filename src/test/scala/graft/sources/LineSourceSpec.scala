@@ -4,9 +4,8 @@ import graft.SparkSpec
 
 import java.nio.file.Files
 
-/** The streaming reader for oversized text files: byte-identical results
-  * to the in-memory path across encodings, line-ending styles and quoted
-  * CSV records, at exact per-file line numbers. */
+/** The one text reader: literal rows across encodings, line-ending styles
+  * and quoted CSV records, at exact per-file line numbers. */
 class LineSourceSpec extends SparkSpec {
 
   private def writeTmp(name: String, bytes: Array[Byte]): String = {
@@ -19,58 +18,94 @@ class LineSourceSpec extends SparkSpec {
   private def collectLines(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
     df.orderBy("lineno").collect().map(r => (r.getLong(1), r.getString(2))).toSeq
 
-  test("streamed lines match the in-memory path (utf-8, utf-16, windows-1252)") {
+  private def numbered(lines: String*): Seq[(Long, String)] =
+    lines.zipWithIndex.map { case (l, i) => (i.toLong, l) }
+
+  test("lines decode utf-8, utf-16 and windows-1252, every line ending") {
     val cases = Seq(
-      "plain utf-8" -> "alpha\nbeta\ngamma\n".getBytes("UTF-8"),
-      "crlf + no trailing newline" -> "one\r\ntwo\r\nthree".getBytes("UTF-8"),
-      "bare cr" -> "a\rb\r\rc\r".getBytes("UTF-8"),
-      "utf-8 bom" -> (Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++
-        "héllo\nwörld\n".getBytes("UTF-8")),
-      "utf-16le bom" -> (Array[Byte](0xFF.toByte, 0xFE.toByte) ++
-        "seize\nbits\n".getBytes("UTF-16LE")),
-      "utf-16be bom" -> (Array[Byte](0xFE.toByte, 0xFF.toByte) ++
-        "big\nendian\n".getBytes("UTF-16BE")),
-      "windows-1252 fallback" -> "café\nnaïve ÿ\n".getBytes("windows-1252"))
-    cases.foreach { case (label, bytes) =>
+      ("plain utf-8", "alpha\nbeta\ngamma\n".getBytes("UTF-8"),
+        numbered("alpha", "beta", "gamma")),
+      ("crlf + no trailing newline", "one\r\ntwo\r\nthree".getBytes("UTF-8"),
+        numbered("one", "two", "three")),
+      ("bare cr", "a\rb\r\rc\r".getBytes("UTF-8"),
+        numbered("a", "b", "", "c")),
+      ("utf-8 bom", Array[Byte](0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++
+        "héllo\nwörld\n".getBytes("UTF-8"), numbered("héllo", "wörld")),
+      ("utf-16le bom", Array[Byte](0xFF.toByte, 0xFE.toByte) ++
+        "seize\nbits\n".getBytes("UTF-16LE"), numbered("seize", "bits")),
+      ("utf-16be bom", Array[Byte](0xFE.toByte, 0xFF.toByte) ++
+        "big\nendian\n".getBytes("UTF-16BE"), numbered("big", "endian")),
+      ("windows-1252 fallback", "café\nnaïve ÿ\n".getBytes("windows-1252"),
+        numbered("café", "naïve ÿ")))
+    cases.foreach { case (label, bytes, expected) =>
       val p = writeTmp("case.txt", bytes)
-      val inMem = collectLines(LineSource.lines(spark, Seq(p)))
-      val streamed = collectLines(LineSource.lines(spark, Seq(p), inMemoryMaxBytes = 1L))
-      assert(streamed == inMem, s"$label: streamed $streamed vs in-memory $inMem")
+      val got = collectLines(LineSource.lines(spark, Seq(p)))
+      assert(got == expected, s"$label: got $got")
     }
   }
 
   test("streamed csv records keep embedded newlines inside quotes") {
     val content = "name,notes\nBob,\"line one\nline two\"\nAnn,plain\n"
     val p = writeTmp("embedded.csv", content.getBytes("UTF-8"))
-    val inMem = collectLines(LineSource.csvLines(spark, Seq(p)))
-    val streamed = collectLines(LineSource.csvLines(spark, Seq(p), inMemoryMaxBytes = 1L))
-    assert(streamed == inMem)
-    assert(streamed.map(_._2) == Seq("name,notes", "Bob,\"line one\nline two\"", "Ann,plain"))
+    assert(collectLines(LineSource.csvLines(spark, Seq(p))) ==
+      numbered("name,notes", "Bob,\"line one\nline two\"", "Ann,plain"))
   }
 
-  test("dispatch mixes small (in-memory) and big (streamed) files in one read") {
-    val small = writeTmp("small.txt", "s1\ns2\n".getBytes("UTF-8"))
-    val big = writeTmp("big.txt", ("b1\n" * 100).getBytes("UTF-8"))
-    val df = LineSource.lines(spark, Seq(small, big), inMemoryMaxBytes = 50L)
+  test("files sharing one partition keep contiguous 0-based linenos") {
+    val sizes = Seq(3, 1, 5, 2, 4, 1, 3)
+    val paths = sizes.zipWithIndex.map { case (n, i) =>
+      writeTmp(s"f$i.txt", (1 to n).map(k => s"f$i-$k").mkString("", "\n", "\n")
+        .getBytes("UTF-8"))
+    }
+    val df = LineSource.lines(spark, paths)
+    assert(df.rdd.getNumPartitions < paths.size,
+      s"${paths.size} files over ${df.rdd.getNumPartitions} partitions share none")
     val byFile = df.collect().groupBy(_.getString(0)).view
-      .mapValues(_.sortBy(_.getLong(1)).map(_.getString(2)).toSeq).toMap
-    val smallLines = byFile.collect { case (f, v) if f.contains("small") => v }.head
-    val bigLines = byFile.collect { case (f, v) if f.contains("big") => v }.head
-    assert(smallLines == Seq("s1", "s2"))
-    assert(bigLines == Seq.fill(100)("b1"))
+      .mapValues(_.map(r => (r.getLong(1), r.getString(2))).sortBy(_._1).toSeq).toMap
+    assert(byFile.size == paths.size)
+    sizes.zipWithIndex.foreach { case (n, i) =>
+      val file = byFile.keys.find(_.endsWith(s"/f$i.txt")).get
+      assert(byFile(file) == numbered((1 to n).map(k => s"f$i-$k"): _*), file)
+    }
+  }
+
+  test("a zero-byte file gives zero rows") {
+    val p = writeTmp("empty.txt", Array.emptyByteArray)
+    assert(LineSource.lines(spark, Seq(p)).count() == 0L)
+    assert(LineSource.csvLines(spark, Seq(p)).count() == 0L)
+  }
+
+  test("a missing path fails when an action runs, naming the path") {
+    val p = Files.createTempDirectory("lines").resolve("no_such_file.txt").toString
+    val df = LineSource.lines(spark, Seq(p)) // planning reads nothing
+    val ex = intercept[Exception](df.collect())
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null && m.contains("no_such_file.txt")),
+      messages.mkString("\n"))
+  }
+
+  test("a glob or a directory reads each visible file under it") {
+    val dir = Files.createTempDirectory("lines")
+    Seq("a.txt" -> "a1\na2\n", "b.txt" -> "b1\n", "c.csv" -> "c1\n",
+        "_SUCCESS" -> "", ".hidden.txt" -> "h1\n").foreach { case (n, t) =>
+      Files.write(dir.resolve(n), t.getBytes("UTF-8"))
+    }
+    def read(path: String) = LineSource.lines(spark, Seq(path)).collect()
+      .map(r => (r.getString(0).split('/').last, r.getLong(1), r.getString(2))).sorted.toSeq
+    assert(read(s"$dir/*.txt") == Seq(("a.txt", 0L, "a1"), ("a.txt", 1L, "a2"), ("b.txt", 0L, "b1")))
+    assert(read(dir.toString) == read(s"$dir/*.txt") :+ (("c.csv", 0L, "c1")))
+    assert(LineSource.lines(spark, Seq(s"$dir/a.txt")).head().getString(0).startsWith("file:/"))
   }
 
   test("a full delimited read works through the streaming path") {
-    // end-to-end: the oversized-file path feeds the same mapping pipeline
     val az = ('A' to 'Z').map(_.toString)
     val content = az.mkString(",") + "\n" + Seq.fill(26)("1").mkString(",") + "\n"
     val p = writeTmp("wide.csv", content.getBytes("UTF-8"))
-    val mapping = graft.model.TableMapping(delimiter = Some(","),
-      columns = Seq.fill(26)(graft.model.ColumnMapping()))
-    val lines = LineSource.csvLines(spark, Seq(p), inMemoryMaxBytes = 1L)
+    val lines = LineSource.csvLines(spark, Seq(p))
     val rows = Tabular.delimitedCells(lines, ",", 26, liberal = false)
-      .orderBy("lineno").select("cells").collect().map(_.getSeq[String](0))
-    assert(rows(0) == az)
-    assert(rows(1) == Seq.fill(26)("1"))
+      .orderBy("lineno").select("lineno", "cells").collect()
+      .map(r => (r.getLong(0), r.getSeq[String](1))).toSeq
+    assert(rows == Seq((0L, az), (1L, Seq.fill(26)("1"))))
   }
 }

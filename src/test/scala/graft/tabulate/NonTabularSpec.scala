@@ -334,6 +334,23 @@ class NonTabularSpec extends SparkSpec {
     }
   }
 
+  test("N1: a start line ending in a tab opens a record under a \\z pattern") {
+    // line.rb rstrips each line the Ruby way: trailing tab, vertical tab
+    // and NUL go as well as spaces, so "START\t" is "START" to the walk
+    val yaml =
+      """|klass: K
+         |start_line_pattern: !ruby/regexp /\ASTART\z/
+         |end_in_a_record: true
+         |columns:
+         |- column: one
+         |  non_tabular_cell:
+         |    lines: 0
+         |    capture: !ruby/regexp /\A(.*)\z/
+         |""".stripMargin
+    assert(run(yaml, "START\t\nbody\t\nSTART \t\u000B\u0000\nsecond") ==
+      Seq("body", "second"))
+  }
+
   test("a repeated (file, lineno) fails loudly, naming the file") {
     import spark.implicits._
     val df = Seq(("dup.txt", 0L, "------"), ("dup.txt", 1L, "a"), ("dup.txt", 1L, "b"))
