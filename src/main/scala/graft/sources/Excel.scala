@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -333,13 +334,17 @@ object Excel {
     }
     // a local relation spreads the list over min(files, defaultParallelism)
     // partitions with no exchange
+    val conf = LineSource.TaskConf(spark)
     spark.createDataset(qualified)
-      .mapPartitions(_.flatMap { case (p, q, len) => streamedFileRows(p, q, len, password) })
+      .mapPartitions(_.flatMap { case (p, q, len) =>
+        streamedFileRows(conf.value, p, q, len, password)
+      })
       .toDF("file", "tablename", "lineno", "cells")
   }
 
-  private def scanZip[A](p: String)(f: (String, ZipInputStream) => Option[A]): Seq[A] = {
-    val zin = new ZipInputStream(new java.io.BufferedInputStream(LineSource.openStream(p)))
+  private def scanZip[A](conf: Configuration, p: String)(
+      f: (String, ZipInputStream) => Option[A]): Seq[A] = {
+    val zin = new ZipInputStream(new java.io.BufferedInputStream(LineSource.openStream(conf, p)))
     val out = mutable.ArrayBuffer.empty[A]
     try {
       var e = zin.getNextEntry
@@ -367,11 +372,12 @@ object Excel {
     * `q` is the session-qualified spelling emitted as the `file` value and
     * `len` the driver-statted byte length (-1 when the stat failed — the
     * CFB fallback then reads with a bounds-checked loop so an unknown
-    * length can never disarm the 2 GiB guard). */
-  private[sources] def streamedFileRows(p: String, q: String, len: Long,
-                                        password: Option[String])
+    * length can never disarm the 2 GiB guard). `conf` is the session's
+    * Hadoop conf, which every open of `p` uses. */
+  private[sources] def streamedFileRows(conf: Configuration, p: String, q: String,
+                                        len: Long, password: Option[String])
       : Iterator[(String, String, Long, Seq[String])] = {
-    val head = { val in = LineSource.openStream(p); try in.readNBytes(8) finally in.close() }
+    val head = { val in = LineSource.openStream(conf, p); try in.readNBytes(8) finally in.close() }
     if (!isZip(head)) {
       // CFB containers (legacy BIFF8 .xls, encrypted OOXML envelopes) need
       // random access (CFB FAT / crypto envelope) and cannot stream. Up to
@@ -385,7 +391,7 @@ object Excel {
           "a zip archive nor an OLE container")
       if (len >= FormatMaxBytes) oversizedCfbError(p, len)
       val bytes = {
-        val in = LineSource.openStream(p)
+        val in = LineSource.openStream(conf, p)
         try {
           val b = in.readNBytes(FormatMaxBytes.toInt)
           // unknown length (failed stat): a saturated ceiling read IS
@@ -402,7 +408,7 @@ object Excel {
       }
     }
     // scan 1: metadata parts
-    val meta = scanZip(p) { (name, zin) =>
+    val meta = scanZip(conf, p) { (name, zin) =>
       if (MetaParts(name)) Some(name -> zin.readAllBytes()) else None
     }.toMap
     val workbook = meta.getOrElse("xl/workbook.xml", sys.error(s"Not an xlsx: no xl/workbook.xml in '$p'"))
@@ -415,7 +421,7 @@ object Excel {
       sheetTargetsOf(workbook, meta.get("xl/_rels/workbook.xml.rels"))
         .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
     // scan 2: per-sheet populated spans (cheap StAX pass, values discarded)
-    val spans: Map[String, (Int, Int, Int, Int)] = scanZip(p) { (name, zin) =>
+    val spans: Map[String, (Int, Int, Int, Int)] = scanZip(conf, p) { (name, zin) =>
       if (!partToNames.contains(name)) None
       else {
         var span: (Int, Int, Int, Int) = null
@@ -432,7 +438,8 @@ object Excel {
     // a task-completion listener closes the stream even when the consumer
     // abandons the iterator early (limit/head short-circuits)
     new Iterator[(String, String, Long, Seq[String])] {
-      private val zin = new ZipInputStream(new java.io.BufferedInputStream(LineSource.openStream(p)))
+      private val zin =
+        new ZipInputStream(new java.io.BufferedInputStream(LineSource.openStream(conf, p)))
       private var closed = false
       Option(org.apache.spark.TaskContext.get()).foreach(
         _.addTaskCompletionListener[Unit] { _ =>

@@ -81,13 +81,19 @@ object LineSource {
     * (`helpers/file/delimited.rb:48-88` — the first pass proves the
     * encoding, the second streams), so memory stays O(line), never
     * O(file). `records` splits a decoded file into its lines; a line it
-    * drops takes no `lineno`. The path list is a local relation, which
-    * spreads its rows over min(files, defaultParallelism) partitions with
-    * no exchange. */
+    * drops takes no `lineno`. Spark's file index lists `paths` (globs,
+    * directories, hidden files, a missing path failing here, naming it)
+    * without reading a byte; its files become a local relation, which
+    * spreads them over min(files, defaultParallelism) partitions with no
+    * exchange. */
   private[sources] def streamedLines(spark: SparkSession, paths: Seq[String],
       records: java.io.BufferedReader => Iterator[String]): DataFrame = {
     import spark.implicits._
-    spark.createDataset(listFiles(spark, paths))
+    val conf = TaskConf(spark)
+    // inputFiles reports URIs; the Path spelling is binaryFile's `path`
+    val files = spark.read.format("binaryFile").load(paths: _*).inputFiles
+      .map(u => new org.apache.hadoop.fs.Path(new java.net.URI(u)).toString)
+    spark.createDataset(files.toSeq)
       .mapPartitions { it =>
         // one reader open at a time per partition; close it even when the
         // consumer abandons the iterator early (limit/head)
@@ -97,8 +103,8 @@ object LineSource {
             if (open != null) try open.close() catch { case _: Exception => () }
           })
         it.flatMap { f =>
-          val cs = probeCharset(f)
-          val br = openReader(f, cs)
+          val cs = probeCharset(conf.value, f)
+          val br = openReader(conf.value, f, cs)
           // close the predecessor on handoff: it is either already closed
           // (iterator exhausted) or was abandoned mid-file (zero-line file,
           // consumer short-circuit) — double-close is a no-op, so handoff
@@ -108,32 +114,6 @@ object LineSource {
           records(br).zipWithIndex.map { case (l, i) => (f, i.toLong, l) }
         }
       }.toDF("file", "lineno", "line")
-  }
-
-  /** Every file `paths` name, qualified as `binaryFile` reports them
-    * ("file:/tmp/x", "hdfs://nn/x"): a glob expands to its visible matches
-    * and a directory to the visible files under it ("_" and "." names are
-    * hidden, as in Spark's file listing). A path that names nothing stays
-    * as given, so reading it fails when an action runs, naming it. */
-  private def listFiles(spark: SparkSession, paths: Seq[String]): Seq[String] = {
-    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-    val conf = spark.sessionState.newHadoopConf()
-    def visible(st: FileStatus) = !st.getPath.getName.matches("[_.].*")
-    def leaves(fs: FileSystem, st: FileStatus): Seq[String] =
-      if (!st.isDirectory) Seq(st.getPath.toString)
-      else fs.listStatus(st.getPath).toSeq.filter(visible)
-        .sortBy(_.getPath.toString).flatMap(leaves(fs, _))
-    paths.flatMap { p =>
-      val hp = new Path(p)
-      val matched =
-        try {
-          val fs = hp.getFileSystem(conf)
-          Option(fs.globStatus(hp)).filter(_.nonEmpty).map(_.toSeq
-            .filter(st => st.getPath.getName == hp.getName || visible(st))
-            .flatMap(leaves(fs, _)))
-        } catch { case _: java.io.IOException => None }
-      matched.getOrElse(Seq(qualifiedPath(spark, p)))
-    }
   }
 
   /** Byte length of every path (-1 where the stat failed — exotic
@@ -164,11 +144,11 @@ object LineSource {
   }
 
   /** The Hadoop-qualified form of a path ("file:/tmp/x", "hdfs://nn/x") —
-    * what `binaryFile`'s `path` column reports. Streamed sources emit THIS
-    * as their `file` value, so a file has one spelling whichever reader
-    * read it. Resolved DRIVER-SIDE with the session's Hadoop conf
-    * (session-level `fs.defaultFS`/scheme settings included) — an
-    * executor-side default `Configuration()` could qualify differently
+    * what `binaryFile`'s `path` column reports. Excel's streamed reader
+    * emits THIS as its `file` value, so a workbook has one spelling
+    * whichever reader read it. Resolved DRIVER-SIDE with the session's
+    * Hadoop conf (session-level `fs.defaultFS`/scheme settings included) —
+    * an executor-side default `Configuration()` could qualify differently
     * from binaryFile. */
   private[graft] def qualifiedPath(spark: SparkSession, p: String): String = {
     val hp = new org.apache.hadoop.fs.Path(p)
@@ -176,22 +156,40 @@ object LineSource {
     catch { case _: Exception => p }
   }
 
-  /** One default Hadoop Configuration per JVM: it resolves file:// and
-    * default-scheme paths. Building one parses the default resources
-    * (~7 ms), and every file read opens its file twice. A deployment with
-    * kerberised HDFS/S3 credentials would propagate the session's Hadoop
-    * conf to executors instead. */
-  private lazy val hadoopConf = new org.apache.hadoop.conf.Configuration()
+  /** The session's Hadoop conf (`spark.hadoop.*` keys, runtime `fs.*`
+    * settings, credentials, `fs.<scheme>.impl`) as the key/value pairs a
+    * task carries; `value` rebuilds it once per task, so executors open
+    * files with the conf the driver listed them with. Spark's
+    * `SerializableConfiguration` gzips every key's source list, which
+    * costs about 20 ms per task, more than reading a small file. */
+  private[sources] final class TaskConf private (entries: Array[(String, String)])
+      extends Serializable {
+    @transient lazy val value: org.apache.hadoop.conf.Configuration = {
+      val c = new org.apache.hadoop.conf.Configuration(false)
+      entries.foreach { case (k, v) => c.set(k, v) }
+      c
+    }
+  }
 
-  private[sources] def openStream(p: String): java.io.InputStream = {
+  private[sources] object TaskConf {
+    def apply(spark: SparkSession): TaskConf = {
+      import scala.jdk.CollectionConverters._
+      new TaskConf(spark.sessionState.newHadoopConf().iterator.asScala
+        .map(e => e.getKey -> e.getValue).toArray)
+    }
+  }
+
+  private[sources] def openStream(conf: org.apache.hadoop.conf.Configuration,
+                                  p: String): java.io.InputStream = {
     val hp = new org.apache.hadoop.fs.Path(p)
-    hp.getFileSystem(hadoopConf).open(hp)
+    hp.getFileSystem(conf).open(hp)
   }
 
   /** Pass 1: BOM sniff + strict UTF-8 validation, streaming (no
     * materialisation). Mirrors decodeSmart's probe order exactly. */
-  private[sources] def probeCharset(p: String): java.nio.charset.Charset = {
-    val in = new java.io.BufferedInputStream(openStream(p))
+  private[sources] def probeCharset(conf: org.apache.hadoop.conf.Configuration,
+                                    p: String): java.nio.charset.Charset = {
+    val in = new java.io.BufferedInputStream(openStream(conf, p))
     try {
       in.mark(4)
       val b0 = in.read(); val b1 = in.read()
@@ -220,8 +218,9 @@ object LineSource {
 
   /** Pass 2 reader: positioned past any BOM, decoding with the probed
     * charset (UTF-16 readers also consume the BOM). */
-  private def openReader(p: String, cs: java.nio.charset.Charset): java.io.BufferedReader = {
-    val in = new java.io.BufferedInputStream(openStream(p))
+  private def openReader(conf: org.apache.hadoop.conf.Configuration, p: String,
+                         cs: java.nio.charset.Charset): java.io.BufferedReader = {
+    val in = new java.io.BufferedInputStream(openStream(conf, p))
     val utf16 = cs == java.nio.charset.StandardCharsets.UTF_16BE ||
       cs == java.nio.charset.StandardCharsets.UTF_16LE
     if (utf16) { in.read(); in.read() } // skip BOM

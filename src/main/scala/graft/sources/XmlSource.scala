@@ -199,9 +199,10 @@ object XmlSource {
       sys.error("xml_record_xpath is required for xml tables"))
     val pattern = mapping.patternMatchRecordXpath
     import spark.implicits._
+    val conf = LineSource.TaskConf(spark)
     val files = spark.sparkContext.binaryFiles(paths.mkString(","))
     spark.createDataset(files.flatMap { case (file, pds) =>
-      val cs = LineSource.probeCharset(file)
+      val cs = LineSource.probeCharset(conf.value, file)
       val in = pds.open()
       val buffered = new java.io.BufferedInputStream(in, 256 * 1024)
       // skip the BOM the probe found (the parser must not see it as text)

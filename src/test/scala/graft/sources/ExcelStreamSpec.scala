@@ -130,7 +130,7 @@ class ExcelStreamSpec extends SparkSpec {
     val p = writeTemp(cfbMagic, ".xls")
     // driver-statted length says >2 GiB: the guard must fire BEFORE any read
     val e = intercept[RuntimeException] {
-      Excel.streamedFileRows(p, p, len = 3L * 1024 * 1024 * 1024, password = None)
+      Excel.streamedFileRows(spark.sessionState.newHadoopConf(), p, p, len = 3L * 1024 * 1024 * 1024, password = None)
     }
     assert(e.getMessage.contains("tops out at"))
     assert(e.getMessage.contains("2 GiB"))
@@ -138,7 +138,7 @@ class ExcelStreamSpec extends SparkSpec {
     // still parses through the bounds-checked read (and fails only inside
     // Biff8 on the truncated body, proving the read path was taken)
     val e2 = intercept[RuntimeException] {
-      Excel.streamedFileRows(p, p, len = -1L, password = None).toList
+      Excel.streamedFileRows(spark.sessionState.newHadoopConf(), p, p, len = -1L, password = None).toList
     }
     assert(!e2.getMessage.contains("tops out at"))
   }

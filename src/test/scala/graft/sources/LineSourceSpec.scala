@@ -69,20 +69,33 @@ class LineSourceSpec extends SparkSpec {
     }
   }
 
-  test("a zero-byte file gives zero rows") {
+  test("a zero-byte file, or no file, gives zero rows") {
     val p = writeTmp("empty.txt", Array.emptyByteArray)
     assert(LineSource.lines(spark, Seq(p)).count() == 0L)
     assert(LineSource.csvLines(spark, Seq(p)).count() == 0L)
+    assert(LineSource.lines(spark, Seq.empty).count() == 0L)
   }
 
-  test("a missing path fails when an action runs, naming the path") {
+  test("a missing path fails, naming the path") {
     val p = Files.createTempDirectory("lines").resolve("no_such_file.txt").toString
-    val df = LineSource.lines(spark, Seq(p)) // planning reads nothing
-    val ex = intercept[Exception](df.collect())
+    val ex = intercept[Exception](LineSource.lines(spark, Seq(p)).collect())
     val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).toSeq
     assert(messages.exists(m => m != null && m.contains("no_such_file.txt")),
       messages.mkString("\n"))
+  }
+
+  test("files open with the session's Hadoop conf on the executor") {
+    // the scheme is known only to the session conf, and caching is off so
+    // a filesystem the driver built cannot stand in for the task's own
+    val p = writeTmp("session.txt", "s1\ns2\n".getBytes("UTF-8"))
+    graft.runtime.GraftSession.withConf(spark,
+        "fs.sessfs.impl" -> classOf[SessionOnlyFs].getName,
+        "fs.sessfs.impl.disable.cache" -> "true") {
+      val rows = LineSource.lines(spark, Seq(s"sessfs://$p")).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sortBy(_._2).toSeq
+      assert(rows == Seq((s"sessfs:$p", 0L, "s1"), (s"sessfs:$p", 1L, "s2")))
+    }
   }
 
   test("a glob or a directory reads each visible file under it") {
@@ -108,4 +121,10 @@ class LineSourceSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[String](1))).toSeq
     assert(rows == Seq((0L, az), (1L, Seq.fill(26)("1"))))
   }
+}
+
+/** The local filesystem under a scheme of its own, "sessfs". */
+class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("sessfs:///")
+  override def getScheme: String = "sessfs"
 }
