@@ -150,23 +150,13 @@ object Importer {
         }
       case "xml" | "xml_table" =>
         single { m =>
-          // Size-routed like Excel: oversized XML files go through the
-          // StAX cursor (memory bounded by one record, never the file);
-          // normal files, and files whose stat failed, keep the slurp
-          // path's full semantics (encoding probe + control-char escape
-          // retry).
-          val big = LineSource.statLengths(spark, Seq(file))
-            .getOrElse(file, -1L) > LineSource.DefaultInMemoryMaxBytes
-          val source =
-            if (big) XmlSource.recordsStreaming(spark, Seq(file), m)
-            else XmlSource.records(spark, Seq(file), m)
-          val recs = XmlTableTransform.records(source, m)
+          val recs = XmlTableTransform.records(XmlSource.records(spark, Seq(file), m), m)
           // S8 — file metadata evaluated once per file. The document parse
           // runs on an EXECUTOR (binaryFile row → metadata map); only the
           // tiny {name → value} map reaches the driver. The metadata
           // xpaths need the full DOM (reference semantics), so THIS branch
           // is bounded by binaryFile's 2 GiB record limit — records
-          // themselves still stream unbounded above.
+          // themselves stream at any size.
           if (m.fileMetadata.isEmpty) recs
           else {
             import spark.implicits._

@@ -1,10 +1,8 @@
 package graft.sources
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import java.io.ByteArrayInputStream
+import java.io.{ByteArrayInputStream, InputStream}
 import java.util.zip.ZipInputStream
 import scala.collection.mutable
 import scala.xml.XML
@@ -12,8 +10,10 @@ import scala.xml.XML
 /** Excel reader (S3 — reference `lib/ndr_import/file/excel.rb`).
   *
   * xlsx/xlsm are parsed for real: an .xlsx is a zip of XML parts, so the
-  * workbook/sheet/sharedStrings/styles parts are read with the JDK zip
-  * stream + scala-xml — no external spreadsheet library. One table per
+  * workbook/rels/sharedStrings/styles parts are read with the JDK zip
+  * stream + scala-xml and every worksheet is walked with a StAX cursor,
+  * streamed, whatever the workbook's size — no external spreadsheet
+  * library. One table per
   * worksheet (`excel.rb:20-27`), cells padded to the sheet's column span
   * (`excel.rb:66-77` first_column..last_column) and rendered with Roo's
   * exact cast rules (`excel.rb:31-50`):
@@ -44,19 +44,6 @@ object Excel {
 
   def isZip(bytes: Array[Byte]): Boolean =
     bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == 'K'
-
-  private def zipEntries(bytes: Array[Byte]): Map[String, Array[Byte]] = {
-    val out = mutable.HashMap.empty[String, Array[Byte]]
-    val zin = new ZipInputStream(new ByteArrayInputStream(bytes))
-    try {
-      var e = zin.getNextEntry
-      while (e != null) {
-        if (!e.isDirectory) out(e.getName) = zin.readAllBytes()
-        e = zin.getNextEntry
-      }
-    } finally zin.close()
-    out.toMap
-  }
 
   /** Does a custom format code render as a date/time? (y/m/d/h/s tokens
     * outside quoted/bracketed sections.) */
@@ -119,26 +106,12 @@ object Excel {
     }
   }
 
-  /** Parse an xlsx/xlsm byte array into its sheets (cast, padded). */
-  def parseXlsx(bytes: Array[Byte]): Seq[Sheet] = {
-    val parts = zipEntries(bytes)
-    val workbook = parts.getOrElse("xl/workbook.xml", sys.error("Not an xlsx: no xl/workbook.xml"))
-    val shared = sharedStringsOf(parts.get("xl/sharedStrings.xml"))
-    val styleIsDate = stylesOf(parts.get("xl/styles.xml"))
-    sheetTargetsOf(workbook, parts.get("xl/_rels/workbook.xml.rels")).map {
-      case (name, part) =>
-        val sheetBytes = parts.getOrElse(part, sys.error(s"Missing sheet part $part"))
-        Sheet(name, sheetRows(sheetBytes, shared, styleIsDate))
-    }
-  }
-
   private def colIndex(ref: String): Int =
     ref.takeWhile(_.isLetter).foldLeft(0)((a, c) => a * 26 + (c.toUpper - 'A' + 1))
 
   /** StAX cursor over ONE worksheet part, yielding populated cells
     * `(row, col, castValue)` in document order — memory is O(1) per cell,
-    * never the sheet DOM. Both the in-memory and the streamed reader sit on
-    * this single state machine. Does NOT close `in` (zip streams own their
+    * never the sheet DOM. Does NOT close `in` (zip streams own their
     * entries). */
   private final class CellCursor(in: java.io.InputStream, shared: IndexedSeq[String],
                                  styleIsDate: IndexedSeq[Boolean])
@@ -225,77 +198,22 @@ object Excel {
     }
   }
 
-  /** In-memory worksheet parse: collect the cursor's cells, pad to the
-    * populated span (`excel.rb:66-77` first_column..last_column). */
-  private def sheetRows(sheetBytes: Array[Byte], shared: IndexedSeq[String],
-                        styleIsDate: IndexedSeq[Boolean]): Seq[Seq[String]] = {
-    val cells = mutable.HashMap.empty[(Int, Int), String]
-    new CellCursor(new ByteArrayInputStream(sheetBytes), shared, styleIsDate)
-      .foreach { case (rr, cc, v) => cells((rr, cc)) = v }
-    if (cells.isEmpty) return Nil
-    val rowMin = cells.keys.map(_._1).min; val rowMax = cells.keys.map(_._1).max
-    val colMin = cells.keys.map(_._2).min; val colMax = cells.keys.map(_._2).max
-    (rowMin to rowMax).map(rr => (colMin to colMax).map(cc => cells.get((rr, cc)).orNull))
-  }
-
-  /** Parse bytes by extension with the reference's retry semantics
-    * (`excel.rb:98-115`): zip magic wins regardless of extension; genuine
-    * OLE needs POI (unsupported here). */
-  def parseWorkbook(fileName: String, bytes: Array[Byte],
-                    password: Option[String] = None): Seq[Sheet] = {
-    if (isZip(bytes)) parseXlsx(bytes)
-    else if (OoxmlCrypto.isEncrypted(bytes)) password match {
-      case Some(pw) => parseXlsx(OoxmlCrypto.decrypt(bytes, pw))
-      case None     => sys.error(s"Unable to read the file '$fileName'; it is " +
-        "password protected (set file_password)")
-    }
-    else if (Cfb.isCfb(bytes)) Biff8.parse(bytes)
-    else sys.error(s"Unable to read the file '$fileName'")
-  }
-
   /** One row per (file, tablename=sheet, lineno, cells) — the engine's
-    * uniform tabular contract, one task per file. Size-routed like the
-    * importer's XML branch: workbooks up to
-    * [[LineSource.DefaultInMemoryMaxBytes]] ride `binaryFile`
-    * (whole-workbook parse, full retry semantics); larger
-    * xlsx files take the streaming reader ([[streamedTables]]) so a
-    * multi-GiB workbook never hits binaryFile's 2 GiB record limit or
-    * materialises on one task's heap. The reference's own xlsx streaming
-    * is an unshipped FIXME (`lib/ndr_import/file/excel.rb:58-63`).
-    * Oversized workbooks that CANNOT stream (CFB containers: BIFF8 .xls or
-    * an encrypted OOXML envelope, which need random access) fall back to a
-    * full in-memory parse on the executor task up to the 2 GiB format
-    * ceiling, so size routing never regresses an input that used to parse. */
+    * uniform tabular contract — from one per-file walk
+    * ([[LineSource.perFile]]): each workbook is read by one task, sheets in
+    * sequence (their row numbering is), and parallelism comes from many
+    * files, as for the text sources. Dispatch follows the reference's
+    * retry semantics (`excel.rb:98-115`): zip magic wins whatever the
+    * extension; an OLE container is either an encrypted OOXML envelope
+    * (decrypted with `password`, then walked like any zip) or a BIFF8
+    * `.xls`; anything else is unreadable. The reference's own xlsx
+    * streaming is an unshipped FIXME (`lib/ndr_import/file/excel.rb:58-63`). */
   def tables(spark: SparkSession, paths: Seq[String],
              password: Option[String] = None): DataFrame = {
     import spark.implicits._
-    if (paths.isEmpty)
-      return spark.emptyDataset[(String, String, Long, Seq[String])]
-        .toDF("file", "tablename", "lineno", "cells")
-    // ONE parallel stat pass serves both the size routing here and the
-    // streamed route's 2 GiB fallback guard — re-statting the big subset
-    // serially would add per-file driver RPC latency on wide path lists
-    val lengths = LineSource.statLengths(spark, paths)
-    val (big, small) =
-      paths.partition(p => lengths.getOrElse(p, -1L) > LineSource.DefaultInMemoryMaxBytes)
-    val inMem =
-      if (small.isEmpty) None
-      else Some(
-        spark.read.format("binaryFile").load(small: _*)
-          .select(col("path"), col("content")).as[(String, Array[Byte])]
-          .flatMap { case (file, bytes) =>
-            parseWorkbook(file, bytes, password).flatMap { sheet =>
-              sheet.rows.zipWithIndex.map { case (cells, i) =>
-                (file, sheet.name, i.toLong, cells)
-              }
-            }
-          }.toDF("file", "tablename", "lineno", "cells"))
-    val streamed =
-      if (big.isEmpty) None else Some(streamedTables(spark, big, password, lengths))
-    (inMem.toSeq ++ streamed.toSeq).reduce(_ unionByName _)
+    LineSource.perFile(spark, paths)((file, len, open) => fileRows(file, len, open, password))
+      .toDF("file", "tablename", "lineno", "cells")
   }
-
-  // ------------------------------------------------------------- streaming
 
   /** Worksheet parts must be walkable without inflating the whole zip into
     * memory; the metadata parts (workbook, rels, styles, sharedStrings) are
@@ -305,46 +223,9 @@ object Excel {
   private val MetaParts = Set("xl/workbook.xml", "xl/_rels/workbook.xml.rels",
     "xl/styles.xml", "xl/sharedStrings.xml")
 
-  /** Streaming xlsx reader for oversized workbooks — the shipped version of
-    * the reference's FIXME (`lib/ndr_import/file/excel.rb:58-63`). Three
-    * sequential zip scans per file (metadata → per-sheet spans → lazy row
-    * emission), memory bounded by the metadata parts plus ONE row, never
-    * the workbook bytes. One task per file: sheets are sequential within a
-    * workbook (their row numbering is), parallelism comes from many files —
-    * the same doctrine as the text sources. Encrypted OOXML and BIFF8
-    * workbooks need random access (crypto envelope / CFB FAT): those fall
-    * back to a full in-memory parse ON THE TASK up to the 2 GiB format
-    * ceiling (past which a clear bound error is raised instead of an OOM). */
-  def streamedTables(spark: SparkSession, paths: Seq[String],
-                     password: Option[String] = None,
-                     lengths: Map[String, Long] = Map.empty): DataFrame = {
-    import spark.implicits._
-    // qualified AND statted driver-side with the SESSION conf, like
-    // binaryFile's path — an executor-side fresh Configuration could
-    // resolve differently, and a failed stat must arm (not disarm) the
-    // in-memory fallback's 2 GiB guard. Unknown length reports -1; the
-    // fallback then reads with a bounds-checked loop instead. `lengths`
-    // reuses the caller's stat pass (Excel.tables stats once for routing);
-    // only paths it doesn't cover are statted here, in parallel.
-    val missing = paths.filterNot(lengths.contains)
-    val statted = LineSource.statLengths(spark, missing)
-    val qualified = paths.map { p =>
-      (p, LineSource.qualifiedPath(spark, p),
-        lengths.getOrElse(p, statted.getOrElse(p, -1L)))
-    }
-    // a local relation spreads the list over min(files, defaultParallelism)
-    // partitions with no exchange
-    val conf = LineSource.TaskConf(spark)
-    spark.createDataset(qualified)
-      .mapPartitions(_.flatMap { case (p, q, len) =>
-        streamedFileRows(conf.value, p, q, len, password)
-      })
-      .toDF("file", "tablename", "lineno", "cells")
-  }
-
-  private def scanZip[A](conf: Configuration, p: String)(
+  private def scanZip[A](open: () => InputStream)(
       f: (String, ZipInputStream) => Option[A]): Seq[A] = {
-    val zin = new ZipInputStream(new java.io.BufferedInputStream(LineSource.openStream(conf, p)))
+    val zin = new ZipInputStream(new java.io.BufferedInputStream(open()))
     val out = mutable.ArrayBuffer.empty[A]
     try {
       var e = zin.getNextEntry
@@ -356,72 +237,66 @@ object Excel {
     out.toSeq
   }
 
-  /** The .xlsx/.xls container formats top out at 2 GiB (CFB sector
-    * addressing / zip32 as written by Excel) — the hard ceiling for the
-    * in-memory fallback. Headroom of 8 below Int.MaxValue: readAllBytes /
-    * array allocation throw raw OutOfMemoryError above Int.MaxValue - 8,
-    * and the clear bound error must fire first. */
+  /** The .xls and encrypted-OOXML containers top out at 2 GiB (CFB sector
+    * addressing), and they need a full in-memory parse. Headroom of 8
+    * below Int.MaxValue: readAllBytes / array allocation throw raw
+    * OutOfMemoryError above Int.MaxValue - 8, and the clear bound error
+    * must fire first. */
   private[sources] val FormatMaxBytes: Long = Int.MaxValue.toLong - 8
 
-  private def oversizedCfbError(p: String, len: Long): Nothing =
-    sys.error(s"Unable to read oversized workbook '$p' ($len bytes): OLE " +
-      "containers need a full in-memory parse and the format tops out at " +
-      "2 GiB — the file is corrupt or mislabelled")
-
-  /** Lazy (file, sheet, lineno, cells) rows for one oversized workbook;
-    * `q` is the session-qualified spelling emitted as the `file` value and
-    * `len` the driver-statted byte length (-1 when the stat failed — the
-    * CFB fallback then reads with a bounds-checked loop so an unknown
-    * length can never disarm the 2 GiB guard). `conf` is the session's
-    * Hadoop conf, which every open of `p` uses. */
-  private[sources] def streamedFileRows(conf: Configuration, p: String, q: String,
-                                        len: Long, password: Option[String])
+  /** Lazy (file, sheet, lineno, cells) rows of one workbook; `len` is its
+    * listed byte length and `open` opens it. A zip workbook streams
+    * ([[zipRows]]). An OLE container needs random access (CFB FAT, crypto
+    * envelope), so it is read whole on the task — after the length guard,
+    * which fires before that read. */
+  private[sources] def fileRows(file: String, len: Long, open: () => InputStream,
+                                password: Option[String])
       : Iterator[(String, String, Long, Seq[String])] = {
-    val head = { val in = LineSource.openStream(conf, p); try in.readNBytes(8) finally in.close() }
-    if (!isZip(head)) {
-      // CFB containers (legacy BIFF8 .xls, encrypted OOXML envelopes) need
-      // random access (CFB FAT / crypto envelope) and cannot stream. Up to
-      // the 2 GiB format ceiling they parse in-memory ON THIS TASK — the
-      // same result the binaryFile path would have produced — so routing a
-      // 300 MiB encrypted workbook past the in-memory bound degrades to a
-      // bigger heap, never a new failure. Only past 2 GiB (no such valid
-      // workbook exists) does this raise.
-      if (!Cfb.isCfb(head))
-        sys.error(s"Unable to stream oversized workbook '$p': it is neither " +
-          "a zip archive nor an OLE container")
-      if (len >= FormatMaxBytes) oversizedCfbError(p, len)
-      val bytes = {
-        val in = LineSource.openStream(conf, p)
-        try {
-          val b = in.readNBytes(FormatMaxBytes.toInt)
-          // unknown length (failed stat): a saturated ceiling read IS
-          // over-limit — the statted guard rejects len >= FormatMaxBytes,
-          // and a file of exactly that size must fail identically whether
-          // or not its stat succeeded
-          if (b.length == FormatMaxBytes.toInt)
-            oversizedCfbError(p, b.length.toLong)
-          b
-        } finally in.close()
-      }
-      return parseWorkbook(p, bytes, password).iterator.flatMap { sheet =>
-        sheet.rows.zipWithIndex.map { case (cells, i) => (q, sheet.name, i.toLong, cells) }
-      }
+    val head = { val in = open(); try in.readNBytes(8) finally in.close() }
+    if (isZip(head)) return zipRows(file, open)
+    if (!Cfb.isCfb(head)) sys.error(s"Unable to read the file '$file'")
+    if (len >= FormatMaxBytes)
+      sys.error(s"Unable to read oversized workbook '$file' ($len bytes): OLE " +
+        "containers need a full in-memory parse and the format tops out at " +
+        "2 GiB — the file is corrupt or mislabelled")
+    val bytes = { val in = open(); try in.readAllBytes() finally in.close() }
+    if (OoxmlCrypto.isEncrypted(bytes)) password match {
+      case Some(pw) =>
+        val zip = OoxmlCrypto.decrypt(bytes, pw)
+        zipRows(file, () => new ByteArrayInputStream(zip))
+      case None => sys.error(s"Unable to read the file '$file'; it is " +
+        "password protected (set file_password)")
     }
-    // scan 1: metadata parts
-    val meta = scanZip(conf, p) { (name, zin) =>
+    else Biff8.parse(bytes).iterator.flatMap { sheet =>
+      sheet.rows.zipWithIndex.map { case (cells, i) => (file, sheet.name, i.toLong, cells) }
+    }
+  }
+
+  /** The three-scan StAX walk of one zip workbook (metadata → per-sheet
+    * spans → lazy row emission), memory bounded by the metadata parts plus
+    * ONE row, never the workbook bytes. Sheets come in zip-entry order; a
+    * sheet with no populated cell has no rows. */
+  private def zipRows(file: String, open: () => InputStream)
+      : Iterator[(String, String, Long, Seq[String])] = {
+    // scan 1: metadata parts, and every part's name
+    val names = mutable.HashSet.empty[String]
+    val meta = scanZip(open) { (name, zin) =>
+      names += name
       if (MetaParts(name)) Some(name -> zin.readAllBytes()) else None
     }.toMap
-    val workbook = meta.getOrElse("xl/workbook.xml", sys.error(s"Not an xlsx: no xl/workbook.xml in '$p'"))
+    val workbook = meta.getOrElse("xl/workbook.xml",
+      sys.error(s"Not an xlsx: no xl/workbook.xml in '$file'"))
     val shared = sharedStringsOf(meta.get("xl/sharedStrings.xml"))
     val styleIsDate = stylesOf(meta.get("xl/styles.xml"))
     // a part can back SEVERAL sheets (broken/missing rels all falling back
-    // to the same target) — the in-memory path emits each such sheet with
-    // the part's rows, so the streamed path must too
+    // to the same target): each such sheet gets the part's rows
     val partToNames: Map[String, Seq[String]] =
       sheetTargetsOf(workbook, meta.get("xl/_rels/workbook.xml.rels"))
         .groupBy(_._2).view.mapValues(_.map(_._1)).toMap
+    partToNames.keys.find(!names(_)).foreach(part =>
+      sys.error(s"Missing sheet part $part in '$file'"))
     // scan 2: per-sheet populated spans (cheap StAX pass, values discarded)
-    val spans: Map[String, (Int, Int, Int, Int)] = scanZip(conf, p) { (name, zin) =>
+    val spans: Map[String, (Int, Int, Int, Int)] = scanZip(open) { (name, zin) =>
       if (!partToNames.contains(name)) None
       else {
         var span: (Int, Int, Int, Int) = null
@@ -434,30 +309,23 @@ object Excel {
         Option(span).map(name -> _)
       }
     }.toMap
-    // scan 3: lazy row emission, one open stream walked entry by entry;
-    // a task-completion listener closes the stream even when the consumer
-    // abandons the iterator early (limit/head short-circuits)
+    // scan 3: lazy row emission, one open stream walked entry by entry
     new Iterator[(String, String, Long, Seq[String])] {
-      private val zin =
-        new ZipInputStream(new java.io.BufferedInputStream(LineSource.openStream(conf, p)))
+      private val zin = new ZipInputStream(new java.io.BufferedInputStream(open()))
       private var closed = false
-      Option(org.apache.spark.TaskContext.get()).foreach(
-        _.addTaskCompletionListener[Unit] { _ =>
-          if (!closed) { closed = true; try zin.close() catch { case _: Exception => () } }
-        })
       private var cur: Iterator[(String, String, Long, Seq[String])] = Iterator.empty
 
       private def advance(): Unit = {
         while (!cur.hasNext && !closed) {
           val e = zin.getNextEntry
           if (e == null) { closed = true; zin.close() }
-          else if (partToNames.contains(e.getName) && spans.contains(e.getName)) {
+          else if (spans.contains(e.getName)) {
             val sheetNames = partToNames(e.getName)
             val (rowMin, rowMax, colMin, colMax) = spans(e.getName)
             cur = paddedRows(new CellCursor(zin, shared, styleIsDate),
                 rowMin, rowMax, colMin, colMax)
               .flatMap { case (rr, cells) =>
-                sheetNames.map(n => (q, n, (rr - rowMin).toLong, cells))
+                sheetNames.map(n => (file, n, (rr - rowMin).toLong, cells))
               }
           }
         }
@@ -468,11 +336,10 @@ object Excel {
   }
 
   /** Group a document-ordered cell stream into padded rows over the sheet's
-    * populated span — the streaming twin of [[sheetRows]]'s HashMap+pad.
-    * Rows between populated ones (and cells with no value) surface as
-    * nulls, identical to the in-memory path. Worksheet rows must be in
-    * ascending order (the ECMA-376 serialisation is; a writer that
-    * back-references rows would need the in-memory path). */
+    * populated span (`excel.rb:66-77` first_column..last_column). Rows
+    * between populated ones (and cells with no value) surface as nulls.
+    * Worksheet rows must be in ascending order, as the ECMA-376
+    * serialisation writes them; a workbook whose rows go back fails. */
   private def paddedRows(cells: Iterator[(Int, Int, String)],
                          rowMin: Int, rowMax: Int,
                          colMin: Int, colMax: Int): Iterator[(Int, Seq[String])] =

@@ -1,7 +1,11 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+
+import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
 
 /** Per-file ordered line access — the engine's equivalent of the
   * reference's text streaming (`lib/ndr_import/file/text.rb:15-47`) and its
@@ -13,11 +17,13 @@ import org.apache.spark.sql.functions._
   * O(line) memory whatever its size, so line numbers are exact and
   * per-file ordering is free — no global sort, no shuffle. Parallelism
   * comes from MANY files, never from within one text file, whose
-  * semantics (header/footer/segmentation) are sequential.
+  * semantics (header/footer/segmentation) are sequential. Its per-file
+  * runner ([[perFile]]) and encoding probe ([[probe]]) also read every
+  * workbook ([[Excel.tables]]) and XML file ([[XmlSource.records]]).
   *
-  * [[fileTexts]]/[[splitLines]] decode a whole document as one string;
-  * they serve only readers that need the full text (the XML slurp and its
-  * control-character retry, the XML metadata probe, Word).
+  * [[decodeSmart]]/[[splitLines]] decode a whole document as one string;
+  * they serve only the whole-document readers (the XML metadata DOM,
+  * Word).
   */
 object LineSource {
 
@@ -45,13 +51,6 @@ object LineSource {
     }
   }
 
-  private val decodeSmartUdf = udf(decodeSmart _)
-
-  /** One row per file: (file, text). */
-  def fileTexts(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path").as("file"), decodeSmartUdf(col("content")).as("text"))
-
   /** Split decoded text into chomped lines, Ruby `each_line`-style (no
     * phantom empty line after a trailing newline). */
   def splitLines(text: Column): Column = {
@@ -59,12 +58,6 @@ object LineSource {
     when(size(arr) > 0 && element_at(arr, -1) === "", slice(arr, lit(1), size(arr) - 1))
       .otherwise(arr)
   }
-
-  /** Workbooks and XML files above this size take their streaming
-    * readers ([[Excel.tables]], the importer's XML branch); smaller ones
-    * keep the whole-document parse, whose retry semantics need every
-    * byte. Text, CSV, JSON Lines and VCF always stream. */
-  val DefaultInMemoryMaxBytes: Long = 256L * 1024 * 1024
 
   /** (file, lineno, line) — lineno 0-based per file, exact. */
   def lines(spark: SparkSession, paths: Seq[String]): DataFrame =
@@ -76,99 +69,70 @@ object LineSource {
   def csvLines(spark: SparkSession, paths: Seq[String]): DataFrame =
     streamedLines(spark, paths, csvRecordIterator)
 
-  /** The one text reader: (file, lineno, line), each file read by one task,
-    * two passes like the reference's delimited encoding probe
-    * (`helpers/file/delimited.rb:48-88` — the first pass proves the
-    * encoding, the second streams), so memory stays O(line), never
-    * O(file). `records` splits a decoded file into its lines; a line it
-    * drops takes no `lineno`. Spark's file index lists `paths` (globs,
-    * directories, hidden files, a missing path failing here, naming it)
-    * without reading a byte; its files become a local relation, which
-    * spreads them over min(files, defaultParallelism) partitions with no
-    * exchange. */
+  /** The one text reader: (file, lineno, line), two passes per file like
+    * the reference's delimited encoding probe (`helpers/file/delimited.rb:48-88`
+    * — the first pass proves the encoding, the second streams), so memory
+    * stays O(line), never O(file). `records` splits a decoded file into
+    * its lines; a line it drops takes no `lineno`. */
   private[sources] def streamedLines(spark: SparkSession, paths: Seq[String],
       records: java.io.BufferedReader => Iterator[String]): DataFrame = {
     import spark.implicits._
-    val conf = TaskConf(spark)
-    // inputFiles reports URIs; the Path spelling is binaryFile's `path`
-    val files = spark.read.format("binaryFile").load(paths: _*).inputFiles
-      .map(u => new org.apache.hadoop.fs.Path(new java.net.URI(u)).toString)
-    spark.createDataset(files.toSeq)
-      .mapPartitions { it =>
-        // one reader open at a time per partition; close it even when the
-        // consumer abandons the iterator early (limit/head)
-        var open: java.io.Reader = null
-        Option(org.apache.spark.TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit] { _ =>
-            if (open != null) try open.close() catch { case _: Exception => () }
-          })
-        it.flatMap { f =>
-          val cs = probeCharset(conf.value, f)
-          val br = openReader(conf.value, f, cs)
-          // close the predecessor on handoff: it is either already closed
-          // (iterator exhausted) or was abandoned mid-file (zero-line file,
-          // consumer short-circuit) — double-close is a no-op, so handoff
-          // plus the completion listener covers every path
-          if (open != null) try open.close() catch { case _: Exception => () }
-          open = br
-          records(br).zipWithIndex.map { case (l, i) => (f, i.toLong, l) }
-        }
-      }.toDF("file", "lineno", "line")
+    perFile(spark, paths) { (file, _, open) =>
+      val (cs, _) = probe(open)(_ => ())
+      records(openReader(open, cs)).zipWithIndex.map { case (l, i) => (file, i.toLong, l) }
+    }.toDF("file", "lineno", "line")
   }
 
-  /** Byte length of every path (-1 where the stat failed — exotic
-    * filesystems). Stats in parallel on a DEDICATED bounded pool: serial
-    * per-path HEAD calls would block the driver for minutes over object
-    * stores with 100k-file inputs, and blocking I/O on the JVM-wide
-    * commonPool would starve its other users. The one stat behind every
-    * size-routed reader: Excel's routing and its fallback 2 GiB guard share
-    * one map, and the importer's XML branch routes on it too. */
-  private[graft] def statLengths(spark: SparkSession,
-                                 paths: Seq[String]): Map[String, Long] = {
-    if (paths.isEmpty) return Map.empty
-    val conf = spark.sessionState.newHadoopConf()
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(32, math.max(1, paths.size)))
-    try {
-      val futures = paths.map { p =>
-        p -> pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long =
-            try {
-              val hp = new org.apache.hadoop.fs.Path(p)
-              hp.getFileSystem(conf).getFileStatus(hp).getLen
-            } catch { case _: Exception => -1L }
+  /** The one per-file runner behind every streamed reader (text, CSV, JSON
+    * Lines, VCF, workbooks, XML). Spark's file index lists `paths` (globs,
+    * directories, hidden files, `k=v` directories, a missing path failing
+    * here, naming it) without reading a byte; its non-empty files become a
+    * local relation, which spreads them over min(files,
+    * defaultParallelism) partitions with no exchange. `read(file, length,
+    * open)` yields one file's rows in one task: `file` is binaryFile's
+    * `path` spelling, `length` the listed byte length, and `open` opens the
+    * file with the session's Hadoop conf. Every stream `open` hands out is
+    * closed when the task moves to the next file or completes, so a
+    * consumer that stops early (limit/head) leaks nothing. */
+  private[sources] def perFile[T: Encoder](spark: SparkSession, paths: Seq[String])(
+      read: (String, Long, () => java.io.InputStream) => Iterator[T]): Dataset[T] = {
+    import spark.implicits._
+    val conf = TaskConf(spark)
+    val listed = spark.read.format("binaryFile").load(paths: _*).queryExecution.analyzed
+      .collect { case r: LogicalRelation => r.relation }
+      .collect { case r: HadoopFsRelation => r.location.listFiles(Nil, Nil) }
+      .flatten.flatMap(_.files).map(f => (f.getPath.toString, f.getLen))
+    spark.createDataset(listed).mapPartitions { it =>
+      val opened = scala.collection.mutable.ArrayBuffer.empty[java.io.Closeable]
+      def closeOpened(): Unit = {
+        opened.foreach(c => try c.close() catch { case _: Exception => () })
+        opened.clear()
+      }
+      Option(org.apache.spark.TaskContext.get())
+        .foreach(_.addTaskCompletionListener[Unit](_ => closeOpened()))
+      it.flatMap { case (file, len) =>
+        // the previous file's streams are exhausted or abandoned by now
+        closeOpened()
+        read(file, len, () => {
+          val in = openStream(conf.value, file)
+          opened += in
+          in
         })
       }
-      futures.map { case (p, f) => p -> f.get() }.toMap
-    } finally pool.shutdown()
-  }
-
-  /** The Hadoop-qualified form of a path ("file:/tmp/x", "hdfs://nn/x") —
-    * what `binaryFile`'s `path` column reports. Excel's streamed reader
-    * emits THIS as its `file` value, so a workbook has one spelling
-    * whichever reader read it. Resolved DRIVER-SIDE with the session's
-    * Hadoop conf (session-level `fs.defaultFS`/scheme settings included) —
-    * an executor-side default `Configuration()` could qualify differently
-    * from binaryFile. */
-  private[graft] def qualifiedPath(spark: SparkSession, p: String): String = {
-    val hp = new org.apache.hadoop.fs.Path(p)
-    try hp.getFileSystem(spark.sessionState.newHadoopConf()).makeQualified(hp).toString
-    catch { case _: Exception => p }
+    }
   }
 
   /** The session's Hadoop conf (`spark.hadoop.*` keys, runtime `fs.*`
     * settings, credentials, `fs.<scheme>.impl`) as the key/value pairs a
-    * task carries; `value` rebuilds it once per task, so executors open
-    * files with the conf the driver listed them with. Spark's
-    * `SerializableConfiguration` gzips every key's source list, which
-    * costs about 20 ms per task, more than reading a small file. */
+    * task carries, so executors open files with the conf the driver listed
+    * them with. `value` is built once per JVM for each distinct set of
+    * pairs and reused by every task that carries the same set; a session
+    * whose keys change between reads carries a new set, and so a new conf.
+    * Spark's `SerializableConfiguration` gzips every key's source list,
+    * which costs about 20 ms per task, more than reading a small file. */
   private[sources] final class TaskConf private (entries: Array[(String, String)])
       extends Serializable {
-    @transient lazy val value: org.apache.hadoop.conf.Configuration = {
-      val c = new org.apache.hadoop.conf.Configuration(false)
-      entries.foreach { case (k, v) => c.set(k, v) }
-      c
-    }
+    @transient lazy val value: Configuration = TaskConf.built(entries.toSeq)
   }
 
   private[sources] object TaskConf {
@@ -177,58 +141,74 @@ object LineSource {
       new TaskConf(spark.sessionState.newHadoopConf().iterator.asScala
         .map(e => e.getKey -> e.getValue).toArray)
     }
+
+    /** The few most recently used confs, keyed by their pairs. */
+    private val recent =
+      new java.util.LinkedHashMap[Seq[(String, String)], Configuration](8, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[Seq[(String, String)], Configuration]): Boolean = size() > 4
+      }
+
+    private def built(pairs: Seq[(String, String)]): Configuration = recent.synchronized {
+      recent.computeIfAbsent(pairs, _ => {
+        val c = new Configuration(false)
+        pairs.foreach { case (k, v) => c.set(k, v) }
+        c
+      })
+    }
   }
 
-  private[sources] def openStream(conf: org.apache.hadoop.conf.Configuration,
-                                  p: String): java.io.InputStream = {
+  private def openStream(conf: Configuration, p: String): java.io.InputStream = {
     val hp = new org.apache.hadoop.fs.Path(p)
     hp.getFileSystem(conf).open(hp)
   }
 
-  /** Pass 1: BOM sniff + strict UTF-8 validation, streaming (no
-    * materialisation). Mirrors decodeSmart's probe order exactly. */
-  private[sources] def probeCharset(conf: org.apache.hadoop.conf.Configuration,
-                                    p: String): java.nio.charset.Charset = {
-    val in = new java.io.BufferedInputStream(openStream(conf, p))
+  /** Pass 1: BOM sniff, then strict UTF-8 validation, streamed — the same
+    * probe order as [[decodeSmart]]. `check` reads the text as it is
+    * decoded (an XML file parses it; a text file needs nothing), so the
+    * common case costs one read. Returns the charset and `check`'s verdict
+    * in it — None when the file proved not to be UTF-8, so the caller
+    * checks it again in Windows-1252 if it needs a verdict. */
+  private[sources] def probe[A](open: () => java.io.InputStream)(
+      check: java.io.Reader => A): (Charset, Option[A]) = {
+    val in = new java.io.BufferedInputStream(open())
     try {
       in.mark(4)
       val b0 = in.read(); val b1 = in.read()
-      if (b0 == 0xFE && b1 == 0xFF) return java.nio.charset.StandardCharsets.UTF_16BE
-      if (b0 == 0xFF && b1 == 0xFE) return java.nio.charset.StandardCharsets.UTF_16LE
-      // no UTF-16 BOM: rewind, skip a UTF-8 BOM if present, then validate
-      // the whole remainder as strict UTF-8 in 64 KiB chunks
+      val utf16 =
+        if (b0 == 0xFE && b1 == 0xFF) StandardCharsets.UTF_16BE
+        else if (b0 == 0xFF && b1 == 0xFE) StandardCharsets.UTF_16LE
+        else null
+      if (utf16 != null) return (utf16, Some(check(new java.io.InputStreamReader(in, utf16))))
       in.reset()
-      in.mark(4)
-      val hasUtf8Bom = in.read() == 0xEF && in.read() == 0xBB && in.read() == 0xBF
-      if (!hasUtf8Bom) in.reset()
-      val dec = java.nio.charset.StandardCharsets.UTF_8.newDecoder()
-        .onMalformedInput(java.nio.charset.CodingErrorAction.REPORT)
-        .onUnmappableCharacter(java.nio.charset.CodingErrorAction.REPORT)
-      val reader = new java.io.InputStreamReader(in, dec)
-      val buf = new Array[Char](64 * 1024)
+      skipUtf8Bom(in)
+      val strict = new java.io.InputStreamReader(in, StandardCharsets.UTF_8.newDecoder()
+        .onMalformedInput(CodingErrorAction.REPORT)
+        .onUnmappableCharacter(CodingErrorAction.REPORT))
       try {
-        while (reader.read(buf) >= 0) ()
-        java.nio.charset.StandardCharsets.UTF_8
+        val verdict = check(strict)
+        val buf = new Array[Char](64 * 1024)
+        while (strict.read(buf) >= 0) ()
+        (StandardCharsets.UTF_8, Some(verdict))
       } catch {
-        case _: java.nio.charset.CharacterCodingException =>
-          java.nio.charset.Charset.forName("windows-1252")
+        case _: java.nio.charset.CharacterCodingException => (Charset.forName("windows-1252"), None)
       }
     } finally in.close()
   }
 
+  private def skipUtf8Bom(in: java.io.BufferedInputStream): Unit = {
+    in.mark(3)
+    if (!(in.read() == 0xEF && in.read() == 0xBB && in.read() == 0xBF)) in.reset()
+  }
+
   /** Pass 2 reader: positioned past any BOM, decoding with the probed
     * charset (UTF-16 readers also consume the BOM). */
-  private def openReader(conf: org.apache.hadoop.conf.Configuration, p: String,
-                         cs: java.nio.charset.Charset): java.io.BufferedReader = {
-    val in = new java.io.BufferedInputStream(openStream(conf, p))
-    val utf16 = cs == java.nio.charset.StandardCharsets.UTF_16BE ||
-      cs == java.nio.charset.StandardCharsets.UTF_16LE
-    if (utf16) { in.read(); in.read() } // skip BOM
-    else {
-      in.mark(3)
-      val hasUtf8Bom = in.read() == 0xEF && in.read() == 0xBB && in.read() == 0xBF
-      if (!hasUtf8Bom) in.reset()
-    }
+  private[sources] def openReader(open: () => java.io.InputStream,
+                                  cs: Charset): java.io.BufferedReader = {
+    val in = new java.io.BufferedInputStream(open())
+    if (cs == StandardCharsets.UTF_16BE || cs == StandardCharsets.UTF_16LE) {
+      in.read(); in.read() // skip BOM
+    } else skipUtf8Bom(in)
     new java.io.BufferedReader(new java.io.InputStreamReader(in, cs), 64 * 1024)
   }
 

@@ -1,13 +1,10 @@
 package graft.sources
 
 import graft.model.TableMapping
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.io.StringReader
-import java.io.StringWriter
-import javax.xml.stream.{XMLInputFactory, XMLOutputFactory, XMLStreamConstants}
+import java.io.{Reader, StringReader, StringWriter}
+import javax.xml.stream.{XMLInputFactory, XMLOutputFactory, XMLStreamConstants, XMLStreamException}
 import scala.collection.mutable
 
 /** XML record extraction (S6 streaming / S7 slurp / S8 metadata —
@@ -16,17 +13,20 @@ import scala.collection.mutable
   *
   * Each file is split into `xml_record_xpath` record elements with a StAX
   * cursor (memory-bounded — the reference's `Nokogiri::XML::Reader`
-  * equivalent), executor-side, one task per file. Record matching follows
-  * the reference: records are children of the root matching the xpath's
-  * segments (the reference prepends a star-slash wildcard), or root children whose NAME matches a regex when
+  * equivalent), executor-side, one task per file, whatever its size.
+  * Record matching follows the reference: records are children of the
+  * root matching the xpath's segments (the reference prepends a star-slash
+  * wildcard), or root children whose NAME matches a regex when
   * `pattern_match_record_xpath` (`file/xml.rb:92-106`). A same-name,
   * same-attributes element nested inside another raises the reference's
   * NestingError (`xml_streaming.rb:45-56`).
   *
-  * Control characters (forbidden in XML 1.0) are escaped on a failed parse
-  * and the parse retried (`helpers/file/xml.rb:60-74`); character
-  * references to control chars are unescaped first then escaped as text
-  * (`control_char_escaper.rb:10-49`).
+  * A document that does not parse as strict XML 1.0 is split again with
+  * its control characters (forbidden in XML 1.0) escaped
+  * (`helpers/file/xml.rb:60-74`); character references to control chars
+  * are escaped as text too (`control_char_escaper.rb:10-49`). The strict
+  * parse runs before the first record is emitted, folded into the
+  * encoding probe's pass, so a file costs two reads, as a text file does.
   */
 object XmlSource {
 
@@ -34,51 +34,115 @@ object XmlSource {
     s"Element '$name' was found nested inside another of the same type.\n" +
     "This is not accessible, and a known limitation of XmlStreaming.")
 
-  /** `CHARACTER_REFERENCES` (`control_char_escaper.rb:11`). */
-  private val CharRefs = "&#(?:(\\d+)|x([0-9a-fA-F]+));".r
+  /** The control-character escape, streamed: a character reference to a
+    * control character (`CHARACTER_REFERENCES`,
+    * `control_char_escaper.rb:11`: `&#1;`, `&#x1f;`) and a raw control
+    * character other than tab, LF and CR both become printable `0x..`
+    * text (ndr_support `UTF8Encoding#escape_control_chars!`); every other
+    * character passes through. It holds at most one pending reference,
+    * never the document. */
+  private[graft] final class ControlCharEscaper(in: Reader) extends Reader {
+    private val src = new java.io.PushbackReader(in, 1)
+    private val out = new java.lang.StringBuilder
+    private var pos = 0
 
-  /** Escape control chars as printable `0x..` text (ndr_support
-    * `UTF8Encoding#escape_control_chars!` convention). */
-  def escapeControlChars(data: String): String = {
-    val unescaped = CharRefs.replaceAllIn(data, m => {
-      val code = if (m.group(1) != null) m.group(1).toInt else Integer.parseInt(m.group(2), 16)
-      if (code < 32 && code != 9 && code != 10 && code != 13)
-        java.util.regex.Matcher.quoteReplacement(f"0x$code%02x")
-      else m.matched
-    })
-    unescaped.map {
-      case c if c < ' ' && c != '\t' && c != '\n' && c != '\r' => f"0x${c.toInt}%02x"
-      case c => c.toString
-    }.mkString
+    private def isControl(c: Int) = c < ' ' && c != '\t' && c != '\n' && c != '\r'
+    private def isDigit(c: Int, hex: Boolean) = (c >= '0' && c <= '9') ||
+      hex && ((c >= 'a' && c <= 'f') || (c >= 'A' && c <= 'F'))
+
+    /** Appends the escape of the next character or reference; false at
+      * the end of the input. */
+    private def fill(): Boolean = {
+      val c = src.read()
+      if (c < 0) false
+      else if (c != '&') {
+        if (isControl(c)) out.append(f"0x$c%02x") else out.append(c.toChar)
+        true
+      } else {
+        val ref = new java.lang.StringBuilder("&")
+        var d = src.read()
+        if (d == '#') {
+          ref.append('#')
+          d = src.read()
+          val hex = d == 'x'
+          if (hex) { ref.append('x'); d = src.read() }
+          val digits = ref.length
+          while (isDigit(d, hex)) { ref.append(d.toChar); d = src.read() }
+          if (d == ';' && ref.length > digits) {
+            val n = ref.substring(digits)
+            val code = if (hex) Integer.parseInt(n, 16) else n.toInt
+            if (isControl(code)) out.append(f"0x$code%02x") else out.append(ref).append(';')
+            return true
+          }
+        }
+        // not a reference: its text passes through, and the character
+        // that ended it is read afresh
+        out.append(ref)
+        if (d >= 0) src.unread(d)
+        true
+      }
+    }
+
+    override def read(cbuf: Array[Char], off: Int, len: Int): Int = {
+      if (len == 0) return 0
+      if (pos == out.length) {
+        out.setLength(0); pos = 0
+        while (out.length < len && fill()) ()
+        if (out.length == 0) return -1
+      }
+      val n = math.min(len, out.length - pos)
+      out.getChars(pos, pos + n, cbuf, off)
+      pos += n
+      n
+    }
+
+    override def close(): Unit = src.close()
   }
+
+  private def inputFactory(): XMLInputFactory = {
+    val f = XMLInputFactory.newInstance()
+    f.setProperty(XMLInputFactory.IS_COALESCING, true)
+    f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
+    f
+  }
+
+  /** Does the text parse as strict XML 1.0? A decoding failure is no
+    * answer: it is rethrown, for the encoding probe to catch. */
+  private def wellFormed(text: Reader): Boolean =
+    try {
+      val r = inputFactory().createXMLEventReader(text)
+      while (r.hasNext) r.nextEvent()
+      true
+    } catch {
+      case e: XMLStreamException =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .collectFirst { case c: java.nio.charset.CharacterCodingException => c }
+          .foreach(c => throw c)
+        false
+    }
+
+  /** Records of one decoded document, escaped when it is not well formed. */
+  private def split(text: Reader, wellFormed: Boolean, recordXpath: String,
+                    patternMatch: Boolean): Iterator[String] =
+    splitRecordsStrict(if (wellFormed) text else new ControlCharEscaper(text),
+      recordXpath, patternMatch)
 
   private case class StackItem(name: String, attrs: Map[String, String])
 
   /** Split one decoded XML document into its record elements.
     * Returns record XML strings in document order. */
   def splitRecords(xmlText: String, recordXpath: String,
-                   patternMatch: Boolean): Seq[String] = {
-    try splitRecordsStrict(new StringReader(xmlText), recordXpath, patternMatch).toSeq
-    catch {
-      case e: NestingError => throw e
-      case _: javax.xml.stream.XMLStreamException =>
-        splitRecordsStrict(new StringReader(escapeControlChars(xmlText)),
-          recordXpath, patternMatch).toSeq
-    }
-  }
+                   patternMatch: Boolean): Seq[String] =
+    split(new StringReader(xmlText), wellFormed(new StringReader(xmlText)),
+      recordXpath, patternMatch).toSeq
 
-  /** Streaming variant: records lazily off a java.io.Reader — memory is
-    * bounded by one record, not the file. Used by [[recordsStreaming]]
-    * for huge files; no control-char retry (that needs the full text). */
-  def splitRecordsStrict(source: java.io.Reader, recordXpath: String,
+  /** Records lazily off a reader, parsed strictly — memory is bounded by
+    * one record, not the document. */
+  def splitRecordsStrict(source: Reader, recordXpath: String,
                          patternMatch: Boolean): Iterator[String] = {
     val segments = recordXpath.split("/").filter(_.nonEmpty).toSeq
-    val inF = XMLInputFactory.newInstance()
-    inF.setProperty(XMLInputFactory.IS_COALESCING, true)
-    inF.setProperty(XMLInputFactory.SUPPORT_DTD, false)
     val outF = XMLOutputFactory.newInstance()
-
-    val reader = inF.createXMLEventReader(source)
+    val reader = inputFactory().createXMLEventReader(source)
     val stack = mutable.ArrayBuffer.empty[StackItem]
     var capture: StringWriter = null
     var captureWriter: javax.xml.stream.XMLEventWriter = null
@@ -164,60 +228,24 @@ object XmlSource {
     }
   }
 
-  private val outSchema = StructType(Seq(
-    StructField("file", StringType),
-    StructField("index", LongType),
-    StructField("record_xml", StringType)))
-
-  /** Read files → one row per record element: (file, index, record_xml).
-    * Per-file task via binaryFile; decode probes UTF-16/UTF-8/Windows-1252
-    * like the text sources (S18). */
+  /** Read files → one row per record element: (file, index, record_xml),
+    * through the per-file runner ([[LineSource.perFile]]). Pass 1 is the
+    * text sources' encoding probe (S18: UTF-16 BOM → strict UTF-8 →
+    * Windows-1252) with the strict parse folded in; pass 2 streams the
+    * records, escaped when pass 1 found the document ill formed. */
   def records(spark: SparkSession, paths: Seq[String], mapping: TableMapping): DataFrame = {
     val xpath = mapping.xmlRecordXpath.getOrElse(
       sys.error("xml_record_xpath is required for xml tables"))
     val pattern = mapping.patternMatchRecordXpath
     import spark.implicits._
-    val texts = LineSource.fileTexts(spark, paths)
-    texts.select(col("file"), col("text")).as[(String, String)]
-      .flatMap { case (file, text) =>
-        splitRecords(text, xpath, pattern).zipWithIndex.map {
-          case (xml, i) => (file, i.toLong, xml)
-        }
-      }.toDF("file", "index", "record_xml")
-  }
-
-  /** True-streaming variant for HUGE files (the 100 TB posture):
-    * `binaryFiles` hands each executor a [[org.apache.spark.input.PortableDataStream]]
-    * and the StAX cursor runs directly on it — memory is bounded by one
-    * record, never the file. Encoding follows the SAME probe as the text
-    * sources (S18: UTF-16 BOM → strict UTF-8 → Windows-1252), streamed in
-    * O(1) memory; only the control-char escape retry needs the batch
-    * path. */
-  def recordsStreaming(spark: SparkSession, paths: Seq[String],
-                       mapping: TableMapping): DataFrame = {
-    val xpath = mapping.xmlRecordXpath.getOrElse(
-      sys.error("xml_record_xpath is required for xml tables"))
-    val pattern = mapping.patternMatchRecordXpath
-    import spark.implicits._
-    val conf = LineSource.TaskConf(spark)
-    val files = spark.sparkContext.binaryFiles(paths.mkString(","))
-    spark.createDataset(files.flatMap { case (file, pds) =>
-      val cs = LineSource.probeCharset(conf.value, file)
-      val in = pds.open()
-      val buffered = new java.io.BufferedInputStream(in, 256 * 1024)
-      // skip the BOM the probe found (the parser must not see it as text)
-      if (cs == java.nio.charset.StandardCharsets.UTF_16BE ||
-          cs == java.nio.charset.StandardCharsets.UTF_16LE) {
-        buffered.read(); buffered.read()
-      } else {
-        buffered.mark(4)
-        if (!(buffered.read() == 0xEF && buffered.read() == 0xBB &&
-              buffered.read() == 0xBF)) buffered.reset()
+    LineSource.perFile(spark, paths) { (file, _, open) =>
+      val (cs, verdict) = LineSource.probe(open)(wellFormed)
+      val strict = verdict.getOrElse {
+        val text = LineSource.openReader(open, cs)
+        try wellFormed(text) finally text.close()
       }
-      val reader = new java.io.InputStreamReader(buffered, cs)
-      splitRecordsStrict(reader, xpath, pattern).zipWithIndex.map {
-        case (xml, i) => (file, i.toLong, xml)
-      }
-    }).toDF("file", "index", "record_xml")
+      split(LineSource.openReader(open, cs), strict, xpath, pattern)
+        .zipWithIndex.map { case (xml, i) => (file, i.toLong, xml) }
+    }.toDF("file", "index", "record_xml")
   }
 }

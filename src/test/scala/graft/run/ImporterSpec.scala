@@ -3,7 +3,7 @@ package graft.run
 import graft.SparkSpec
 import graft.compile.MappingCompiler
 import graft.model.MappingLoader
-import graft.sources.{LineSource, Tabular}
+import graft.sources.{Excel, ExcelFixtures, LineSource, SyntheticOffice, Tabular}
 import org.apache.spark.sql.functions._
 
 import java.io.{File, FileOutputStream}
@@ -300,6 +300,100 @@ class ImporterSpec extends SparkSpec {
       assert(people.select(element_at(col("fields"), "name")).collect()
         .map(_.getString(0)).sorted.toSeq == Seq("DOE", "SMITH"))
     }
+  }
+
+  test("xlsx and XML imports read by streaming: no binaryFile scan, no Exchange") {
+    val dir = tmpDir()
+    val xlsx = write(dir, "people.xlsx", ExcelFixtures.buildXlsx(Map(
+      "xl/workbook.xml" ->
+        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+          | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
+          |<sheets><sheet name="People" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin,
+      "xl/_rels/workbook.xml.rels" ->
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+          |<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/>
+          |</Relationships>""".stripMargin,
+      "xl/worksheets/sheet1.xml" ->
+        """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
+          |<row r="1"><c r="A1" t="str"><v>name</v></c></row>
+          |<row r="2"><c r="A2" t="str"><v>SMITH</v></c></row>
+          |<row r="3"><c r="A3" t="str"><v>DOE</v></c></row>
+          |</sheetData></worksheet>""".stripMargin)))
+    val xml = write(dir, "people.xml",
+      "<root><record><name>SMITH</name></record><record><name>DOE</name></record></root>"
+        .getBytes("UTF-8"))
+    val xlsxMappings = MappingLoader.loadTables(
+      """|- canonical_name: people
+         |  filename_pattern: !ruby/regexp /\.xlsx\z/i
+         |  header_lines: 1
+         |  klass: Person
+         |  columns:
+         |  - column: name
+         |    mappings:
+         |    - field: name
+         |""".stripMargin)
+    val xmlMappings = MappingLoader.loadTables(
+      """|- canonical_name: people
+         |  filename_pattern: !ruby/regexp /\.xml\z/i
+         |  format: xml_table
+         |  xml_record_xpath: record
+         |  columns:
+         |  - column: name
+         |    klass: Person
+         |    xml_cell:
+         |      relative_path: ''
+         |    mappings:
+         |    - field: name
+         |""".stripMargin)
+    // the importer checkpoints a workbook's sheets, so the reader's own
+    // plan is pinned as well as the import's
+    Seq(Excel.tables(spark, Seq(xlsx)),
+        Importer.mappedTables(spark, xlsx, xlsxMappings)("people"),
+        Importer.mappedTables(spark, xml, xmlMappings)("people")).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("binaryFile"), s"plan scans binaryFile:\n$plan")
+      assert(!plan.contains("Exchange"), s"plan shuffles:\n$plan")
+    }
+    assert(Excel.tables(spark, Seq(xlsx)).queryExecution.executedPlan.toString
+      .contains("MapPartitions"))
+    Seq(Importer.mappedTables(spark, xlsx, xlsxMappings)("people"),
+        Importer.mappedTables(spark, xml, xmlMappings)("people")).foreach { people =>
+      assert(people.select(element_at(col("fields"), "name")).collect()
+        .map(_.getString(0)).sorted.toSeq == Seq("DOE", "SMITH"))
+    }
+  }
+
+  test("a password-protected docx imports with file_password, and names the fix without it") {
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new ZipOutputStream(bos)
+    z.putNextEntry(new ZipEntry("word/document.xml"))
+    z.write(
+      """<w:document xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main">
+        |<w:body><w:p><w:r><w:t>Hello world,</w:t><w:t> first para</w:t></w:r></w:p>
+        |<w:p><w:r><w:t>second para</w:t></w:r></w:p></w:body></w:document>""".stripMargin
+        .getBytes("UTF-8"))
+    z.closeEntry(); z.close()
+    val docx = write(tmpDir(), "secret.docx", SyntheticOffice.agileEncrypt(bos.toByteArray, "salad"))
+    def lines(password: String) = {
+      val tables = Importer.extract(spark, docx, MappingLoader.loadTables(
+        s"""|- $password
+            |  format: docx
+            |  filename_pattern: !ruby/regexp /\\.docx\\z/i
+            |  klass: SomeTestKlass
+            |  columns:
+            |  - column: one
+            |    mappings:
+            |    - field: one
+            |""".stripMargin))
+      tables.map(_.records).reduce(_ unionByName _).orderBy("index")
+        .select(element_at(col("fields"), "one")).collect().map(_.getString(0)).toSeq
+    }
+    assert(lines("file_password: salad") == Seq("Hello world, first para", "second para"))
+    val ex = intercept[Exception](lines("file_password: null"))
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null &&
+      m.contains("Document is password protected (set file_password)")), messages.mkString("\n"))
   }
 
   test("parquet and orc files route through the mapping pipeline (extension)") {

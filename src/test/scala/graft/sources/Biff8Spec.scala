@@ -16,14 +16,14 @@ class Biff8Spec extends AnyFunSuite {
 
   test("sample_xls.xls parses with expected cells (reference excel_test)") {
     assume(fixture("sample_xls.xls").isDefined)
-    val sheets = Excel.parseWorkbook("sample_xls.xls", fixture("sample_xls.xls").get)
+    val sheets = Biff8.parse(fixture("sample_xls.xls").get)
     assert(sheets.map(_.name) == Seq("Sheet1"))
     assert(sheets.head.rows == Seq(Seq("1A", "1B"), Seq("2A", "2B")))
   }
 
   test("multi-sheet xls incl. empty trailing sheet") {
     assume(fixture("sheet_streaming.xls").isDefined)
-    val sheets = Excel.parseWorkbook("f.xls", fixture("sheet_streaming.xls").get)
+    val sheets = Biff8.parse(fixture("sheet_streaming.xls").get)
     assert(sheets.map(_.name) == Seq("Sheet1", "Sheet 2", "Sheet 3"))
     assert(sheets(0).rows == Seq(Seq("1A1", "1B1"), Seq("1A2", "1B2")))
     assert(sheets(2).rows.isEmpty)
@@ -31,14 +31,14 @@ class Biff8Spec extends AnyFunSuite {
 
   test("xlsx content with .xls extension routes to the xlsx parser") {
     assume(fixture("xlsx_file_xls_extension.xls").isDefined)
-    val sheets = Excel.parseWorkbook("f.xls", fixture("xlsx_file_xls_extension.xls").get)
-    assert(sheets.head.rows == Seq(Seq("1A", "1B"), Seq("2A", "2B")))
+    val sheets = ExcelFixtures.sheets(fixture("xlsx_file_xls_extension.xls").get, name = "f.xls")
+    assert(sheets.head._2 == Seq(Seq("1A", "1B"), Seq("2A", "2B")))
   }
 
   test("plain text with .xls extension is rejected") {
     assume(fixture("txt_file_xls_extension.xls").isDefined)
     val e = intercept[RuntimeException](
-      Excel.parseWorkbook("f.xls", fixture("txt_file_xls_extension.xls").get))
+      ExcelFixtures.sheets(fixture("txt_file_xls_extension.xls").get, name = "f.xls"))
     assert(e.getMessage.contains("Unable to read the file"))
   }
 }

@@ -10,6 +10,15 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * cells; Roo cast rules from `file/excel.rb:31-50`). */
 object ExcelFixtures {
 
+  /** A workbook's sheets as the per-file walk reads them, in the order
+    * their rows come: (sheet name, rows). */
+  def sheets(bytes: Array[Byte], password: Option[String] = None,
+             name: String = "f.xlsx"): Seq[(String, Seq[Seq[String]])] = {
+    val rows = Excel.fileRows(name, bytes.length.toLong,
+      () => new java.io.ByteArrayInputStream(bytes), password).toSeq
+    rows.map(_._2).distinct.map(s => s -> rows.filter(_._2 == s).sortBy(_._3).map(_._4))
+  }
+
   def buildXlsx(parts: Map[String, String]): Array[Byte] = {
     val bos = new ByteArrayOutputStream()
     val z = new ZipOutputStream(bos)
@@ -77,10 +86,10 @@ class ExcelSpec extends AnyFunSuite {
   import ExcelFixtures.testXlsx
 
   test("xlsx: sheets, shared strings, cast rules, padding") {
-    val sheets = Excel.parseXlsx(testXlsx)
-    assert(sheets.map(_.name) == Seq("Sheet1", "Second Sheet"))
+    val sheets = ExcelFixtures.sheets(testXlsx).toMap
+    assert(sheets.keySet == Set("Sheet1", "Second Sheet"))
 
-    val s1 = sheets.head.rows
+    val s1 = sheets("Sheet1")
     assert(s1.length == 3)
     // header: shared strings, incl. rich-text run concat
     assert(s1(0) == Seq("1A", "1B", "rich", null))
@@ -90,19 +99,19 @@ class ExcelSpec extends AnyFunSuite {
     assert(s1(2) == Seq("2018-01-01", "2018-01-01 12:00:00", "inline", null))
 
     // sheet 2: single populated column B → span is just that column
-    assert(sheets(1).rows == Seq(Seq("only")))
+    assert(sheets("Second Sheet") == Seq(Seq("only")))
   }
 
   test("xls extension with zip content parses as xlsx (reference retry)") {
-    assert(Excel.parseWorkbook("file.xls", testXlsx).nonEmpty)
+    assert(ExcelFixtures.sheets(testXlsx, name = "file.xls").nonEmpty)
   }
 
   test("genuine OLE xls raises unsupported; junk raises unable-to-read") {
     val ole = Array[Byte](0xD0.toByte, 0xCF.toByte, 0x11, 0xE0.toByte) ++ Array.fill(16)(0.toByte)
-    val e1 = intercept[RuntimeException](Excel.parseWorkbook("f.xls", ole))
+    val e1 = intercept[RuntimeException](ExcelFixtures.sheets(ole, name = "f.xls"))
     assert(e1.getMessage.contains("Unable to read the file"))
     val e2 = intercept[RuntimeException](
-      Excel.parseWorkbook("f.xlsx", "not excel at all".getBytes))
+      ExcelFixtures.sheets("not excel at all".getBytes, name = "f.xlsx"))
     assert(e2.getMessage.contains("Unable to read the file"))
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** The one text reader: literal rows across encodings, line-ending styles
   * and quoted CSV records, at exact per-file line numbers. */
@@ -98,6 +99,39 @@ class LineSourceSpec extends SparkSpec {
     }
   }
 
+  test("a session fs.* key changed between two reads reaches the second read") {
+    // the task conf is reused across reads; a changed key must not be
+    // served from the conf an earlier read built
+    val p = writeTmp("tagged.txt", "plain\n".getBytes("UTF-8"))
+    Files.write(java.nio.file.Paths.get(p + ".v2"), "second\n".getBytes("UTF-8"))
+    def read(suffix: String) = graft.runtime.GraftSession.withConf(spark,
+        "fs.sessfs.impl" -> classOf[SuffixedFs].getName,
+        "fs.sessfs.impl.disable.cache" -> "true",
+        "fs.sessfs.suffix" -> suffix) {
+      LineSource.lines(spark, Seq(s"sessfs://$p")).collect().map(_.getString(2)).toSeq
+    }
+    assert(read("") == Seq("plain"))
+    assert(read(".v2") == Seq("second"))
+    assert(read("") == Seq("plain"))
+  }
+
+  test("only the listing and the whole-document readers use binaryFile in src/main") {
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val sources = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toSeq
+    // file → how many times `token` appears in it, for the files it appears in
+    def users(token: String) = sources
+      .map { case (f, text) => f -> java.util.regex.Pattern.quote(token).r.findAllMatchIn(text).size }
+      .filter(_._2 > 0).toMap
+    assert(users("sparkContext.binaryFiles").isEmpty)
+    assert(users("DefaultInMemoryMaxBytes").isEmpty)
+    // the file-index listing, then PDF (text and AcroForm), Avro, and the
+    // importer's Word text and XML file_metadata DOM
+    assert(users("format(\"binaryFile\")") == Map(
+      "graft/sources/LineSource.scala" -> 1, "graft/sources/Pdf.scala" -> 2,
+      "graft/sources/Avro.scala" -> 1, "graft/run/Importer.scala" -> 2))
+  }
+
   test("a glob or a directory reads each visible file under it") {
     val dir = Files.createTempDirectory("lines")
     Seq("a.txt" -> "a1\na2\n", "b.txt" -> "b1\n", "c.csv" -> "c1\n",
@@ -127,4 +161,11 @@ class LineSourceSpec extends SparkSpec {
 class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create("sessfs:///")
   override def getScheme: String = "sessfs"
+}
+
+/** [[SessionOnlyFs]] reading each file's sibling named by the conf key
+  * `fs.sessfs.suffix`, so what a read returns shows which conf opened it. */
+class SuffixedFs extends SessionOnlyFs {
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
+    super.open(new org.apache.hadoop.fs.Path(f.toString + getConf.get("fs.sessfs.suffix", "")), bufferSize)
 }

@@ -19,15 +19,15 @@ class OoxmlCryptoSpec extends AnyFunSuite {
     assume(fixture("password_protected_sample_xlsx.xlsx").isDefined)
     val bytes = fixture("password_protected_sample_xlsx.xlsx").get
     assert(OoxmlCrypto.isEncrypted(bytes))
-    val sheets = Excel.parseWorkbook("f.xlsx", bytes, Some("carrot"))
-    assert(sheets.head.rows == Seq(Seq("1A", "1B"), Seq("2A", "2B")))
+    val sheets = ExcelFixtures.sheets(bytes, Some("carrot"))
+    assert(sheets.head._2 == Seq(Seq("1A", "1B"), Seq("2A", "2B")))
   }
 
   test("wrong password raises BadPasswordError; missing password names the fix") {
     assume(fixture("password_protected_sample_xlsx.xlsx").isDefined)
     val bytes = fixture("password_protected_sample_xlsx.xlsx").get
     intercept[OoxmlCrypto.BadPasswordError](OoxmlCrypto.decrypt(bytes, "wrong"))
-    val e = intercept[RuntimeException](Excel.parseWorkbook("f.xlsx", bytes, None))
+    val e = intercept[RuntimeException](ExcelFixtures.sheets(bytes))
     assert(e.getMessage.contains("password protected"))
   }
 

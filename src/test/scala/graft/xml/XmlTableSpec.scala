@@ -263,12 +263,12 @@ class XmlTableSpec extends AnyFunSuite {
       s"<record><id>$i</id><v a='x$i'>payload $i</v></record>").mkString + "</root>"
     java.nio.file.Files.write(dir.resolve("big.xml"), xml.getBytes("UTF-8"))
     val mapping = graft.model.TableMapping(xmlRecordXpath = Some("record"))
-    val batch = graft.sources.XmlSource.records(spark, Seq(dir.toString + "/big.xml"), mapping)
-      .orderBy("index").select("record_xml").collect().map(_.getString(0))
-    val streamed = graft.sources.XmlSource.recordsStreaming(spark, Seq(dir.toString + "/big.xml"), mapping)
-      .orderBy("index").select("record_xml").collect().map(_.getString(0))
-    assert(batch.length == 50 && streamed.length == 50)
-    assert(batch.toSeq == streamed.toSeq)
+    val got = graft.sources.XmlSource.records(spark, Seq(dir.toString + "/big.xml"), mapping)
+      .orderBy("index").select("index", "record_xml").collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(got == (1 to 50).map(i =>
+      ((i - 1).toLong, s"""<record><id>$i</id><v a="x$i">payload $i</v></record>""")))
+    assert(got.map(_._2) == graft.sources.XmlSource.splitRecords(xml, "record", false))
   }
 
   test("streaming records decode UTF-16 (BOM) and Windows-1252 like the batch probe") {
@@ -278,17 +278,17 @@ class XmlTableSpec extends AnyFunSuite {
     val xml = "<root><record><v>café über</v></record></root>"
     // UTF-16LE with BOM (no XML prolog — the reader charset must come from
     // the byte probe, not the parser default)
-    val utf16 = ("﻿" + xml).getBytes("UTF-16LE")
+    val utf16 = ("\uFEFF" + xml).getBytes("UTF-16LE")
     java.nio.file.Files.write(dir.resolve("u16.xml"), utf16)
     // Windows-1252 (é = 0xE9, invalid as UTF-8)
     java.nio.file.Files.write(dir.resolve("w1252.xml"), xml.getBytes("windows-1252"))
     for (f <- Seq("u16.xml", "w1252.xml")) {
-      val batch = graft.sources.XmlSource.records(spark, Seq(s"$dir/$f"), mapping)
+      val got = graft.sources.XmlSource.records(spark, Seq(s"$dir/$f"), mapping)
         .select("record_xml").collect().map(_.getString(0))
-      val streamed = graft.sources.XmlSource.recordsStreaming(spark, Seq(s"$dir/$f"), mapping)
-        .select("record_xml").collect().map(_.getString(0))
-      assert(batch.toSeq == streamed.toSeq, f)
-      assert(streamed.head.contains("café"), s"$f: ${streamed.head}")
+      assert(got.toSeq == Seq("<record><v>café über</v></record>"), f)
+      val bytes = java.nio.file.Files.readAllBytes(dir.resolve(f))
+      assert(got.toSeq == graft.sources.XmlSource.splitRecords(
+        graft.sources.LineSource.decodeSmart(bytes), "record", false), f)
     }
   }
 
