@@ -13,8 +13,8 @@ import scala.xml.XML
   * workbook/rels/sharedStrings/styles parts are read with the JDK zip
   * stream + scala-xml and every worksheet is walked with a StAX cursor,
   * streamed, whatever the workbook's size — no external spreadsheet
-  * library. One table per
-  * worksheet (`excel.rb:20-27`), cells padded to the sheet's column span
+  * library. One table per worksheet (`excel.rb:20-27`), cells padded to
+  * the sheet's column span
   * (`excel.rb:66-77` first_column..last_column) and rendered with Roo's
   * exact cast rules (`excel.rb:31-50`):
   *
@@ -242,7 +242,7 @@ object Excel {
     * below Int.MaxValue: readAllBytes / array allocation throw raw
     * OutOfMemoryError above Int.MaxValue - 8, and the clear bound error
     * must fire first. */
-  private[sources] val FormatMaxBytes: Long = Int.MaxValue.toLong - 8
+  private val FormatMaxBytes: Long = Int.MaxValue.toLong - 8
 
   /** Lazy (file, sheet, lineno, cells) rows of one workbook; `len` is its
     * listed byte length and `open` opens it. A zip workbook streams
