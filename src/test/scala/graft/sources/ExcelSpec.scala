@@ -10,11 +10,12 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * cells; Roo cast rules from `file/excel.rb:31-50`). */
 object ExcelFixtures {
 
-  /** A workbook's sheets as the per-file walk reads them, in the order
-    * their rows come: (sheet name, rows). */
-  def sheets(bytes: Array[Byte], password: Option[String] = None,
-             name: String = "f.xlsx"): Seq[(String, Seq[Seq[String]])] = {
-    val rows = Excel.fileRows(name, bytes.length.toLong,
+  /** A workbook's sheets as the per-file walk reads them from its bytes in
+    * memory, in the order their rows come: (sheet name, rows). `len` is
+    * the length a listing would report. */
+  def sheets(bytes: Array[Byte], password: Option[String] = None, name: String = "f.xlsx",
+             len: Long = -1L): Seq[(String, Seq[Seq[String]])] = {
+    val rows = Excel.fileRows(name, if (len < 0) bytes.length.toLong else len,
       () => new java.io.ByteArrayInputStream(bytes), password).toSeq
     rows.map(_._2).distinct.map(s => s -> rows.filter(_._2 == s).sortBy(_._3).map(_._4))
   }

@@ -32,9 +32,9 @@ class ExcelStreamSpec extends SparkSpec {
     * listing had reported `len` bytes. */
   private def inMemory(bytes: Array[Byte], password: Option[String] = None,
                        len: Long = -1L) =
-    Excel.fileRows("f.xlsx", if (len < 0) bytes.length.toLong else len,
-      () => new java.io.ByteArrayInputStream(bytes), password)
-      .map { case (_, t, l, c) => (t, l, c) }.toSet
+    ExcelFixtures.sheets(bytes, password, len = len).flatMap { case (sheet, rows) =>
+      rows.zipWithIndex.map { case (cells, i) => (sheet, i.toLong, cells) }
+    }.toSet
 
   private def withoutFile(rows: Set[(String, String, Long, Seq[String])]) =
     rows.map { case (_, t, l, c) => (t, l, c) }
