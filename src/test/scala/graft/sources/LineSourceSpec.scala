@@ -166,6 +166,9 @@ class SessionOnlyFs extends org.apache.hadoop.fs.RawLocalFileSystem {
 /** [[SessionOnlyFs]] reading each file's sibling named by the conf key
   * `fs.sessfs.suffix`, so what a read returns shows which conf opened it. */
 class SuffixedFs extends SessionOnlyFs {
-  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream =
-    super.open(new org.apache.hadoop.fs.Path(f.toString + getConf.get("fs.sessfs.suffix", "")), bufferSize)
+  override def open(f: org.apache.hadoop.fs.Path,
+                    bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    val suffix = getConf.get("fs.sessfs.suffix", "")
+    super.open(new org.apache.hadoop.fs.Path(f.toString + suffix), bufferSize)
+  }
 }
