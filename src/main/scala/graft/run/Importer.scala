@@ -151,23 +151,8 @@ object Importer {
       case "xml" | "xml_table" =>
         single { m =>
           val recs = XmlTableTransform.records(XmlSource.records(spark, Seq(file), m), m)
-          // S8 — file metadata evaluated once per file. The document parse
-          // runs on an EXECUTOR (binaryFile row → metadata map); only the
-          // tiny {name → value} map reaches the driver. The metadata
-          // xpaths need the full DOM (reference semantics), so THIS branch
-          // is bounded by binaryFile's 2 GiB record limit — records
-          // themselves stream at any size.
-          if (m.fileMetadata.isEmpty) recs
-          else {
-            import spark.implicits._
-            val meta = m.fileMetadata
-            val values = spark.read.format("binaryFile").load(file)
-              .select(col("content")).as[Array[Byte]]
-              .map(b => XmlSource.metadataValues(LineSource.decodeSmart(b), meta).toSeq)
-              .head().toMap
-            values.foldLeft(recs) { case (df, (k, v)) =>
-              df.withColumn(s"meta_$k", lit(v))
-            }
+          XmlSource.fileMetadata(spark, file, m.fileMetadata).foldLeft(recs) {
+            case (df, (k, v)) => df.withColumn(s"meta_$k", lit(v))
           }
         }
       case "pdf" =>
@@ -175,10 +160,7 @@ object Importer {
       case "acroform" =>
         single(m => acroFormRecords(spark, file, m))
       case "doc" | "docx" =>
-        single { m =>
-          val lines = wordLines(spark, file, m.filePassword)
-          nonTabularOrPlain(m, lines)
-        }
+        single(m => nonTabularOrPlain(m, BinaryDecode.wordLines(spark, Seq(file), m.filePassword)))
       case other => throw new Registry.UnknownFormatError(other)
     }
   }
@@ -257,16 +239,5 @@ object Importer {
     val cells = array(declared.map(n => element_at(col("fields_hash"), n)): _*)
     MappingCompiler(mapping).records(
       guarded.select(col("file"), col("lineno"), cells.as("cells")))
-  }
-
-  private def wordLines(spark: SparkSession, file: String,
-                        password: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.functions.{posexplode, col => c, udf}
-    val wordUdf = udf((b: Array[Byte]) => BinaryDecode.extractWordText(b, password))
-    val texts = spark.read.format("binaryFile").load(file)
-      .select(c("path").as("file"), wordUdf(c("content")).as("text"))
-    texts.select(c("file"),
-        posexplode(LineSource.splitLines(c("text"))).as(Seq("lineno", "line")))
-      .select(c("file"), c("lineno").cast("long").as("lineno"), c("line"))
   }
 }

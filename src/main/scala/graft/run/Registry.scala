@@ -10,8 +10,9 @@ import scala.collection.mutable
   *
   * `files` is driver-side by design, like the reference: containers expand
   * to scratch-dir files (basename-stripped — the reference's zip-slip
-  * defence, `zip.rb:42-47`) and recurse; the expanded paths then feed
-  * `spark.read`/`binaryFile` so the CLUSTER does the heavy reading. At
+  * defence, `zip.rb:42-47`) and recurse; the expanded paths then feed the
+  * format readers, each a task per file (`LineSource.perFile`), so the
+  * CLUSTER does the heavy reading. At
   * 100 TB the unit of parallelism is many files; the archive itself is the
   * one inherently sequential step (central directory + stream decode), so
   * expanding it where the paths are resolved is the honest shape.

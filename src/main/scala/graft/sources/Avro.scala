@@ -5,9 +5,7 @@ import org.apache.avro.Schema
 import org.apache.avro.file.DataFileStream
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** Avro reader + mapping scaffold (S9/S10 — reference
@@ -16,8 +14,10 @@ import scala.jdk.CollectionConverters._
   * The reference stringifies every value and emits the field names as a
   * synthetic header row (`avro.rb:13-30`); we preserve both behaviours so
   * mappings written for the reference (header_lines: 1, daysafter on
-  * logical dates) run unchanged. Executor-side per-file decode via the
-  * Avro container format (avro core ships with Spark).
+  * logical dates) run unchanged. Each file is decoded on one task through
+  * the shared per-file runner ([[LineSource.perFile]]), streamed with the
+  * Avro container reader (avro core ships with Spark) over the task's
+  * stream: memory holds one Avro block, never the whole file.
   */
 object Avro {
 
@@ -29,34 +29,29 @@ object Avro {
   }
 
   /** Rows with the synthetic header first (`avro.rb:17-24`). */
-  def rowsFromBytes(bytes: Array[Byte]): Seq[Seq[String]] = {
-    val reader = new DataFileStream[GenericRecord](
-      new java.io.ByteArrayInputStream(bytes), new GenericDatumReader[GenericRecord]())
-    try {
-      val out = mutable.ArrayBuffer.empty[Seq[String]]
-      var header: Seq[String] = null
-      while (reader.hasNext) {
-        val rec = reader.next()
-        if (header == null) {
-          header = rec.getSchema.getFields.asScala.map(_.name).toSeq
-          out += header
-        }
-        out += header.map(f => stringify(rec.get(f)))
-      }
-      out.toSeq
-    } finally reader.close()
+  def rowsFromBytes(bytes: Array[Byte]): Seq[Seq[String]] =
+    rowIterator(new java.io.ByteArrayInputStream(bytes)).toSeq
+
+  /** One Avro container stream's rows, decoded block by block; the header
+    * comes from the first record, so a file with no record gives no row. */
+  private def rowIterator(in: java.io.InputStream): Iterator[Seq[String]] = {
+    val reader = new DataFileStream[GenericRecord](in, new GenericDatumReader[GenericRecord]())
+    var header: Seq[String] = null
+    Iterator.continually(reader).takeWhile(r => r.hasNext || { r.close(); false }).flatMap { r =>
+      val rec = r.next()
+      val first = header == null
+      if (first) header = rec.getSchema.getFields.asScala.map(_.name).toSeq
+      val values = header.map(f => stringify(rec.get(f)))
+      if (first) Iterator(header, values) else Iterator.single(values)
+    }
   }
 
   /** (file, lineno, cells) — header row at lineno 0 per file. */
   def rows(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        rowsFromBytes(bytes).zipWithIndex.map { case (cells, i) =>
-          (file, i.toLong, cells)
-        }
-      }.toDF("file", "lineno", "cells")
+    LineSource.perFile(spark, paths) { (file, _, open) =>
+      rowIterator(open()).zipWithIndex.map { case (cells, i) => (file, i.toLong, cells) }
+    }.toDF("file", "lineno", "cells")
   }
 
   /** S10 — build a Table mapping from an `.avsc` schema

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.udf
 
 import java.io.ByteArrayInputStream
@@ -34,6 +34,19 @@ object BinaryDecode {
     }
     else if (bytes.length >= 2 && bytes(0) == 'P' && bytes(1) == 'K') extractDocx(bytes)
     else new String(bytes, java.nio.charset.StandardCharsets.UTF_8)
+  }
+
+  /** (file, lineno, line) — each Word file read whole on its task
+    * ([[LineSource.wholeFiles]]) and its text split as the text reader
+    * splits a file ([[LineSource.lineIterator]]). */
+  def wordLines(spark: SparkSession, paths: Seq[String],
+                password: Option[String] = None): DataFrame = {
+    import spark.implicits._
+    LineSource.wholeFiles(spark, paths) { (file, bytes) =>
+      val text = new java.io.StringReader(extractWordText(bytes, password))
+      LineSource.lineIterator(new java.io.BufferedReader(text))
+        .zipWithIndex.map { case (l, i) => (file, i.toLong, l) }
+    }.toDF("file", "lineno", "line")
   }
 
   /** Real .docx extraction: unzip → parse word/document.xml → paragraphs. */

@@ -237,29 +237,18 @@ object Excel {
     out.toSeq
   }
 
-  /** The .xls and encrypted-OOXML containers top out at 2 GiB (CFB sector
-    * addressing), and they need a full in-memory parse. Headroom of 8
-    * below Int.MaxValue: readAllBytes / array allocation throw raw
-    * OutOfMemoryError above Int.MaxValue - 8, and the clear bound error
-    * must fire first. */
-  private val FormatMaxBytes: Long = Int.MaxValue.toLong - 8
-
   /** Lazy (file, sheet, lineno, cells) rows of one workbook; `len` is its
     * listed byte length and `open` opens it. A zip workbook streams
     * ([[zipRows]]). An OLE container needs random access (CFB FAT, crypto
-    * envelope), so it is read whole on the task — after the length guard,
-    * which fires before that read. */
+    * envelope), so it is read whole on the task ([[LineSource.wholeFile]],
+    * whose 2 GiB guard fires before that read). */
   private[sources] def fileRows(file: String, len: Long, open: () => InputStream,
                                 password: Option[String])
       : Iterator[(String, String, Long, Seq[String])] = {
     val head = { val in = open(); try in.readNBytes(8) finally in.close() }
     if (isZip(head)) return zipRows(file, open)
     if (!Cfb.isCfb(head)) sys.error(s"Unable to read the file '$file'")
-    if (len >= FormatMaxBytes)
-      sys.error(s"Unable to read oversized workbook '$file' ($len bytes): OLE " +
-        "containers need a full in-memory parse and the format tops out at " +
-        "2 GiB — the file is corrupt or mislabelled")
-    val bytes = { val in = open(); try in.readAllBytes() finally in.close() }
+    val bytes = LineSource.wholeFile(file, len, open)
     if (OoxmlCrypto.isEncrypted(bytes)) password match {
       case Some(pw) =>
         val zip = OoxmlCrypto.decrypt(bytes, pw)

@@ -18,12 +18,15 @@ import java.nio.charset.{Charset, CodingErrorAction, StandardCharsets}
   * per-file ordering is free — no global sort, no shuffle. Parallelism
   * comes from MANY files, never from within one text file, whose
   * semantics (header/footer/segmentation) are sequential. Its per-file
-  * runner ([[perFile]]) and encoding probe ([[probe]]) also read every
-  * workbook ([[Excel.tables]]) and XML file ([[XmlSource.records]]).
+  * runner ([[perFile]]) reads every file of every format, `binaryFile`
+  * only listing them: workbooks ([[Excel.tables]]) and XML
+  * ([[XmlSource.records]]) stream with the same encoding probe
+  * ([[probe]]), Avro block by block, and the whole-document formats (PDF,
+  * Word, the XML metadata DOM, OLE workbooks) one file held whole at a
+  * time under one 2 GiB guard ([[wholeFile]]).
   *
-  * [[decodeSmart]]/[[splitLines]] decode a whole document as one string;
-  * they serve only the whole-document readers (the XML metadata DOM,
-  * Word).
+  * [[decodeSmart]] decodes a whole document as one string (the XML
+  * metadata DOM); [[splitLines]] is the column form of [[lineIterator]].
   */
 object LineSource {
 
@@ -83,12 +86,11 @@ object LineSource {
     }.toDF("file", "lineno", "line")
   }
 
-  /** The one per-file runner behind every streamed reader (text, CSV, JSON
-    * Lines, VCF, workbooks, XML). Spark's file index lists `paths` (globs,
-    * directories, hidden files, `k=v` directories, a missing path failing
-    * here, naming it) without reading a byte; its non-empty files become a
-    * local relation, which spreads them over min(files,
-    * defaultParallelism) partitions with no exchange. `read(file, length,
+  /** The one per-file runner behind every reader. Spark's file index lists
+    * `paths` (globs, directories, hidden files, `k=v` directories, a
+    * missing path failing here, naming it) without reading a byte; its
+    * non-empty files become a local relation, which spreads them over
+    * min(files, defaultParallelism) partitions with no exchange. `read(file, length,
     * open)` yields one file's rows in one task: `file` is binaryFile's
     * `path` spelling, `length` the listed byte length, and `open` opens the
     * file with the session's Hadoop conf. Every stream `open` hands out is
@@ -120,6 +122,25 @@ object LineSource {
         })
       }
     }
+  }
+
+  /** Whole-document formats (PDF, AcroForm, Word, the XML metadata DOM) on
+    * the same runner: `read(file, bytes)` parses one file held whole. */
+  private[sources] def wholeFiles[T: Encoder](spark: SparkSession, paths: Seq[String])(
+      read: (String, Array[Byte]) => Iterator[T]): Dataset[T] =
+    perFile(spark, paths)((file, len, open) => read(file, wholeFile(file, len, open)))
+
+  /** One file's bytes, read whole after a guard on its listed length: a
+    * byte array, like a CFB container, tops out just below 2 GiB, and the
+    * clear error must fire before readAllBytes throws OutOfMemoryError. */
+  private[sources] def wholeFile(file: String, len: Long,
+                                 open: () => java.io.InputStream): Array[Byte] = {
+    if (len >= Int.MaxValue.toLong - 8)
+      sys.error(s"Unable to read oversized file '$file' ($len bytes): the " +
+        "format needs a full in-memory parse and a whole-file read tops out " +
+        "at 2 GiB — the file is corrupt or mislabelled")
+    val in = open()
+    try in.readAllBytes() finally in.close()
   }
 
   /** The session's Hadoop conf (`spark.hadoop.*` keys, runtime `fs.*`

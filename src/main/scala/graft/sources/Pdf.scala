@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 import scala.collection.mutable
 
@@ -27,8 +26,8 @@ import scala.collection.mutable
   *     column-padded like pdf-reader's page layout (mean-char-width
   *     approximation — content is exact, column counts are approximate).
   *
-  * The Spark side stays as before: `binaryFile` per-file tasks, one row per
-  * text line, one Map row per AcroForm.
+  * Each file is read whole on one task ([[LineSource.wholeFiles]]), giving
+  * one row per text line or one Map row per AcroForm.
   */
 object Pdf {
 
@@ -730,20 +729,16 @@ object Pdf {
   /** S12 — one row per text line, per file (`pdf.rb:13-33`). */
   def lines(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .flatMap { case (file, bytes) =>
-        val base = file.substring(file.lastIndexOf('/') + 1)
-        extractTextLines(bytes, base).zipWithIndex.map { case (l, i) => (file, i.toLong, l) }
-      }.toDF("file", "lineno", "line")
+    LineSource.wholeFiles(spark, paths) { (file, bytes) =>
+      val base = file.substring(file.lastIndexOf('/') + 1)
+      extractTextLines(bytes, base).iterator.zipWithIndex.map { case (l, i) => (file, i.toLong, l) }
+    }.toDF("file", "lineno", "line")
   }
 
   /** S15 — one Map row per file. */
   def acroForm(spark: SparkSession, paths: Seq[String]): DataFrame = {
     import spark.implicits._
-    spark.read.format("binaryFile").load(paths: _*)
-      .select(col("path"), col("content")).as[(String, Array[Byte])]
-      .map { case (file, bytes) => (file, 0L, acroFormFields(bytes)) }
+    LineSource.wholeFiles(spark, paths)((file, bytes) => Iterator((file, 0L, acroFormFields(bytes))))
       .toDF("file", "lineno", "fields_hash")
   }
 }

@@ -210,7 +210,6 @@ object XmlSource {
     * here are root-relative (`//`-style descendant search supported as the
     * common case in the reference's fixtures). */
   def metadataValues(xmlText: String, metadata: Map[String, String]): Map[String, String] = {
-    if (metadata.isEmpty) return Map.empty
     val doc = scala.xml.XML.loadString(xmlText)
     metadata.map { case (k, xpath) =>
       val clean = xpath.stripPrefix("//")
@@ -227,6 +226,19 @@ object XmlSource {
       k -> nodes.map(_.text).mkString
     }
   }
+
+  /** S8 — one file's metadata, evaluated on an executor over its whole DOM
+    * ([[LineSource.wholeFiles]]; the xpaths need it, as in the reference).
+    * Only the map reaches the driver. */
+  def fileMetadata(spark: SparkSession, file: String,
+                   metadata: Map[String, String]): Map[String, String] =
+    if (metadata.isEmpty) Map.empty
+    else {
+      import spark.implicits._
+      LineSource.wholeFiles(spark, Seq(file)) { (_, bytes) =>
+        Iterator.single(metadataValues(LineSource.decodeSmart(bytes), metadata).toSeq)
+      }.head().toMap
+    }
 
   /** Read files → one row per record element: (file, index, record_xml),
     * through the per-file runner ([[LineSource.perFile]]). Pass 1 is the

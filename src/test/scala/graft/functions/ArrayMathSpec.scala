@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 /** The native DotProduct must be value-identical to the interpreted HOF
   * rendering it replaces (`aggregate(zip_with(...))`) — same fold order,
   * same null semantics — across float/double arrays, nulls, mismatched
-  * lengths and empties, in both codegen and interpreted evaluation. */
+  * lengths and empties, in both codegen and interpreted evaluation: every
+  * value test runs on an RDD-backed frame under both paths. */
 class ArrayMathSpec extends SparkSpec {
 
   import spark.implicits._
@@ -15,38 +16,49 @@ class ArrayMathSpec extends SparkSpec {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
+  /** `dot(a, b)` per id over `df` on both evaluation paths, each planned
+    * afresh and asserted to have run the path it names; the two must
+    * agree, and the map is the codegen path's. `df` must be RDD-backed: a
+    * local relation's projection is folded at plan time, interpreted. */
+  private def dotBothPaths(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Double]] = {
+    def run(fused: Boolean) = {
+      val q = df.select(col("id"), ArrayMath.dot(col("a"), col("b")))
+      val out = q.collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
+      assert(fusedInCodegen(q, "graft_dot") == fused)
+      out.toMap
+    }
+    val gen = run(fused = true)
+    assert(withInterpreted(run(fused = false)) == gen, "interpreted eval diverged from codegen")
+    gen
+  }
+
+  private def hofDots(df: org.apache.spark.sql.DataFrame): Map[Long, Option[Double]] =
+    df.select(col("id"), hofDot(col("a"), col("b"))).collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
+
   test("dot matches the HOF reference on random float vectors") {
     val rnd = new scala.util.Random(7)
     val rows = (1 to 200).map { i =>
       (i.toLong, Seq.fill(64)(rnd.nextFloat()), Seq.fill(64)(rnd.nextFloat()))
     }
-    val df = rows.toDF("id", "a", "b")
-    val out = df.select(
-        ArrayMath.dot(col("a"), col("b")).as("native"),
-        hofDot(col("a"), col("b")).as("hof"))
-      .collect()
-    out.foreach { r =>
-      assert(r.getDouble(0) == r.getDouble(1), s"fold-order divergence: $r")
-    }
+    val df = spark.sparkContext.parallelize(rows, 3).toDF("id", "a", "b")
+    val native = dotBothPaths(df)
+    assert(native.size == 200 && native.values.forall(_.isDefined))
+    assert(native == hofDots(df), "fold-order divergence")
   }
 
   test("dot null semantics: null array, null element, length mismatch, empty") {
-    val df = Seq(
+    val df = spark.sparkContext.parallelize(Seq(
       (1L, Option(Seq[Option[Float]](Some(1f), Some(2f))), Option(Seq[Option[Float]](Some(3f), Some(4f)))),
       (2L, None, Option(Seq[Option[Float]](Some(1f)))),                       // null array
       (3L, Option(Seq[Option[Float]](Some(1f), None)), Option(Seq[Option[Float]](Some(1f), Some(1f)))), // null element
       (4L, Option(Seq[Option[Float]](Some(1f))), Option(Seq[Option[Float]](Some(1f), Some(1f)))),       // length mismatch
-      (5L, Option(Seq.empty[Option[Float]]), Option(Seq.empty[Option[Float]]))) // empty
+      (5L, Option(Seq.empty[Option[Float]]), Option(Seq.empty[Option[Float]]))), 2) // empty
       .toDF("id", "a", "b")
-    val got = df.select(col("id"), ArrayMath.dot(col("a"), col("b")).as("d"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    assert(got(1L).contains(11.0))
-    assert(got(2L).isEmpty && got(3L).isEmpty && got(4L).isEmpty)
-    assert(got(5L).contains(0.0))
+    val got = dotBothPaths(df)
+    assert(got == Map(1L -> Some(11.0), 2L -> None, 3L -> None, 4L -> None, 5L -> Some(0.0)))
     // and the HOF reference agrees on every row
-    val hof = df.select(col("id"), hofDot(col("a"), col("b")).as("d"))
-      .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1)))).toMap
-    assert(hof == got)
+    assert(hofDots(df) == got)
   }
 
   test("dot reaches whole-stage codegen (no interpreted HOF in the plan)") {
@@ -68,15 +80,14 @@ class ArrayMathSpec extends SparkSpec {
     // the HOF rendering this expression replaced cast ANY castable element
     // to double, so the public operator must accept the full NumericType
     // family — short/byte/decimal included, not just float/double/int/long
-    val base = Seq((1L, Seq(1, -2, 3), Seq(4, 5, -6))).toDF("id", "a", "b")
+    val base = spark.sparkContext.parallelize(Seq((1L, Seq(1, -2, 3), Seq(4, 5, -6))), 1)
+      .toDF("id", "a", "b")
     val want = 1 * 4 + -2 * 5 + 3 * -6 // = -24
     for (t <- Seq("smallint", "tinyint", "int", "bigint", "float", "double", "decimal(6,2)")) {
-      val df = base.select(
+      val df = base.select(col("id"),
         col("a").cast(s"array<$t>").as("a"), col("b").cast(s"array<$t>").as("b"))
-      val got = df.select(ArrayMath.dot(col("a"), col("b")).as("native"),
-          hofDot(col("a"), col("b")).as("hof")).head
-      assert(got.getDouble(0) == want.toDouble, s"element type $t")
-      assert(got.getDouble(0) == got.getDouble(1), s"HOF divergence for $t")
+      assert(dotBothPaths(df) == Map(1L -> Some(want.toDouble)), s"element type $t")
+      assert(hofDots(df) == Map(1L -> Some(want.toDouble)), s"HOF divergence for $t")
     }
   }
 

@@ -41,13 +41,23 @@ class SimhashScanSpec extends SparkSpec {
     "   ")                    // only separators
 
   test("native scan == explode+groupBy rendering on edge-case strings (16/32/56 bits)") {
-    val docs = tricky.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
+    // an RDD-backed frame, so the scan's generated code runs: a local
+    // relation's projection is folded at plan time, interpreted
+    val docs = spark.sparkContext.parallelize(
+      tricky.zipWithIndex.map { case (t, i) => (i.toLong, t) }, 3).toDF("id", "text")
     for ((bits, wide) <- Seq((16, false), (32, false), (16, true), (56, true))) {
-      val native = docs.select(col("id"),
-          SimhashScan.simhashScan(col("text"), bits, wide).as("sig"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(native == rendered(docs, bits, wide),
-        s"drift at bits=$bits wide=$wide")
+      // planned afresh per path: an executed plan keeps its codegen mode
+      def native(fused: Boolean) = {
+        val q = docs.select(col("id"), SimhashScan.simhashScan(col("text"), bits, wide).as("sig"))
+        val out = q.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(fusedInCodegen(q, "graft_simhash_scan") == fused)
+        out
+      }
+      val gen = native(fused = true)
+      assert(gen.size == tricky.size)
+      assert(gen == rendered(docs, bits, wide), s"drift at bits=$bits wide=$wide")
+      assert(withInterpreted(native(fused = false)) == gen,
+        s"interpreted eval diverged at bits=$bits wide=$wide")
     }
   }
 

@@ -396,6 +396,76 @@ class ImporterSpec extends SparkSpec {
       m.contains("Document is password protected (set file_password)")), messages.mkString("\n"))
   }
 
+  /** One canonical `lines` table with one `one` field per line (no header). */
+  private def plainLines(ext: String) = MappingLoader.loadTables(
+    s"""|- canonical_name: lines
+        |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
+        |  klass: SomeTestKlass
+        |  columns:
+        |  - column: one
+        |    mappings:
+        |    - field: one
+        |""".stripMargin)
+
+  private def fieldsInOrder(df: org.apache.spark.sql.DataFrame, names: String*) =
+    df.orderBy("index").select(names.map(n => element_at(col("fields"), n)): _*)
+      .collect().map(r => names.indices.map(r.getString)).toSeq
+
+  test("pdf, docx and avro imports read through the per-file runner: no binaryFile scan") {
+    val dir = tmpDir()
+    val pdf = write(dir, "report.pdf", SyntheticOffice.textPdf(Seq("Hello PDF", "line two")))
+    val docx = write(dir, "letter.docx", SyntheticOffice.docx(Seq("Dear all,", "", "bye")))
+    val schema = org.apache.avro.SchemaBuilder.record("Row").fields()
+      .requiredString("name").requiredInt("age").endRecord()
+    val avroOut = new java.io.ByteArrayOutputStream()
+    val w = new org.apache.avro.file.DataFileWriter(
+      new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](schema))
+    w.create(schema, avroOut)
+    Seq("Ada" -> 36, "Bob" -> 41).foreach { case (n, a) =>
+      w.append(new org.apache.avro.generic.GenericRecordBuilder(schema)
+        .set("name", n).set("age", a).build())
+    }
+    w.close()
+    val avro = write(dir, "people.avro", avroOut.toByteArray)
+    val avroMappings = MappingLoader.loadTables(
+      """|- canonical_name: people
+         |  filename_pattern: !ruby/regexp /\.avro\z/i
+         |  header_lines: 1
+         |  klass: Person
+         |  columns:
+         |  - column: name
+         |    mappings:
+         |    - field: name
+         |  - column: age
+         |    mappings:
+         |    - field: age
+         |""".stripMargin)
+    val pdfLines = Importer.mappedTables(spark, pdf, plainLines("pdf"))("lines")
+    val docxLines = Importer.mappedTables(spark, docx, plainLines("docx"))("lines")
+    val people = Importer.mappedTables(spark, avro, avroMappings)("people")
+    Seq(pdfLines, docxLines, people).foreach { df =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("MapPartitions") && !plan.contains("binaryFile"),
+        s"plan scans binaryFile:\n$plan")
+    }
+    val avroPlan = people.queryExecution.executedPlan.toString
+    assert(!avroPlan.contains("Exchange"), s"avro import shuffles:\n$avroPlan")
+    assert(fieldsInOrder(pdfLines, "one") == Seq(Seq("Hello PDF"), Seq("line two")))
+    // a blank line maps to a null field, as any blank cell does
+    assert(fieldsInOrder(docxLines, "one") == Seq(Seq("Dear all,"), Seq[String](null), Seq("bye")))
+    assert(fieldsInOrder(people, "name", "age") == Seq(Seq("Ada", "36"), Seq("Bob", "41")))
+  }
+
+  test("a Word 97 .doc imports through its piece table, short paragraphs included") {
+    // "OK" is shorter than the 4-character runs the fallback scraper keeps,
+    // so these lines come only from the piece-table walk
+    val doc = write(tmpDir(), "memo.doc", SyntheticOffice.wordDoc(Seq("Hello doc", "OK", "Third line")))
+    val tables = Importer.extract(spark, doc, plainLines("doc"))
+    assert(tables.size == 1)
+    assert(fieldsInOrder(tables.head.records, "one") ==
+      Seq(Seq("Hello doc"), Seq("OK"), Seq("Third line")))
+  }
+
   test("parquet and orc files route through the mapping pipeline (extension)") {
     val dir = tmpDir()
     import spark.implicits._

@@ -115,7 +115,7 @@ class LineSourceSpec extends SparkSpec {
     assert(read("") == Seq("plain"))
   }
 
-  test("only the listing and the whole-document readers use binaryFile in src/main") {
+  test("only the listing uses binaryFile in src/main") {
     val root = java.nio.file.Paths.get("src/main/scala")
     val sources = Files.walk(root).iterator().asScala.filter(_.toString.endsWith(".scala"))
       .map(p => root.relativize(p).toString -> Files.readString(p)).toSeq
@@ -125,11 +125,37 @@ class LineSourceSpec extends SparkSpec {
       .filter(_._2 > 0).toMap
     assert(users("sparkContext.binaryFiles").isEmpty)
     assert(users("DefaultInMemoryMaxBytes").isEmpty)
-    // the file-index listing, then PDF (text and AcroForm), Avro, and the
-    // importer's Word text and XML file_metadata DOM
-    assert(users("format(\"binaryFile\")") == Map(
-      "graft/sources/LineSource.scala" -> 1, "graft/sources/Pdf.scala" -> 2,
-      "graft/sources/Avro.scala" -> 1, "graft/run/Importer.scala" -> 2))
+    // the file-index listing; every reader's bytes reach it through perFile
+    assert(users("format(\"binaryFile\")") == Map("graft/sources/LineSource.scala" -> 1))
+  }
+
+  test("a whole-document file past the 2 GiB ceiling fails, naming it, before any read") {
+    var opens = 0
+    val open = () => { opens += 1; new java.io.ByteArrayInputStream("%PDF-1.4\n".getBytes("UTF-8")) }
+    val e = intercept[RuntimeException] {
+      LineSource.wholeFile("file:/data/big.pdf", 3L * 1024 * 1024 * 1024, open)
+    }
+    assert(e.getMessage.contains("'file:/data/big.pdf'"))
+    assert(e.getMessage.contains("tops out at") && e.getMessage.contains("2 GiB"))
+    assert(opens == 0)
+    // just below the ceiling the file is read, once
+    assert(new String(LineSource.wholeFile("small.pdf", 9L, open), "UTF-8") == "%PDF-1.4\n")
+    assert(opens == 1)
+  }
+
+  test("PDF and Word files open with the session's Hadoop conf on the executor") {
+    val pdf = writeTmp("session.pdf", SyntheticOffice.textPdf(Seq("Hello PDF", "line two")))
+    val word = writeTmp("session.docx", SyntheticOffice.docx(Seq("first", "second")))
+    graft.runtime.GraftSession.withConf(spark,
+        "fs.sessfs.impl" -> classOf[SessionOnlyFs].getName,
+        "fs.sessfs.impl.disable.cache" -> "true") {
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).sortBy(_._2).toSeq
+      assert(rows(Pdf.lines(spark, Seq(s"sessfs://$pdf"))) ==
+        Seq((s"sessfs:$pdf", 0L, "Hello PDF"), (s"sessfs:$pdf", 1L, "line two")))
+      assert(rows(BinaryDecode.wordLines(spark, Seq(s"sessfs://$word"))) ==
+        Seq((s"sessfs:$word", 0L, "first"), (s"sessfs:$word", 1L, "second")))
+    }
   }
 
   test("a glob or a directory reads each visible file under it") {

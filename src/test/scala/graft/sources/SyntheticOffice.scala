@@ -18,6 +18,9 @@ import javax.crypto.spec.{IvParameterSpec, SecretKeySpec}
   *   - [[agileEncrypt]]: an ECMA-376 agile-encryption envelope
   *     (EncryptionInfo + EncryptedPackage) around a zip payload — the exact
   *     inverse of [[OoxmlCrypto.decrypt]]'s KDF and segment cipher.
+  *   - [[docx]], [[wordDoc]]: a Word document, as OOXML or as a Word 97
+  *     binary `.doc` (FIB plus a one-piece table) inside a CFB container;
+  *     [[textPdf]]: a one-stream PDF showing text lines.
   */
 object SyntheticOffice {
 
@@ -136,6 +139,53 @@ object SyntheticOffice {
     require(boundsheet.length == boundsheetLen)
     val workbook = bof ++ boundsheet ++ sst ++ eof ++ sheet
     cfb(Seq("Workbook" -> workbook))
+  }
+
+  // ----------------------------------------------------------- documents
+
+  /** A .docx whose `word/document.xml` holds one `<w:p>` per paragraph. */
+  def docx(paragraphs: Seq[String]): Array[Byte] = {
+    val body = paragraphs.map(p =>
+      s"<w:p><w:r><w:t>${scala.xml.Utility.escape(p)}</w:t></w:r></w:p>").mkString
+    val bos = new java.io.ByteArrayOutputStream()
+    val z = new java.util.zip.ZipOutputStream(bos)
+    z.putNextEntry(new java.util.zip.ZipEntry("word/document.xml"))
+    z.write(("<w:document xmlns:w=\"http://schemas.openxmlformats.org/wordprocessingml/2006/main\">" +
+      s"<w:body>$body</w:body></w:document>").getBytes("UTF-8"))
+    z.closeEntry(); z.close()
+    bos.toByteArray
+  }
+
+  /** A minimal Word 97 binary `.doc`: a `WordDocument` stream whose FIB
+    * (magic 0xA5EC, the `1Table` flag, `ccpText`, `fcClx`/`lcbClx`) points
+    * into a `1Table` stream holding a Clx whose Pcdt has one compressed
+    * (Windows-1252) piece over the text; each paragraph ends in `\r`, as
+    * Word stores it. */
+  def wordDoc(paragraphs: Seq[String]): Array[Byte] = {
+    val text = paragraphs.map(_ + "\r").mkString.getBytes("windows-1252")
+    val textAt = 0x400
+    val table = ByteBuffer.allocate(1 + 4 + 2 * 4 + 8).order(ByteOrder.LITTLE_ENDIAN)
+    table.put(0x02.toByte)                          // Pcdt
+    table.putInt(2 * 4 + 8)                         // lcbPlcPcd: two CPs, one PCD
+    table.putInt(0).putInt(text.length)             // the piece's CP range
+    table.putShort(0)                               // PCD flags
+    table.putInt(0x40000000 | (textAt * 2))         // fc: compressed, offset * 2
+    table.putShort(0)                               // prm
+    val word = ByteBuffer.allocate(textAt + text.length).order(ByteOrder.LITTLE_ENDIAN)
+    word.putShort(0, 0xA5EC.toShort)                // wIdent
+    word.putShort(0x0A, 0x0200.toShort)             // fWhichTblStm: 1Table
+    word.putInt(64 + 12, text.length)               // FibRgLw97.ccpText
+    word.putInt(154 + 33 * 8, 0)                    // fcClx
+    word.putInt(154 + 33 * 8 + 4, table.capacity)   // lcbClx
+    word.position(textAt); word.put(text)
+    cfb(Seq("WordDocument" -> word.array(), "1Table" -> table.array()))
+  }
+
+  /** A PDF whose one content stream shows `lines`, one per text line. */
+  def textPdf(lines: Seq[String]): Array[Byte] = {
+    val content = lines.map(l => s"($l) Tj").mkString("BT ", " T* ", " ET")
+    (s"%PDF-1.4\n1 0 obj\n<< /Length ${content.length} >>\nstream\n$content\n" +
+      "endstream\nendobj\n%%EOF").getBytes("ISO-8859-1")
   }
 
   // --------------------------------------------------- agile OOXML crypto
