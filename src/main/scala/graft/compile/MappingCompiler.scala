@@ -355,10 +355,12 @@ object MappingCompiler {
   /** Driver-side header consumption + validation (T3/T4,
     * `table.rb:203-241`): takes the first `header_lines` rows, mutates
     * regex-declared columns to matching header text, and fails with the
-    * reference's message if no header line matches the expected names.
-    * Returns the (possibly mutated) mapping.
+    * reference's message if no header line matches the expected names,
+    * followed by ` in <where>` when `where` (the file, and the sheet) is
+    * given. Returns the (possibly mutated) mapping.
     */
-  def consumeHeader(mapping: TableMapping, headerRows: Seq[Seq[String]]): TableMapping = {
+  def consumeHeader(mapping: TableMapping, headerRows: Seq[Seq[String]],
+                    where: Option[String] = None): TableMapping = {
     if (mapping.headerLines == 0) return mapping
 
     var columns = mapping.columns
@@ -393,6 +395,7 @@ object MappingCompiler {
       if (unexpected.nonEmpty)
         msg.append(" unexpected: [" + unexpected.map("\"" + _ + "\"").mkString(", ") + "]")
       if (missing.isEmpty && unexpected.isEmpty) msg.append(" (out of order)")
+      where.foreach(w => msg.append(s" in $w"))
       sys.error(msg.toString)
     }
     mapping.copy(columns = columns)

@@ -5,8 +5,9 @@ import graft.model.TableMapping
 import graft.sources._
 import graft.tabulate.NonTabular
 import graft.xml.{XmlTable => XmlTableTransform}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField, StructType}
 
 /** End-to-end orchestration — the Spark rendering of
   * `UniversalImporterHelper#extract` (T1/T12/T13,
@@ -14,16 +15,24 @@ import org.apache.spark.sql.functions._
   *
   *   1. expand containers driver-side (Registry.files);
   *   2. match each inner file to its first matching mapping
-  *      (filename_pattern, T1) and read it with the format's source;
-  *   3. per (file, tablename): re-match, consume+validate headers
-  *      (driver-side, T3/T4), trim header/footer rows (T2), compile the
-  *      mapping once and transform (klass fan-out T7, skip T8);
-  *   4. union per canonical table (T12 — the reference's TableEnumProxy is
-  *      `unionByName` here).
+  *      (filename_pattern, T1) and build its lazy read with the format's
+  *      source;
+  *   3. ONE Spark action brings back every file's header block and, for
+  *      each workbook, the first rows of every sheet (so its sheet names);
+  *      each branch of it is capped at its header block, and the drop's
+  *      per-file reads run as the tasks of that one job;
+  *   4. per (file, tablename), on the driver: re-match the mapping,
+  *      validate the header (T3/T4; a failure names the file and sheet),
+  *      trim header/footer rows (T2), compile the mapping once and
+  *      transform (klass fan-out T7, skip T8); then union per canonical
+  *      table (T12 — the reference's TableEnumProxy is `unionByName` here).
   *
-  * Everything after path resolution is lazy Catalyst plans; the caller gets
-  * one DataFrame per canonical table and composes freely (joins, aggs,
-  * writes) with full pushdown.
+  * Everything after that one action is lazy Catalyst plans; the caller
+  * gets one DataFrame per canonical table and composes freely (joins, aggs,
+  * writes) with full pushdown. No workbook is materialised: a mapped sheet
+  * re-reads its workbook in the plan that consumes it. Non-tabular text,
+  * PDF and Word lines come from the per-file readers in per-file order, so
+  * they are walked ([[NonTabular.walk]]) with no exchange.
   */
 object Importer {
 
@@ -33,17 +42,18 @@ object Importer {
   def extract(spark: SparkSession, sourceFile: String, mappings: Seq[TableMapping],
               containerOpts: Registry.ContainerOptions = Registry.ContainerOptions())
       : Seq[MappedTable] = {
-    Registry.files(sourceFile, containerOpts).flatMap { file =>
-      mappings.find(_.matches(file, None)) match {
-        case None => Nil
-        case Some(fileMapping) =>
-          tablesFor(spark, file, fileMapping).flatMap { case (tablename, transform) =>
-            mappings.find(_.matches(file, tablename)).map { mapping =>
-              MappedTable(mapping, transform(mapping))
-            }
-          }
-      }
+    val reads = Registry.files(sourceFile, containerOpts).flatMap { file =>
+      mappings.find(_.matches(file, None)).map(m => read(spark, file, m, mappings))
     }
+    // the one planning action: every read's head, tagged with its index
+    val tagged = reads.zipWithIndex.collect {
+      case (Read(Some(head), _), i) => head.select(lit(i).as("read"), col("*"))
+    }
+    val back = if (tagged.isEmpty) Map.empty[Int, Seq[HeadRow]]
+      else headerPlan(tagged).collect().toSeq.groupMap(_.getInt(0)) { r =>
+        HeadRow(r.getString(1), r.getLong(2), Option(r.getSeq[String](3)).map(_.toSeq).getOrElse(Nil))
+      }
+    reads.zipWithIndex.flatMap { case (r, i) => r.tables(back.getOrElse(i, Nil)) }
   }
 
   /** T12 — canonical table → union of its per-file record streams. */
@@ -56,34 +66,58 @@ object Importer {
 
   // ---------------------------------------------------------------- private
 
-  /** The per-(file, tablename) transforms a file offers. Most formats have
-    * one anonymous table; Excel has one per sheet (`file/excel.rb:20-27`). */
-  private def tablesFor(spark: SparkSession, file: String, fileMapping: TableMapping)
-      : Seq[(Option[String], TableMapping => DataFrame)] = {
-    val format = Registry.formatFor(file, fileMapping.format)
+  /** A row the planning action brought back: (table, lineno, cells), table
+    * being the sheet name, null for a single-table file. */
+  private final case class HeadRow(table: String, lineno: Long, cells: Seq[String])
+
+  /** One file's lazy read before the planning action: `head`, the rows
+    * (table, lineno, cells) the action must bring back, if any; `tables`,
+    * the file's mapped tables given those rows. */
+  private final case class Read(head: Option[DataFrame], tables: Seq[HeadRow] => Seq[MappedTable])
+
+  /** The planning action's plan: the tagged heads in one union, split
+    * in halves so a drop of many files plans a shallow tree. */
+  private[run] def headerPlan(heads: Seq[DataFrame]): DataFrame =
+    if (heads.size == 1) heads.head
+    else {
+      val (a, b) = heads.splitAt(heads.size / 2)
+      headerPlan(a).union(headerPlan(b))
+    }
+
+  /** The header block (table, lineno, cells) of a single-file frame. The
+    * `lineno` filter is correct on any frame; the per-partition take stops
+    * the read after it, since a single file's frame holds at most `lines`
+    * such rows, and the per-file runner reads the file in one task. No
+    * limit: a `limit` plans a GlobalLimit over an Exchange, per branch of
+    * the union. */
+  private[run] def headerBlock(rows: DataFrame, lines: Int): DataFrame = {
+    val block = rows.filter(col("lineno") < lines)
+      .select(lit(null).cast("string").as("table"), col("lineno").cast("long"), col("cells"))
+    block.mapPartitions((it: Iterator[Row]) => it.take(lines))(Encoders.row(block.schema))
+  }
+
+  /** A file's read, by format. Most formats have one anonymous table,
+    * whose mapping is the file's; Excel has one per sheet
+    * (`file/excel.rb:20-27`), each re-matched by sheet name. */
+  private def read(spark: SparkSession, file: String, m: TableMapping,
+                   mappings: Seq[TableMapping]): Read = {
+    def ready(records: => DataFrame) = Read(None, _ => Seq(MappedTable(m, records)))
+    def table(rows: DataFrame) = Read(
+      Option.when(m.headerLines > 0)(headerBlock(rows, m.headerLines)),
+      head => Seq(MappedTable(m, tabularRecords(m, rows, head, s"'$file'"))))
+    val format = Registry.formatFor(file, m.format)
     format match {
-      case "csv" | "delimited" =>
-        single { m =>
-          tabularRecords(spark, m, Tabular.delimited(spark, Seq(file), m))
-        }
+      case "csv" | "delimited" => table(Tabular.delimited(spark, Seq(file), m))
       case "txt" | "text" | "nontabular" =>
-        single { m =>
-          val lines = LineSource.lines(spark, Seq(file))
-          val unpack = m.columns.flatMap(_.unpackPattern)
-          // T9: a fixed-width mapping is tabular, header and footer included
-          if (m.nonTabular.isEmpty && unpack.nonEmpty)
-            tabularRecords(spark, m, Tabular.fixedWidth(lines, unpack))
-          else nonTabularOrPlain(m, lines)
-        }
+        val lines = LineSource.lines(spark, Seq(file))
+        val unpack = m.columns.flatMap(_.unpackPattern)
+        // T9: a fixed-width mapping is tabular, header and footer included
+        if (m.nonTabular.isEmpty && unpack.nonEmpty) table(Tabular.fixedWidth(lines, unpack))
+        else ready(nonTabularOrPlain(m, lines))
       case "jsonl" =>
-        single { m =>
-          val lines = LineSource.lines(spark, Seq(file))
-          tabularRecords(spark, m, Tabular.jsonCells(lines, m.columns.flatMap(_.column)))
-        }
-      case "vcf" =>
-        single(m => tabularRecords(spark, m, Tabular.vcf(spark, Seq(file))))
-      case "avro" =>
-        single(m => tabularRecords(spark, m, Avro.rows(spark, Seq(file))))
+        table(Tabular.jsonCells(LineSource.lines(spark, Seq(file)), m.columns.flatMap(_.column)))
+      case "vcf" => table(Tabular.vcf(spark, Seq(file)))
+      case "avro" => table(Avro.rows(spark, Seq(file)))
       case "parquet" | "orc" =>
         // Spark-native extension: columnar files feed the mapping pipeline
         // directly — cells are drawn by mapping column name (like JSONL
@@ -92,131 +126,90 @@ object Importer {
         // Avro scaffold, a synthetic header row satisfies reference-style
         // `header_lines: 1` mappings — columnar data has no header row of
         // its own, and without this the first DATA row would be consumed
-        // and validated as the header.
-        single { m =>
-          val df = if (format == "parquet") spark.read.parquet(file)
-                   else spark.read.orc(file)
-          val names = m.columns.flatMap(_.column)
-          // Contiguous per-import ordinal, computed distributed via
-          // RDD.zipWithIndex over ONE realised RDD: its partition sizes
-          // and its data rows come from the same fixed partition set, so
-          // the ordinal can never drift — a two-scan scheme (count
-          // aggregate + data scan as separate DataFrame executions) would
-          // silently mis-number rows if split planning changed between
-          // them (maxPartitionBytes reconfigured, defaultParallelism
-          // moved under dynamic allocation). lineno = ordinal +
-          // header_lines matches every other source's "index is the input
-          // row number" contract with no single-partition shuffle; the
-          // scan is pre-projected to the mapped columns so parquet
-          // pruning still applies. For a multi-part directory the order
-          // follows Spark's split planning (offset order within a file).
-          val projected = df.select(names.map(n => col(n).cast("string")): _*)
-          val indexed = projected.rdd.zipWithIndex.map { case (row, i) =>
-            org.apache.spark.sql.Row(file, i + m.headerLines,
-              (0 until row.length).map(row.getString))
+        // and validated as the header. That header is known here, so the
+        // planning action brings nothing back for these files.
+        val df = if (format == "parquet") spark.read.parquet(file)
+                 else spark.read.orc(file)
+        val names = m.columns.flatMap(_.column)
+        // Contiguous per-import ordinal, computed distributed via
+        // RDD.zipWithIndex over ONE realised RDD: its partition sizes
+        // and its data rows come from the same fixed partition set, so
+        // the ordinal can never drift — a two-scan scheme (count
+        // aggregate + data scan as separate DataFrame executions) would
+        // silently mis-number rows if split planning changed between
+        // them (maxPartitionBytes reconfigured, defaultParallelism
+        // moved under dynamic allocation). lineno = ordinal +
+        // header_lines matches every other source's "index is the input
+        // row number" contract with no single-partition shuffle; the
+        // scan is pre-projected to the mapped columns so parquet
+        // pruning still applies. For a multi-part directory the order
+        // follows Spark's split planning (offset order within a file).
+        val projected = df.select(names.map(n => col(n).cast("string")): _*)
+        val indexed = projected.rdd.zipWithIndex.map { case (row, i) =>
+          Row(file, i + m.headerLines, (0 until row.length).map(row.getString))
+        }
+        val data = spark.createDataFrame(indexed, StructType(Seq(
+          StructField("file", StringType), StructField("lineno", LongType),
+          StructField("cells", ArrayType(StringType)))))
+        val header = (0 until m.headerLines).map(i => HeadRow(null, i.toLong, names))
+        val rows =
+          if (m.headerLines == 0) data
+          else {
+            import spark.implicits._
+            header.map(h => (file, h.lineno, h.cells)).toDF("file", "lineno", "cells")
+              .unionByName(data)
           }
-          val data = spark.createDataFrame(indexed,
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("file",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("lineno",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("cells",
-                org.apache.spark.sql.types.ArrayType(
-                  org.apache.spark.sql.types.StringType)))))
-          val rows =
-            if (m.headerLines == 0) data
-            else {
-              import spark.implicits._
-              val header = (0 until m.headerLines).map(i =>
-                (file, i.toLong, names)).toDF("file", "lineno", "cells")
-              header.unionByName(data)
-            }
-          tabularRecords(spark, m, rows)
-        }
+        Read(None, _ => Seq(MappedTable(m, tabularRecords(m, rows, header, s"'$file'"))))
       case "xls" | "xlsm" | "xlsx" =>
-        // materialised once (sheet-name collect + one scan per sheet read
-        // it); localCheckpoint rather than cache() — CacheManager entries
-        // are never auto-freed, while checkpoint blocks release with the
-        // RDD when the import's DataFrames go out of scope
-        val sheets = Excel.tables(spark, Seq(file), fileMapping.filePassword)
-          .localCheckpoint()
-        val names = sheets.select("tablename").distinct()
-          .collect().map(_.getString(0)).toSeq
-        names.map { sheet =>
-          (Option(sheet), (m: TableMapping) =>
-            tabularRecords(spark, m,
-              sheets.filter(col("tablename") === sheet).drop("tablename")))
-        }
+        val rows = Excel.tables(spark, Seq(file), m.filePassword)
+        // every sheet with a populated cell has a row 0, so each sheet's
+        // first max(1, header_lines) rows name the sheets and hold their
+        // headers, whichever mapping each sheet matches
+        val lines = (1 +: mappings.filter(_.matches(file, None)).map(_.headerLines)).max
+        val head = rows.filter(col("lineno") < lines)
+          .select(col("tablename").as("table"), col("lineno"), col("cells"))
+        Read(Some(head), back => back.map(_.table).distinct.flatMap { sheet =>
+          mappings.find(_.matches(file, Some(sheet))).map { sm =>
+            MappedTable(sm, tabularRecords(sm,
+              rows.filter(col("tablename") === sheet).drop("tablename"),
+              back.filter(_.table == sheet), s"'$file' sheet '$sheet'"))
+          }
+        })
       case "xml" | "xml_table" =>
-        single { m =>
+        ready {
           val recs = XmlTableTransform.records(XmlSource.records(spark, Seq(file), m), m)
           XmlSource.fileMetadata(spark, file, m.fileMetadata).foldLeft(recs) {
             case (df, (k, v)) => df.withColumn(s"meta_$k", lit(v))
           }
         }
-      case "pdf" =>
-        single(m => nonTabularOrPlain(m, Pdf.lines(spark, Seq(file))))
-      case "acroform" =>
-        single(m => acroFormRecords(spark, file, m))
+      case "pdf" => ready(nonTabularOrPlain(m, Pdf.lines(spark, Seq(file))))
+      case "acroform" => ready(acroFormRecords(spark, file, m))
       case "doc" | "docx" =>
-        single(m => nonTabularOrPlain(m, BinaryDecode.wordLines(spark, Seq(file), m.filePassword)))
+        ready(nonTabularOrPlain(m, BinaryDecode.wordLines(spark, Seq(file), m.filePassword)))
       case other => throw new Registry.UnknownFormatError(other)
     }
   }
 
-  private def single(f: TableMapping => DataFrame)
-      : Seq[(Option[String], TableMapping => DataFrame)] = Seq((None, f))
-
-  /** Header validation, header/footer trim and mapping of a single file's
-    * (file, lineno, cells) rows. */
-  private def tabularRecords(spark: SparkSession, mapping: TableMapping,
-                             rows: DataFrame): DataFrame = {
+  /** Header validation, header/footer trim and mapping of one table's
+    * (file, lineno, cells) rows, given its first rows (`head`). */
+  private def tabularRecords(mapping: TableMapping, rows: DataFrame, head: Seq[HeadRow],
+                             where: String): DataFrame = {
     // T5: last_data_column caps cells for header rows too (`table.rb:55-57`
     // — process_line slices before validation).
     val lastCol = mapping.lastColumnToTransform
-    val headerRows =
-      if (mapping.headerLines > 0)
-        // limit above the scan: lineno is unique per line of this one
-        // file, so the filter yields at most header_lines rows and the
-        // limit is semantically a no-op — but it plans as CollectLimit,
-        // which stops reading after the header block instead of scanning
-        // the whole file just to validate its header (a full-file pass
-        // per file on a wide 10k-file import). Ordering is restored
-        // driver-side over ≤ header_lines rows.
-        headerFrame(rows, mapping.headerLines)
-          .collect()
-          .sortBy(r => r.getLong(r.fieldIndex("lineno")))
-          .map { r =>
-            val cells = Option(r.getSeq[String](r.fieldIndex("cells")))
-              .map(_.toSeq).getOrElse(Nil)
-            if (lastCol >= 0) cells.take(lastCol + 1) else cells
-          }.toSeq
-      else Nil
-    val validated = MappingCompiler.consumeHeader(mapping, headerRows)
+    val headerRows = head.filter(_.lineno < mapping.headerLines).sortBy(_.lineno)
+      .map(r => if (lastCol >= 0) r.cells.take(lastCol + 1) else r.cells)
+    val validated = MappingCompiler.consumeHeader(mapping, headerRows, Some(where))
     MappingCompiler(validated).records(MappingCompiler.dataRows(rows, validated))
   }
-
-  /** The header block of a single file's (file, lineno, cells) frame,
-    * limit-capped so the read plans a CollectLimit and stops after the
-    * header. CONTRACT: `rows` must hold exactly ONE file — on a
-    * multi-file frame the global `limit(headerLines)` would keep an
-    * arbitrary `headerLines`-row subset and nondeterministically drop
-    * other files' header rows (the per-file `lineno` filter alone is
-    * correct for any frame; the limit is what makes the scan stop, and it
-    * is only sound per file). Every caller builds per-file frames; a new
-    * multi-file caller must window per file instead. Package-private for
-    * the plan pin in ImporterSpec. */
-  private[run] def headerFrame(rows: DataFrame, headerLines: Int): DataFrame =
-    rows.filter(col("lineno") < headerLines).limit(headerLines)
 
   /** Non-tabular segmentation when the mapping declares it; else each line
     * is a one-cell row. */
   private def nonTabularOrPlain(mapping: TableMapping, lines: DataFrame): DataFrame = {
-    if (mapping.nonTabular.isDefined) {
-      val cells = NonTabular.tabulate(lines, mapping)
-      MappingCompiler(mapping).records(cells)
-    } else {
+    if (mapping.nonTabular.isDefined)
+      // every per-file reader emits a file's lines in order, in one task
+      MappingCompiler(mapping).records(NonTabular.walk(lines, mapping))
+    else {
       val rows = lines.select(col("file"), col("lineno"), array(col("line")).as("cells"))
       MappingCompiler(mapping).records(MappingCompiler.dataRows(rows, mapping))
     }

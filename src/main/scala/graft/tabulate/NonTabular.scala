@@ -14,11 +14,15 @@ import scala.collection.mutable
   * N4), with the mapping checks of `non_tabular/column_mapping.rb:50-72`
   * (N6).
   *
-  * One exchange puts each file's lines in one partition, sorted by
-  * `(file, lineno)`; a typed `mapPartitions` then walks each file's run of
-  * lines once, as the reference does, keeping only the open record's
-  * captured lines and a `remove_lines` lookahead as deep as the longest
-  * pattern sequence. Parallelism comes from many files; within a file the
+  * A typed `mapPartitions` ([[walk]]) walks each file's run of lines
+  * once, as the reference does, keeping only the open record's captured
+  * lines and a `remove_lines` lookahead as deep as the longest pattern
+  * sequence. It needs each file's lines contiguous in one partition in
+  * `lineno` order, and checks that they are. The per-file readers emit
+  * lines that way, so the importer walks them as they come, with no
+  * exchange; [[tabulate]] takes lines in any order and first puts each
+  * file's lines in one partition, sorted by `(file, lineno)`, with one
+  * exchange. Parallelism comes from many files; within a file the
   * semantics are sequential.
   *
   * Input: (file, lineno, line). Output: the MappingCompiler input contract
@@ -52,18 +56,30 @@ object NonTabular {
     spec
   }
 
-  /** Segment + tabulate: (file, lineno, line) → (file, lineno, cells). */
-  def tabulate(linesDf: DataFrame, mapping: TableMapping): DataFrame = {
+  /** Segment + tabulate: (file, lineno, line) → (file, lineno, cells), for
+    * lines in any order: one exchange and sort put each file's lines in
+    * one partition in `lineno` order, then [[walk]]. */
+  def tabulate(linesDf: DataFrame, mapping: TableMapping): DataFrame =
+    walk(lineColumns(linesDf).repartition(col("file")).sortWithinPartitions("file", "lineno"),
+      mapping)
+
+  /** The walk alone, for lines already in per-file order: each file's
+    * lines one contiguous run inside one partition, `lineno` ascending —
+    * what every per-file reader ([[graft.sources.LineSource]]) emits. The
+    * order is checked, not assumed: a `lineno` that goes back, or a file
+    * that comes back after its run ended, fails naming the file. */
+  private[graft] def walk(linesDf: DataFrame, mapping: TableMapping): DataFrame = {
     val spec = validate(mapping)
     val cells = mapping.columns.map(_.nonTabularCell.get)
     val spark = linesDf.sparkSession
     import spark.implicits._
-    linesDf.select(col("file"), col("lineno").cast("long"), col("line"))
-      .repartition(col("file")).sortWithinPartitions("file", "lineno")
-      .as[(String, Long, String)]
+    lineColumns(linesDf).as[(String, Long, String)]
       .mapPartitions(lines => new Walk(spec, cells, lines))
       .toDF("file", "lineno", "cells")
   }
+
+  private def lineColumns(linesDf: DataFrame): DataFrame =
+    linesDf.select(col("file"), col("lineno").cast("long"), col("line"))
 
   /** The `capture` chain (`record.rb:84-99`): each pattern keeps group 1
     * of the previous value (nil reads as "" for the next pattern; an absent
@@ -131,8 +147,8 @@ object NonTabular {
   }
 
   /** The reference's line walk (`table.rb:100-167`) over one partition's
-    * `(file, lineno)`-sorted lines, each file one contiguous run. Emits
-    * each record as it closes. */
+    * lines, each file one contiguous run in `lineno` order. Emits each
+    * record as it closes. */
   private final class Walk(spec: NonTabularSpec, cellSpecs: Seq[NonTabularCell],
       input: Iterator[(String, Long, String)])
       extends Iterator[(String, Long, Seq[String])] {
@@ -148,6 +164,8 @@ object NonTabular {
     // could start, with their removed flags
     private val pending = mutable.ArrayDeque.empty[(String, Boolean)]
     private var started = false
+    // files whose run has ended: one coming back would restart its ordinals
+    private val ended = mutable.HashSet.empty[String]
     private var file: String = _
     private var lastLineno = 0L
     private var ordinal = 0L
@@ -158,7 +176,10 @@ object NonTabular {
       while (out.isEmpty && input.hasNext) {
         val (f, lineno, line) = input.next()
         if (!started || f != file) {
-          if (started) endOfFile()
+          if (started) { endOfFile(); ended += file }
+          if (ended(f))
+            throw new IllegalStateException(
+              s"non-tabular input returns to file $f after its lines ended")
           started = true
           file = f
           ordinal = 0

@@ -1,6 +1,8 @@
 package graft
 
 import graft.runtime.GraftSession
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +21,31 @@ trait SparkSpec extends AnyFunSuite {
     GraftSession.withConf(spark,
       "spark.sql.codegen.wholeStage" -> "false",
       "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
+
+  /** `body`'s result and the number of Spark jobs it submitted: jobs
+    * are told apart by a local property this thread carries while `body`
+    * runs, so other suites' jobs are not counted. */
+  def jobsDuring[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobsDuring"
+    val tag = java.util.UUID.randomUUID().toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(key) == tag)) jobs.incrementAndGet()
+    }
+    val outer = sc.getLocalProperty(key)
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(key, tag)
+    try {
+      val out = body
+      GraftListenerBridge.drain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.setLocalProperty(key, outer)
+      sc.removeSparkListener(listener)
+    }
+  }
 
   /** Whether `df`'s executed plan runs an expression named `name` inside
     * a whole-stage codegen stage. */

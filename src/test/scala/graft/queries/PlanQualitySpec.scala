@@ -528,9 +528,13 @@ class PlanQualitySpec extends SparkSpec {
     assert(!plan.contains("Join"), s"XML transform joins:\n$plan")
   }
 
-  /** The non-tabular segmentation shape: the one per-file Exchange (+ Sort)
-    * feeding the line walk, and nothing else that shuffles or buffers. */
-  private def assertOneWalk(plan: String): Unit = {
+  private def nodes(plan: String, name: String): Int =
+    (raw"\(\d+\) " + name + raw"\b").r.findAllIn(plan).length
+
+  /** The non-tabular segmentation shape: the line walk, and nothing that
+    * joins, windows or aggregates; `exchanges` per-file Exchanges (each
+    * with its Sort) feed it. */
+  private def assertWalk(plan: String, exchanges: Int): Unit = {
     assert(!plan.contains("CartesianProduct") && !plan.contains("NestedLoop") &&
       !plan.contains("Join"), s"segmentation must not join:\n$plan")
     assert(plan.contains("MapPartitions"), s"per-file walk missing:\n$plan")
@@ -538,19 +542,52 @@ class PlanQualitySpec extends SparkSpec {
     // no per-record aggregate: the collect_list ObjectHashAggregate cost
     // ~10 s of 27 at sf10 when records were assembled that way
     assert(!plan.contains("Aggregate"), s"record assembly became an aggregate:\n$plan")
-    val shuffles = """\(\d+\) Exchange""".r.findAllIn(plan).length
-    assert(shuffles == 1,
-      s"expected exactly the one per-file Exchange, got $shuffles:\n$plan")
+    assert(nodes(plan, "Exchange") == exchanges && nodes(plan, "Sort") == exchanges,
+      s"expected $exchanges per-file Exchange and Sort:\n$plan")
   }
 
   test("n3_segments: one per-file walk over ONE exchange — no window, no aggregate, no join") {
-    assertOneWalk(formattedPlan(QueryPack.n3Segments(spark, sf)))
+    val plan = formattedPlan(QueryPack.n3Segments(spark, sf))
+    assertWalk(plan, exchanges = 1)
+    assert(raw"Arguments: hashpartitioning\(file#\d+, ".r.findFirstIn(plan).isDefined,
+      s"the one exchange must partition by file:\n$plan")
   }
 
-  test("t12_importer_union: the docx non-tabular branch is one walk over ONE exchange") {
-    // the csv/xlsx/xls branches plan no exchange, so the union's single
-    // Exchange is the docx branch's
-    assertOneWalk(formattedPlan(QueryPack.t12ImporterUnion(spark, sf)))
+  test("t12_importer_union: the docx non-tabular branch walks with no Exchange and no Sort") {
+    // the docx reader emits each file's lines in order in one task, and the
+    // csv/xlsx/xls branches plan no exchange either
+    assertWalk(formattedPlan(QueryPack.t12ImporterUnion(spark, sf)), exchanges = 0)
+  }
+
+  test("importer: text and PDF non-tabular branches walk with no Exchange and no Sort") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_nt")
+    val text = dir.resolve("report.txt")
+    java.nio.file.Files.write(text, "NAME: A\nNAME: B\n".getBytes("UTF-8"))
+    val pdf = dir.resolve("report.pdf")
+    java.nio.file.Files.write(pdf, graft.sources.SyntheticOffice.textPdf(Seq("NAME: A", "NAME: B")))
+    def mapping(ext: String) = graft.model.MappingLoader.loadTables(
+      s"""|- canonical_name: names
+          |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
+          |  format: ${if (ext == "txt") "nontabular" else ext}
+          |  start_line_pattern: !ruby/regexp /\\ANAME: /
+          |  capture_start_line: true
+          |  end_in_a_record: true
+          |  klass: Name
+          |  columns:
+          |  - column: name
+          |    non_tabular_cell:
+          |      lines: 0
+          |      capture: !ruby/regexp /\\ANAME: (.*)\\z/
+          |    mappings:
+          |    - field: name
+          |""".stripMargin)
+    Seq(text -> "txt", pdf -> "pdf").foreach { case (path, ext) =>
+      val names = graft.run.Importer.mappedTables(spark, path.toString, mapping(ext))("names")
+      assertWalk(formattedPlan(names), exchanges = 0)
+      assert(names.select(org.apache.spark.sql.functions.element_at(
+        org.apache.spark.sql.functions.col("fields"), "name")).collect().map(_.getString(0))
+        .sorted.toSeq == Seq("A", "B"), ext)
+    }
   }
 
   test("source cap: rank-filter compiles to WindowGroupLimit (map-side top-k)") {

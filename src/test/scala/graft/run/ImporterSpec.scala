@@ -264,17 +264,140 @@ class ImporterSpec extends SparkSpec {
     assert(rows.toSeq == Seq("Three in fact"))
   }
 
-  test("header validation plans a limit above the scan (no full-file pass)") {
-    val rows = spark.range(100000).selectExpr(
-      "'f' AS file", "id AS lineno", "array(cast(id AS string)) AS cells")
-    val plan = Importer.headerFrame(rows, 2).queryExecution.executedPlan.toString
-    assert(plan.contains("CollectLimit") || plan.contains("GlobalLimit"),
-      s"header read must stop after header_lines rows, plan was:\n$plan")
-    // and it still yields exactly the header block, in order after the sort
-    val got = Importer.headerFrame(rows, 2).collect()
-      .sortBy(_.getLong(1)).map(_.getLong(1)).toSeq
-    assert(got == Seq(0L, 1L))
+  test("header validation plans one capped read per file: no Exchange, no limit") {
+    // single-file frames, each in one partition, whose reads fail past the
+    // header block: the collect succeeds only if each branch stops there
+    def file(name: String, headerLines: Int) = {
+      val rows = spark.sparkContext.parallelize(Seq(name), 1).flatMap { f =>
+        Iterator.from(0).map { i =>
+          if (i == headerLines) sys.error(s"$f read past its header block")
+          org.apache.spark.sql.Row(f, i.toLong, Seq(s"$f-$i"))
+        }
+      }
+      spark.createDataFrame(rows, org.apache.spark.sql.types.StructType.fromDDL(
+        "file STRING, lineno BIGINT, cells ARRAY<STRING>"))
+    }
+    val plan = Importer.headerPlan(Seq(
+      Importer.headerBlock(file("a", 2), 2), Importer.headerBlock(file("b", 1), 1)))
+    val executed = plan.queryExecution.executedPlan.toString
+    assert(!executed.contains("Exchange") && !executed.contains("Limit"),
+      s"the header plan shuffles or limits:\n$executed")
+    assert(executed.contains("(lineno#") && "MapPartitions".r.findAllIn(executed).size == 2,
+      s"each branch must be filtered and capped:\n$executed")
+    val got = plan.collect().map(r => (r.getLong(1), r.getSeq[String](2).head)).toSeq
+    assert(got.sorted == Seq((0L, "a-0"), (0L, "b-0"), (1L, "a-1")))
   }
+
+  test("a bad header among three csv files fails naming that file; a bad sheet names its sheet") {
+    val dir = tmpDir()
+    val zipPath = new File(dir, "three.zip").getAbsolutePath
+    val z = new ZipOutputStream(new FileOutputStream(zipPath))
+    Seq("first_ok.csv" -> "surname,forename\nSMITH,JOHN\n",
+        "second_bad.csv" -> "lastname,forename\nDOE,JANE\n",
+        "third_ok.csv" -> "surname,forename\nROE,RICHARD\n").foreach { case (name, text) =>
+      z.putNextEntry(new ZipEntry(name)); z.write(text.getBytes("UTF-8")); z.closeEntry()
+    }
+    z.close()
+    def mappings(ext: String) = MappingLoader.loadTables(
+      s"""|- canonical_name: people
+          |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
+          |  header_lines: 1
+          |  klass: Person
+          |  columns:
+          |  - column: surname
+          |  - column: forename
+          |""".stripMargin)
+    val ex = intercept[RuntimeException](Importer.extract(spark, zipPath, mappings("csv"),
+      Registry.ContainerOptions(unzipPath = dir.getAbsolutePath)))
+    assert(ex.getMessage.startsWith(
+      "Header is not valid! missing: [\"surname\"] unexpected: [\"lastname\"] in '"), ex.getMessage)
+    assert(ex.getMessage.contains("second_bad.csv'") && !ex.getMessage.contains("_ok.csv"),
+      ex.getMessage)
+
+    val xlsx = write(dir, "book.xlsx", ExcelFixtures.buildXlsx(Map(
+      "xl/workbook.xml" ->
+        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+          | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
+          |<sheets><sheet name="Good" sheetId="1" r:id="rId1"/>
+          |<sheet name="Bad" sheetId="2" r:id="rId2"/></sheets></workbook>""".stripMargin,
+      "xl/_rels/workbook.xml.rels" ->
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+          |<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/>
+          |<Relationship Id="rId2" Type="x" Target="worksheets/sheet2.xml"/>
+          |</Relationships>""".stripMargin,
+      "xl/worksheets/sheet1.xml" -> sheetXml(Seq("surname", "forename"), Seq("SMITH", "JOHN")),
+      "xl/worksheets/sheet2.xml" -> sheetXml(Seq("forename", "surname"), Seq("JANE", "DOE")))))
+    val sheetEx = intercept[RuntimeException](Importer.extract(spark, xlsx, mappings("xlsx")))
+    assert(sheetEx.getMessage == s"Header is not valid! (out of order) in '$xlsx' sheet 'Bad'")
+  }
+
+  test("a drop of csv, xlsx, jsonl and text files runs one Spark job to plan") {
+    val dir = tmpDir()
+    val book = ExcelFixtures.buildXlsx(Map(
+      "xl/workbook.xml" ->
+        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
+          | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
+          |<sheets><sheet name="People" sheetId="1" r:id="rId1"/>
+          |<sheet name="Notes" sheetId="2" r:id="rId2"/></sheets></workbook>""".stripMargin,
+      "xl/_rels/workbook.xml.rels" ->
+        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
+          |<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/>
+          |<Relationship Id="rId2" Type="x" Target="worksheets/sheet2.xml"/>
+          |</Relationships>""".stripMargin,
+      "xl/worksheets/sheet1.xml" -> sheetXml(Seq("name"), Seq("XL")),
+      "xl/worksheets/sheet2.xml" -> sheetXml(Seq("not a header"), Seq("ignored"))))
+    val zipPath = new File(dir, "drop.zip").getAbsolutePath
+    val z = new ZipOutputStream(new FileOutputStream(zipPath))
+    Seq("a.csv" -> "name\nCSV-A\n".getBytes("UTF-8"), "b.csv" -> "name\nCSV-B\n".getBytes("UTF-8"),
+        "book.xlsx" -> book,
+        "c.jsonl" -> "[\"name\"]\n[\"JSONL\"]\n".getBytes("UTF-8"),
+        "report.txt" -> "NAME: TEXT-1\nNAME: TEXT-2\n".getBytes("UTF-8")).foreach { case (n, b) =>
+      z.putNextEntry(new ZipEntry(n)); z.write(b); z.closeEntry()
+    }
+    z.close()
+    def tabular(ext: String, extra: String = "") =
+      s"""|- canonical_name: people
+          |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
+          |$extra  header_lines: 1
+          |  klass: Person
+          |  columns:
+          |  - column: name
+          |    mappings:
+          |    - field: name
+          |""".stripMargin
+    val mappings = MappingLoader.loadTables(tabular("csv") + tabular("jsonl") +
+      tabular("xlsx", "  tablename_pattern: !ruby/regexp /\\APeople\\z/\n") +
+      """|- canonical_name: people
+         |  filename_pattern: !ruby/regexp /\.txt\z/i
+         |  start_line_pattern: !ruby/regexp /\ANAME: /
+         |  capture_start_line: true
+         |  end_in_a_record: true
+         |  klass: Person
+         |  columns:
+         |  - column: name
+         |    non_tabular_cell:
+         |      lines: 0
+         |      capture: !ruby/regexp /\ANAME: (.*)\z/
+         |    mappings:
+         |    - field: name
+         |""".stripMargin)
+    val (tables, jobs) = jobsDuring(Importer.extract(spark, zipPath, mappings,
+      Registry.ContainerOptions(unzipPath = dir.getAbsolutePath)))
+    assert(jobs == 1, s"planning the drop ran $jobs jobs")
+    assert(tables.size == 5)
+    assert(tables.map(_.records).reduce(_ unionByName _)
+      .select(element_at(col("fields"), "name")).collect().map(_.getString(0)).sorted.toSeq ==
+      Seq("CSV-A", "CSV-B", "JSONL", "TEXT-1", "TEXT-2", "XL"))
+  }
+
+  /** A worksheet of inline-string rows. */
+  private def sheetXml(rows: Seq[String]*): String =
+    """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
+      rows.zipWithIndex.map { case (cells, r) =>
+        s"""<row r="${r + 1}">""" + cells.zipWithIndex.map { case (v, c) =>
+          s"""<c r="${('A' + c).toChar}${r + 1}" t="str"><v>$v</v></c>"""
+        }.mkString + "</row>"
+      }.mkString + "</sheetData></worksheet>"
 
   test("csv and jsonl imports read by streaming: no binaryFile scan, no Exchange") {
     val dir = tmpDir()

@@ -376,4 +376,25 @@ class NonTabularSpec extends SparkSpec {
     assert(oneAtATime.size == 8)
     assert(records(a.union(b).orderBy(rand(7)).repartition(4)) == oneAtATime)
   }
+
+  test("walk: a file that comes back after another file's run fails loudly, naming it") {
+    import spark.implicits._
+    val mapping = MappingLoader.loadTable(
+      dividerYaml("start_in_a_record: true\nend_in_a_record: true"))
+    // one partition: a.txt, then b.txt, then a.txt again, each run in order
+    val lines = Seq(("a.txt", 0L, "x"), ("a.txt", 1L, "------"), ("b.txt", 0L, "y"),
+      ("a.txt", 2L, "z"))
+    val df = spark.sparkContext.parallelize(lines, 1).toDF("file", "lineno", "line")
+    val ex = intercept[Exception](NonTabular.walk(df, mapping).collect())
+    val messages = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).toSeq
+    assert(messages.exists(m => m != null && m.contains("returns to file a.txt")),
+      messages.mkString("\n"))
+    // the same lines, each file's run contiguous, walk to the per-file records
+    val ordered = spark.sparkContext.parallelize(lines.sortBy(l => (l._1, l._2)), 1)
+      .toDF("file", "lineno", "line")
+    assert(NonTabular.walk(ordered, mapping).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getSeq[String](2))).toSeq ==
+      Seq(("a.txt", 0L, Seq("x")), ("a.txt", 1L, Seq("z")), ("b.txt", 0L, Seq("y"))))
+  }
 }
