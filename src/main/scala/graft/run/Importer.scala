@@ -75,14 +75,8 @@ object Importer {
     * the file's mapped tables given those rows. */
   private final case class Read(head: Option[DataFrame], tables: Seq[HeadRow] => Seq[MappedTable])
 
-  /** The planning action's plan: the tagged heads in one union, split
-    * in halves so a drop of many files plans a shallow tree. */
-  private[run] def headerPlan(heads: Seq[DataFrame]): DataFrame =
-    if (heads.size == 1) heads.head
-    else {
-      val (a, b) = heads.splitAt(heads.size / 2)
-      headerPlan(a).union(headerPlan(b))
-    }
+  /** The planning action's plan: the tagged heads in one union. */
+  private[run] def headerPlan(heads: Seq[DataFrame]): DataFrame = heads.reduce(_ union _)
 
   /** The header block (table, lineno, cells) of a single-file frame. The
     * `lineno` filter is correct on any frame; the per-partition take stops

@@ -468,8 +468,7 @@ class ImporterSpec extends SparkSpec {
          |    mappings:
          |    - field: name
          |""".stripMargin)
-    // the importer checkpoints a workbook's sheets, so the reader's own
-    // plan is pinned as well as the import's
+    // the reader's own plan, and the imports that read through it
     Seq(Excel.tables(spark, Seq(xlsx)),
         Importer.mappedTables(spark, xlsx, xlsxMappings)("people"),
         Importer.mappedTables(spark, xml, xmlMappings)("people")).foreach { df =>
