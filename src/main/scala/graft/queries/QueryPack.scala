@@ -339,107 +339,6 @@ object QueryPack {
         element_at(col("cells"), 2).as("brand"))
   }
 
-  // ---- t12 fixture writers (driver-side; each format produced natively) --
-
-  /** Minimal BIFF8 Workbook stream: globals (BOF, BOUNDSHEET, EOF), zero
-    * padding (never scanned — the sheet substream is reached by offset),
-    * then the sheet substream with inline LABEL cells. */
-  private def biff8Workbook(sheetName: String, rows: Seq[Seq[String]]): Array[Byte] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    def rec(id: Int, data: Array[Byte]): Array[Byte] = {
-      val b = ByteBuffer.allocate(4 + data.length).order(ByteOrder.LITTLE_ENDIAN)
-      b.putShort(id.toShort).putShort(data.length.toShort).put(data).array()
-    }
-    def bof(dt: Int): Array[Byte] = {
-      val b = ByteBuffer.allocate(16).order(ByteOrder.LITTLE_ENDIAN)
-      b.putShort(0x0600.toShort).putShort(dt.toShort)
-      rec(0x809, b.array())
-    }
-    def label(row: Int, c: Int, v: String): Array[Byte] = {
-      val str = v.getBytes("ISO-8859-1")
-      val b = ByteBuffer.allocate(9 + str.length).order(ByteOrder.LITTLE_ENDIAN)
-      b.putShort(row.toShort).putShort(c.toShort).putShort(0)
-        .putShort(str.length.toShort).put(0.toByte).put(str)
-      rec(0x204, b.array())
-    }
-    val sheet = bof(0x0010) ++
-      rows.zipWithIndex.flatMap { case (cells, r) =>
-        cells.zipWithIndex.flatMap { case (v, c) => label(r, c, v) }
-      } ++ rec(0x0A, Array.emptyByteArray)
-    def boundsheet(offset: Int): Array[Byte] = {
-      val nameB = sheetName.getBytes("ISO-8859-1")
-      val b = ByteBuffer.allocate(8 + nameB.length).order(ByteOrder.LITTLE_ENDIAN)
-      b.putInt(offset).putShort(0).put(nameB.length.toByte).put(0.toByte).put(nameB)
-      rec(0x85, b.array())
-    }
-    val globalsLen = bof(0x0005).length + boundsheet(0).length + 4
-    // pad so the whole stream clears the CFB mini-stream cutoff (4096)
-    val pad = math.max(0, 4096 - (globalsLen + sheet.length))
-    val offset = globalsLen + pad
-    bof(0x0005) ++ boundsheet(offset) ++ rec(0x0A, Array.emptyByteArray) ++
-      new Array[Byte](pad) ++ sheet
-  }
-
-  /** Minimal CFB (OLE2) container holding one regular-FAT stream. */
-  private def cfbContainer(streamName: String, stream: Array[Byte]): Array[Byte] = {
-    import java.nio.{ByteBuffer, ByteOrder}
-    val nSec = (stream.length + 511) / 512
-    require(nSec <= 126, "single-FAT-sector writer")
-    val total = ByteBuffer.allocate(512 * (2 + nSec + 1)).order(ByteOrder.LITTLE_ENDIAN)
-    // header
-    total.putLong(0xE11AB1A1E011CFD0L)
-    total.position(0x18)
-    total.putShort(0x003E.toShort).putShort(0x0003.toShort)  // minor/major
-      .putShort(0xFFFE.toShort)                               // byte order
-      .putShort(9.toShort).putShort(6.toShort)                // sector/mini shift
-    total.position(0x2C)
-    total.putInt(1)      // FAT sectors
-      .putInt(1)         // first directory sector
-      .putInt(0)         // transaction signature
-      .putInt(4096)      // mini cutoff
-      .putInt(-2)        // first miniFAT
-      .putInt(0)         // miniFAT count
-      .putInt(-2)        // first DIFAT
-      .putInt(0)         // DIFAT count
-    total.putInt(0x4C, 0)                                    // DIFAT[0] = FAT at sector 0
-    for (i <- 1 until 109) total.putInt(0x4C + i * 4, -1)
-    // FAT (sector 0): FAT itself, dir chain end, stream chain
-    total.position(512)
-    total.putInt(0xFFFFFFFD)                                 // sector 0: FATSECT
-    total.putInt(-2)                                         // sector 1: dir, end
-    for (i <- 0 until nSec) total.putInt(if (i == nSec - 1) -2 else 2 + i + 1)
-    for (_ <- (2 + nSec) until 128) total.putInt(-1)
-    // directory (sector 1): Root Entry + the stream
-    def dirEntry(at: Int, name: String, tpe: Int, child: Int, start: Int, size: Int): Unit = {
-      val utf = name.getBytes("UTF-16LE")
-      total.position(at); total.put(utf)
-      total.putShort(at + 0x40, ((name.length + 1) * 2).toShort)
-      total.put(at + 0x42, tpe.toByte); total.put(at + 0x43, 1.toByte)
-      total.putInt(at + 0x44, -1); total.putInt(at + 0x48, -1)
-      total.putInt(at + 0x4C, child)
-      total.putInt(at + 0x74, start); total.putInt(at + 0x78, size)
-    }
-    dirEntry(1024, "Root Entry", 5, 1, -2, 0)
-    dirEntry(1024 + 128, streamName, 2, -1, 2, stream.length)
-    // stream sectors from sector 2
-    total.position(1536); total.put(stream)
-    total.array()
-  }
-
-  /** Minimal docx: one paragraph per line. */
-  private def docxBytes(lines: Seq[String]): Array[Byte] = {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
-    def esc(v: String) = v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    val doc = """<w:document xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main"><w:body>""" +
-      lines.map(l => s"<w:p><w:r><w:t>${esc(l)}</w:t></w:r></w:p>").mkString +
-      "</w:body></w:document>"
-    val bos = new java.io.ByteArrayOutputStream()
-    val z = new ZipOutputStream(bos)
-    z.putNextEntry(new ZipEntry("word/document.xml"))
-    z.write(doc.getBytes("UTF-8")); z.closeEntry(); z.close()
-    bos.toByteArray
-  }
-
   /** Fixture paths keyed by (query, sf dir) — built once per JVM: the
     * system under test is the IMPORT, not driver-side fixture writing, so
     * bench medians must not absorb fixture generation. */
@@ -448,76 +347,44 @@ object QueryPack {
   private def cachedFixture(query: String, dir: String)(build: => String): String =
     fixtureCache.computeIfAbsent((query, dir), { _ => build })
 
+  /** Writes `bytes` as `name` in a fresh temp directory; returns its path. */
+  private def tempFile(name: String, bytes: Array[Byte]): String = {
+    val p = java.nio.file.Files.createTempDirectory("graft_fixture").resolve(name)
+    java.nio.file.Files.write(p, bytes)
+    p.toString
+  }
+
+  /** `table`'s (key, name) rows with key below `cap`, sorted by key. */
+  private def keyed(s: SparkSession, dir: String, table: String, key: String, name: String,
+                    cap: Long = Long.MaxValue): Seq[(Long, String)] =
+    T(s, dir, table).filter(col(key) < cap).select(col(key).cast("long"), col(name))
+      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq
+
+  private def csvBytes(rows: Seq[(Long, String)]): Array[Byte] =
+    ("key,name" +: rows.map { case (k, n) => s"$k,$n" }).mkString("", "\n", "\n").getBytes("UTF-8")
+
   /** T12 — the orchestration layer end-to-end (`universal_importer_helper.rb`):
     * a zip containing a CSV (nation), an xlsx (region), a native BIFF8 .xls
     * (supplier) and a .docx (customer) flows through container expansion
     * (S16), filename-pattern mapping match (T1), the delimited/xlsx/OLE
     * Biff8/Word readers (S2/S3/S13), header validation (T3), non-tabular
     * capture (N3/N4 for the docx) and canonical-table union (T12). Fixtures
-    * are generated driver-side from the sf parquet (cached per JVM — the
-    * system under test is the import, not fixture writing), so the DuckDB
-    * oracle is a plain four-way UNION ALL. */
+    * are written driver-side by [[Fixtures]] from the sf parquet (cached per
+    * JVM — the system under test is the import, not fixture writing), so the
+    * DuckDB oracle is a plain four-way UNION ALL. */
   def t12ImporterUnion(s: SparkSession, dir: String): DataFrame = {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
     val zipPath = cachedFixture("t12", dir) {
-    val nation = T(s, dir, "nation").select(col("n_nationkey").cast("long"), col("n_name"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    val region = T(s, dir, "region").select(col("r_regionkey").cast("long"), col("r_name"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-
-    val csv = ("key,name" +: nation.map { case (k, n) => s"$k,$n" })
-      .mkString("", "\n", "\n").getBytes("UTF-8")
-    // Minimal inline-string xlsx — values verbatim, no shared-strings part.
-    def esc(v: String) = v.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
-    def xmlRow(idx: Int, cells: Seq[String]) =
-      s"""<row r="$idx">""" + cells.zipWithIndex.map { case (v, c) =>
-        s"""<c r="${('A' + c).toChar}$idx" t="inlineStr"><is><t>${esc(v)}</t></is></c>"""
-      }.mkString + "</row>"
-    val sheetRows = xmlRow(1, Seq("key", "name")) +:
-      region.zipWithIndex.map { case ((k, n), i) => xmlRow(i + 2, Seq(k.toString, n)) }
-    val xlsxParts = Seq(
-      "xl/workbook.xml" ->
-        ("""<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"""" +
-          """ xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">""" +
-          """<sheets><sheet name="Regions" sheetId="1" r:id="rId1"/></sheets></workbook>"""),
-      "xl/_rels/workbook.xml.rels" ->
-        ("""<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">""" +
-          """<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/></Relationships>"""),
-      "xl/worksheets/sheet1.xml" ->
-        ("""<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main">""" +
-          s"""<sheetData>${sheetRows.mkString}</sheetData></worksheet>"""))
-    val xlsxBytes = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val z = new ZipOutputStream(bos)
-      xlsxParts.foreach { case (name, content) =>
-        z.putNextEntry(new ZipEntry(name)); z.write(content.getBytes("UTF-8")); z.closeEntry()
-      }
-      z.close(); bos.toByteArray
-    }
-
-    // bounded: the single-FAT-sector xls writer holds ~63 KB; 1000 rows
-    // (~50 KB) fit at every sf
-    val supplier = T(s, dir, "supplier").filter(col("s_suppkey") < 1000)
-      .select(col("s_suppkey").cast("long"), col("s_name"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-    // bounded like s12: the docx fixture stays small at every sf
-    val customer = T(s, dir, "customer").filter(col("c_custkey") < 2000)
-      .select(col("c_custkey").cast("long"), col("c_name"))
-      .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-
-    val xlsBytes = cfbContainer("Workbook", biff8Workbook("Suppliers",
-      Seq("key", "name") +: supplier.map { case (k, n) => Seq(k.toString, n) }))
-    val docLines = customer.map { case (k, n) => s"K=$k N=$n" }
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft_t12")
-    val p = tmp.resolve("places.zip")
-    val z = new ZipOutputStream(java.nio.file.Files.newOutputStream(p))
-    z.putNextEntry(new ZipEntry("nation.csv")); z.write(csv); z.closeEntry()
-    z.putNextEntry(new ZipEntry("region.xlsx")); z.write(xlsxBytes); z.closeEntry()
-    z.putNextEntry(new ZipEntry("supplier.xls")); z.write(xlsBytes); z.closeEntry()
-    z.putNextEntry(new ZipEntry("customer.docx")); z.write(docxBytes(docLines)); z.closeEntry()
-    z.close()
-    p.toString
+      // bounded like s12: the xls and docx fixtures stay small at every sf
+      val supplier = keyed(s, dir, "supplier", "s_suppkey", "s_name", cap = 1000)
+      val customer = keyed(s, dir, "customer", "c_custkey", "c_name", cap = 2000)
+      def sheet(rows: Seq[(Long, String)]) =
+        Seq("key", "name") +: rows.map { case (k, n) => Seq(k.toString, n) }
+      tempFile("places.zip", Fixtures.zip(Seq(
+        "nation.csv" -> csvBytes(keyed(s, dir, "nation", "n_nationkey", "n_name")),
+        "region.xlsx" -> Fixtures.xlsx(Seq(
+          "Regions" -> sheet(keyed(s, dir, "region", "r_regionkey", "r_name")))),
+        "supplier.xls" -> Fixtures.xls(Seq("Suppliers" -> sheet(supplier))),
+        "customer.docx" -> Fixtures.docx(customer.map { case (k, n) => s"K=$k N=$n" }))))
     }
 
     def tableYaml(pattern: String) =
@@ -574,33 +441,11 @@ object QueryPack {
     * but cannot write them), so the password path is pinned by
     * ImporterSpec against the reference's own `normal.7z` fixture. */
   def t12b7zUnion(s: SparkSession, dir: String): DataFrame = {
-    import java.util.zip.{ZipEntry, ZipOutputStream}
     val szPath = cachedFixture("t12b", dir) {
-      val nation = T(s, dir, "nation").select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val region = T(s, dir, "region").select(col("r_regionkey").cast("long"), col("r_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      def csvBytes(rows: Seq[(Long, String)]) =
-        ("key,name" +: rows.map { case (k, n) => s"$k,$n" })
-          .mkString("", "\n", "\n").getBytes("UTF-8")
-      val innerZip = {
-        val bos = new java.io.ByteArrayOutputStream()
-        val z = new ZipOutputStream(bos)
-        z.putNextEntry(new ZipEntry("region.csv"))
-        z.write(csvBytes(region)); z.closeEntry(); z.close()
-        bos.toByteArray
-      }
-      val tmp = java.nio.file.Files.createTempDirectory("graft_t12b")
-      val p = tmp.resolve("bundle.7z")
-      val sz = new org.apache.commons.compress.archivers.sevenz.SevenZOutputFile(p.toFile)
-      def add(name: String, bytes: Array[Byte]): Unit = {
-        val e = sz.createArchiveEntry(new java.io.File("/dev/null"), name)
-        sz.putArchiveEntry(e); sz.write(bytes); sz.closeArchiveEntry()
-      }
-      add("nation.csv", csvBytes(nation))
-      add("inner.zip", innerZip)
-      sz.close()
-      p.toString
+      tempFile("bundle.7z", Fixtures.sevenZ(Seq(
+        "nation.csv" -> csvBytes(keyed(s, dir, "nation", "n_nationkey", "n_name")),
+        "inner.zip" -> Fixtures.zip(Seq(
+          "region.csv" -> csvBytes(keyed(s, dir, "region", "r_regionkey", "r_name")))))))
     }
     val mappings = MappingLoader.loadTables(
       """|- canonical_name: places
@@ -631,19 +476,16 @@ object QueryPack {
     import org.apache.avro.file.DataFileWriter
     import org.apache.avro.generic.{GenericDatumWriter, GenericRecordBuilder, GenericRecord}
     val path = cachedFixture("s9", dir) {
-      val nation = T(s, dir, "nation").select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
       val schema: Schema = SchemaBuilder.record("Nation").fields()
         .requiredLong("key").requiredString("name").endRecord()
-      val tmp = java.nio.file.Files.createTempDirectory("graft_s9")
-      val p = tmp.resolve("nation.avro")
+      val bytes = new java.io.ByteArrayOutputStream()
       val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-      w.create(schema, p.toFile)
-      nation.foreach { case (k, n) =>
+      w.create(schema, bytes)
+      keyed(s, dir, "nation", "n_nationkey", "n_name").foreach { case (k, n) =>
         w.append(new GenericRecordBuilder(schema).set("key", k).set("name", n).build())
       }
       w.close()
-      p.toString
+      tempFile("nation.avro", bytes.toByteArray)
     }
     graft.sources.Avro.rows(s, Seq(path))
       .filter(col("lineno") > 0) // drop the synthetic header row
@@ -655,15 +497,9 @@ object QueryPack {
     * (## meta lines skipped, # stripped from the header, tab cells). */
   def s11Vcf(s: SparkSession, dir: String): DataFrame = {
     val path = cachedFixture("s11", dir) {
-      val parts = T(s, dir, "part").filter(col("p_partkey") < 2000)
-        .select(col("p_partkey").cast("long"), col("p_brand"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      val text = "##fileformat=VCFv4.2\n##source=graft\n#CHROM\tPOS\tID\n" +
-        parts.map { case (k, b) => s"1\t$k\t$b" }.mkString("", "\n", "\n")
-      val tmp = java.nio.file.Files.createTempDirectory("graft_s11")
-      val p = tmp.resolve("parts.vcf")
-      java.nio.file.Files.write(p, text.getBytes("UTF-8"))
-      p.toString
+      val parts = keyed(s, dir, "part", "p_partkey", "p_brand", cap = 2000)
+      tempFile("parts.vcf", ("##fileformat=VCFv4.2\n##source=graft\n#CHROM\tPOS\tID\n" +
+        parts.map { case (k, b) => s"1\t$k\t$b" }.mkString("", "\n", "\n")).getBytes("UTF-8"))
     }
     graft.sources.Tabular.vcf(s, Seq(path))
       .filter(col("lineno") > 0) // drop the #CHROM header row
@@ -676,16 +512,8 @@ object QueryPack {
     * (field, value) pairs. */
   def s15Acroform(s: SparkSession, dir: String): DataFrame = {
     val path = cachedFixture("s15", dir) {
-      val nation = T(s, dir, "nation").select(col("n_nationkey").cast("long"), col("n_name"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      def esc(v: String) = v.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-      val pdf = "%PDF-1.4\n" + nation.zipWithIndex.map { case ((k, n), i) =>
-        s"${i + 1} 0 obj << /FT /Tx /Subtype /Widget /T (k$k) /V (${esc(n)}) >> endobj\n"
-      }.mkString + "%%EOF\n"
-      val tmp = java.nio.file.Files.createTempDirectory("graft_s15")
-      val p = tmp.resolve("form.pdf")
-      java.nio.file.Files.write(p, pdf.getBytes("ISO-8859-1"))
-      p.toString
+      tempFile("form.pdf", Fixtures.acroFormPdf(
+        keyed(s, dir, "nation", "n_nationkey", "n_name").map { case (k, n) => s"k$k" -> n }))
     }
     graft.sources.Pdf.acroForm(s, Seq(path))
       .select(explode(col("fields_hash")).as(Seq("field", "value")))
@@ -780,25 +608,9 @@ object QueryPack {
     * Bounded to p_partkey < 2000 so the fixture stays small at every sf. */
   def s12PdfText(s: SparkSession, dir: String): DataFrame = {
     val pdfPath = cachedFixture("s12", dir) {
-      val parts = T(s, dir, "part").filter(col("p_partkey") < 2000)
-        .select(col("p_partkey").cast("long"), col("p_brand"))
-        .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
-      def escape(v: String) =
-        v.replace("\\", "\\\\").replace("(", "\\(").replace(")", "\\)")
-      val pdf = new StringBuilder("%PDF-1.4\n")
-      parts.grouped(50).zipWithIndex.foreach { case (page, pi) =>
-        val body = new StringBuilder("BT 0 780 Td ")
-        page.foreach { case (k, brand) =>
-          body ++= s"(P $k ${escape(brand)}) Tj 0 -12 Td "
-        }
-        body ++= "ET"
-        pdf ++= s"${pi + 1} 0 obj << /Length ${body.length} >> stream\n$body\nendstream\nendobj\n"
-      }
-      pdf ++= "%%EOF\n"
-      val tmp = java.nio.file.Files.createTempDirectory("graft_s12")
-      val p = tmp.resolve("parts.pdf")
-      java.nio.file.Files.write(p, pdf.toString.getBytes("ISO-8859-1"))
-      p.toString
+      val parts = keyed(s, dir, "part", "p_partkey", "p_brand", cap = 2000)
+      tempFile("parts.pdf", Fixtures.textPdf(
+        parts.map { case (k, brand) => s"P $k $brand" }.grouped(50).toSeq))
     }
     graft.sources.Pdf.lines(s, Seq(pdfPath))
       .select(regexp_extract(col("line"), "^P (\\d+) (.*)$", 1).cast("bigint").as("partkey"),

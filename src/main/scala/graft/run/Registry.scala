@@ -1,6 +1,7 @@
 package graft.run
 
-import java.io.{BufferedInputStream, File, FileInputStream, FileOutputStream}
+import java.io.{BufferedInputStream, File, FileInputStream, OutputStream}
+import java.nio.file.{FileAlreadyExistsException, Files, StandardOpenOption}
 import java.util.zip.ZipInputStream
 import org.apache.commons.compress.archivers.sevenz.SevenZFile
 import scala.collection.mutable
@@ -10,9 +11,9 @@ import scala.collection.mutable
   *
   * `files` is driver-side by design, like the reference: containers expand
   * to scratch-dir files (basename-stripped — the reference's zip-slip
-  * defence, `zip.rb:42-47`) and recurse; the expanded paths then feed the
-  * format readers, each a task per file (`LineSource.perFile`), so the
-  * CLUSTER does the heavy reading. At
+  * defence, `zip.rb:42-47`; two entries with one basename fail) and
+  * recurse; the expanded paths then feed the format readers, each a task
+  * per file (`LineSource.perFile`), so the CLUSTER does the heavy reading. At
   * 100 TB the unit of parallelism is many files; the archive itself is the
   * one inherently sequential step (central directory + stream decode), so
   * expanding it where the paths are resolved is the honest shape.
@@ -21,6 +22,9 @@ object Registry {
 
   final class UnknownFormatError(format: String)
     extends RuntimeException(s"""Error: Unknown file format "$format"""")
+
+  final class DuplicateEntryError(container: String, basename: String)
+    extends RuntimeException(s"Two entries of '$container' extract to the same file '$basename'")
 
   def formatFor(filename: String, explicit: Option[String] = None): String =
     explicit.getOrElse {
@@ -54,6 +58,15 @@ object Registry {
   private def keep(basename: String, entryIsFile: Boolean, options: ContainerOptions): Boolean =
     entryIsFile && options.pattern.forall(p => p.r.findFirstIn(basename).isDefined)
 
+  /** A new scratch file for entry `base` of `container`. A second entry
+    * with that basename fails instead of overwriting the first, as
+    * rubyzip's `Entry#extract` raises `DestinationFileExistsError`. */
+  private def create(dest: File, base: String, container: String): (File, OutputStream) = {
+    val f = new File(dest, base)
+    try (f, Files.newOutputStream(f.toPath, StandardOpenOption.CREATE_NEW))
+    catch { case _: FileAlreadyExistsException => throw new DuplicateEntryError(container, base) }
+  }
+
   /** S16 — zip expansion; paths stripped to basenames (`zip.rb:42-47`). */
   def expandZip(filename: String, options: ContainerOptions): Seq[String] = {
     val dest = scratchDir(options)
@@ -64,8 +77,7 @@ object Registry {
       while (e != null) {
         val base = new File(e.getName).getName
         if (keep(base, !e.isDirectory, options)) {
-          val f = new File(dest, base)
-          val os = new FileOutputStream(f)
+          val (f, os) = create(dest, base, filename)
           try zin.transferTo(os) finally os.close()
           out += f.getAbsolutePath
         }
@@ -88,8 +100,7 @@ object Registry {
       while (e != null) {
         val base = new File(e.getName).getName
         if (keep(base, !e.isDirectory, options)) {
-          val f = new File(dest, base)
-          val os = new FileOutputStream(f)
+          val (f, os) = create(dest, base, filename)
           try {
             val buf = new Array[Byte](64 * 1024)
             var n = sz.read(buf)

@@ -14,12 +14,15 @@ import scala.collection.mutable
   */
 object Cfb {
 
+  /** The eight header bytes every compound file starts with, read little-endian. */
+  val Signature: Long = 0xE11AB1A1E011CFD0L
+
   final case class Entry(name: String, entryType: Int, startSector: Int, size: Long)
 
   final class CompoundFile(bytes: Array[Byte]) {
     private val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     require(bytes.length >= 512 &&
-      (buf.getLong(0) == 0xE11AB1A1E011CFD0L), "Not an OLE2 compound file")
+      (buf.getLong(0) == Signature), "Not an OLE2 compound file")
 
     private val sectorShift = buf.getShort(0x1E).toInt       // usually 9 → 512
     private val miniShift = buf.getShort(0x20).toInt         // usually 6 → 64
@@ -135,5 +138,5 @@ object Cfb {
 
   def isCfb(bytes: Array[Byte]): Boolean =
     bytes.length >= 8 &&
-      ByteBuffer.wrap(bytes, 0, 8).order(ByteOrder.LITTLE_ENDIAN).getLong == 0xE11AB1A1E011CFD0L
+      ByteBuffer.wrap(bytes, 0, 8).order(ByteOrder.LITTLE_ENDIAN).getLong == Signature
 }

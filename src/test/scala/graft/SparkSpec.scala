@@ -53,6 +53,23 @@ trait SparkSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.collect {
       case w: WholeStageCodegenExec => w.child.toString
     }.exists(_.contains(name))
+
+  /** `read` of `q` planned with expression `name` fused into whole-stage
+    * codegen, checked equal to `read` of a fresh `q` planned interpreted.
+    * `q` must read an RDD-backed frame: a projection over a local relation
+    * is folded on the driver, and its generated code never runs. */
+  def onBothPaths[T](name: String)(q: => DataFrame)(read: DataFrame => T): T = {
+    def run(fused: Boolean): T = {
+      val df = q
+      val out = read(df)
+      assert(fusedInCodegen(df, name) == fused, s"$name fused in codegen: ${!fused}")
+      out
+    }
+    val generated = run(fused = true)
+    assert(withInterpreted(run(fused = false)) == generated,
+      s"$name: interpreted eval diverged from the generated code")
+    generated
+  }
 }
 
 object SparkSpec {

@@ -6,13 +6,15 @@ import org.apache.spark.sql.functions._
 class QualityModelSpec extends SparkSpec {
   import spark.implicits._
 
+  /** (n_features, logit) of `text`, read from an RDD-backed frame through
+    * the generated code and through `eval`. */
   private def score(text: String, weights: Seq[Double], bias: Double,
-                    bigrams: Boolean = true): (Int, Double) = {
-    val r = Seq(Tuple1(text)).toDF("t")
-      .select(HashedNgramScore.hashedNgramScore(col("t"), weights, bias, bigrams).as("s"))
-      .select(col("s.n_features"), col("s.logit")).head()
-    (r.getInt(0), r.getDouble(1))
-  }
+                    bigrams: Boolean = true): (Int, Double) =
+    onBothPaths("graft_hashed_ngram_score") {
+      spark.sparkContext.parallelize(Seq(text), 1).toDF("t")
+        .select(HashedNgramScore.hashedNgramScore(col("t"), weights, bias, bigrams).as("s"))
+        .select(col("s.n_features"), col("s.logit"))
+    } { df => val r = df.head(); (r.getInt(0), r.getDouble(1)) }
 
   test("feature count: unigrams + adjacent bigrams, whitespace runs, empty -> bias") {
     val w = Seq.fill(16)(0.0)
@@ -54,8 +56,8 @@ class QualityModelSpec extends SparkSpec {
   test("native scan agrees with the composed Spark SQL rendering") {
     val b = 128
     val weights = Seq.tabulate(b)(i => (((i + 1) * 2654435761L) % 2000003L) / 2000003.0 - 0.5)
-    val docs = Seq.tabulate(50)(i =>
-      (i.toLong, s"Row ${i % 7} value v${i % 5} agg text sample ${"pad " * (i % 3)}".trim))
+    val docs = spark.sparkContext.parallelize(Seq.tabulate(50)(i =>
+      (i.toLong, s"Row ${i % 7} value v${i % 5} agg text sample ${"pad " * (i % 3)}".trim)), 3)
       .toDF("doc_id", "text")
     val native = graft.operators.TextStats
       .learnedQuality(docs, "doc_id", "text", weights, bias = 0.1)

@@ -15,34 +15,35 @@ class VocabIdSpec extends SparkSpec {
   private val vocab: Seq[(String, Long)] =
     Seq("a" -> 0L, "b" -> 1L, "ab" -> 2L, "ﬀ" -> 3L, "𝕒" -> 4L, "é" -> 5L)
 
+  /** An RDD-backed frame of `syms` in input order: a local relation's
+    * projection is folded on the driver, so its generated code never runs. */
+  private def frame(syms: Seq[String]) =
+    spark.sparkContext.parallelize(syms.zipWithIndex, 2).toDF("sym", "i")
+
+  /** Each sym's id, in input order, through the generated code and `eval`. */
+  private def ids(syms: Seq[String], table: Seq[(String, Long)]): Seq[Option[Long]] =
+    onBothPaths("graft_vocab_id")(frame(syms).select(col("i"), VocabId.vocabId(col("sym"), table))) {
+      _.collect().sortBy(_.getInt(0)).map(r => Option(r.get(1)).map(_.asInstanceOf[Long])).toSeq
+    }
+
   test("parity with element_at on a literal map, OOV -> -1, null -> null") {
     val syms = Seq("a", "b", "ab", "ﬀ", "𝕒", "é", "zz", "", "A")
-    val df = (syms :+ null).toDF("sym")
     val litMap = map(vocab.flatMap { case (s, i) => Seq(lit(s), lit(i)) }: _*)
-    val got = df.select(col("sym"),
-      VocabId.vocabId(col("sym"), vocab).as("fast"),
-      coalesce(element_at(litMap, col("sym")), lit(-1L)).as("ref")).collect()
-    got.filter(!_.isNullAt(0)).foreach { r =>
-      assert(!r.isNullAt(1) && r.getLong(1) == r.getLong(2), s"value: $r")
-    }
+    val ref = frame(syms).select(col("i"), coalesce(element_at(litMap, col("sym")), lit(-1L)))
+      .collect().sortBy(_.getInt(0)).map(r => Option(r.getLong(1))).toSeq
     // null INPUT propagates as null (standard unary null semantics; the
     // coalesce rendering it replaced folded null input into the OOV -1,
     // but OOV means a present, unknown symbol — and the pipeline's
     // symbol arrays are containsNull=false, so in situ the two never
     // diverge)
-    assert(got.last.isNullAt(1))
+    assert(ids(syms :+ null, vocab) == ref :+ None)
   }
 
   test("production-sized table: every id correct against the driver map") {
     val big = (0 until 32768).map(i => (s"sym$i", i.toLong))
     val byKey = big.toMap
     val probes = Seq("sym0", "sym1", "sym32767", "sym16384", "nope", "sym")
-    val rows = probes.toDF("sym")
-      .select(col("sym"), VocabId.vocabId(col("sym"), big).as("id")).collect()
-    rows.foreach { r =>
-      assert(r.getLong(1) == byKey.getOrElse(r.getString(0), -1L),
-        s"mismatch at ${r.getString(0)}")
-    }
+    assert(ids(probes, big) == probes.map(p => Some(byKey.getOrElse(p, -1L))))
   }
 
   test("interpreted eval matches codegen") {

@@ -564,7 +564,7 @@ class PlanQualitySpec extends SparkSpec {
     val text = dir.resolve("report.txt")
     java.nio.file.Files.write(text, "NAME: A\nNAME: B\n".getBytes("UTF-8"))
     val pdf = dir.resolve("report.pdf")
-    java.nio.file.Files.write(pdf, graft.sources.SyntheticOffice.textPdf(Seq("NAME: A", "NAME: B")))
+    java.nio.file.Files.write(pdf, Fixtures.textPdf(Seq(Seq("NAME: A", "NAME: B"))))
     def mapping(ext: String) = graft.model.MappingLoader.loadTables(
       s"""|- canonical_name: names
           |  filename_pattern: !ruby/regexp /\\.$ext\\z/i

@@ -3,11 +3,12 @@ package graft.run
 import graft.SparkSpec
 import graft.compile.MappingCompiler
 import graft.model.MappingLoader
-import graft.sources.{Excel, ExcelFixtures, LineSource, SyntheticOffice, Tabular}
+import graft.queries.Fixtures
+import graft.sources.{Excel, LineSource, SyntheticOffice, Tabular}
+import graft.sources.ExcelFixtures.utf8
 import org.apache.spark.sql.functions._
 
 import java.io.{File, FileOutputStream}
-import java.util.zip.{ZipEntry, ZipOutputStream}
 
 /** End-to-end orchestration, mirroring
   * `test/universal_importer_helper_test.rb`: container expansion, mapping
@@ -28,13 +29,9 @@ class ImporterSpec extends SparkSpec {
 
   test("zip of two CSVs -> one canonical table (reference :205-223)") {
     val dir = tmpDir()
-    val csv1 = "surname,forename\nSMITH,JOHN\n".getBytes("UTF-8")
-    val csv2 = "surname,forename\nDOE,JANE\n".getBytes("UTF-8")
-    val zipPath = new File(dir, "two_files.zip").getAbsolutePath
-    val z = new ZipOutputStream(new FileOutputStream(zipPath))
-    z.putNextEntry(new ZipEntry("inner/first.csv")); z.write(csv1); z.closeEntry()
-    z.putNextEntry(new ZipEntry("second.csv")); z.write(csv2); z.closeEntry()
-    z.close()
+    val zipPath = write(dir, "two_files.zip", Fixtures.zip(utf8(
+      "inner/first.csv" -> "surname,forename\nSMITH,JOHN\n",
+      "second.csv" -> "surname,forename\nDOE,JANE\n")))
 
     val mappings = MappingLoader.loadTables(
       """|- canonical_name: people
@@ -60,33 +57,9 @@ class ImporterSpec extends SparkSpec {
 
   test("xlsx sheets route by tablename_pattern") {
     val dir = tmpDir()
-    // reuse the ExcelSpec generator shape: two sheets, only Sheet1 mapped
-    val bos = new java.io.ByteArrayOutputStream()
-    val z = new ZipOutputStream(bos)
-    def entry(name: String, content: String): Unit = {
-      z.putNextEntry(new ZipEntry(name)); z.write(content.getBytes("UTF-8")); z.closeEntry()
-    }
-    entry("xl/workbook.xml",
-      """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-        | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-        |<sheets><sheet name="Data" sheetId="1" r:id="rId1"/>
-        |<sheet name="Notes" sheetId="2" r:id="rId2"/></sheets></workbook>""".stripMargin)
-    entry("xl/_rels/workbook.xml.rels",
-      """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-        |<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/>
-        |<Relationship Id="rId2" Type="x" Target="worksheets/sheet2.xml"/>
-        |</Relationships>""".stripMargin)
-    entry("xl/worksheets/sheet1.xml",
-      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
-        |<row r="1"><c r="A1" t="str"><v>code</v></c></row>
-        |<row r="2"><c r="A2"><v>42</v></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    entry("xl/worksheets/sheet2.xml",
-      """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
-        |<row r="1"><c r="A1" t="str"><v>ignore me</v></c></row>
-        |</sheetData></worksheet>""".stripMargin)
-    z.close()
-    val xlsxPath = write(dir, "book.xlsx", bos.toByteArray)
+    // two sheets, only Data mapped
+    val xlsxPath = write(dir, "book.xlsx", Fixtures.xlsx(Seq(
+      "Data" -> Seq(Seq("code"), Seq("42")), "Notes" -> Seq(Seq("ignore me")))))
 
     val mappings = MappingLoader.loadTables(
       """|- canonical_name: codes
@@ -290,14 +263,10 @@ class ImporterSpec extends SparkSpec {
 
   test("a bad header among three csv files fails naming that file; a bad sheet names its sheet") {
     val dir = tmpDir()
-    val zipPath = new File(dir, "three.zip").getAbsolutePath
-    val z = new ZipOutputStream(new FileOutputStream(zipPath))
-    Seq("first_ok.csv" -> "surname,forename\nSMITH,JOHN\n",
-        "second_bad.csv" -> "lastname,forename\nDOE,JANE\n",
-        "third_ok.csv" -> "surname,forename\nROE,RICHARD\n").foreach { case (name, text) =>
-      z.putNextEntry(new ZipEntry(name)); z.write(text.getBytes("UTF-8")); z.closeEntry()
-    }
-    z.close()
+    val zipPath = write(dir, "three.zip", Fixtures.zip(utf8(
+      "first_ok.csv" -> "surname,forename\nSMITH,JOHN\n",
+      "second_bad.csv" -> "lastname,forename\nDOE,JANE\n",
+      "third_ok.csv" -> "surname,forename\nROE,RICHARD\n")))
     def mappings(ext: String) = MappingLoader.loadTables(
       s"""|- canonical_name: people
           |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
@@ -314,47 +283,21 @@ class ImporterSpec extends SparkSpec {
     assert(ex.getMessage.contains("second_bad.csv'") && !ex.getMessage.contains("_ok.csv"),
       ex.getMessage)
 
-    val xlsx = write(dir, "book.xlsx", ExcelFixtures.buildXlsx(Map(
-      "xl/workbook.xml" ->
-        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-          | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-          |<sheets><sheet name="Good" sheetId="1" r:id="rId1"/>
-          |<sheet name="Bad" sheetId="2" r:id="rId2"/></sheets></workbook>""".stripMargin,
-      "xl/_rels/workbook.xml.rels" ->
-        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-          |<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/>
-          |<Relationship Id="rId2" Type="x" Target="worksheets/sheet2.xml"/>
-          |</Relationships>""".stripMargin,
-      "xl/worksheets/sheet1.xml" -> sheetXml(Seq("surname", "forename"), Seq("SMITH", "JOHN")),
-      "xl/worksheets/sheet2.xml" -> sheetXml(Seq("forename", "surname"), Seq("JANE", "DOE")))))
+    val xlsx = write(dir, "book.xlsx", Fixtures.xlsx(Seq(
+      "Good" -> Seq(Seq("surname", "forename"), Seq("SMITH", "JOHN")),
+      "Bad" -> Seq(Seq("forename", "surname"), Seq("JANE", "DOE")))))
     val sheetEx = intercept[RuntimeException](Importer.extract(spark, xlsx, mappings("xlsx")))
     assert(sheetEx.getMessage == s"Header is not valid! (out of order) in '$xlsx' sheet 'Bad'")
   }
 
   test("a drop of csv, xlsx, jsonl and text files runs one Spark job to plan") {
     val dir = tmpDir()
-    val book = ExcelFixtures.buildXlsx(Map(
-      "xl/workbook.xml" ->
-        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-          | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-          |<sheets><sheet name="People" sheetId="1" r:id="rId1"/>
-          |<sheet name="Notes" sheetId="2" r:id="rId2"/></sheets></workbook>""".stripMargin,
-      "xl/_rels/workbook.xml.rels" ->
-        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-          |<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/>
-          |<Relationship Id="rId2" Type="x" Target="worksheets/sheet2.xml"/>
-          |</Relationships>""".stripMargin,
-      "xl/worksheets/sheet1.xml" -> sheetXml(Seq("name"), Seq("XL")),
-      "xl/worksheets/sheet2.xml" -> sheetXml(Seq("not a header"), Seq("ignored"))))
-    val zipPath = new File(dir, "drop.zip").getAbsolutePath
-    val z = new ZipOutputStream(new FileOutputStream(zipPath))
-    Seq("a.csv" -> "name\nCSV-A\n".getBytes("UTF-8"), "b.csv" -> "name\nCSV-B\n".getBytes("UTF-8"),
-        "book.xlsx" -> book,
-        "c.jsonl" -> "[\"name\"]\n[\"JSONL\"]\n".getBytes("UTF-8"),
-        "report.txt" -> "NAME: TEXT-1\nNAME: TEXT-2\n".getBytes("UTF-8")).foreach { case (n, b) =>
-      z.putNextEntry(new ZipEntry(n)); z.write(b); z.closeEntry()
-    }
-    z.close()
+    val zipPath = write(dir, "drop.zip", Fixtures.zip(Seq(
+      "a.csv" -> "name\nCSV-A\n".getBytes("UTF-8"), "b.csv" -> "name\nCSV-B\n".getBytes("UTF-8"),
+      "book.xlsx" -> Fixtures.xlsx(Seq("People" -> Seq(Seq("name"), Seq("XL")),
+        "Notes" -> Seq(Seq("not a header"), Seq("ignored")))),
+      "c.jsonl" -> "[\"name\"]\n[\"JSONL\"]\n".getBytes("UTF-8"),
+      "report.txt" -> "NAME: TEXT-1\nNAME: TEXT-2\n".getBytes("UTF-8"))))
     def tabular(ext: String, extra: String = "") =
       s"""|- canonical_name: people
           |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
@@ -390,15 +333,6 @@ class ImporterSpec extends SparkSpec {
       Seq("CSV-A", "CSV-B", "JSONL", "TEXT-1", "TEXT-2", "XL"))
   }
 
-  /** A worksheet of inline-string rows. */
-  private def sheetXml(rows: Seq[String]*): String =
-    """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>""" +
-      rows.zipWithIndex.map { case (cells, r) =>
-        s"""<row r="${r + 1}">""" + cells.zipWithIndex.map { case (v, c) =>
-          s"""<c r="${('A' + c).toChar}${r + 1}" t="str"><v>$v</v></c>"""
-        }.mkString + "</row>"
-      }.mkString + "</sheetData></worksheet>"
-
   test("csv and jsonl imports read by streaming: no binaryFile scan, no Exchange") {
     val dir = tmpDir()
     val csv = write(dir, "people.csv", "name\nSMITH\nDOE\n".getBytes("UTF-8"))
@@ -427,21 +361,8 @@ class ImporterSpec extends SparkSpec {
 
   test("xlsx and XML imports read by streaming: no binaryFile scan, no Exchange") {
     val dir = tmpDir()
-    val xlsx = write(dir, "people.xlsx", ExcelFixtures.buildXlsx(Map(
-      "xl/workbook.xml" ->
-        """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
-          | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
-          |<sheets><sheet name="People" sheetId="1" r:id="rId1"/></sheets></workbook>""".stripMargin,
-      "xl/_rels/workbook.xml.rels" ->
-        """<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
-          |<Relationship Id="rId1" Type="x" Target="worksheets/sheet1.xml"/>
-          |</Relationships>""".stripMargin,
-      "xl/worksheets/sheet1.xml" ->
-        """<worksheet xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"><sheetData>
-          |<row r="1"><c r="A1" t="str"><v>name</v></c></row>
-          |<row r="2"><c r="A2" t="str"><v>SMITH</v></c></row>
-          |<row r="3"><c r="A3" t="str"><v>DOE</v></c></row>
-          |</sheetData></worksheet>""".stripMargin)))
+    val xlsx = write(dir, "people.xlsx",
+      Fixtures.xlsx(Seq("People" -> Seq(Seq("name"), Seq("SMITH"), Seq("DOE")))))
     val xml = write(dir, "people.xml",
       "<root><record><name>SMITH</name></record><record><name>DOE</name></record></root>"
         .getBytes("UTF-8"))
@@ -486,16 +407,8 @@ class ImporterSpec extends SparkSpec {
   }
 
   test("a password-protected docx imports with file_password, and names the fix without it") {
-    val bos = new java.io.ByteArrayOutputStream()
-    val z = new ZipOutputStream(bos)
-    z.putNextEntry(new ZipEntry("word/document.xml"))
-    z.write(
-      """<w:document xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main">
-        |<w:body><w:p><w:r><w:t>Hello world,</w:t><w:t> first para</w:t></w:r></w:p>
-        |<w:p><w:r><w:t>second para</w:t></w:r></w:p></w:body></w:document>""".stripMargin
-        .getBytes("UTF-8"))
-    z.closeEntry(); z.close()
-    val docx = write(tmpDir(), "secret.docx", SyntheticOffice.agileEncrypt(bos.toByteArray, "salad"))
+    val docx = write(tmpDir(), "secret.docx", SyntheticOffice.agileEncrypt(
+      Fixtures.docx(Seq("Hello world, first para", "second para")), "salad"))
     def lines(password: String) = {
       val tables = Importer.extract(spark, docx, MappingLoader.loadTables(
         s"""|- $password
@@ -535,8 +448,8 @@ class ImporterSpec extends SparkSpec {
 
   test("pdf, docx and avro imports read through the per-file runner: no binaryFile scan") {
     val dir = tmpDir()
-    val pdf = write(dir, "report.pdf", SyntheticOffice.textPdf(Seq("Hello PDF", "line two")))
-    val docx = write(dir, "letter.docx", SyntheticOffice.docx(Seq("Dear all,", "", "bye")))
+    val pdf = write(dir, "report.pdf", Fixtures.textPdf(Seq(Seq("Hello PDF", "line two"))))
+    val docx = write(dir, "letter.docx", Fixtures.docx(Seq("Dear all,", "", "bye")))
     val schema = org.apache.avro.SchemaBuilder.record("Row").fields()
       .requiredString("name").requiredInt("age").endRecord()
     val avroOut = new java.io.ByteArrayOutputStream()
@@ -678,15 +591,21 @@ class ImporterSpec extends SparkSpec {
 
   test("7z container expands via commons-compress") {
     val dir = tmpDir()
-    val szPath = new File(dir, "arch.7z").getAbsolutePath
-    val sz = new org.apache.commons.compress.archivers.sevenz.SevenZOutputFile(new File(szPath))
-    val e = sz.createArchiveEntry(new File("/dev/null"), "inner.csv")
-    sz.putArchiveEntry(e)
-    sz.write("a\n1\n".getBytes("UTF-8"))
-    sz.closeArchiveEntry()
-    sz.close()
+    val szPath = write(dir, "arch.7z", Fixtures.sevenZ(utf8("inner.csv" -> "a\n1\n")))
     val files = Registry.files(szPath,
       Registry.ContainerOptions(unzipPath = dir.getAbsolutePath))
     assert(files.length == 1 && files.head.endsWith("inner.csv"))
+  }
+
+  test("a zip or 7z with two entries of one basename fails, naming the container and the basename") {
+    val dir = tmpDir()
+    val entries = utf8("a/x.csv" -> "name\nFIRST\n", "b/x.csv" -> "name\nSECOND\n")
+    for ((name, bytes) <- Seq("dup.zip" -> Fixtures.zip(entries),
+                              "dup.7z" -> Fixtures.sevenZ(entries))) {
+      val path = write(dir, name, bytes)
+      val e = intercept[RuntimeException](
+        Registry.files(path, Registry.ContainerOptions(unzipPath = dir.getAbsolutePath)))
+      assert(e.getMessage.contains(s"'$path'") && e.getMessage.contains("'x.csv'"), e.getMessage)
+    }
   }
 }

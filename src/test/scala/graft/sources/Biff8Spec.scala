@@ -1,11 +1,13 @@
 package graft.sources
 
+import graft.queries.Fixtures
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Paths}
 
 /** BIFF8 .xls parsing, validated against the reference's own fixture corpus
-  * (read-only at /root/reference). Skipped when the corpus is absent. */
+  * (read-only at /root/reference; those tests cancel when it is absent) and
+  * against workbooks of the same shapes from [[Fixtures.xls]]. */
 class Biff8Spec extends AnyFunSuite {
 
   private val res = "/root/reference/test/resources"
@@ -14,11 +16,13 @@ class Biff8Spec extends AnyFunSuite {
     if (Files.exists(p)) Some(Files.readAllBytes(p)) else None
   }
 
+  private val sampleRows = Seq(Seq("1A", "1B"), Seq("2A", "2B"))
+
   test("sample_xls.xls parses with expected cells (reference excel_test)") {
     assume(fixture("sample_xls.xls").isDefined)
     val sheets = Biff8.parse(fixture("sample_xls.xls").get)
     assert(sheets.map(_.name) == Seq("Sheet1"))
-    assert(sheets.head.rows == Seq(Seq("1A", "1B"), Seq("2A", "2B")))
+    assert(sheets.head.rows == sampleRows)
   }
 
   test("multi-sheet xls incl. empty trailing sheet") {
@@ -32,7 +36,7 @@ class Biff8Spec extends AnyFunSuite {
   test("xlsx content with .xls extension routes to the xlsx parser") {
     assume(fixture("xlsx_file_xls_extension.xls").isDefined)
     val sheets = ExcelFixtures.sheets(fixture("xlsx_file_xls_extension.xls").get, name = "f.xls")
-    assert(sheets.head._2 == Seq(Seq("1A", "1B"), Seq("2A", "2B")))
+    assert(sheets.head._2 == sampleRows)
   }
 
   test("plain text with .xls extension is rejected") {
@@ -40,5 +44,56 @@ class Biff8Spec extends AnyFunSuite {
     val e = intercept[RuntimeException](
       ExcelFixtures.sheets(fixture("txt_file_xls_extension.xls").get, name = "f.xls"))
     assert(e.getMessage.contains("Unable to read the file"))
+  }
+
+  // ---- the same shapes, written by Fixtures
+
+  test("synthetic multi-sheet xls incl. empty trailing sheet") {
+    val sheets = Biff8.parse(Fixtures.xls(Seq(
+      "Sheet1" -> Seq(Seq("1A1", "1B1"), Seq("1A2", "1B2")),
+      "Sheet 2" -> Seq(Seq("2A1")),
+      "Sheet 3" -> Nil)))
+    assert(sheets.map(_.name) == Seq("Sheet1", "Sheet 2", "Sheet 3"))
+    assert(sheets(0).rows == Seq(Seq("1A1", "1B1"), Seq("1A2", "1B2")))
+    assert(sheets(1).rows == Seq(Seq("2A1")))
+    assert(sheets(2).rows.isEmpty)
+  }
+
+  test("synthetic xlsx content with .xls extension routes to the xlsx parser") {
+    val sheets = ExcelFixtures.sheets(Fixtures.xlsx(Seq("Sheet1" -> sampleRows)), name = "f.xls")
+    assert(sheets == Seq("Sheet1" -> sampleRows))
+  }
+
+  test("synthetic plain text with .xls extension is rejected") {
+    val e = intercept[RuntimeException](
+      ExcelFixtures.sheets("1A,1B\n2A,2B\n".getBytes("UTF-8"), name = "f.xls"))
+    assert(e.getMessage.contains("Unable to read the file"))
+  }
+
+  test("LABEL cells (inline strings, 8-bit and UTF-16) parse beside the SST route") {
+    def label(row: Int, col: Int, v: String, wide: Boolean): Array[Byte] = {
+      val b = java.nio.ByteBuffer.allocate(9 + v.length * (if (wide) 2 else 1))
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      b.putShort(row.toShort).putShort(col.toShort).putShort(0).putShort(v.length.toShort)
+        .put((if (wide) 1 else 0).toByte).put(v.getBytes(if (wide) "UTF-16LE" else "ISO-8859-1"))
+      Fixtures.biffRecord(0x204, b.array())
+    }
+    val stream = Fixtures.workbookStream(Array.emptyByteArray,
+      Seq("Inline" -> (label(0, 0, "inline  ", wide = false) ++ label(1, 1, "wide €", wide = true))))
+    val sheets = Biff8.parse(Fixtures.cfb(Seq("Workbook" -> stream)))
+    assert(sheets.map(_.name) == Seq("Inline"))
+    assert(sheets.head.rows == Seq(Seq("inline", null), Seq(null, "wide €")))
+  }
+
+  test("a workbook past one SST record and one FAT sector reads back whole") {
+    // ~3,000 distinct strings: the SST splits into CONTINUE records and the
+    // stream needs more than the 128 sectors one FAT sector chains
+    val rows = Seq("key", "name ünï") +: (1 to 1500).map(k => Seq(k.toString, s"Supplier#$k €"))
+    val xls = Fixtures.xls(Seq("Big" -> rows, "Tail" -> Seq(Seq("last"))))
+    assert(xls.length > 128 * 512)
+    val sheets = Biff8.parse(xls)
+    assert(sheets.map(_.name) == Seq("Big", "Tail"))
+    assert(sheets(0).rows == rows)
+    assert(sheets(1).rows == Seq(Seq("last")))
   }
 }

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.queries.Fixtures
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericDatumWriter, GenericRecordBuilder}
@@ -8,7 +9,7 @@ import org.apache.spark.sql.functions._
 
 import java.io.ByteArrayOutputStream
 import java.nio.file.Files
-import java.util.zip.{Deflater, ZipEntry, ZipOutputStream}
+import java.util.zip.Deflater
 
 /** Avro, VCF, PDF and docx sources over self-generated fixtures (shapes per
   * FIXTURES.md; binary fixtures are built in-test, never copied). */
@@ -180,10 +181,7 @@ class BinarySourcesSpec extends SparkSpec {
   }
 
   test("pdf: acroform fields scraped as a single hash row (S15)") {
-    val pdf = ("%PDF-1.4\n" +
-      "1 0 obj << /FT /Tx /T (surname) /V (SMITH) /Subtype /Widget >> endobj\n" +
-      "2 0 obj << /FT /Tx /T (forename) /V (JO) /Subtype /Widget >> endobj\n" +
-      "%%EOF").getBytes("ISO-8859-1")
+    val pdf = Fixtures.acroFormPdf(Seq("surname" -> "SMITH", "forename" -> "JO"))
     assert(Pdf.acroFormFields(pdf) == Map("surname" -> "SMITH", "forename" -> "JO"))
     val noFields = "%PDF-1.4\n%%EOF".getBytes("ISO-8859-1")
     val e = intercept[RuntimeException](Pdf.acroFormFields(noFields))
@@ -193,15 +191,12 @@ class BinarySourcesSpec extends SparkSpec {
   // ------------------------------------------------------------------ docx
 
   test("docx: paragraphs joined with newlines (S14)") {
-    val bos = new ByteArrayOutputStream()
-    val z = new ZipOutputStream(bos)
-    z.putNextEntry(new ZipEntry("word/document.xml"))
-    z.write(
+    // two runs in the first paragraph join without a separator
+    val docx = Fixtures.zip(ExcelFixtures.utf8("word/document.xml" ->
       """<w:document xmlns:w="http://schemas.openxmlformats.org/wordprocessingml/2006/main">
         |<w:body><w:p><w:r><w:t>Hello world,</w:t><w:t> first para</w:t></w:r></w:p>
-        |<w:p><w:r><w:t>second para</w:t></w:r></w:p></w:body></w:document>""".stripMargin.getBytes("UTF-8"))
-    z.closeEntry(); z.close()
-    val text = BinaryDecode.extractWordText(bos.toByteArray)
+        |<w:p><w:r><w:t>second para</w:t></w:r></w:p></w:body></w:document>""".stripMargin))
+    val text = BinaryDecode.extractWordText(docx)
     assert(text == "Hello world, first para\nsecond para")
   }
 }

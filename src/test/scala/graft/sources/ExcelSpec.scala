@@ -1,9 +1,7 @@
 package graft.sources
 
+import graft.queries.Fixtures
 import org.scalatest.funsuite.AnyFunSuite
-
-import java.io.ByteArrayOutputStream
-import java.util.zip.{ZipEntry, ZipOutputStream}
 
 /** Excel (xlsx) parsing against a generated workbook — shapes mirror the
   * reference fixtures per FIXTURES.md §3 (sample_xlsx: sheets with '1A/1B'
@@ -20,19 +18,11 @@ object ExcelFixtures {
     rows.map(_._2).distinct.map(s => s -> rows.filter(_._2 == s).sortBy(_._3).map(_._4))
   }
 
-  def buildXlsx(parts: Map[String, String]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val z = new ZipOutputStream(bos)
-    parts.foreach { case (name, content) =>
-      z.putNextEntry(new ZipEntry(name))
-      z.write(content.getBytes("UTF-8"))
-      z.closeEntry()
-    }
-    z.close()
-    bos.toByteArray
-  }
+  /** Hand-written package parts as zip entries. */
+  def utf8(parts: (String, String)*): Seq[(String, Array[Byte])] =
+    parts.map { case (name, text) => name -> text.getBytes("UTF-8") }
 
-  val testXlsx: Array[Byte] = buildXlsx(Map(
+  val testXlsx: Array[Byte] = Fixtures.zip(utf8(
     "xl/workbook.xml" ->
       """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
         | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">

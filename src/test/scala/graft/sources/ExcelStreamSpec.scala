@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import graft.queries.Fixtures
 
 /** `Excel.tables` streams every workbook from its file through one
   * per-file walk, and must read as the same walk over the workbook's bytes
@@ -54,7 +55,7 @@ class ExcelStreamSpec extends SparkSpec {
 
   /** A one-sheet workbook ("S" → `part`) whose zip may lack `part`. */
   private def oneSheet(part: String, parts: (String, String)*): Array[Byte] =
-    ExcelFixtures.buildXlsx(Map(
+    Fixtures.zip(ExcelFixtures.utf8(
       "xl/workbook.xml" ->
         """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
           | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
@@ -62,7 +63,7 @@ class ExcelStreamSpec extends SparkSpec {
       "xl/_rels/workbook.xml.rels" ->
         s"""<Relationships xmlns="http://schemas.openxmlformats.org/package/2006/relationships">
            |<Relationship Id="rId1" Type="x" Target="$part"/>
-           |</Relationships>""".stripMargin) ++ parts)
+           |</Relationships>""".stripMargin) ++ ExcelFixtures.utf8(parts: _*))
 
   private val fixtureRows = Set(
     ("Sheet1", 0L, Seq("1A", "1B", "rich", null)),
@@ -92,7 +93,7 @@ class ExcelStreamSpec extends SparkSpec {
 
   test("sheets sharing a part target (broken rels) stream like the in-memory path") {
     // no rels part: both sheets fall back to worksheets/sheet1.xml
-    val xlsx = ExcelFixtures.buildXlsx(Map(
+    val xlsx = Fixtures.zip(ExcelFixtures.utf8(
       "xl/workbook.xml" ->
         """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
           | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
@@ -134,14 +135,14 @@ class ExcelStreamSpec extends SparkSpec {
   // ---- OLE containers (BIFF8 .xls, encrypted OOXML envelopes) need random
   // access, so they are read whole on the task (once the fallback of the
   // oversized route), up to the 2 GiB format ceiling. The fixtures are
-  // built in-test ([[SyntheticOffice]]) so this coverage runs on every
+  // built in-test ([[Fixtures]], [[SyntheticOffice]]) so this coverage runs on every
   // machine, not just ones with the reference checkout.
 
   private def encryptedXlsx: Array[Byte] =
     SyntheticOffice.agileEncrypt(ExcelFixtures.testXlsx, "carrot")
 
   test("oversized genuine BIFF8 .xls parses via the fallback identically to the in-memory path") {
-    val xls = SyntheticOffice.biff8Xls("Sheet1", Seq(Seq("1A", "1B"), Seq("2A", "2B")))
+    val xls = Fixtures.xls(Seq("Sheet1" -> Seq(Seq("1A", "1B"), Seq("2A", "2B"))))
     val p = writeTemp(xls, ".xls")
     val expected = Set(("Sheet1", 0L, Seq("1A", "1B")), ("Sheet1", 1L, Seq("2A", "2B")))
     val rows = collectRows(Excel.tables(spark, Seq(p)))

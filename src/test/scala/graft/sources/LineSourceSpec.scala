@@ -144,8 +144,8 @@ class LineSourceSpec extends SparkSpec {
   }
 
   test("PDF and Word files open with the session's Hadoop conf on the executor") {
-    val pdf = writeTmp("session.pdf", SyntheticOffice.textPdf(Seq("Hello PDF", "line two")))
-    val word = writeTmp("session.docx", SyntheticOffice.docx(Seq("first", "second")))
+    val pdf = writeTmp("session.pdf", graft.queries.Fixtures.textPdf(Seq(Seq("Hello PDF", "line two"))))
+    val word = writeTmp("session.docx", graft.queries.Fixtures.docx(Seq("first", "second")))
     graft.runtime.GraftSession.withConf(spark,
         "fs.sessfs.impl" -> classOf[SessionOnlyFs].getName,
         "fs.sessfs.impl.disable.cache" -> "true") {

@@ -3,6 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import graft.compile.MappingCompiler
 import graft.model.MappingLoader
+import graft.queries.Fixtures
 import graft.tabulate.NonTabular
 import org.apache.spark.sql.functions._
 
@@ -66,7 +67,7 @@ class ReferenceFixturesSpec extends SparkSpec {
   test("sample_xlsx.xlsx / sample_xlsm.xlsm: Sheet1, first row 1A 1B (excel_test.rb:22-40)") {
     // without the reference checkout, workbooks of the same shape stand in
     // (the .xlsm one with a macro part), so the assertions always run
-    val parts = Map(
+    val parts = ExcelFixtures.utf8(
       "xl/workbook.xml" ->
         """<workbook xmlns="http://schemas.openxmlformats.org/spreadsheetml/2006/main"
           | xmlns:r="http://schemas.openxmlformats.org/officeDocument/2006/relationships">
@@ -80,8 +81,8 @@ class ReferenceFixturesSpec extends SparkSpec {
           |<row r="1"><c r="A1" t="str"><v>1A</v></c><c r="B1" t="str"><v>1B</v></c></row>
           |<row r="2"><c r="A2" t="str"><v>2A</v></c><c r="B2" t="str"><v>2B</v></c></row>
           |</sheetData></worksheet>""".stripMargin)
-    val standIns = Map("sample_xlsx.xlsx" -> ExcelFixtures.buildXlsx(parts),
-      "sample_xlsm.xlsm" -> ExcelFixtures.buildXlsx(parts + ("xl/vbaProject.bin" -> "macros")))
+    val standIns = Map("sample_xlsx.xlsx" -> Fixtures.zip(parts),
+      "sample_xlsm.xlsm" -> Fixtures.zip(parts ++ ExcelFixtures.utf8("xl/vbaProject.bin" -> "macros")))
     for (f <- Seq("sample_xlsx.xlsx", "sample_xlsm.xlsm")) {
       val sheets = ExcelFixtures.sheets(if (exists(f)) bytes(f) else standIns(f), name = f)
       assert(sheets.map(_._1) == Seq("Sheet1"), f)

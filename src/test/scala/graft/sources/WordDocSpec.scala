@@ -29,8 +29,8 @@ class WordDocSpec extends SparkSpec {
       ("one\ntwo\n".getBytes("UTF-8"), "one\ntwo\n", Seq("one", "two")),
       ("x\r\n\r\n\ny\r".getBytes("UTF-8"), "x\r\n\r\n\ny\r", Seq("x", "", "", "y")),
       ("\n\nz".getBytes("UTF-8"), "\n\nz", Seq("", "", "z")),
-      (SyntheticOffice.docx(Seq("p1", "", "p3")), "p1\n\np3", Seq("p1", "", "p3")),
-      (SyntheticOffice.docx(Nil), "", Nil))
+      (graft.queries.Fixtures.docx(Seq("p1", "", "p3")), "p1\n\np3", Seq("p1", "", "p3")),
+      (graft.queries.Fixtures.docx(Nil), "", Nil))
     cases.zipWithIndex.foreach { case ((bytes, text, want), i) =>
       assert(BinaryDecode.extractWordText(bytes) == text)
       val dir = Files.createTempDirectory("wordlines")
