@@ -51,7 +51,7 @@ object Cleaners {
       case "roman5"                                         => roman5
       case "tnmcategory"                                    => tnmcategory
       case "upcase"                                         => (c: Column) => upper(c)
-      case "strip"                                          => (c: Column) => trim(c)
+      case "strip"                                          => RubyTranslate.strip(_: Column)
       case _ => (c: Column) => c // unknown cleaners are passthrough in ndr_support
     }
   }
@@ -74,7 +74,7 @@ object Cleaners {
       case "roman5"                        => S.roman5
       case "tnmcategory"                   => S.tnmcategory
       case "upcase"                        => _.toUpperCase
-      case "strip"                         => _.trim
+      case "strip"                         => RubyTranslate.strip(_: String)
       case _                               => identity
     }
   }
@@ -96,10 +96,10 @@ object Cleaners {
       .when(upper(c).isin("2", "F", "FEMALE"), "2")
       .otherwise("0")
 
-  /** :name — upcase; drop '.'; ','/';' → ' '; '`' → '\''; squeeze 2+ spaces; trim.
+  /** :name — upcase; drop '.'; ','/';' → ' '; '`' → '\''; squeeze 2+ spaces; Ruby strip.
     * Substitution order matches ndr_support (docs table ",,, Potato" → "POTATO"). */
   val cleanName: Column => Column = c =>
-    trim(
+    RubyTranslate.strip(
       regexp_replace(
         regexp_replace(
           regexp_replace(
@@ -191,12 +191,11 @@ object Cleaners {
       case _                    => "0"
     }
     def name(s: String): String =
-      s.toUpperCase
+      RubyTranslate.strip(s.toUpperCase
         .replaceAll("\\.", "")
         .replaceAll("[,;]", " ")
         .replaceAll("`", "'")
-        .replaceAll("\\s{2,}", " ")
-        .trim
+        .replaceAll("\\s{2,}", " "))
     def ethniccategory(s: String): String = ethnicMap.getOrElse(s, s.toUpperCase)
     private def tokens(s: String): Array[String] = s.split("[,;\\s]", -1)
     def code(s: String): String = tokens(s).filter(_.nonEmpty).mkString(" ")

@@ -1,10 +1,100 @@
 package graft.clean
 
+import org.apache.spark.sql.{Column, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
+import org.apache.spark.sql.types.StringType
+import org.apache.spark.unsafe.types.UTF8String
+
 /** Translators from the reference's Ruby-isms to their JVM equivalents:
   * date-format strings (ndr_support `String#to_date`, reference
-  * `docs/date-formats.md`) and regex literals (YAML `!ruby/regexp`).
+  * `docs/date-formats.md`), regex literals (YAML `!ruby/regexp`), `gsub`
+  * replacements, and whitespace. Every blank test and strip of the
+  * mapping path calls the rules here, which are Ruby's exactly:
+  *   - `blank` is ActiveSupport `blank?` (`[[:space:]]*`): Unicode
+  *     White_Space only; NUL is not blank;
+  *   - `strip`/`rstrip` are `String#strip`/`rstrip`: space, tab to CR
+  *     and NUL, nothing outside ASCII; `unpackA` is `unpack('A')`'s
+  *     trailing spaces and NULs.
+  * The `UTF8String` forms scan bytes and decode only non-ASCII
+  * characters; the `Column` forms call them from generated code.
   */
 object RubyTranslate {
+
+  // ------------------------------------------------------------ whitespace
+
+  /** A Unicode White_Space code point: Ruby's `[[:space:]]` (tab to CR,
+    * space, U+0085, NBSP, U+1680, U+2000-U+200A, U+2028, U+2029, U+202F,
+    * U+205F, U+3000). */
+  private def space(c: Int): Boolean =
+    (c >= 0x09 && c <= 0x0D) || c == 0x20 || c == 0x85 || c == 0xA0 || c == 0x1680 ||
+      (c >= 0x2000 && c <= 0x200A) || c == 0x2028 || c == 0x2029 || c == 0x202F ||
+      c == 0x205F || c == 0x3000
+
+  /** What `String#strip` removes: space, `\t \n \v \f \r` and NUL. */
+  private def strippable(c: Int): Boolean = c == 0x20 || (c >= 0x09 && c <= 0x0D) || c == 0
+
+  /** ActiveSupport `blank?`; null (Ruby's nil) is blank. */
+  def blank(s: String): Boolean = {
+    var i = 0
+    while (s != null && i < s.length) { if (!space(s.charAt(i))) return false; i += 1 }
+    true
+  }
+
+  def blank(s: UTF8String): Boolean = {
+    val n = s.numBytes
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b >= 0) { if (!space(b)) return false; i += 1 }
+      else { if (!space(s.codePointFrom(i))) return false; i += UTF8String.numBytesForFirstByte(b) }
+    }
+    true
+  }
+
+  def strip(s: String): String = {
+    var a = 0
+    while (a < s.length && strippable(s.charAt(a))) a += 1
+    rstrip(s.substring(a))
+  }
+
+  def rstrip(s: String): String = {
+    var b = s.length
+    while (b > 0 && strippable(s.charAt(b - 1))) b -= 1
+    s.substring(0, b)
+  }
+
+  /** The stripped characters are ASCII and no byte of a multi-byte UTF-8
+    * character is, so these scan bytes; the input comes back as it is
+    * when nothing is removed. */
+  def strip(s: UTF8String): UTF8String = {
+    var a = 0
+    var b = s.numBytes
+    while (a < b && strippable(s.getByte(a))) a += 1
+    while (b > a && strippable(s.getByte(b - 1))) b -= 1
+    slice(s, a, b)
+  }
+
+  /** `unpack('A')`: trailing spaces and NULs go, other whitespace stays. */
+  def unpackA(s: UTF8String): UTF8String = {
+    var b = s.numBytes
+    while (b > 0 && (s.getByte(b - 1) == ' ' || s.getByte(b - 1) == 0)) b -= 1
+    slice(s, 0, b)
+  }
+
+  private def slice(s: UTF8String, a: Int, b: Int): UTF8String =
+    if (a == 0 && b == s.numBytes) s
+    else if (a == b) UTF8String.EMPTY_UTF8
+    else s.copyUTF8String(a, b - 1) // end inclusive
+
+  /** `strip` over a string column, null-safe. */
+  def strip(c: Column): Column = call("strip", c)
+
+  /** `unpackA` over a string column, null-safe. */
+  def unpackA(c: Column): Column = call("unpackA", c)
+
+  private def call(name: String, c: Column): Column =
+    GraftColumnBridge.column(StaticInvoke(getClass, StringType, name,
+      Seq(GraftColumnBridge.expression(c)), returnNullable = false))
 
   /** Translate a reference mapping date format to a Java/Spark datetime
     * pattern. Handles both the lowercase convention (`dd/mm/yyyy`,

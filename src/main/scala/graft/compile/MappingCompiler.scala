@@ -112,14 +112,15 @@ final class MappingCompiler(mapping: TableMapping) {
     }
   }
 
-  /** presence() — Ruby blank?/present? (`mapper.rb:190`): whitespace-only,
-    * empty and null are all "blank". Native single-eval
+  /** presence() — Ruby `presence` (`mapper.rb:190`): null and
+    * ActiveSupport-blank values (empty, or Unicode whitespace only; see
+    * [[RubyTranslate.blank]]) become null. Native single-eval
     * ([[graft.functions.BlankToNull]]): the Column rendering referenced
     * its argument three times and nested presence calls multiplied the
     * underlying cell chain ~9× per field (n3_segments plan, r12). */
   private def presence(c: Column): Column = graft.functions.BlankToNull.presence(c)
 
-  private def isBlank(c: Column): Column = c.isNull || trim(c) === ""
+  private def isBlank(c: Column): Column = presence(c).isNull
 
   /** M7 — replace-before-mapping (`mapper.rb:48-66`). Replacement strings
     * carry Ruby gsub semantics (`\1` backrefs, literal `$`), translated once
@@ -133,7 +134,7 @@ final class MappingCompiler(mapping: TableMapping) {
       val repl = RubyTranslate.replacement(r.replacement)
       val asArr = from_json(acc, org.apache.spark.sql.types.ArrayType(StringType))
       when(acc.isNull, acc)
-        .when(trim(acc).startsWith("[") && asArr.isNotNull,
+        .when(RubyTranslate.strip(acc).startsWith("[") && asArr.isNotNull,
               to_json(transform(asArr, x => regexp_replace(x, pat, repl))))
         .otherwise(regexp_replace(acc, pat, repl))
     }
@@ -168,7 +169,7 @@ final class MappingCompiler(mapping: TableMapping) {
     } else if (fm.matchRegex.isDefined) {
       val pat = RubyTranslate.regex(fm.matchRegex.get)
       // regexp_extract returns '' on no match; Ruby returns nil — guard with rlike
-      when(raw.isNotNull && raw.rlike(pat), trim(regexp_extract(raw, pat, 1)))
+      when(raw.isNotNull && raw.rlike(pat), RubyTranslate.strip(regexp_extract(raw, pat, 1)))
         .otherwise(lit(null).cast(StringType))
     } else if (fm.daysafter.isDefined) {
       // Integer-looking values (to_i round-trip, `mapper.rb:226`) become
@@ -379,7 +380,7 @@ object MappingCompiler {
       val expected = columns.map(c =>
         c.column.orElse(c.standardMapping).map(_.toLowerCase).orNull)
       val guess = line.map(_.toLowerCase)
-      if (guess.exists(_.trim.nonEmpty)) bestGuess = Some(guess)
+      if (!guess.forall(RubyTranslate.blank)) bestGuess = Some(guess)
       if (guess == expected) headerValid = true
     }
 

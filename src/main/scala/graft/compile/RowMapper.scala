@@ -18,8 +18,8 @@ import scala.collection.mutable
   * a property-test oracle for the compiler.
   *
   * Semantics notes (pinned by `test/mapper_test.rb`):
-  *   - blank (nil/whitespace) mapped values are dropped unless a `join`
-  *     mapping is in play;
+  *   - blank (nil, or ActiveSupport `blank?`: [[RubyTranslate.blank]])
+  *     mapped values are dropped unless a `join` mapping is in play;
   *   - priority: no-priority mappings are unshifted "best" values, then
   *     ascending priority; first present wins;
   *   - zip: split each zipped value, zip truncating to the first array;
@@ -32,7 +32,7 @@ object RowMapper {
   final class MissingFieldError(field: String)
     extends RuntimeException(s"$field can't be blank")
 
-  private def blank(s: String): Boolean = s == null || s.trim.isEmpty
+  private def blank(s: String): Boolean = RubyTranslate.blank(s)
 
   /** `mapped_value` (`mapper.rb:203-231`). Returns null for "no value". */
   def mappedValue(original: String, fm: FieldMapping): String = {
@@ -44,7 +44,7 @@ object RowMapper {
         val fmt = new java.time.format.DateTimeFormatterBuilder()
           .parseCaseInsensitive().appendPattern(javaFmt).toFormatter(java.util.Locale.UK)
         try {
-          var d = LocalDate.parse(original.trim, fmt)
+          var d = LocalDate.parse(RubyTranslate.strip(original), fmt)
           // Ruby strptime windowing: 69-99 → 19xx (Java bases yy on 2000)
           if (RubyTranslate.twoDigitYear(javaFmt) && d.getYear >= 2069)
             d = d.minusYears(100)
@@ -63,7 +63,7 @@ object RowMapper {
     } else if (fm.matchRegex.isDefined) {
       val p = java.util.regex.Pattern.compile(RubyTranslate.regex(fm.matchRegex.get))
       val m = p.matcher(if (original == null) "" else original)
-      if (m.find() && m.groupCount >= 1 && m.group(1) != null) m.group(1).trim else null
+      if (m.find() && m.groupCount >= 1 && m.group(1) != null) RubyTranslate.strip(m.group(1)) else null
     } else if (fm.daysafter.isDefined) {
       // Ruby: `value.to_i.to_s == value.to_s` — exact round-trip only
       // ("007", "-0", "1.5" all pass through unchanged). Day counts outside
@@ -77,7 +77,7 @@ object RowMapper {
       else LocalDate.parse(fm.daysafter.get).plusDays(original.toLong).toString
     } else {
       if (blank(original)) null
-      else original.trim
+      else RubyTranslate.strip(original)
     }
   }
 
@@ -86,7 +86,7 @@ object RowMapper {
   }
 
   private def applyReplaces(value: String, fm: FieldMapping): String =
-    if (value == null) null
+    if (value == null || fm.replace.isEmpty) value
     else parseJsonArray(value) match {
       // M7 recurses into Array cells (`mapper.rb:59-66`); arrays travel as
       // their JSON rendering, matching the compiler's from_json/to_json
@@ -109,7 +109,7 @@ object RowMapper {
     * guard (numbers/objects coerce to their JSON text, like Spark's
     * string-typed parse). */
   private def parseJsonArray(value: String): Option[Seq[String]] =
-    if (!value.trim.startsWith("[")) None
+    if (!RubyTranslate.strip(value).startsWith("[")) None
     else try {
       val p = jsonMapper.getFactory.createParser(value)
       val node = jsonMapper.readTree[com.fasterxml.jackson.databind.JsonNode](p)

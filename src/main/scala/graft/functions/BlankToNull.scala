@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.clean.RubyTranslate
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -8,22 +9,20 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Ruby blank?/presence (`mapper.rb:190`) as ONE single-evaluation call:
-  * null / empty / space-only → null; otherwise the value itself
-  * (`strip = false`, the `presence()` contract) or its space-trimmed
-  * form (`strip = true`, the M13 default-normalise contract
-  * `presence(trim(v))`).
+/** Ruby `presence` (`mapper.rb:190`) as ONE single-evaluation call:
+  * null or blank (ActiveSupport `blank?`) → null; otherwise the value
+  * itself (`strip = false`, the `presence()` contract) or its Ruby
+  * `strip` (`strip = true`, the M13 default normalise). Both rules are
+  * [[graft.clean.RubyTranslate]]'s `UTF8String` forms, called from the
+  * generated code and from `nullSafeEval` alike.
   *
   * Why native: the Column rendering
-  * `when(c.isNull || trim(c) === "", null).otherwise(c)` references its
-  * argument THREE times, and Spark's subexpression elimination does not
-  * reach conditional branches — so `presence(fieldValue(...))` around a
-  * default-normalised field (itself `presence(trim(raw))`) multiplied
-  * into ~9 trim evaluations of the underlying cell per field (measured
-  * on the n3_segments plan, r12). Here the child evaluates exactly
-  * once; the blank test and trim are one byte scan (`UTF8String.trim`,
-  * exactly Spark's `trim()` — 0x20 only — so semantics are unchanged
-  * and the oracle rows stay green). */
+  * `when(isBlank(c), null).otherwise(c)` references its argument THREE
+  * times, and Spark's subexpression elimination does not reach
+  * conditional branches — so `presence(fieldValue(...))` around a
+  * default-normalised field (itself a stripped presence) multiplied into
+  * ~9 evaluations of the underlying cell per field (measured on the
+  * n3_segments plan, r12). Here the child evaluates exactly once. */
 case class BlankToNull(child: Expression, strip: Boolean)
     extends UnaryExpression {
 
@@ -52,24 +51,22 @@ case class BlankToNull(child: Expression, strip: Boolean)
 
 object BlankToNull {
 
-  /** Null for blank; else the (optionally trimmed) value.
+  /** Null for blank; else the value, Ruby-stripped when `strip`.
     * (Named distinctly from Expression.eval: Scala emits NO static
     * forwarder for a companion method whose name the class inherits,
     * so codegen calling `BlankToNull.eval(UTF8String,...)` failed to
     * janino-compile and silently demoted every containing stage to
     * the interpreted path — found r13.) */
-  def blankToNull(input: UTF8String, strip: Boolean): UTF8String = {
-    val t = input.trim()
-    if (t.numBytes() == 0) null
-    else if (strip) t
+  def blankToNull(input: UTF8String, strip: Boolean): UTF8String =
+    if (RubyTranslate.blank(input)) null
+    else if (strip) RubyTranslate.strip(input)
     else input
-  }
 
   /** `presence(c)` — blank → null, value otherwise. */
   def presence(c: Column): Column =
     GraftColumnBridge.column(BlankToNull(GraftColumnBridge.expression(c), strip = false))
 
-  /** `presence(trim(c))` — the M13 default normalise. */
+  /** `presence(strip(c))` — the M13 default normalise. */
   def stripPresence(c: Column): Column =
     GraftColumnBridge.column(BlankToNull(GraftColumnBridge.expression(c), strip = true))
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.clean.RubyTranslate
 import java.nio.{ByteBuffer, ByteOrder}
 import scala.collection.mutable
 
@@ -11,17 +12,20 @@ import scala.collection.mutable
   * compressed/UTF-16 string flips mid-string), LABELSST/LABEL/NUMBER/RK/
   * MULRK/BOOLERR/FORMULA(+STRING) cells, FORMAT/XF for date detection,
   * 1904 DATEMODE. Values are rendered with the same Roo cast rules as the
-  * xlsx path (`file/excel.rb:31-50`).
+  * xlsx path (`file/excel.rb:31-50`). A shared-string table that ends
+  * before its declared count, or a LABELSST cell that points past it,
+  * fails naming the file: those cells are never read as null.
   */
 object Biff8 {
 
   private val DateFmtIds = Set(14, 15, 16, 17, 18, 19, 20, 21, 22, 45, 46, 47)
 
-  def parse(bytes: Array[Byte]): Seq[Excel.Sheet] = {
+  /** The sheets of the `.xls` container `bytes`; `file` names it in errors. */
+  def parse(bytes: Array[Byte], file: String): Seq[Excel.Sheet] = {
     val cf = new Cfb.CompoundFile(bytes)
     val wb = cf.stream("Workbook").orElse(cf.stream("Book"))
-      .getOrElse(sys.error("No Workbook stream in .xls file"))
-    parseWorkbookStream(wb)
+      .getOrElse(sys.error(s"No Workbook stream in .xls file '$file'"))
+    parseWorkbookStream(wb, file)
   }
 
   private final case class Rec(id: Int, data: Array[Byte])
@@ -44,15 +48,17 @@ object Biff8 {
   /** Reads BIFF8 unicode strings from an SST record and its CONTINUE
     * records. At a continuation boundary mid-string, the new record begins
     * with a fresh option-flags byte that may flip the 8-bit/16-bit
-    * encoding for the remaining characters (MS-XLS 2.5.293). */
+    * encoding for the remaining characters (MS-XLS 2.5.293). Running out
+    * of records inside a string throws. */
   private final class SstReader(parts: IndexedSeq[Array[Byte]]) {
     private var part = 0
     private var off = 0
     private def avail: Int = parts(part).length - off
-    private def hop(): Boolean =
-      if (part < parts.length - 1) { part += 1; off = 0; true } else false
+    private def hop(): Unit =
+      if (part < parts.length - 1) { part += 1; off = 0 }
+      else throw new IllegalStateException("the shared string records end inside a string")
     private def u8(): Int = {
-      while (avail == 0 && hop()) ()
+      while (avail == 0) hop()
       val v = parts(part)(off) & 0xFF; off += 1; v
     }
     private def u16(): Int = u8() | (u8() << 8)
@@ -68,15 +74,15 @@ object Biff8 {
       var remaining = cch
       while (remaining > 0) {
         if (avail == 0) {
-          if (!hop()) remaining = 0
-          else compressed = (u8() & 0x01) == 0 // fresh flags byte
+          hop()
+          compressed = (u8() & 0x01) == 0 // fresh flags byte
         } else if (compressed) {
           val take = math.min(remaining, avail)
           for (_ <- 0 until take) { sb += (parts(part)(off) & 0xFF).toChar; off += 1 }
           remaining -= take
         } else {
           val take = math.min(remaining, avail / 2)
-          if (take == 0) { if (!hop()) remaining = 0 else compressed = (u8() & 0x01) == 0 }
+          if (take == 0) { hop(); compressed = (u8() & 0x01) == 0 }
           else {
             for (_ <- 0 until take) {
               val lo = parts(part)(off) & 0xFF; val hi = parts(part)(off + 1) & 0xFF
@@ -88,14 +94,14 @@ object Biff8 {
       }
       var skip = runs.toLong * 4 + extSize
       while (skip > 0) {
-        if (avail == 0 && !hop()) skip = 0
-        else { val n = math.min(skip, avail.toLong).toInt; off += n; skip -= n }
+        if (avail == 0) hop()
+        val n = math.min(skip, avail.toLong).toInt; off += n; skip -= n
       }
       sb.toString
     }
   }
 
-  private def parseWorkbookStream(wb: Array[Byte]): Seq[Excel.Sheet] = {
+  private def parseWorkbookStream(wb: Array[Byte], file: String): Seq[Excel.Sheet] = {
     var date1904 = false
     val sheets = mutable.ArrayBuffer.empty[(String, Int)] // name, stream offset
     val customDateFmt = mutable.HashMap.empty[Int, Boolean]
@@ -154,18 +160,18 @@ object Biff8 {
             else { handleGlobal(nr); done = true }
           }
           val reader = new SstReader(sstParts.toIndexedSeq)
-          var i = 0
-          var failed = false
-          while (i < total && !failed) {
-            try { sst += reader.readString(); i += 1 }
-            catch { case _: Exception => failed = true }
+          try while (sst.length < total) sst += reader.readString()
+          catch {
+            case e: RuntimeException => sys.error(s"Damaged shared string table in '$file': " +
+              s"${e.getMessage} after ${sst.length} of its $total strings")
           }
         case _ => handleGlobal(r)
       }
     }
 
     sheets.map { case (name, offset) =>
-      Excel.Sheet(name, parseSheet(wb, offset, sst.toIndexedSeq, xfIsDate.toIndexedSeq, date1904))
+      Excel.Sheet(name,
+        parseSheet(wb, offset, sst.toIndexedSeq, xfIsDate.toIndexedSeq, date1904, file))
     }.toSeq
   }
 
@@ -195,7 +201,8 @@ object Biff8 {
   }
 
   private def parseSheet(wb: Array[Byte], offset: Int, sst: IndexedSeq[String],
-                         xfIsDate: IndexedSeq[Boolean], date1904: Boolean): Seq[Seq[String]] = {
+                         xfIsDate: IndexedSeq[Boolean], date1904: Boolean,
+                         file: String): Seq[Seq[String]] = {
     val cells = mutable.HashMap.empty[(Int, Int), String]
     def isDate(xf: Int): Boolean = xf >= 0 && xf < xfIsDate.length && xfIsDate(xf)
     var pendingFormulaCell: Option[(Int, Int)] = None
@@ -212,14 +219,17 @@ object Biff8 {
         case 0xFD => // LABELSST
           val (row, colI, _) = (b.getShort(0).toInt & 0xFFFF, b.getShort(2).toInt & 0xFFFF, 0)
           val idx = b.getInt(6)
-          if (idx >= 0 && idx < sst.length) cells((row, colI)) = sst(idx).trim
+          if (idx < 0 || idx >= sst.length)
+            sys.error(s"Cell ($row, $colI) in '$file' points past the shared string table " +
+              s"(index $idx of ${sst.length} strings)")
+          cells((row, colI)) = RubyTranslate.strip(sst(idx))
         case 0x204 => // LABEL (pre-SST inline string)
           val (row, colI) = (b.getShort(0).toInt & 0xFFFF, b.getShort(2).toInt & 0xFFFF)
           val cch = b.getShort(6).toInt & 0xFFFF
           val grbit = if (r.data.length > 8) r.data(8) & 0x01 else 0
           val s = if (grbit == 0) new String(r.data, 9, math.min(cch, r.data.length - 9), "ISO-8859-1")
                   else new String(r.data, 9, math.min(cch * 2, r.data.length - 9), "UTF-16LE")
-          cells((row, colI)) = s.trim
+          cells((row, colI)) = RubyTranslate.strip(s)
         case 0x203 => // NUMBER
           val (row, colI, xf) = (b.getShort(0).toInt & 0xFFFF, b.getShort(2).toInt & 0xFFFF,
             b.getShort(4).toInt & 0xFFFF)
@@ -259,7 +269,7 @@ object Biff8 {
             val grbit = if (r.data.length > 2) r.data(2) & 0x01 else 0
             val s = if (grbit == 0) new String(r.data, 3, math.min(cch, r.data.length - 3), "ISO-8859-1")
                     else new String(r.data, 3, math.min(cch * 2, r.data.length - 3), "UTF-16LE")
-            cells(rc) = s.trim
+            cells(rc) = RubyTranslate.strip(s)
           }
           pendingFormulaCell = None
         case _ => ()

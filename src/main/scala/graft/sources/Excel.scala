@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.clean.RubyTranslate
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import java.io.{ByteArrayInputStream, InputStream}
@@ -21,7 +22,8 @@ import scala.xml.XML
   *   - date-formatted numbers → `yyyy-mm-dd` (date) or
   *     `yyyy-mm-dd hh:mm:ss` (datetime) — Rails `:db` format;
   *   - whole floats → integer strings (`12` not `12.0`);
-  *   - everything else → string, stripped.
+  *   - everything else → string, Ruby-stripped (`to_s.strip`,
+  *     [[graft.clean.RubyTranslate.strip]]).
   *
   * An `.xls` that is really an xlsx (zip magic) is parsed as xlsx — the
   * reference's rescue-and-retry (`excel.rb:104-115`); genuine OLE .xls goes
@@ -138,11 +140,11 @@ object Excel {
     private def castCell(): Option[String] = {
       val v = text.toString
       cellType match {
-        case "s"         => Some(shared(v.trim.toInt).trim)
-        case "inlineStr" => Some(v.trim)
-        case "str"       => Some(v.trim)
+        case "s"         => Some(RubyTranslate.strip(shared(v.trim.toInt)))
+        case "inlineStr" => Some(RubyTranslate.strip(v))
+        case "str"       => Some(RubyTranslate.strip(v))
         case "b"         => Some(if (v.trim == "1") "true" else "false")
-        case "e"         => Some(v.trim)
+        case "e"         => Some(RubyTranslate.strip(v))
         case _ if v.trim.isEmpty => None
         case _ =>
           val isDate = cellStyle >= 0 && cellStyle < styleIsDate.length && styleIsDate(cellStyle)
@@ -256,7 +258,7 @@ object Excel {
       case None => sys.error(s"Unable to read the file '$file'; it is " +
         "password protected (set file_password)")
     }
-    else Biff8.parse(bytes).iterator.flatMap { sheet =>
+    else Biff8.parse(bytes, file).iterator.flatMap { sheet =>
       sheet.rows.zipWithIndex.map { case (cells, i) => (file, sheet.name, i.toLong, cells) }
     }
   }

@@ -42,8 +42,13 @@ object Tabular {
         val schema = StructType(
           (0 to nCols).map(i => StructField(s"c$i", StringType)) :+
             StructField("_corrupt", StringType))
+        // Ruby CSV: a quote in a quoted field is doubled (Spark's default
+        // escape is a backslash; with the quote as escape, univocity's
+        // default escape-of-the-escape, NUL, drops NULs), and only an
+        // unquoted empty field is nil (`nullValue`: a string no cell holds)
         val opts = Map(
-          "sep" -> sep, "mode" -> "PERMISSIVE",
+          "sep" -> sep, "escape" -> "\"", "charToEscapeQuoteEscaping" -> "\"",
+          "nullValue" -> "\u0000graft:nil\u0000", "mode" -> "PERMISSIVE",
           "enforceSchema" -> "true",
           "columnNameOfCorruptRecord" -> "_corrupt",
           "unescapedQuoteHandling" ->
@@ -80,8 +85,9 @@ object Tabular {
   }
 
   /** T9 — fixed-width unpack. Supports Ruby `String#unpack` directives
-    * `a<n>` (raw) and `A<n>` (trailing-whitespace-trimmed), the two the
-    * reference uses (`lib/ndr_import/fixed_width/table.rb:13-22`). */
+    * `a<n>` (raw) and `A<n>` (trailing spaces and NULs removed:
+    * [[graft.clean.RubyTranslate.unpackA]]), the two the reference uses
+    * (`lib/ndr_import/fixed_width/table.rb:13-22`). */
   def fixedWidth(linesDf: DataFrame, unpackPatterns: Seq[String]): DataFrame = {
     final case class Slice(start: Int, len: Int, trim: Boolean)
     val pat = "([aA])(\\d+|\\*)".r
@@ -96,7 +102,7 @@ object Tabular {
     }
     val cells = array(slices.map { s =>
       val sub = substring(col("line"), s.start, s.len)
-      if (s.trim) rtrim(sub) else sub
+      if (s.trim) graft.clean.RubyTranslate.unpackA(sub) else sub
     }: _*)
     linesDf.select(col("file"), col("lineno"), cells.as("cells"))
   }

@@ -83,28 +83,16 @@ object NonTabular {
 
   /** The `capture` chain (`record.rb:84-99`): each pattern keeps group 1
     * of the previous value (nil reads as "" for the next pattern; an absent
-    * group is ""), and the survivor is Ruby-stripped of whitespace and NUL
-    * at both ends. Null when the last pattern misses. */
+    * group is ""), and the survivor is Ruby `strip`ped
+    * ([[RubyTranslate.strip]]). Null when the last pattern misses. */
   private[tabulate] def capture(line: String, patterns: Seq[Pattern]): String = {
     var v = line
     patterns.foreach { p =>
       val m = p.matcher(if (v == null) "" else v)
       v = if (m.find()) Option(m.group(1)).getOrElse("") else null
     }
-    if (v == null) null
-    else {
-      var a = 0
-      var b = v.length
-      while (a < b && rubySpace(v.charAt(a))) a += 1
-      while (b > a && rubySpace(v.charAt(b - 1))) b -= 1
-      v.substring(a, b)
-    }
+    if (v == null) null else RubyTranslate.strip(v)
   }
-
-  /** What Ruby's `strip`/`rstrip` remove: space, `\t \n \v \f \r` and NUL. */
-  private def rubySpace(ch: Char): Boolean =
-    ch == ' ' || ch == '\t' || ch == '\n' || ch == '\u000B' || ch == '\f' ||
-      ch == '\r' || ch == '\u0000'
 
   private def compile(rubyPattern: String): Pattern =
     Pattern.compile(RubyTranslate.regex(rubyPattern))
@@ -188,7 +176,8 @@ object NonTabular {
           throw new IllegalStateException(
             s"non-tabular input repeats line $lineno of file $file")
         lastLineno = lineno
-        read(rstrip(line))
+        // N1 (`line.rb`): each line is Ruby-`rstrip`ped
+        read(if (line == null) "" else RubyTranslate.rstrip(line))
       }
       if (out.isEmpty && started) { endOfFile(); started = false }
       out.nonEmpty
@@ -196,14 +185,6 @@ object NonTabular {
 
     def next(): (String, Long, Seq[String]) =
       if (hasNext) out.dequeue() else Iterator.empty.next()
-
-    // N1 (`line.rb`): each line is Ruby-`rstrip`ped
-    private def rstrip(line: String): String = {
-      if (line == null) return ""
-      var b = line.length
-      while (b > 0 && rubySpace(line.charAt(b - 1))) b -= 1
-      line.substring(0, b)
-    }
 
     // N2 (`table.rb:88-98`): a line is removed when it sits in a block of
     // consecutive lines matching one of the remove_lines sequences

@@ -1,5 +1,6 @@
 package graft.xml
 
+import graft.clean.RubyTranslate
 import graft.compile.RowMapper
 import graft.model._
 import org.apache.spark.sql.DataFrame
@@ -75,7 +76,7 @@ object XmlTable {
         else {
           val attrs = c.attributes.asAttrMap
           if (attrs.nonEmpty) attrs.keys.foreach(k => out += s"$cPath/@$k")
-          else if (c.text.trim.nonEmpty) out += cPath
+          else if (!RubyTranslate.blank(c.text)) out += cPath
         }
       }
     }

@@ -58,7 +58,9 @@ class RowMapperPropertySpec extends SparkSpec {
     Gen.oneOf("", " ", "  x  ", "x", "y", "id-abc42", "id-", "03/10/1978",
       "99/99/9999", "0", "7", "007", "-3", "-0", "1.5", "Bob, Smith.", "a`b", null: String,
       // array-cell shapes: valid JSON arrays (string + coerced), broken JSON
-      "[\"id-abc42\",\"x\"]", "[1,2]", "[not json", "[]"),
+      "[\"id-abc42\",\"x\"]", "[1,2]", "[not json", "[]",
+      // whitespace that is not all spaces: Ruby's blank? and strip sets
+      "\t", "\u3000", "\u0000", "\r", " \tx  ", "\u00A0", " id-x\t"),
     Gen.listOfN(3, Gen.alphaChar).map(_.mkString(",")))
 
   private val rowGen: Gen[Seq[String]] = Gen.listOfN(4, cellGen)

@@ -174,6 +174,8 @@ class ImporterSpec extends SparkSpec {
       ("idname      flag\n" +
         "01Alice     Y   \n" +
         "02Bob       N   \n" +
+        // `A` drops trailing NULs as well as spaces (Ruby `unpack('A')`)
+        "03Carol\u0000 \u0000  Z   \n" +
         "END OF FILE\n").getBytes("UTF-8"))
     val mappings = MappingLoader.loadTables(
       """|- canonical_name: people
@@ -209,9 +211,11 @@ class ImporterSpec extends SparkSpec {
       MappingCompiler(validated).records(MappingCompiler.dataRows(cells, validated)))
     assert(expected.map(_._1.view.filterKeys(Set("id", "name", "flag")).toMap) == Seq(
       Map("id" -> "01", "name" -> "Alice", "flag" -> "Y"),
-      Map("id" -> "02", "name" -> "Bob", "flag" -> "N")))
+      Map("id" -> "02", "name" -> "Bob", "flag" -> "N"),
+      Map("id" -> "03", "name" -> "Carol", "flag" -> "Z")))
     // `a` keeps the padding, `A` trims it
-    assert(expected.map(e => (e._2("name"), e._2("flag"))) == Seq(("Alice", "Y   "), ("Bob", "N   ")))
+    assert(expected.map(e => (e._2("name"), e._2("flag"))) ==
+      Seq(("Alice", "Y   "), ("Bob", "N   "), ("Carol", "Z   ")))
     assert(got == expected)
   }
 

@@ -149,7 +149,7 @@ class ExcelStreamSpec extends SparkSpec {
     assert(rows.map(_._1) == Set(binaryFilePath(p)))
     assert(withoutFile(rows) == expected)
     assert(inMemory(xls, len = Oversized) == expected)
-    assert(Biff8.parse(xls).flatMap(s => s.rows.zipWithIndex.map { case (c, i) =>
+    assert(Biff8.parse(xls, p).flatMap(s => s.rows.zipWithIndex.map { case (c, i) =>
       (s.name, i.toLong, c) }).toSet == expected)
   }
 
