@@ -2,7 +2,8 @@ package graft.compile
 
 import graft.clean.{Cleaners, RubyTranslate}
 import graft.model._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.tabulate.FileRuns
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StringType
 
@@ -404,19 +405,24 @@ object MappingCompiler {
 
   /** T2 + T3 row-space trim: drop the first `header_lines` rows and the last
     * `footer_lines` rows of each file. Header drop is a narrow filter on
-    * `lineno`; footer drop needs each file's row count — computed with a
-    * tiny per-file aggregate that AQE turns into a broadcast join (cheap at
-    * any scale; one row per file).
+    * `lineno`; footer drop holds each file's last `footer_lines` rows back
+    * in a ring buffer as the rows stream (`table.rb:128-139`), so the rows
+    * must come in per-file order, as every per-file reader emits them
+    * ([[FileRuns]] checks that they do).
     */
   def dataRows(df: DataFrame, mapping: TableMapping): DataFrame = {
     val afterHeader =
       if (mapping.headerLines > 0) df.filter(col("lineno") >= mapping.headerLines) else df
-    if (mapping.footerLines > 0) {
-      val counts = df.groupBy(col("file").as("f")).agg(max(col("lineno")).as("maxline"))
-      afterHeader
-        .join(broadcast(counts), col("file") === col("f"))
-        .filter(col("lineno") <= col("maxline") - mapping.footerLines)
-        .drop("f", "maxline")
-    } else afterHeader
+    val depth = mapping.footerLines
+    if (depth > 0) afterHeader.mapPartitions { (rows: Iterator[Row]) =>
+      val runs = new FileRuns
+      val ring = collection.mutable.Queue.empty[Row]
+      rows.flatMap { r =>
+        if (runs.opens(r.getAs[String]("file"), r.getAs[Number]("lineno").longValue)) ring.clear()
+        ring.enqueue(r)
+        Option.when(ring.size > depth)(ring.dequeue())
+      }
+    }(Encoders.row(df.schema))
+    else afterHeader
   }
 }

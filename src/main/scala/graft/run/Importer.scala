@@ -17,22 +17,26 @@ import org.apache.spark.sql.types.{ArrayType, LongType, StringType, StructField,
   *   2. match each inner file to its first matching mapping
   *      (filename_pattern, T1) and build its lazy read with the format's
   *      source;
-  *   3. ONE Spark action brings back every file's header block and, for
-  *      each workbook, the first rows of every sheet (so its sheet names);
-  *      each branch of it is capped at its header block, and the drop's
+  *   3. ONE Spark action brings back every file's header block, for
+  *      each workbook the first rows of every sheet (so its sheet names),
+  *      and for each XML file its `xml_file_metadata` values (S8); each
+  *      branch of it is capped at its header block, and the drop's
   *      per-file reads run as the tasks of that one job;
   *   4. per (file, tablename), on the driver: re-match the mapping,
   *      validate the header (T3/T4; a failure names the file and sheet),
-  *      trim header/footer rows (T2), compile the mapping once and
+  *      trim header and footer rows (T2), compile the mapping once and
   *      transform (klass fan-out T7, skip T8); then union per canonical
   *      table (T12 — the reference's TableEnumProxy is `unionByName` here).
   *
-  * Everything after that one action is lazy Catalyst plans; the caller
+  * No other action runs before the write, save the numbering job of a
+  * parquet or orc file's `zipWithIndex`: everything after that one action
+  * is lazy Catalyst plans, with no join or aggregate; the caller
   * gets one DataFrame per canonical table and composes freely (joins, aggs,
   * writes) with full pushdown. No workbook is materialised: a mapped sheet
-  * re-reads its workbook in the plan that consumes it. Non-tabular text,
-  * PDF and Word lines come from the per-file readers in per-file order, so
-  * they are walked ([[NonTabular.walk]]) with no exchange.
+  * re-reads its workbook in the plan that consumes it. Every reader but
+  * parquet/orc emits rows in per-file order, so footers are trimmed
+  * ([[MappingCompiler.dataRows]]) and non-tabular text, PDF and Word lines
+  * walked ([[NonTabular.walk]]) as the rows stream, with no exchange.
   */
 object Importer {
 
@@ -121,7 +125,12 @@ object Importer {
         // `header_lines: 1` mappings — columnar data has no header row of
         // its own, and without this the first DATA row would be consumed
         // and validated as the header. That header is known here, so the
-        // planning action brings nothing back for these files.
+        // planning action brings nothing back for these files. Nor has it
+        // trailer rows, and a file's rows span partitions, where the footer
+        // trim in the stream would drop rows inside the file: so
+        // `footer_lines` is rejected.
+        if (m.footerLines > 0)
+          sys.error(s"footer_lines does not apply to the columnar file '$file'")
         val df = if (format == "parquet") spark.read.parquet(file)
                  else spark.read.orc(file)
         val names = m.columns.flatMap(_.column)
@@ -170,12 +179,12 @@ object Importer {
           }
         })
       case "xml" | "xml_table" =>
-        ready {
-          val recs = XmlTableTransform.records(XmlSource.records(spark, Seq(file), m), m)
-          XmlSource.fileMetadata(spark, file, m.fileMetadata).foldLeft(recs) {
+        val meta = m.fileMetadata.toSeq
+        Read(Option.when(meta.nonEmpty)(headerBlock(XmlSource.fileMetadata(spark, file, meta), 1)),
+          back => Seq(MappedTable(m, meta.map(_._1).zip(back.flatMap(_.cells)).foldLeft(
+            XmlTableTransform.records(XmlSource.records(spark, Seq(file), m), m)) {
             case (df, (k, v)) => df.withColumn(s"meta_$k", lit(v))
-          }
-        }
+          })))
       case "pdf" => ready(nonTabularOrPlain(m, Pdf.lines(spark, Seq(file))))
       case "acroform" => ready(acroFormRecords(spark, file, m))
       case "doc" | "docx" =>

@@ -21,23 +21,22 @@ import org.apache.spark.sql.DataFrame
   * Spark's size-only estimator propagates a join as the PRODUCT of its
   * children's sizes (and inflates aggregates), so writing a join result
   * can estimate astronomically high. [[Output.sizedWrite]] therefore
-  * clamps the file count to a plausibility cap tied to the input's
-  * actual partition count (overridable via `maxFiles`) and WARNS when
-  * the clamp fires — a silent million-file repartition is a job-killing
-  * shuffle, not a sizing nuance. Frames fresh off a scan or exchange
+  * clamps the file count to a plausibility cap tied to the cluster's
+  * parallelism and WARNS when the clamp fires — a silent million-file
+  * repartition is a job-killing shuffle, not a sizing nuance. Frames fresh off a scan or exchange
   * have trustworthy estimates; deep join/aggregate plans may not —
-  * prefer materialising (or passing `maxFiles`) for those. */
+  * prefer materialising those. */
 object Output {
 
-  /** Write `df` as `format` at `path` in approximately
+  /** Write `df` as parquet at `path` in approximately
     * `sizeInBytes / targetBytesPerFile` files, round-robin repartitioned —
     * one extra shuffle, evenly sized files even after a skewed
     * aggregation. Returns the chosen file count
     * (one visible sizing decision, the [[graft.operators.TextDedup
     * .decontaminate]] route-logging convention).
     *
-    * `maxFiles` (0 = auto) bounds the count against estimator blow-ups:
-    * auto is `max(64 × defaultParallelism, 4096)` — generous for any
+    * The count is capped against estimator blow-ups at
+    * `max(64 × defaultParallelism, 4096)` — generous for any
     * honest estimate (64 target-size files per core is >16 GB of logical
     * rows per core at the default target), but catches the
     * join-size-product pathology, where the clamp fires with a loud WARN
@@ -45,27 +44,22 @@ object Output {
     * reads cluster parallelism, not `df.rdd.getNumPartitions` — under
     * AQE materialising the RDD would EXECUTE the upstream stages once
     * just to count partitions, then the write would run them again.) */
-  def sizedWrite(df: DataFrame, path: String, format: String = "parquet",
-                 targetBytesPerFile: Long = 256L << 20,
-                 maxFiles: Int = 0): Int = {
+  def sizedWrite(df: DataFrame, path: String, targetBytesPerFile: Long = 256L << 20): Int = {
     require(targetBytesPerFile > 0, "targetBytesPerFile must be positive")
-    require(maxFiles >= 0, "maxFiles must be >= 0 (0 = auto)")
     val log = org.slf4j.LoggerFactory.getLogger(getClass)
     val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val raw = ((est + targetBytesPerFile - 1) / targetBytesPerFile).max(1)
     val cores = df.sparkSession.sparkContext.defaultParallelism.max(1)
-    val cap: Long =
-      if (maxFiles > 0) maxFiles.toLong else math.max(64L * cores, 4096L)
+    val cap = math.max(64L * cores, 4096L)
     if (raw > cap) log.warn(
       s"sizedWrite: size estimate $est bytes implies $raw files — clamping " +
       s"to $cap (64 x $cores cores). Size-only estimation multiplies child " +
       "sizes through joins; if this frame is a join/aggregate result the " +
-      "estimate is untrustworthy — pass maxFiles explicitly or " +
-      "materialise the input first.")
+      "estimate is untrustworthy — materialise the input first.")
     val n = raw.min(cap).min(1L << 20).toInt
     log.info(
       s"sizedWrite: estimated $est bytes / target $targetBytesPerFile -> $n file(s)")
-    df.repartition(n).write.format(format).mode("overwrite").save(path)
+    df.repartition(n).write.mode("overwrite").parquet(path)
     n
   }
 }

@@ -227,18 +227,18 @@ object XmlSource {
     }
   }
 
-  /** S8 — one file's metadata, evaluated on an executor over its whole DOM
-    * ([[LineSource.wholeFiles]]; the xpaths need it, as in the reference).
-    * Only the map reaches the driver. */
+  /** S8 — one file's metadata values, in `metadata`'s order, evaluated on
+    * an executor over its whole DOM ([[LineSource.wholeFiles]]; the xpaths
+    * need it, as in the reference): one row (file, lineno 0, cells), which
+    * the importer's planning action brings back with the headers. */
   def fileMetadata(spark: SparkSession, file: String,
-                   metadata: Map[String, String]): Map[String, String] =
-    if (metadata.isEmpty) Map.empty
-    else {
-      import spark.implicits._
-      LineSource.wholeFiles(spark, Seq(file)) { (_, bytes) =>
-        Iterator.single(metadataValues(LineSource.decodeSmart(bytes), metadata).toSeq)
-      }.head().toMap
-    }
+                   metadata: Seq[(String, String)]): DataFrame = {
+    import spark.implicits._
+    LineSource.wholeFiles(spark, Seq(file)) { (f, bytes) =>
+      val values = metadataValues(LineSource.decodeSmart(bytes), metadata.toMap)
+      Iterator.single((f, 0L, metadata.map(kv => values(kv._1))))
+    }.toDF("file", "lineno", "cells")
+  }
 
   /** Read files → one row per record element: (file, index, record_xml),
     * through the per-file runner ([[LineSource.perFile]]). Pass 1 is the

@@ -18,7 +18,8 @@ import scala.collection.mutable
   * once, as the reference does, keeping only the open record's captured
   * lines and a `remove_lines` lookahead as deep as the longest pattern
   * sequence. It needs each file's lines contiguous in one partition in
-  * `lineno` order, and checks that they are. The per-file readers emit
+  * `lineno` order, and checks that they are with the one run check
+  * ([[FileRuns]]) that the footer trim uses too. The per-file readers emit
   * lines that way, so the importer walks them as they come, with no
   * exchange; [[tabulate]] takes lines in any order and first puts each
   * file's lines in one partition, sorted by `(file, lineno)`, with one
@@ -66,8 +67,7 @@ object NonTabular {
   /** The walk alone, for lines already in per-file order: each file's
     * lines one contiguous run inside one partition, `lineno` ascending —
     * what every per-file reader ([[graft.sources.LineSource]]) emits. The
-    * order is checked, not assumed: a `lineno` that goes back, or a file
-    * that comes back after its run ended, fails naming the file. */
+    * order is checked, not assumed ([[FileRuns]]). */
   private[graft] def walk(linesDf: DataFrame, mapping: TableMapping): DataFrame = {
     val spec = validate(mapping)
     val cells = mapping.columns.map(_.nonTabularCell.get)
@@ -151,11 +151,8 @@ object NonTabular {
     // N2's lookahead: lines not yet past every remove_lines block they
     // could start, with their removed flags
     private val pending = mutable.ArrayDeque.empty[(String, Boolean)]
-    private var started = false
-    // files whose run has ended: one coming back would restart its ordinals
-    private val ended = mutable.HashSet.empty[String]
+    private val runs = new FileRuns
     private var file: String = _
-    private var lastLineno = 0L
     private var ordinal = 0L
     private var inRecord = false
     private val record = mutable.ArrayBuffer.empty[String]
@@ -163,23 +160,16 @@ object NonTabular {
     def hasNext: Boolean = {
       while (out.isEmpty && input.hasNext) {
         val (f, lineno, line) = input.next()
-        if (!started || f != file) {
-          if (started) { endOfFile(); ended += file }
-          if (ended(f))
-            throw new IllegalStateException(
-              s"non-tabular input returns to file $f after its lines ended")
-          started = true
+        if (runs.opens(f, lineno)) {
+          endOfFile()
           file = f
           ordinal = 0
           inRecord = spec.startInARecord
-        } else if (lineno <= lastLineno)
-          throw new IllegalStateException(
-            s"non-tabular input repeats line $lineno of file $file")
-        lastLineno = lineno
+        }
         // N1 (`line.rb`): each line is Ruby-`rstrip`ped
         read(if (line == null) "" else RubyTranslate.rstrip(line))
       }
-      if (out.isEmpty && started) { endOfFile(); started = false }
+      if (out.isEmpty) endOfFile()
       out.nonEmpty
     }
 
@@ -227,6 +217,7 @@ object NonTabular {
       record.clear()
     }
 
+    // a no-op before the first file and once the last has ended
     private def endOfFile(): Unit = {
       while (pending.nonEmpty) stepHead()
       if (inRecord && spec.endInARecord && record.nonEmpty) emit()

@@ -6,6 +6,7 @@ import graft.model.MappingLoader
 import graft.queries.Fixtures
 import graft.sources.{Excel, LineSource, SyntheticOffice, Tabular}
 import graft.sources.ExcelFixtures.utf8
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
 import org.apache.spark.sql.functions._
 
 import java.io.{File, FileOutputStream}
@@ -297,11 +298,14 @@ class ImporterSpec extends SparkSpec {
   test("a drop of csv, xlsx, jsonl and text files runs one Spark job to plan") {
     val dir = tmpDir()
     val zipPath = write(dir, "drop.zip", Fixtures.zip(Seq(
-      "a.csv" -> "name\nCSV-A\n".getBytes("UTF-8"), "b.csv" -> "name\nCSV-B\n".getBytes("UTF-8"),
+      "a.csv" -> "name\nCSV-A\nTOTAL 1\n".getBytes("UTF-8"),
+      "b.csv" -> "name\nCSV-B\nTOTAL 1\n".getBytes("UTF-8"),
       "book.xlsx" -> Fixtures.xlsx(Seq("People" -> Seq(Seq("name"), Seq("XL")),
         "Notes" -> Seq(Seq("not a header"), Seq("ignored")))),
       "c.jsonl" -> "[\"name\"]\n[\"JSONL\"]\n".getBytes("UTF-8"),
-      "report.txt" -> "NAME: TEXT-1\nNAME: TEXT-2\n".getBytes("UTF-8"))))
+      "report.txt" -> "NAME: TEXT-1\nNAME: TEXT-2\n".getBytes("UTF-8"),
+      "batch.xml" -> ("<root><Header><BatchId>B7</BatchId></Header>" +
+        "<record><name>XML</name></record></root>").getBytes("UTF-8"))))
     def tabular(ext: String, extra: String = "") =
       s"""|- canonical_name: people
           |  filename_pattern: !ruby/regexp /\\.$ext\\z/i
@@ -312,7 +316,8 @@ class ImporterSpec extends SparkSpec {
           |    mappings:
           |    - field: name
           |""".stripMargin
-    val mappings = MappingLoader.loadTables(tabular("csv") + tabular("jsonl") +
+    val mappings = MappingLoader.loadTables(tabular("csv", "  footer_lines: 1\n") +
+      tabular("jsonl") +
       tabular("xlsx", "  tablename_pattern: !ruby/regexp /\\APeople\\z/\n") +
       """|- canonical_name: people
          |  filename_pattern: !ruby/regexp /\.txt\z/i
@@ -327,14 +332,40 @@ class ImporterSpec extends SparkSpec {
          |      capture: !ruby/regexp /\ANAME: (.*)\z/
          |    mappings:
          |    - field: name
+         |- canonical_name: people
+         |  filename_pattern: !ruby/regexp /\.xml\z/i
+         |  format: xml_table
+         |  xml_record_xpath: record
+         |  xml_file_metadata:
+         |    batch_id: //Header/BatchId
+         |  columns:
+         |  - column: name
+         |    klass: Person
+         |    xml_cell:
+         |      relative_path: ''
+         |    mappings:
+         |    - field: name
          |""".stripMargin)
     val (tables, jobs) = jobsDuring(Importer.extract(spark, zipPath, mappings,
       Registry.ContainerOptions(unzipPath = dir.getAbsolutePath)))
     assert(jobs == 1, s"planning the drop ran $jobs jobs")
-    assert(tables.size == 5)
-    assert(tables.map(_.records).reduce(_ unionByName _)
-      .select(element_at(col("fields"), "name")).collect().map(_.getString(0)).sorted.toSeq ==
-      Seq("CSV-A", "CSV-B", "JSONL", "TEXT-1", "TEXT-2", "XL"))
+    assert(tables.size == 6)
+    tables.foreach { t =>
+      val plan = t.records.queryExecution.optimizedPlan
+      assert(plan.collectFirst { case j: Join => j; case a: Aggregate => a }.isEmpty,
+        s"a records plan joins or aggregates:\n$plan")
+    }
+    val names = tables.map(_.records.select(element_at(col("fields"), "name").as("name")))
+      .reduce(_ union _)
+    val (_, writeJobs) = jobsDuring(
+      graft.runtime.Output.sizedWrite(names, new File(dir, "out").getAbsolutePath))
+    // the sized write's repartition and the write itself: no footer job
+    assert(writeJobs == 2, s"the write ran $writeJobs jobs")
+    assert(spark.read.parquet(new File(dir, "out").getAbsolutePath).collect()
+      .map(_.getString(0)).sorted.toSeq ==
+      Seq("CSV-A", "CSV-B", "JSONL", "TEXT-1", "TEXT-2", "XL", "XML"))
+    val xml = tables.find(_.mapping.format.contains("xml_table")).get.records
+    assert(xml.select("meta_batch_id").collect().map(_.getString(0)).toSeq == Seq("B7"))
   }
 
   test("csv and jsonl imports read by streaming: no binaryFile scan, no Exchange") {

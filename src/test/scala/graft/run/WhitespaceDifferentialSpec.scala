@@ -18,7 +18,10 @@ import java.nio.file.{Files, Path}
   * one mapping: every format gives the `fields` and `rawtext` that
   * [[RowMapper.mappedLine]] gives over the table's rows. The cells carry
   * Ruby's two whitespace sets at both ends (tab, CR, NBSP, U+3000, NUL),
-  * quotes, the delimiter and a non-BMP character.
+  * quotes, the delimiter and a non-BMP character. Every file but the
+  * parquet one ends in two trailer rows, which `footer_lines: 2` drops;
+  * the parquet file is imported without it, since a columnar file rejects
+  * `footer_lines`.
   *
   * What a format cannot carry is declared here, in `carried`, and applied
   * to the rows the interpreter sees; nothing else differs. */
@@ -71,11 +74,18 @@ class WhitespaceDifferentialSpec extends SparkSpec {
     Gen.listOfN(60, Gen.listOfN(names.size, cell)).apply(Gen.Parameters.default, Seed(20L)).get
   }
 
-  /** Widest cell in code points, plus one so every cell is padded. */
-  private val width = (names ++ rows.flatten).map(s => s.codePointCount(0, s.length)).max + 1
+  /** The two rows after the table that `footer_lines: 2` must drop. */
+  private val trailer = Seq(Seq("END", "of", "table", "\t"), Seq("total", "60", "x", "y"))
 
-  private def mapping(extra: String): TableMapping = MappingLoader.loadTable(
-    s"klass: K\nheader_lines: 1\n$extra" + columnsYaml.replace("{w}", width.toString))
+  /** The rows of every file but the parquet one: header, table, trailer. */
+  private val written = names +: rows ++: trailer
+
+  /** Widest cell in code points, plus one so every cell is padded. */
+  private val width = written.flatten.map(s => s.codePointCount(0, s.length)).max + 1
+
+  private def mapping(extra: String, footerLines: Int): TableMapping = MappingLoader.loadTable(
+    s"klass: K\nheader_lines: 1\nfooter_lines: $footerLines\n$extra" +
+      columnsYaml.replace("{w}", width.toString))
 
   // ---------------------------------------------------------------- writers
 
@@ -95,14 +105,14 @@ class WhitespaceDifferentialSpec extends SparkSpec {
     cells.map(c => c + " " * (width - c.codePointCount(0, c.length))).mkString
 
   private def lines(f: Seq[String] => String): Array[Byte] =
-    (names +: rows).map(f).mkString("", "\n", "\n").getBytes(UTF_8)
+    written.map(f).mkString("", "\n", "\n").getBytes(UTF_8)
 
   private def avro: Array[Byte] = {
     val schema = names.foldLeft(SchemaBuilder.record("T").fields())(_.requiredString(_)).endRecord()
     val out = new java.io.ByteArrayOutputStream()
     val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
     w.create(schema, out)
-    rows.foreach { r =>
+    (rows ++ trailer).foreach { r =>
       val b = new GenericRecordBuilder(schema)
       names.zip(r).foreach { case (n, v) => b.set(n, v) }
       w.append(b.build())
@@ -124,8 +134,8 @@ class WhitespaceDifferentialSpec extends SparkSpec {
     // Roo reads each cell `to_s.strip`; XML 1.0 text cannot hold NUL, so it
     // is left out of the file, and XML parsers read CR as LF
     Format("t.xlsx", "", c => rubyStrip(c.replace("\u0000", "").replace("\r", "\n")),
-      () => Some(Fixtures.xlsx(Seq("S" -> (names +: rows.map(_.map(_.replace("\u0000", "")))))))),
-    Format("t.xls", "", rubyStrip, () => Some(Fixtures.xls(Seq("S" -> (names +: rows))))),
+      () => Some(Fixtures.xlsx(Seq("S" -> written.map(_.map(_.replace("\u0000", ""))))))),
+    Format("t.xls", "", rubyStrip, () => Some(Fixtures.xls(Seq("S" -> written)))),
     Format("t.avro", "", identity, () => Some(avro)),
     Format("t.parquet", "", identity, () => None))
 
@@ -136,19 +146,23 @@ class WhitespaceDifferentialSpec extends SparkSpec {
     try {
       val diverged = formats.flatMap(f => divergence(f, dir.resolve(f.file)).map(f.file + ": " + _))
       assert(diverged.isEmpty, diverged.mkString("\n"))
+      val parquet = dir.resolve("t.parquet").toString
+      val e = intercept[RuntimeException](Importer.extract(spark, parquet, Seq(mapping("", 2))))
+      assert(e.getMessage == s"footer_lines does not apply to the columnar file '$parquet'")
     } finally deleteAll(dir)
   }
 
   /** The first row where `f`'s import differs from the interpreter, if any. */
   private def divergence(f: Format, path: Path): Option[String] = {
     import spark.implicits._
-    f.bytes() match {
-      case Some(b) => Files.write(path, b)
+    val footerLines = f.bytes() match {
+      case Some(b) => Files.write(path, b); trailer.size
       case None =>
         rows.map { case Seq(a, b, c, d) => (a, b, c, d) }.toDF(names: _*)
           .coalesce(1).write.parquet(path.toString)
+        0
     }
-    val m = mapping(f.extra)
+    val m = mapping(f.extra, footerLines)
     val merged = MappingCompiler(m).mergedColumns
     val expected = rows.map(r => RowMapper.mappedLine(r.map(f.carried), merged))
     val got = try Importer.extract(spark, path.toString, Seq(m)).flatMap(_.records

@@ -55,11 +55,6 @@ class OutputSpec extends SparkSpec {
     assert(n == math.max(64L * cores, 4096L),
       s"blown estimate must clamp to the auto cap, got $n")
     assert(spark.read.parquet(auto.getPath).count() == 2000L)
-    // explicit maxFiles overrides the auto cap
-    val capped = new java.io.File(dir, "capped")
-    assert(Output.sizedWrite(blown, capped.getPath,
-      targetBytesPerFile = target, maxFiles = 7) == 7)
-    assert(parquetFiles(capped).length == 7)
   }
 
   test("sizedWrite evens out a skewed upstream partitioning") {
